@@ -1,0 +1,35 @@
+package perfbench
+
+/** Minimal JSON rendering for the raw output file of [[Main]]: maps,
+  * sequences, numbers, booleans, strings and null. */
+object Json {
+
+  def render(v: Any): String = v match {
+    case null => "null"
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double =>
+      if (d.isNaN || d.isInfinite) "null" else d.toString
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + render(x) }
+        .mkString("{", ",", "}")
+    case s: Iterable[_] => s.map(render).mkString("[", ",", "]")
+    case o => quote(o.toString)
+  }
+
+  def quote(s: String): String = {
+    val sb = new StringBuilder("\"")
+    s.foreach {
+      case '"' => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case '\n' => sb.append("\\n")
+      case '\r' => sb.append("\\r")
+      case '\t' => sb.append("\\t")
+      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.append('"').toString
+  }
+}
