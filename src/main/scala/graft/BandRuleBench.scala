@@ -19,13 +19,7 @@ object BandRuleBench {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 4000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     import spark.implicits._
 
     // 50 docs per block: lengths spread 100-500 chars so the length band
@@ -51,9 +45,9 @@ object BandRuleBench {
     }.toDF("doc_id", "block", "text")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     docs.count()
-    // each measured query must be BUILT on its own session or the
-    // optimizer-rule registration would not apply — rebind via a
-    // global temp view (cache is shared state, so both sessions hit it)
+    // the plain query must be BUILT on a session without the optimizer
+    // rule — rebind via a global temp view (cache is shared state, so
+    // both sessions hit it)
     docs.createOrReplaceGlobalTempView("bandbench_docs")
 
     def pairs(s: SparkSession) = {
@@ -76,10 +70,8 @@ object BandRuleBench {
       pairs(plainSession).filter(expr("levenshtein(a, b) <= 40")).count()
     }
     // session WITH the rule: band prefilter + thresholded DP
-    val ruleSession = spark.newSession()
-    graft.plans.GraftFunctions.register(ruleSession)
     val (nBand, tBand) = time {
-      pairs(ruleSession).filter(expr("levenshtein(a, b) <= 40")).count()
+      pairs(spark).filter(expr("levenshtein(a, b) <= 40")).count()
     }
     require(nPlain == nBand, s"rule changed results: $nPlain vs $nBand")
     println("docs,pairs_matched,plain_sec,banded_sec,speedup")

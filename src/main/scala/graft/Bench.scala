@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
@@ -67,23 +66,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE coalesce the output partitioning of cached plans too
-      // (off by default only for compatibility): the trainer family
-      // caches its feature relations, and without this every gradient
-      // step fans 32 near-empty cached partitions into 32 tasks
-      // (q139 measured 269 tasks / 61 task-seconds → 21 / 3 with it).
-      // Scale-neutral: on real data AQE targets its advisory size.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.defaultCpus
+    val spark = Sessions.local(cpus)
     // SPARK_GRAFT_ONLY=q26,q13* restricts the run (dev-loop
     // convenience; prefix/family-glob semantics live in BenchUtil)
     val selected = BenchUtil.selectQueries(
@@ -168,7 +152,7 @@ object Bench {
       catch { case _: Exception => Double.NaN }
     val regressions = BenchCompare.regressionsField(priorPath,
       results.collect { case (k, v, _) if v > 0 => k -> v }.toMap,
-      load1m, cpus.toInt)
+      load1m, cpus)
     // contention telemetry: a loaded host shows load_before ≫ CPUs or a
     // load_after far above the suite's own parallelism — readers judge
     // timings against these instead of re-running to adjudicate.

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+
 /** Shared helpers for the bench/soak mains (one timing convention,
   * one definition site — seven copies had accreted).
   */
@@ -8,6 +10,14 @@ private[graft] object BenchUtil {
     val t0 = System.nanoTime()
     val a = f
     (a, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** Stage-level shuffle totals since construction (bytes written). */
+  final class ShuffleMeter extends SparkListener {
+    @volatile var writeBytes = 0L
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+      writeBytes += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
+    }
   }
 
   /** The `SPARK_GRAFT_ONLY` dev-loop filter, shared by `Verify` and

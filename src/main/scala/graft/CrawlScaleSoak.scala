@@ -23,17 +23,10 @@ object CrawlScaleSoak {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     require(n > 0, s"doc count must be positive: $n")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-crawl-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.defaultCpus
+    val spark = Sessions.local(cpus)
     val docs = TextScaleSoak.soakDocs(spark, n, seed = 42L,
-        parallelism = cpus.toInt)
+        parallelism = cpus)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     println(s"[soak] corpus: ${docs.count()} docs")
 
@@ -130,7 +123,7 @@ object CrawlScaleSoak {
     // vocabulary in the 8k–32k band. Asserts vocab size, single-char
     // alphabet closure, and a wall-time ceiling.
     val longDocs = longWordDocs(spark, n, seed = 99L,
-        parallelism = cpus.toInt)
+        parallelism = cpus)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     longDocs.count()
     // thresholds scale with corpus size so a small-n smoke run keeps the
@@ -170,7 +163,6 @@ object CrawlScaleSoak {
     // partial-combine: the harvest explode multiplies rows ~12× but
     // page HTML dies in the projection, and nothing wider than a URL
     // crosses an exchange.
-    graft.plans.GraftFunctions.register(spark)
     val urled = docs.withColumn("source",
       when(col("doc_id") % 10 < 3, lit("hothost"))
         .otherwise(concat(lit("src"),

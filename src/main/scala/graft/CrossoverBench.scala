@@ -45,15 +45,7 @@ object CrossoverBench {
   def main(args: Array[String]): Unit = {
     val sizes =
       if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(20000, 50000, 100000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.register(spark)
+    val spark = Sessions.local()
     import spark.implicits._
 
     val k = 10

@@ -46,15 +46,7 @@ object DecontaminationBench {
   def main(args: Array[String]): Unit = {
     val sizes =
       if (args.nonEmpty) args.map(_.toLong).toSeq else Seq(100000L, 300000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.register(spark)
+    val spark = Sessions.local()
     import spark.implicits._
 
     // held-out bench corpus: 200 docs over the same vocab space (a

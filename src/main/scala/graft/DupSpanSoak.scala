@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,17 +28,10 @@ object DupSpanSoak {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     require(n > 0, s"doc count must be positive: $n")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-dupspan-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.defaultCpus
+    val spark = Sessions.local(cpus)
     val docs = TextScaleSoak.soakDocs(spark, n, seed = 42L,
-        parallelism = cpus.toInt)
+        parallelism = cpus)
       // the planted hot key: one shared trailing trigram per document
       .withColumn("text", concat(col("text"), lit(" zz qq vv")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ext.{Dedup, Graph}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,28 +65,12 @@ object GraphDedupSoak {
       }.toDF("doc_id", "text")
   }
 
-  /** Stage-level shuffle totals since construction (bytes written). */
-  private final class ShuffleMeter extends SparkListener {
-    @volatile var writeBytes = 0L
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      writeBytes += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    }
-  }
-
-  import BenchUtil.time
+  import BenchUtil.{ShuffleMeter, time}
 
   def main(args: Array[String]): Unit = {
     val soakN = if (args.length > 0) args(0).toLong else 1000000L
     val abN = if (args.length > 1) args(1).toLong else 300000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.register(spark)
+    val spark = Sessions.local()
 
     def edgesOf(docs: DataFrame, cap: Int): DataFrame =
       Dedup.prefixBlockedNearDupPairs(docs, "doc_id", "text",

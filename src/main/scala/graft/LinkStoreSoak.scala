@@ -1,7 +1,6 @@
 package graft
 
 import graft.ext.{Graph, IndexAudit}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak for the PERSISTED host-link relation + authority
@@ -40,15 +39,7 @@ object LinkStoreSoak {
     val nHubs = 16L
     require(deg + 1 < nHosts && nAppend * 2 < nHosts,
       s"bad sizes: $nHosts/$deg/$nAppend")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-link-store-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     val loc = java.nio.file.Files
       .createTempDirectory("graft_lssoak").toString

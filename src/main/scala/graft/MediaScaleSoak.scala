@@ -1,13 +1,12 @@
 package graft
 
 import graft.ext.Multimodal
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak for the round-8 REAL media decode trio: encodes and
   * decodes ~10⁵ PNGs, WAVs, and multi-frame GIFs through the
   * payload-dropping `mapPartitions` seams (q106/q107/q108 shapes) at
-  * `local[32]`, recording wall time and per-payload throughput. Every
+  * `local[SPARK_GRAFT_CPUS]`, recording wall time and per-payload throughput. Every
   * leg's output is asserted against the closed-form planted formulas —
   * the decode is REAL (JDK ImageIO / javax.sound.sampled), so this is
   * codec throughput, not stub arithmetic. Results go to BASELINE.md
@@ -22,17 +21,10 @@ object MediaScaleSoak {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(100000L)
     require(n > 0, s"payload count must be positive: $n")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.defaultCpus
+    val spark = Sessions.local(cpus)
 
-    val ids = spark.range(0, n, 1, cpus.toInt).toDF("doc_id")
+    val ids = spark.range(0, n, 1, cpus).toDF("doc_id")
 
     // ---- images: encode n real PNGs, decode pixels back ---------------
     val (img, tImg) = time {

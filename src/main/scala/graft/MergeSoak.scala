@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Merge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -71,25 +70,11 @@ object MergeSoak {
     base.unionByName(inserts)
   }
 
-  private final class ShuffleMeter extends SparkListener {
-    @volatile var writeBytes = 0L
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      writeBytes += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    }
-  }
-
-  import BenchUtil.time
+  import BenchUtil.{ShuffleMeter, time}
 
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 10000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val now = lit(java.sql.Timestamp.valueOf("2021-06-01 00:00:00"))
 
     val existing = existingState(spark, n)

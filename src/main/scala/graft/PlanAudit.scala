@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-shape audit over the query catalog: prints Exchange / parquet-scan
   * / WholeStageCodegen counts per query (the three numbers the 100 TB lens
   * cares about first), plus the full formatted plan when a single query is
@@ -131,13 +129,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only = args.lift(1).map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     val selected = only match {
       case Some(names) => SparkEntry.queries.filter { case (n, _) =>
         names.exists(n.startsWith) }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ext.{QualityModel, TextOps}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak for in-engine classifier training (q139 shape): trains
@@ -21,13 +20,7 @@ object QualityTrainSoak {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     import spark.implicits._
 
     // synthetic labeled corpus: word-soup docs over a 50k vocabulary;

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -14,24 +13,15 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * optimization is attempted (guide §1).
   *
   * Usage: runMain graft.QueryProfile [sfDir] [q134,q79,...]
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_RUNS (default 2 —
+  * Env: SPARK_GRAFT_CPUS (see [[Sessions]]), SPARK_GRAFT_RUNS (default 2 —
   * run 1 pays codegen, run 2 is the warm number the bench median sees).
   */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val only = args.lift(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger; val taskMs = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.RevisitStream
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak for the revisit loop's two storage disciplines at a
@@ -32,15 +31,7 @@ object RevisitScaleSoak {
     val nCorpus = args.headOption.map(_.toLong).getOrElse(1000000L)
     val nBatch = args.lift(1).map(_.toLong).getOrElse(10000L)
     require(nBatch * 2 <= nCorpus)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-revisit-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     val url = concat(lit("https://h"), (col("id") % 50000).cast("string"),
       lit(".example.com/p/"), col("id").cast("string"))

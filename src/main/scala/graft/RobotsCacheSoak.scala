@@ -1,7 +1,6 @@
 package graft
 
 import graft.ext.{IndexAudit, RobotsCache}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak for the PERSISTED robots cache: 10⁶ hosts bootstrapped
@@ -34,15 +33,7 @@ object RobotsCacheSoak {
     require(nRefetch * 4 <= nHosts,
       "need 4*nRefetch <= nHosts (the gate budget probes an " +
         "unrefetched even slice of equal size)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-robots-cache-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     import spark.implicits._
 
     val asOf = 1770681600000000L // 2026-02-10 00:00:00 UTC

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ext.UrlOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 
@@ -37,16 +36,8 @@ object RobotsScaleSoak {
     val nHosts = args.headOption.map(_.toLong).getOrElse(1000000L)
     val nBatchHosts = args.lift(1).map(_.toLong).getOrElse(10000L)
     require(nBatchHosts <= nHosts)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-robots-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     // crawl-wide rule table: 10 rules per host, alternating allow, the
     // longer /pK/deep prefixes re-allowing under the /pK disallows;

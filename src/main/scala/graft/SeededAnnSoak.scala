@@ -1,7 +1,6 @@
 package graft
 
 import graft.ext.{Ivf, Pq, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak for the md5-derandomized TRAINED ANN family — the q43
@@ -30,15 +29,7 @@ object SeededAnnSoak {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.register(spark)
+    val spark = Sessions.local()
 
     val emb = CrossoverBench.syntheticEmbeddings(spark, n, 64, seed = 42L)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

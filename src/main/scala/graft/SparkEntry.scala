@@ -53,6 +53,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q03_join_revenue_nation")(spark, "/root/testdata/sf0.001")
 
+  /** Every thunk registers the graft functions on the session it is
+    * given: callers pass fresh `newSession()`s, which do not inherit
+    * runtime registration, and some build their own session. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] = {
     val slices = families.map { case (name, qs, os) =>
       require((os.keySet -- qs.keySet).isEmpty,
@@ -63,7 +66,12 @@ object SparkEntry {
     val dups = slices.flatMap { case (n, qs) => qs.keys.map(_ -> n) }
       .groupBy(_._1).filter(_._2.size > 1)
     require(dups.isEmpty, s"query keys in multiple families: $dups")
-    slices.map(_._2).reduce(_ ++ _)
+    slices.map(_._2).reduce(_ ++ _).map { case (name, fn) =>
+      name -> ((s: SparkSession, dir: String) => {
+        graft.plans.GraftFunctions.register(s)
+        fn(s, dir)
+      })
+    }
   }
 
   lazy val oracleSql: Map[String, String] =

@@ -46,20 +46,14 @@ object TextScaleSoak {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     require(n > 0, s"doc count must be positive: $n")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // the persisted-LM leg saveAsTable's into a throwaway warehouse
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("soak-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.defaultCpus
+    val spark = Sessions.local(cpus)
+    // the persisted-LM and BM25 legs saveAsTable into a throwaway database
+    spark.sql("CREATE DATABASE soak LOCATION '" +
+      java.nio.file.Files.createTempDirectory("soak-wh").toUri + "'")
+    spark.catalog.setCurrentDatabase("soak")
 
-    val docs = soakDocs(spark, n, seed = 7L, parallelism = cpus.toInt)
+    val docs = soakDocs(spark, n, seed = 7L, parallelism = cpus)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val total = docs.count() // materialize outside any timing window
 
@@ -83,7 +77,7 @@ object TextScaleSoak {
     }
     val batchSecs = (1 to 3).map { b =>
       val batch = soakDocs(spark, n / 10, seed = 100L + b,
-          parallelism = cpus.toInt)
+          parallelism = cpus)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nBatch = batch.count() // materialize outside the timing window
       val (scored, tB) = time {
@@ -116,7 +110,6 @@ object TextScaleSoak {
     // — must scan-rate through 10⁶ docs) and vocabulary coverage (one
     // explode + agg + O(V) top-k — the distinct-token relation here is
     // 50k rows wide, the regime the no-global-window design exists for)
-    graft.plans.GraftFunctions.register(spark)
     val (gopherStats, tGopher) = time {
       TextOps.gopherRules(docs, "text")
         .agg(count(lit(1)).as("rows"),

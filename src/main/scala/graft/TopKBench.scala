@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,15 +21,7 @@ object TopKBench {
   def main(args: Array[String]): Unit = {
     val sizes =
       if (args.nonEmpty) args.map(_.toLong).toSeq else Seq(2000000L, 8000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.register(spark)
+    val spark = Sessions.local()
     import spark.implicits._
 
     val k = 10

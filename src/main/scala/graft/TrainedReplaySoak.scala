@@ -1,7 +1,6 @@
 package graft
 
 import graft.ext.{Ivf, Pq, QualityModel}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak for the TRAINED-REPLAY bench class (q75/q79/q139/q140 —
@@ -40,13 +39,7 @@ object TrainedReplaySoak {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "48g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     import spark.implicits._
 
     // clustered unit-ish vectors: cluster c lives on dims [8c, 8c+8)

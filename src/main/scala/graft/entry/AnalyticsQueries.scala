@@ -364,7 +364,6 @@ private[graft] object AnalyticsQueries {
     // a full-vocabulary shuffle) + exact recount of the ≤k candidates.
     // Result is identical to GROUP BY token HAVING n > total/(k+1).
     "q61_heavy_hitters" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       TextOps.heavyHitters(t(s, dir, "documents"), "text", k = 50)
         .orderBy(desc("n"), col("token"))
     }),
@@ -415,7 +414,6 @@ private[graft] object AnalyticsQueries {
     // AND sort the full relation; spec pins the plan to zero Window
     // operators (TopKAggSpec).
     "q83_topk_per_group" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey"))
       val rev = t(s, dir, "orders")

@@ -26,7 +26,6 @@ private[graft] object CurationQueries {
     // source, ranked by graft_top_k (O(k) state per key, map-side
     // combine; the relation is never window-sorted)
     "q90_source_cap" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       graft.ext.TextOps.capPerKey(
           t(s, dir, "documents")
             .withColumn("len", col("n_chars").cast("double")),
@@ -68,7 +67,6 @@ private[graft] object CurationQueries {
     // count vs the held-out corpus, integer-exact ≥10% drop decision;
     // zero-hit docs stay in the relation via the left join
     "q94_contamination_report" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       Dedup.contaminationReport(
           docs.filter(col("doc_id") % 31 =!= 0), "doc_id", "text",
@@ -93,7 +91,6 @@ private[graft] object CurationQueries {
     // deterministic shuffle-shard layout. The integration query for the
     // release family, like q63 is for curation and q42 for the ETL.
     "q96_release_e2e" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val bench = docs.filter(col("doc_id") % 31 === 0)
       val aug = docs.filter(col("doc_id") % 31 =!= 0)
@@ -121,7 +118,6 @@ private[graft] object CurationQueries {
     // stage is exercised for real. Flags join on doc_id; the final
     // funnel is a 1-row aggregate unpivoted with stack().
     "q101_curation_funnel" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       // par: q144's rationale - md5-per-token legs off one scan core.
       // localCheckpoint: the spread+implant head feeds FOUR legs
       // (quality scorer, dedup digest, contamination corpus AND bench) —
@@ -252,7 +248,6 @@ private[graft] object CurationQueries {
     // deterministic split → per-split census. The integration query for
     // the ext/ operator family, like q42 is for the reference's ETL.
     "q63_curation_e2e" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val bench = docs.filter(col("doc_id") % 31 === 0)
       val cleaned = docs
@@ -281,7 +276,6 @@ private[graft] object CurationQueries {
     // positives reach the exact verify join. No false negatives, so the
     // result — and the oracle — are exactly q46's.
     "q55_contamination_bloom" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       Dedup.contaminationHitsBloom(
           docs.filter(col("doc_id") % 31 =!= 0), "doc_id", "text",
@@ -312,7 +306,6 @@ private[graft] object CurationQueries {
     // per-document overlap count. One shingle-key equi-join — shuffles
     // carry shingles, never documents.
     "q46_contamination" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       Dedup.contaminationHits(
           docs.filter(col("doc_id") % 31 =!= 0), "doc_id", "text",
@@ -329,7 +322,6 @@ private[graft] object CurationQueries {
     // decontaminate as before. The full train→deploy loop inside one
     // e2e pipeline, with the training replayed in the oracle.
     "q144_trained_funnel" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       // par: teacher scoring, trained inference and the shingle legs
       // are all md5-per-token folds off this one scan (q139's rationale).
       // localCheckpoint: those legs are FIVE consumers (teacher, trained

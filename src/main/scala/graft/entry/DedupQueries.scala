@@ -55,7 +55,6 @@ private[graft] object DedupQueries {
     // ---- near-dup pairs: prefix-blocked n-gram Jaccard (oracle-checked;
     // native shingling — identical output, spec-pinned) ----------------------
     "q25_near_dup_jaccard" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       Dedup.prefixBlockedNearDupPairs(t(s, dir, "documents"), "doc_id", "text",
           prefixLen = 32, shingleN = 3, minJaccard = 0.5,
           maxBlockSize = 1000, useNative = true)
@@ -68,7 +67,6 @@ private[graft] object DedupQueries {
     // DuckDB formulation), value-string band keys. The xxhash64 pipeline
     // stays spec-tested as the fastest in-Spark path.
     "q26_minhash_near_dup" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       Dedup.minhashNearDupPairs(t(s, dir, "documents"), "doc_id", "text",
           minJaccard = 0.5, shingleN = 3, k = 64, bands = 16,
           useNative = true, portable = true)
@@ -80,7 +78,6 @@ private[graft] object DedupQueries {
     // to the DuckDB bit-op formulation), emitted as hi/lo 32-bit halves.
     // The faster xxhash64 simhash64 stays spec-pinned (DedupSpec).
     "q27_simhash" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       t(s, dir, "documents")
         .select(col("doc_id"),
           Dedup.simhash64Portable(col("text"), useNative = true).as("s"))
@@ -104,7 +101,6 @@ private[graft] object DedupQueries {
     // ±1 planes, single-table buckets, exact cosine verify of
     // bucket-mate pairs; q38 keeps the multi-table Gaussian family
     "q88_near_dup_lsh_portable" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       Dedup.cosineNearDupPairsLshPortable(t(s, dir, "embeddings"),
           "vec_id", "embedding", minCosine = 0.4, nPlanes = 4)
         .orderBy("id_a", "id_b")
@@ -156,7 +152,6 @@ private[graft] object DedupQueries {
     // ---- embedding-cosine near-dup: exact all-pairs (oracle-checked;
     // native DotExpr per pair — bit-identical, spec-pinned) -------------------
     "q37_cosine_near_dup" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       Dedup.cosineNearDupPairsExact(t(s, dir, "embeddings"),
           "vec_id", "embedding", minCosine = 0.4, useNative = true)
         .orderBy("id_a", "id_b")
@@ -170,7 +165,6 @@ private[graft] object DedupQueries {
     // conversion — deliberate-semantic-change protocol, old pin
     // 8ba6677469f22d5c4c17e4f37e5ed453 rows=15.
     "q38_cosine_near_dup_lsh" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       Dedup.cosineNearDupPairsLshPortableMulti(t(s, dir, "embeddings"),
           "vec_id", "embedding", minCosine = 0.4, nTables = 4, nPlanes = 6)
         .orderBy("id_a", "id_b")
@@ -197,7 +191,6 @@ private[graft] object DedupQueries {
     // propagation (checkpointed rounds, converges in diameter rounds);
     // the DuckDB oracle walks the same graph with a recursive CTE.
     "q53_dup_clusters" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val edges = Dedup.prefixBlockedNearDupPairs(docs, "doc_id", "text",
         prefixLen = 32, shingleN = 3, minJaccard = 0.5,
@@ -215,7 +208,6 @@ private[graft] object DedupQueries {
     // operators (blocked near-dup pairs → connected components →
     // windowed argmax pick).
     "q71_canonical_doc" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val edges = Dedup.prefixBlockedNearDupPairs(docs, "doc_id", "text",
         prefixLen = 32, shingleN = 3, minJaccard = 0.5,
@@ -239,7 +231,6 @@ private[graft] object DedupQueries {
     // conversion — deliberate-semantic-change protocol, old pin
     // f885d8ce276a7969d1165fc3111f74d8 rows=480.)
     "q56_semantic_dedup" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       Dedup.semanticDedupKeptIdsSeeded(t(s, dir, "embeddings"), "vec_id",
           "embedding", minCosine = 0.4, nList = 8, iters = 2)
         .orderBy("vec_id")
@@ -252,7 +243,6 @@ private[graft] object DedupQueries {
     // is the trained-quantizer variant (itself oracle-checked since
     // round 10 via the seeded trainer)
     "q84_semantic_dedup_exemplar" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       Dedup.semanticDedupKeptIdsExemplar(t(s, dir, "embeddings"), "vec_id",
           "embedding", minCosine = 0.4, k = 8)
         .orderBy("vec_id")

@@ -34,17 +34,6 @@ private[graft] object EntryTables {
   def par(df: DataFrame, key: String): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(key))
 
-  /** Run two INDEPENDENT eager derivations (localCheckpoint
-    * materializations, artifact writes) concurrently — guide §2.6:
-    * Spark happily runs several jobs at once inside one application;
-    * actions are only sequential because the driver calls them
-    * sequentially, so a query whose plan needs two unrelated
-    * materialized legs should not pay their latencies back to back.
-    * The scheduler back-fills one leg's straggler tail with the other
-    * leg's tasks. Results are unchanged — only submission order is. */
-  def inParallel[A, B](a: => A, b: => B): (A, B) =
-    graft.ext.Warehouse.inParallel(a, b)
-
   /** q120's fixed BPE merge table — CONSISTENT (every operand is a base
     * character or an earlier merge's output), which is the condition
     * under which replay-in-rank-order equals the lowest-rank-present

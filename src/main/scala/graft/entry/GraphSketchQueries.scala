@@ -75,7 +75,6 @@ private[graft] object GraphSketchQueries {
     // (est in [exact, exact + ceil(eps·N)]), which CMS guarantees at
     // confidence 0.999 and which is deterministic at fixed seed/data.
     "q116_heavy_keys_cms" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val li = t(s, dir, "lineitem")
       val merged = graft.ext.Sketches.cmsCollectMerged(
         graft.ext.Sketches.cmsSketches(li, "l_partkey", "l_returnflag"))

@@ -67,7 +67,6 @@ private[graft] object RetrievalQueries {
     // exact quadratic baseline; maxSimTopKPooled is the serving funnel
     // (spec-pinned equal under an everything-shortlist).
     "q122_maxsim_topk" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val toks = t(s, dir, "embeddings")
         .withColumn("doc", expr("vec_id div 8"))
       val queries = toks.filter(col("doc") % 10 === 0)
@@ -120,7 +119,6 @@ private[graft] object RetrievalQueries {
     // ranks are themselves cross-engine-stable (integer BM25 micro;
     // q30's rounded cosine), so the fusion is hash-checkable end to end.
     "q124_hybrid_rrf" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val (toks, dl) = docToksDl(s, dir)
       val emb = t(s, dir, "embeddings")
       val qterms = hybridQterms(toks)
@@ -145,7 +143,6 @@ private[graft] object RetrievalQueries {
     // the anti-join runs on the tiny pre-truncated (queries × 20)
     // lattice (broadcast at any corpus scale).
     "q126_hard_negatives" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val (toks, dl) = docToksDl(s, dir)
       val emb = t(s, dir, "embeddings")
       val qterms = hybridQterms(toks)
@@ -184,7 +181,6 @@ private[graft] object RetrievalQueries {
     // rank per query in exact micro-integers, the eval harness shape
     // (swap in human qrels for the truth relation in production).
     "q128_retrieval_metrics" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       // the metric joins read each tiny leg 2-3 times — materialize
       // once (queries × 20 rows) instead of recomputing the scorers;
@@ -209,7 +205,7 @@ private[graft] object RetrievalQueries {
           .select(col("query_id"), col("neighbor_id").as("doc_id"),
             col("rank"))
           .localCheckpoint()
-      val (lex, dense) = inParallel(lexLeg(), denseLeg())
+      val (lex, dense) = graft.ext.Warehouse.inParallel(lexLeg(), denseLeg())
       Retrieval.rankEvalMetrics(lex, dense, "query_id", "doc_id")
         .orderBy("query_id")
     }),
@@ -233,7 +229,6 @@ private[graft] object RetrievalQueries {
     // overlap have no rankable window and drop at the passage join
     // (documented operator contract); ranks keep their fused values.
     "q130_rag_serving" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val (toks, dl) = docToksDl(s, dir)
       val emb = t(s, dir, "embeddings")
       val qterms = hybridQterms(toks)
@@ -271,7 +266,6 @@ private[graft] object RetrievalQueries {
     // composes as a semi-join on the candidate lists). The predicate
     // join is broadcast-sized metadata, never vectors.
     "q135_filtered_ann" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val meta = t(s, dir, "documents")
         .select(col("doc_id").as("vec_id"), col("lang"))
@@ -289,7 +283,6 @@ private[graft] object RetrievalQueries {
     // a probed list short on allowed members returns < k by design
     // (the documented trade vs q135's exact pre-filter).
     "q136_filtered_ivf" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val allowed = t(s, dir, "documents")
         .filter(col("lang") === "en")
@@ -307,7 +300,6 @@ private[graft] object RetrievalQueries {
     // metrics; a starved query shows up as depressed recall, not a
     // silent absence.
     "q137_filtered_recall" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val allowed = t(s, dir, "documents")
         .filter(col("lang") === "en")
@@ -315,7 +307,7 @@ private[graft] object RetrievalQueries {
       val queries = emb.filter(col("vec_id") % 100 === 0)
       // truth and system are independent materialized legs — submit
       // them concurrently (§2.6) instead of back to back
-      val (truth, system) = inParallel(
+      val (truth, system) = graft.ext.Warehouse.inParallel(
         Similarity.bruteForceTopK(
             emb.join(allowed, Seq("vec_id")), queries, "vec_id",
             "embedding", k = 5, dim = Some(64), useNative = true)
@@ -336,7 +328,6 @@ private[graft] object RetrievalQueries {
     // lowest id; the greedy trace is reproducible enough to unroll as
     // five oracle selection stages.
     "q138_mmr_rerank" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       val cands = Similarity.bruteForceTopK(emb, queries, "vec_id",

@@ -24,7 +24,6 @@ private[graft] object SimilarityQueries {
     // ---- brute-force cosine top-k (exact ANN baseline; native DotExpr,
     // bit-identical to the unrolled chain — spec-pinned) ----------------------
     "q30_topk_cosine" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 5,
@@ -41,7 +40,6 @@ private[graft] object SimilarityQueries {
     // conversion — deliberate-semantic-change protocol, old pin
     // b7aa123c78a891b2f354188462e8d69a rows=25.
     "q31_topk_lsh" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       Similarity.lshTopKPortableMulti(emb, queries, "vec_id", "embedding",
@@ -60,7 +58,6 @@ private[graft] object SimilarityQueries {
     // deliberate-semantic-change re-record protocol, old pin
     // a465e1d78d27cc29fbc3a9624519737d rows=25.)
     "q43_topk_ivf" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       graft.ext.Ivf.ivfTopKSeeded(emb, queries, "vec_id", "embedding",
@@ -75,7 +72,6 @@ private[graft] object SimilarityQueries {
     // cross-engine; q43 is the trained-quantizer variant (itself
     // oracle-checked since round 10 via the seeded trainer)
     "q85_topk_ivf_exemplar" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       graft.ext.Ivf.ivfTopKExemplar(emb, queries, "vec_id", "embedding",
@@ -88,7 +84,6 @@ private[graft] object SimilarityQueries {
     // rerank — the standard web-scale retrieval stack shape, verified
     // cross-engine end to end (composes q85's candidates with q112's scan).
     "q121_topk_ivf_int8" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       graft.ext.Ivf.ivfInt8TopKExemplar(emb, queries, "vec_id", "embedding",
@@ -102,7 +97,6 @@ private[graft] object SimilarityQueries {
     // cross-engine; q31 keeps the multi-table Gaussian family (rows-only,
     // recall-bounded)
     "q86_topk_lsh_portable" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       graft.ext.Similarity.lshTopKPortable(emb, queries, "vec_id",
@@ -116,7 +110,6 @@ private[graft] object SimilarityQueries {
     // encode/ADC pipeline verified cross-engine; q79 keeps the trained
     // IVF-PQ with residual encoding (rows-only, recall-bounded)
     "q89_pq_adc_exemplar" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       graft.ext.Pq.pqAdcTopKExemplar(emb, queries, "vec_id", "embedding",
@@ -130,7 +123,6 @@ private[graft] object SimilarityQueries {
     // mean → renormalize) verified cross-engine; q75 is the trained
     // multi-iteration model (itself oracle-checked since round 10)
     "q87_lloyd_step_exemplar" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       graft.ext.Ivf.lloydStepExemplar(t(s, dir, "embeddings"), "vec_id",
           "embedding", nList = 8)
         .orderBy("list", "pos")
@@ -142,7 +134,6 @@ private[graft] object SimilarityQueries {
     // intermediate bit-stable cross-engine (DECIMAL means, IEEE
     // division/sqrt, sequential dots); the oracle unrolls both steps
     "q91_lloyd_iterate_exemplar" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       graft.ext.Ivf.lloydIterateExemplar(t(s, dir, "embeddings"), "vec_id",
           "embedding", nList = 8, iters = 2)
         .orderBy("list", "pos")
@@ -155,7 +146,6 @@ private[graft] object SimilarityQueries {
     // hazard in the scan, so the whole pipeline hash-checks cross-engine
     // (unlike LSH/IVF, which need exemplar twins).
     "q112_topk_int8" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       Similarity.int8TopK(emb, queries, "vec_id", "embedding", k = 5,
@@ -173,7 +163,6 @@ private[graft] object SimilarityQueries {
     // a spec assertion. One semi-join of two k-row-per-query lists +
     // two map-side-combining counts.
     "q189_quantization_recall" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       val exact = Similarity.bruteForceTopK(emb, queries, "vec_id",
@@ -197,7 +186,6 @@ private[graft] object SimilarityQueries {
     // cosine scan (4× less vector IO), full-64 exact rerank — like q112
     // deterministic end to end, so it hash-checks without an exemplar twin.
     "q115_topk_matryoshka" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       Similarity.truncatedTopK(emb, queries, "vec_id", "embedding", k = 5,
@@ -213,7 +201,6 @@ private[graft] object SimilarityQueries {
     // conversion pattern; q75 was rows-only for eight rounds because
     // its murmur3-ordered init had no cross-engine twin).
     "q75_kmeans" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       graft.ext.Ivf.kmeansPlusPlusStats(t(s, dir, "embeddings"), "vec_id",
         "embedding", nList = 8, iters = 2, dim = 64)
     }),
@@ -229,7 +216,6 @@ private[graft] object SimilarityQueries {
     // change protocol, old pin 2e3d3b8f1ae8c3c100253b9a75ca7a7b
     // rows=25.
     "q79_topk_ivfpq" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       graft.ext.Pq.ivfPqTopKSeeded(emb, queries, "vec_id", "embedding",

@@ -847,7 +847,6 @@ private[graft] object TextQueries {
     * `decl_ok` flag — shared by q186's census and q190's divergence
     * report. */
   private def urlIdentityRows(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val canon = graft.ext.UrlOps.withCanonicalUrl(
       withPlantedIdentityHttp(t(s, dir, "documents")), "url")
     val gated = graft.io.WarcIngest.withHttpResponse(canon, "payload")
@@ -870,7 +869,6 @@ private[graft] object TextQueries {
     * its cycles over EXACTLY the schedule the batch capstone uses. */
   private[graft] def q198CollapsedFrontier(s: SparkSession,
                                            dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val comp = graft.ext.Graph.loadComponents(
         s, mirrorComponentArtifact(s, dir))
       .select(col("id").as("link_host"), col("component").as("__rep"))
@@ -887,7 +885,6 @@ private[graft] object TextQueries {
     * harvest + anti join and robotsVerdict consumes it TWICE, so the
     * plan is cut there (the localCheckpoint discipline, cf. q130). */
   private def crawlFrontier(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     // NO par here: the head is consumed by TWO chains (outlink
     // extraction and the fetched-set anti-join), and the r17 A/B of a
     // spread measured the whole frontier family 1.5-2.9× SLOWER
@@ -946,7 +943,6 @@ private[graft] object TextQueries {
     * (determinism/oracle-replay — never wall-clock). */
   private def crawlFrontierRecency(s: SparkSession, dir: String,
       asOf: String = "2026-02-10"): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val docs = t(s, dir, "documents")
     val canon = graft.ext.UrlOps.withCanonicalUrl(
       withPlantedUrl(docs), "url")
@@ -1074,7 +1070,6 @@ private[graft] object TextQueries {
     * assembles the shared CTE generators. */
   private def sitemapRecursionFrontier(s: SparkSession, dir: String,
       asOf: String = "2026-02-10"): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val docs = t(s, dir, "documents")
     val canon = graft.ext.UrlOps.withCanonicalUrl(
       withPlantedUrl(docs), "url")
@@ -1131,7 +1126,6 @@ private[graft] object TextQueries {
     * shared generators of all four families. */
   private def unifiedFrontier(s: SparkSession, dir: String,
       asOf: String = "2026-02-10"): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val docs = t(s, dir, "documents")
     val canon = graft.ext.UrlOps.withCanonicalUrl(
       withPlantedUrl(docs), "url")
@@ -1663,7 +1657,6 @@ private[graft] object TextQueries {
     // for the robots discovery path. Every stage is the shipped
     // operator; the oracle assembles the shared CTE generators.
     "q176_robots_sitemap_frontier" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val canon = graft.ext.UrlOps.withCanonicalUrl(
         withPlantedUrl(docs), "url")
@@ -1800,7 +1793,6 @@ private[graft] object TextQueries {
     // host — the q173 composition discipline over the
     // exclusion-aware legs.
     "q180_exclusion_frontier" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val canon = graft.ext.UrlOps.withCanonicalUrl(
         withPlantedUrl(docs), "url")
@@ -2068,7 +2060,6 @@ private[graft] object TextQueries {
     // seeded from the schedule itself (every third URL pre-known, every
     // sixth tombstoned) so all CDC classes are exercised on real keys.
     "q192_crawl_cycle" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       // legs 1+2: frontier → throttle-aware schedule (q181 verbatim)
       val delays = graft.ext.UrlOps.robotsCrawlDelay(
@@ -2339,7 +2330,6 @@ private[graft] object TextQueries {
     // auditComponents): the scheduler probes stored state, it never
     // retrains components per scheduling query.
     "q196_mirror_collapse" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val comp = graft.ext.Graph.loadComponents(
           s, mirrorComponentArtifact(s, dir))
         .select(col("id").as("link_host"),
@@ -2372,7 +2362,6 @@ private[graft] object TextQueries {
     // which is exactly the wasted fetch budget the drift check
     // exists to reclaim. q196/q198's own artifact is untouched.
     "q201_mirror_drift_rebuild" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val (pre, live) = mirrorRebuildArtifact(s, dir)
       val cPre = graft.ext.Graph.loadComponents(s, pre)
         .select(col("id").as("link_host"), col("component").as("__rp"))
@@ -2411,7 +2400,6 @@ private[graft] object TextQueries {
     // relation (bounded, scheduler-sized at any corpus scale), never
     // documents.
     "q203_authority_drift_rebuild" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val (pre, live) = authorityRebuildArtifact(s, dir)
       val pPre = graft.ext.Graph.loadPageRank(s, pre)
         .select(col("host"), col("pr_micro").as("__pa"))
@@ -2444,7 +2432,6 @@ private[graft] object TextQueries {
     // column here is a bucketed probe of maintained state — zero
     // training, zero corpus reads, host-sized joins throughout.
     "q204_scheduler_state" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val budget = crawlFrontier(s, dir).groupBy(col("link_host"))
         .agg(count(lit(1)).as("n_budgeted"))
       val gated = graft.ext.RobotsCache.ttlGate(s, budget, "link_host",
@@ -2495,7 +2482,6 @@ private[graft] object TextQueries {
     // queue drops. Untightened hosts' verdicts stand — no re-verdict
     // work where policy did not tighten.
     "q197_tightening_reverdict" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val fr = crawlFrontier(s, dir).localCheckpoint()
       val hosts = fr.select(col("link_host").as("host")).distinct()
         .withColumn("digit", regexp_extract(col("host"),
@@ -2563,7 +2549,6 @@ private[graft] object TextQueries {
     // state — every column a read of a persisted artifact or the
     // schedule that fed it.
     "q198_crawl_cycle2" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val dirkey = dir.replaceAll("[^a-zA-Z0-9]", "_").toLowerCase
       // leg 1: the mirror-component ARTIFACT (q196's persisted
       // labeling) collapses the frontier
@@ -2676,7 +2661,6 @@ private[graft] object TextQueries {
     // content-keyed exchange (UrlOps.withDeclaredCanonical +
     // Dedup.declaredCanonicalPick).
     "q170_declared_canonical" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val pages = withPlantedCanonicalDecl(t(s, dir, "documents"))
       val withDecl = graft.ext.UrlOps.withDeclaredCanonical(
         pages, "html", "url", "url")
@@ -2699,7 +2683,6 @@ private[graft] object TextQueries {
     // graft_top_k budget (O(k) state, map-side combine) ordered
     // (age bucket ASC, url ASC) — fresh pages re-crawl first.
     "q169_refetch_schedule" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val gated = graft.io.WarcIngest.withHttpResponse(
         withPlantedConditionalHttp(t(s, dir, "documents")), "payload")
       val sched = gated.filter(col("is_fetch_content"))
@@ -2786,7 +2769,6 @@ private[graft] object TextQueries {
     // that mangles any class hash-mismatches; roundtrip_ok carries the
     // assertion live in the output.
     "q166_charset_decode" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val safe = regexp_replace(
         substring(col("text"), 1, 60), "[^ -~]", "")
       val expected = concat(
@@ -3002,7 +2984,6 @@ private[graft] object TextQueries {
     // slots spread 2×, odd hosts keep the bootstrap winners,
     // cache-less hosts (cdn/port variants) ride the 1 s default.
     "q199_delay_from_cache" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val table = "graft_robots_delay_" +
         dir.replaceAll("[^a-zA-Z0-9]", "_").toLowerCase
@@ -3166,7 +3147,6 @@ private[graft] object TextQueries {
     // over the corpus — the model broadcasts inside the expression,
     // nothing document-sized ever exchanges.
     "q200_perplexity_filter" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val table = unigramModelArtifact(s, dir)
       val toks = TextOps.withUnigramTokensIndexed(s, table,
         t(s, dir, "documents"), "text")
@@ -3199,7 +3179,6 @@ private[graft] object TextQueries {
     // discipline: flags computed independently, intersected in stage
     // order).
     "q202_ccnet_funnel" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       // par: four gate legs (Viterbi tokenize, quality score, digest,
       // shingle decontamination) all fold over the text of the same
       // one-row-group scan — spread once at the source
@@ -3490,7 +3469,6 @@ private[graft] object TextQueries {
     // consistent (each operand is a base char or an earlier merge's
     // output), where replay-in-order ≡ the lowest-rank-present loop.
     "q120_bpe_tokenize" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       TextOps.withBpeTokens(par(t(s, dir, "documents"), "doc_id"),
           "text", Q120Merges)
         .select(col("doc_id"), col("n_bpe_tokens"),
@@ -3504,7 +3482,6 @@ private[graft] object TextQueries {
     // global window over the distinct-token relation); the oracle uses
     // the window formulation, same contract as q48/q83/q90.
     "q118_vocab_coverage" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       TextOps.vocabularyCoverage(t(s, dir, "documents"), "text", topV = 100)
         .orderBy("rank")
     }),
@@ -3537,7 +3514,6 @@ private[graft] object TextQueries {
     // statistics — the df/idf side aggregates over the whole corpus while
     // staying one lazy plan (broadcast 1-row N, term-keyed shuffles)
     "q48_tfidf_topk" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       TextOps.tfidfTopTerms(t(s, dir, "documents"), "doc_id", "text", k = 5,
           useNative = true) // graft_top_k ranking — no window sort of the
         .orderBy("doc_id", "rank") // scored term relation (≡, spec-pinned)
@@ -3548,7 +3524,6 @@ private[graft] object TextQueries {
     // Native shingling (bit-identical, spec-pinned) — the HOF bigram path
     // was the catalog's slowest remaining constant (4.8 s at sf0.1).
     "q47_repetition" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       TextOps.repetitionStats(t(s, dir, "documents"), "doc_id", "text",
           useNative = true)
         .orderBy("doc_id")
@@ -3615,7 +3590,6 @@ private[graft] object TextQueries {
     // merge table (the q120 discipline) keeps the whole pipeline
     // SQL-expressible; integer micro ratio, bottom-25 by (ratio, id).
     "q141_bpe_compression" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       TextOps.withBpeTokens(t(s, dir, "documents"), "text", Q120Merges)
         .select(col("doc_id"),
           length(col("text")).cast("long").as("n_chars"),

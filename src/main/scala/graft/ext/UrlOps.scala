@@ -99,8 +99,8 @@ object UrlOps {
     * `useNative = true` (the default) routes through
     * `graft.plans.UrlCanonExpr` — ONE string walk per URL instead of
     * the ~12 regex executions of the column chain (measured
-    * 31 µs/link in `UrlFamilyProfile`; at 10¹¹ crawl links the chain
-    * is ~860 CPU-hours). Output is bit-identical — each rule is
+    * 31 µs/link at sf0.1, BASELINE.md round 11; at 10¹¹ crawl links
+    * the chain is ~860 CPU-hours). Output is bit-identical — each rule is
     * transcribed, and `UrlOpsSpec` property-pins native ≡ chain over
     * generated URLs plus every planted shape. The column chain
     * ([[canonicalUrl]]/[[urlHost]]) stays as the reference

@@ -9,7 +9,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native one-pass URL canonicalization — the hot-path twin of
   * `UrlOps.canonicalUrl`'s column chain. The chain is ~12 regex
-  * executions per URL (measured 31 µs/link in `UrlFamilyProfile` —
+  * executions per URL (measured 31 µs/link at sf0.1, BASELINE.md
+  * round 11 —
   * at 10¹¹ crawl links that is ~860 CPU-hours of canonicalization
   * alone); this expression walks the string once with index
   * arithmetic and returns `struct<canon, host, had_tracking>` so the

@@ -50,8 +50,9 @@ object Rules {
     * component are dropped, then 2nd+ occurrences of a duplicated key are
     * dropped. "First occurrence" is pinned deterministically by ordering on
     * all non-PK columns (the reference keeps pandas file order, which has
-    * no distributed analog). Dedup is one row_number window over the key —
-    * a single shuffle on the PK.
+    * no distributed analog); a key-only frame orders by the key itself,
+    * since its duplicates are identical rows. Dedup is one row_number
+    * window over the key — a single shuffle on the PK.
     */
   object PrimaryKeyRule extends Rule {
     val name = "primary_key"
@@ -64,10 +65,11 @@ object Rules {
         pk.mkString(","), keyExpr(pk), lit("null primary key component"))
 
       val nonNull = df.filter(!anyNull)
-      val order = df.columns.filterNot(pk.contains).map(col)
+      val rest = df.columns.toSeq.filterNot(pk.contains)
+      val order = (if (rest.isEmpty) pk else rest).map(col)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(pk.map(col): _*)
-        .orderBy(order.toSeq: _*)
+        .orderBy(order: _*)
       val numbered = nonNull.withColumn("__rn", row_number().over(w))
       val dupViol = Violations.shape(numbered.filter(col("__rn") > 1),
         cfg.name, name, pk.mkString(","), keyExpr(pk),

@@ -65,6 +65,24 @@ class AqeParitySpec extends SparkSpec {
     // row (three left-joined probes + a global decision window)
     "q203_authority_drift_rebuild", "q204_scheduler_state")
 
+  test("specs run under the Bench/Verify session configuration") {
+    val conf = SparkSpec.session.conf
+    assert(conf.get(
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+    assert(conf.get("spark.sql.parquet.outputTimestampType") ==
+      "TIMESTAMP_MICROS")
+    assert(conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+  }
+
+  test("catalog queries register graft functions on a fresh session") {
+    val fresh = spark.newSession()
+    assert(!fresh.catalog.functionExists("graft_word_shingles"))
+    val rows = SparkEntry.queries("q25_near_dup_jaccard")(
+      fresh, dir).collect()
+    assert(rows.nonEmpty)
+  }
+
   test("AQE on and off produce identical rows for partition-sensitive " +
     "queries") {
     for (name <- probes) {

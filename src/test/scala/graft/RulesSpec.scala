@@ -29,6 +29,18 @@ class RulesSpec extends SparkSpec {
     assert(viols == Seq("duplicate primary key", "null primary key component"))
   }
 
+  test("PrimaryKeyRule dedups a frame whose every column is a key column") {
+    val df = Seq((Some(1L), "a"), (Some(1L), "a"), (Some(2L), "a"),
+      (None, "b")).toDF("id", "part")
+    val r = Rules.PrimaryKeyRule(df, TableConfig("t",
+      Seq(ColumnSpec("id", LongType, primaryKey = true),
+        ColumnSpec("part", StringType, primaryKey = true))), Map.empty)
+    assert(r.cleaned.as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "a")))
+    assert(r.violations.select("detail").as[String].collect().sorted.toSeq ==
+      Seq("duplicate primary key", "null primary key component"))
+  }
+
   test("ForeignKeyRule keeps nulls (reported) and drops dangling (reported)") {
     val child = Seq((1L, "a", Some(10L)), (2L, "b", Some(99L)),
       (3L, "c", None)).toDF("id", "name", "ref")

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all specs: one JVM-wide session (cheap
-  * getOrCreate), UTC, tiny shuffle fan-out so unit tests stay fast.
+/** Shared local SparkSession for all specs: one JVM-wide session from
+  * [[Sessions.local]].
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -23,15 +23,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** The configuration `Bench` and `Verify` run under, at 4 cores so
+    * the suite's shuffles stay small. */
+  lazy val session: SparkSession = Sessions.local(4)
 }
