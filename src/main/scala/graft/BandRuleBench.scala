@@ -58,19 +58,13 @@ object BandRuleBench {
         .filter(col("id_a") < col("id_b"))
     }
 
-    def time(f: => Long): (Long, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-
     // session WITHOUT the rule: plain levenshtein per surviving pair
     val plainSession = spark.newSession()
-    val (nPlain, tPlain) = time {
+    val (nPlain, tPlain) = BenchUtil.time {
       pairs(plainSession).filter(expr("levenshtein(a, b) <= 40")).count()
     }
     // session WITH the rule: band prefilter + thresholded DP
-    val (nBand, tBand) = time {
+    val (nBand, tBand) = BenchUtil.time {
       pairs(spark).filter(expr("levenshtein(a, b) <= 40")).count()
     }
     require(nPlain == nBand, s"rule changed results: $nPlain vs $nBand")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Shared helpers for the bench/soak mains (one timing convention,
@@ -11,6 +12,12 @@ private[graft] object BenchUtil {
     val a = f
     (a, (System.nanoTime() - t0) / 1e9)
   }
+
+  /** Blocks until the listener bus has delivered every queued event:
+    * listener callbacks are asynchronous, so read a meter only after
+    * draining. */
+  def drain(sc: SparkContext): Unit =
+    org.apache.spark.GraftListenerBus.drain(sc)
 
   /** Stage-level shuffle totals since construction (bytes written). */
   final class ShuffleMeter extends SparkListener {

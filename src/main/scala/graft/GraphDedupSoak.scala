@@ -65,7 +65,7 @@ object GraphDedupSoak {
       }.toDF("doc_id", "text")
   }
 
-  import BenchUtil.{ShuffleMeter, time}
+  import BenchUtil.{ShuffleMeter, drain, time}
 
   def main(args: Array[String]): Unit = {
     val soakN = if (args.length > 0) args(0).toLong else 1000000L
@@ -90,6 +90,7 @@ object GraphDedupSoak {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
         .count()
     }
+    drain(spark.sparkContext)
     val edgeShuffle = meter.writeBytes
     val cachedEdges = edgesOf(docs, cap = 1000) // same plan → cache hit
 
@@ -106,6 +107,7 @@ object GraphDedupSoak {
       lab.count()
       (lab, r)
     }
+    drain(spark.sparkContext)
     val totalShuffle = meter.writeBytes
     val nClusters = labels.select("component").distinct().count()
     val multi = labels.groupBy("component").count()

@@ -70,7 +70,7 @@ object MergeSoak {
     base.unionByName(inserts)
   }
 
-  import BenchUtil.{ShuffleMeter, time}
+  import BenchUtil.{ShuffleMeter, drain, time}
 
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 10000000L
@@ -92,6 +92,7 @@ object MergeSoak {
       val ch = Merge.classify(incoming, existing, Seq("pk"))
       (ch.inserts.count(), ch.updates.count(), ch.deletes.count())
     }
+    drain(spark.sparkContext)
     val classifyShuffle = meter.writeBytes
     val (nInserts, nUpdates, nDeletes) = counts
 
@@ -102,6 +103,7 @@ object MergeSoak {
       p.count()
       p
     }
+    drain(spark.sparkContext)
     val postShuffle = meter.writeBytes - classifyShuffle
 
     // the "ONE shuffle per side" plan claim: exactly one hashpartitioning

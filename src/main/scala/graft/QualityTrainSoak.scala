@@ -42,18 +42,18 @@ object QualityTrainSoak {
     }.toDF("doc_id", "text", "label")
       .localCheckpoint() // generation cost out of the timing window
 
-    val t0 = System.nanoTime()
-    val w = QualityModel.trainQualityClassifier(docs, "doc_id", "text",
-      "label", nBuckets = 4096, steps = 6, lrPpm = 200000L)
-    val trainSec = (System.nanoTime() - t0) / 1e9
+    val (w, trainSec) = BenchUtil.time {
+      QualityModel.trainQualityClassifier(docs, "doc_id", "text",
+        "label", nBuckets = 4096, steps = 6, lrPpm = 200000L)
+    }
 
-    val t1 = System.nanoTime()
-    val scored = QualityModel.qualityClassifierScoreWith(docs, "text", w.toSeq)
-      .select(col("label"), col("kept"))
-      .groupBy(col("label"), col("kept")).count()
-      .collect().map(r => (r.getBoolean(0), r.getBoolean(1)) -> r.getLong(2))
-      .toMap
-    val scoreSec = (System.nanoTime() - t1) / 1e9
+    val (scored, scoreSec) = BenchUtil.time {
+      QualityModel.qualityClassifierScoreWith(docs, "text", w.toSeq)
+        .select(col("label"), col("kept"))
+        .groupBy(col("label"), col("kept")).count()
+        .collect().map(r => (r.getBoolean(0), r.getBoolean(1)) -> r.getLong(2))
+        .toMap
+    }
     val correct = scored.getOrElse((true, true), 0L) +
       scored.getOrElse((false, false), 0L)
     val pos = scored.getOrElse((true, true), 0L) +

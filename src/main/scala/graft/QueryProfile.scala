@@ -50,8 +50,7 @@ object QueryProfile {
           val t1 = System.nanoTime()
           df.write.format("noop").mode("overwrite").save()
           val t2 = System.nanoTime()
-          // listener events are async; give the bus a beat before reading
-          Thread.sleep(200)
+          BenchUtil.drain(spark.sparkContext)
           println(f"$name%-32s $r%3d  ${(t1 - t0) / 1e9}%7.2f ${(t2 - t1) / 1e9}%7.2f  ${(t2 - t0) / 1e9}%7.2f  ${jobs.get}%4d ${stages.get}%5d ${tasks.get}%6d ${taskMs.get / 1e3}%7.1f")
         } catch {
           case e: Throwable =>

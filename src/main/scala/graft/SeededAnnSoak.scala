@@ -43,11 +43,6 @@ object SeededAnnSoak {
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select(col("query_id").cast("long"), col("neighbor_id").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
 
     // exact truth via graft_top_k, NOT the windowed bruteForceTopK: at
     // 10⁶ corpus × 500 queries the window formulation sort-spills the
@@ -55,7 +50,7 @@ object SeededAnnSoak {
     // exhausted this host), while the bounded aggregate keeps O(k)
     // state per query and shuffles ≤ k rows per (partition, query).
     // Tie semantics identical (ord DESC, payload ASC).
-    val (truth, bruteSec) = time {
+    val (truth, bruteSec) = BenchUtil.time {
       val c = emb.select(col("vec_id").as("neighbor_id"),
           transform(col("embedding"), x => x.cast("double")).as("cv"))
         .withColumn("cn", Similarity.norm(col("cv")))
@@ -76,7 +71,7 @@ object SeededAnnSoak {
       agg.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
 
-    val (ivfRows, ivfSec) = time {
+    val (ivfRows, ivfSec) = BenchUtil.time {
       pairs(Ivf.ivfTopKSeeded(emb, queries, "vec_id", "embedding", k,
         nList = 16, nProbe = 4, iters = 2))
     }
@@ -87,7 +82,7 @@ object SeededAnnSoak {
     // at 10⁵+ vectors the coarser books make ADC ordering noise and
     // recall collapses to ~0.2 (measured); candK widens with k the same
     // way the perf API's rerankFactor does
-    val (pqRows, pqSec) = time {
+    val (pqRows, pqSec) = BenchUtil.time {
       pairs(Pq.ivfPqTopKSeeded(emb, queries, "vec_id", "embedding", k,
         nList = 16, nProbe = 4, iters = 2, m = 8, ksub = 32, cbIters = 2,
         candK = 10 * k))

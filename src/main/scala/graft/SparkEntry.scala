@@ -42,13 +42,6 @@ object SparkEntry {
     ("curation", CurationQueries.queries, CurationQueries.oracleSql),
     ("graph", GraphSketchQueries.queries, GraphSketchQueries.oracleSql))
 
-  /** Schema-adaptive events reader — the ONLY sanctioned way to read
-    * `events.parquet` (TestDataCanarySpec guards the vintages).
-    * Forwarded so existing call sites keep their address.
-    */
-  private[graft] def events(s: SparkSession, dir: String): DataFrame =
-    EntryTables.events(s, dir)
-
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q03_join_revenue_nation")(spark, "/root/testdata/sf0.001")

@@ -77,15 +77,9 @@ object TrainedReplaySoak {
       }.toDF("doc_id", "text", "label")
       .localCheckpoint()
 
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-
     def kmeansLeg(rows: Long): Double = {
       val emb = vectors(rows)
-      val (stats, sec) = timed {
+      val (stats, sec) = BenchUtil.time {
         Ivf.kmeansPlusPlusStats(emb, "vec_id", "vec",
           nList = NClusters, iters = 2, dim = Dim).collect()
       }
@@ -105,7 +99,7 @@ object TrainedReplaySoak {
     def pqLeg(rows: Long): Double = {
       val emb = vectors(rows)
       val m = 8; val ksub = 32
-      val ((coarse, books), sec) = timed {
+      val ((coarse, books), sec) = BenchUtil.time {
         val c = Ivf.trainCentroids(emb, "vec", NClusters, Dim)
         (c, Pq.trainCodebooks(emb, "vec", c, m, ksub, Dim))
       }
@@ -121,7 +115,7 @@ object TrainedReplaySoak {
 
     def logisticLeg(rows: Long): Double = {
       val d = docs(rows)
-      val (w, sec) = timed {
+      val (w, sec) = BenchUtil.time {
         QualityModel.trainQualityClassifier(d, "doc_id", "text",
           "label", nBuckets = 4096, steps = 6, lrPpm = 200000L)
       }

@@ -123,31 +123,14 @@ private[graft] object CurationQueries {
       // (quality scorer, dedup digest, contamination corpus AND bench) —
       // materialize it once so the plan carries ONE spread exchange, not
       // one full-payload re-shuffle per leg (the r16 regression shape).
-      val withDups = par(t(s, dir, "documents"), "doc_id")
-        .withColumn("text",
-          when(col("doc_id") % 17 === 0,
-            lit("duplicate stanza alpha shared across documents"))
-            .otherwise(col("text")))
+      val withDups = withDupImplant(par(t(s, dir, "documents"), "doc_id"))
         .localCheckpoint()
       val bench = withDups.filter(col("doc_id") % 31 === 0)
       val corpus = withDups.filter(col("doc_id") % 31 =!= 0)
       val qf = QualityModel.qualityClassifierScore(corpus, "text")
         .select(col("doc_id"), col("kept").as("q_ok"))
-      // keep-first flag as an AGGREGATE on the digest + id-keyed join
-      // back (the q149-tail shape) — never a content-keyed window: a
-      // hot duplicate group reduces map-side instead of sorting on one
-      // task. The thin (id, digest) relation has two consumers, so cut
-      // the plan there.
-      val dThin = corpus.select(col("doc_id"), md5(col("text")).as("__h"))
-        .localCheckpoint()
-      val dWin = dThin.groupBy(col("__h"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"), lit(true).as("__w"))
-      val df = dThin.join(dWin, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("__w"), lit(false)).as("d_ok"))
-      val cf = Dedup.contaminationReport(corpus, "doc_id", "text", bench,
-          shingleN = 8, dropPct = 10, useNative = true)
-        .select(col("doc_id"), (!col("dropped")).as("c_ok"))
+      val df = funnelDedupStage(corpus)
+      val cf = funnelContamStage(corpus, bench)
       qf.join(df, "doc_id").join(cf, "doc_id")
         .agg(
           count(lit(1)).as("n_total"),
@@ -327,11 +310,7 @@ private[graft] object CurationQueries {
       // localCheckpoint: those legs are FIVE consumers (teacher, trained
       // inference, dedup digest, contamination corpus and bench) — one
       // materialized spread instead of one full-payload shuffle per leg.
-      val withDups = par(t(s, dir, "documents"), "doc_id")
-        .withColumn("text",
-          when(col("doc_id") % 17 === 0,
-            lit("duplicate stanza alpha shared across documents"))
-            .otherwise(col("text")))
+      val withDups = withDupImplant(par(t(s, dir, "documents"), "doc_id"))
         .localCheckpoint()
       val bench = withDups.filter(col("doc_id") % 31 === 0)
       val corpus = withDups.filter(col("doc_id") % 31 =!= 0)
@@ -342,21 +321,8 @@ private[graft] object CurationQueries {
         "label", nBuckets = QtBuckets, steps = QtSteps, lrPpm = QtLrPpm)
       val qf = QualityModel.qualityClassifierScoreWith(corpus, "text", w.toSeq)
         .select(col("doc_id"), col("kept").as("q_ok"))
-      // keep-first flag as an AGGREGATE on the digest + id-keyed join
-      // back (the q149-tail shape) — never a content-keyed window: a
-      // hot duplicate group reduces map-side instead of sorting on one
-      // task. The thin (id, digest) relation has two consumers, so cut
-      // the plan there.
-      val dThin = corpus.select(col("doc_id"), md5(col("text")).as("__h"))
-        .localCheckpoint()
-      val dWin = dThin.groupBy(col("__h"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"), lit(true).as("__w"))
-      val df = dThin.join(dWin, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("__w"), lit(false)).as("d_ok"))
-      val cf = Dedup.contaminationReport(corpus, "doc_id", "text", bench,
-          shingleN = 8, dropPct = 10, useNative = true)
-        .select(col("doc_id"), (!col("dropped")).as("c_ok"))
+      val df = funnelDedupStage(corpus)
+      val cf = funnelContamStage(corpus, bench)
       qf.join(df, "doc_id").join(cf, "doc_id")
         .agg(
           count(lit(1)).as("n_total"),
@@ -389,6 +355,26 @@ private[graft] object CurationQueries {
         .orderBy("source", "cum_tokens", "doc_id")
     }),
   )
+
+  // ---- oracle fragments: SQL text only
+
+  /** The held-out bench's distinct 8-shingles (doc_id % 31 = 0) as
+    * `name(s)`. */
+  private def benchShingleCte(name: String): String =
+    s"""$name AS (
+       |  SELECT DISTINCT unnest(${shingles8("toks")}) AS s
+       |  FROM (SELECT string_split_regex(trim(text), '\\s+') AS toks
+       |        FROM documents WHERE doc_id % 31 = 0))""".stripMargin
+
+  /** q46: docs sharing any 8-shingle with the held-out bench
+    * (doc_id % 31 = 0), with the per-doc hit count. */
+  private val contaminationHitsOracleSql: String =
+    s"""WITH ${shingleCte("sh", "toks", "documents")},
+       |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 31 = 0)
+       |SELECT doc_id, count(*) AS n_hits
+       |FROM sh JOIN bench USING (s)
+       |WHERE doc_id % 31 <> 0
+       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
 
@@ -446,14 +432,7 @@ private[graft] object CurationQueries {
     // q46's shingle relation + the per-doc distinct-shingle count and
     // the integer-exact >= 10% drop verdict; left join keeps zero-hit docs
     "q94_contamination_report" ->
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 8
-        |      THEN list_transform(range(1, len(toks) - 6),
-        |           i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3],
-        |                          toks[i+4], toks[i+5], toks[i+6], toks[i+7]))
-        |      ELSE [array_to_string(toks, ' ')] END)) AS s
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        |        FROM documents)),
+      s"""WITH ${shingleCte("sh", "toks", "documents")},
         |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 31 = 0),
         |nsh AS (SELECT doc_id, count(*) AS n_shingles FROM sh
         |        WHERE doc_id % 31 <> 0 GROUP BY doc_id),
@@ -486,28 +465,14 @@ private[graft] object CurationQueries {
     // standalone oracle (q94 gate on the augmented corpus, q93 redaction,
     // q92 mixing over the survivors' language counts, q95 layout)
     "q96_release_e2e" ->
-      """WITH aug AS (
+      s"""WITH aug AS (
         |  SELECT doc_id, lang,
         |    CASE WHEN doc_id % 13 = 0
         |         THEN text || ' contact: user13@example.com via https://ex.example/path from 10.0.0.1'
         |         ELSE text END AS text
         |  FROM documents WHERE doc_id % 31 <> 0),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 8
-        |      THEN list_transform(range(1, len(toks) - 6),
-        |           i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3],
-        |                          toks[i+4], toks[i+5], toks[i+6], toks[i+7]))
-        |      ELSE [array_to_string(toks, ' ')] END)) AS s
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        |        FROM aug)),
-        |bsh AS (
-        |  SELECT DISTINCT unnest(list_distinct(CASE WHEN len(toks) >= 8
-        |      THEN list_transform(range(1, len(toks) - 6),
-        |           i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3],
-        |                          toks[i+4], toks[i+5], toks[i+6], toks[i+7]))
-        |      ELSE [array_to_string(toks, ' ')] END)) AS s
-        |  FROM (SELECT string_split_regex(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id % 31 = 0)),
+        |${shingleCte("sh", "toks", "aug")},
+        |${benchShingleCte("bsh")},
         |rep AS (
         |  SELECT sh.doc_id, count(*) AS n_shingles,
         |    count(b.s) AS n_hits
@@ -522,9 +487,9 @@ private[graft] object CurationQueries {
         |    regexp_replace(
         |      regexp_replace(
         |        regexp_replace(text,
-        |          '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-        |        'https?://[^\s]+', '[URL]', 'g'),
-        |      '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}', '[IPV4]', 'g')
+        |          '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
+        |        'https?://[^\\s]+', '[URL]', 'g'),
+        |      '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}', '[IPV4]', 'g')
         |      AS text_redacted
         |  FROM kept),
         |counts AS (SELECT lang, count(*) AS n_src FROM red GROUP BY lang),
@@ -554,49 +519,11 @@ private[graft] object CurationQueries {
     // each stage mirrors its standalone oracle (q99 logit, keep-first
     // min-window, q94 contamination verdict) over the dup-implanted corpus
     "q101_curation_funnel" ->
-      """WITH wd AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 17 = 0
-        |         THEN 'duplicate stanza alpha shared across documents'
-        |         ELSE text END AS text
-        |  FROM documents),
+      s"""WITH $dupImplantCte,
         |corpus AS (SELECT doc_id, text FROM wd WHERE doc_id % 31 <> 0),
-        |qt AS (
-        |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS ts
-        |  FROM corpus),
-        |qf AS (
-        |  SELECT doc_id,
-        |    floor(CAST(list_sum(list_transform(ts, t ->
-        |      ('0x' || substr(md5('w:graft:' ||
-        |         CAST(('0x' || substr(md5('f:graft:' || t), 1, 8))::BIGINT % 1024
-        |              AS VARCHAR)), 1, 8))::BIGINT % 2001 - 1000)) AS BIGINT)
-        |      / (len(ts) * 1000.0) * 1e6) / 1e6 >= 0.0 AS q_ok
-        |  FROM qt),
-        |df AS (
-        |  SELECT doc_id,
-        |    doc_id = min(doc_id) OVER (PARTITION BY md5(text)) AS d_ok
-        |  FROM corpus),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(CASE WHEN len(tk) >= 8
-        |      THEN list_transform(range(1, len(tk) - 6),
-        |           i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2], tk[i+3],
-        |                          tk[i+4], tk[i+5], tk[i+6], tk[i+7]))
-        |      ELSE [array_to_string(tk, ' ')] END)) AS s
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk
-        |        FROM wd)),
-        |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 31 = 0),
-        |nsh AS (SELECT doc_id, count(*) AS n_shingles FROM sh
-        |        WHERE doc_id % 31 <> 0 GROUP BY doc_id),
-        |hits AS (
-        |  SELECT doc_id, count(*) AS n_hits
-        |  FROM sh JOIN bench USING (s)
-        |  WHERE doc_id % 31 <> 0
-        |  GROUP BY doc_id),
-        |cf AS (
-        |  SELECT n.doc_id,
-        |    NOT (n.n_shingles > 0 AND
-        |         coalesce(h.n_hits, 0) * 100 >= n.n_shingles * 10) AS c_ok
-        |  FROM nsh n LEFT JOIN hits h USING (doc_id)),
+        |$funnelQualityCtes,
+        |$funnelDedupCte,
+        |$funnelContamCtes,
         |agg AS (
         |  SELECT count(*) AS n_total,
         |    count(CASE WHEN q_ok THEN 1 END) AS n_q,
@@ -634,37 +561,11 @@ private[graft] object CurationQueries {
         |   OR len(regexp_extract_all(text, '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}')) > 0) AS has_pii
         |FROM aug ORDER BY doc_id""".stripMargin,
 
-    "q46_contamination" ->
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 8
-        |      THEN list_transform(range(1, len(toks) - 6),
-        |           i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3],
-        |                          toks[i+4], toks[i+5], toks[i+6], toks[i+7]))
-        |      ELSE [array_to_string(toks, ' ')] END)) AS s
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        |        FROM documents)),
-        |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 31 = 0)
-        |SELECT doc_id, count(*) AS n_hits
-        |FROM sh JOIN bench USING (s)
-        |WHERE doc_id % 31 <> 0
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+    "q46_contamination" -> contaminationHitsOracleSql,
 
     // bloom prefilter + exact verify has no false negatives, so q55 IS
     // the q46 relation — same oracle
-    "q55_contamination_bloom" ->
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 8
-        |      THEN list_transform(range(1, len(toks) - 6),
-        |           i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3],
-        |                          toks[i+4], toks[i+5], toks[i+6], toks[i+7]))
-        |      ELSE [array_to_string(toks, ' ')] END)) AS s
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        |        FROM documents)),
-        |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 31 = 0)
-        |SELECT doc_id, count(*) AS n_hits
-        |FROM sh JOIN bench USING (s)
-        |WHERE doc_id % 31 <> 0
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+    "q55_contamination_bloom" -> contaminationHitsOracleSql,
 
     "q52_corpus_mixture" ->
       """WITH agg AS (
@@ -737,34 +638,18 @@ private[graft] object CurationQueries {
     // mirrors the engine's composition stage by stage; the stopword gate
     // uses the same integer-exact n_stop*25 > n_toks comparison
     "q63_curation_e2e" ->
-      """WITH corpus AS (
+      s"""WITH corpus AS (
         |  SELECT doc_id, text,
-        |    len(string_split_regex(trim(text), '\s+')) AS n_toks,
-        |    len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
+        |    len(string_split_regex(trim(text), '\\s+')) AS n_toks,
+        |    len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
         |      x -> x IN ('the','a','of','and','to','in','is','it','that','for')))
         |      AS n_stop
         |  FROM documents WHERE doc_id % 31 <> 0 AND lang = 'en'),
         |quality AS (
         |  SELECT doc_id, text, n_toks FROM corpus
         |  WHERE n_toks BETWEEN 20 AND 2000 AND n_stop * 25 > n_toks),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) >= 8
-        |      THEN list_transform(range(1, len(toks) - 6),
-        |           i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2],
-        |                toks[i+3], toks[i+4], toks[i+5], toks[i+6],
-        |                toks[i+7]))
-        |      ELSE [array_to_string(toks, ' ')] END)) AS s
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        |        FROM quality)),
-        |bench AS (
-        |  SELECT DISTINCT unnest(list_distinct(CASE WHEN len(toks) >= 8
-        |      THEN list_transform(range(1, len(toks) - 6),
-        |           i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2],
-        |                toks[i+3], toks[i+4], toks[i+5], toks[i+6],
-        |                toks[i+7]))
-        |      ELSE [array_to_string(toks, ' ')] END)) AS s
-        |  FROM (SELECT string_split_regex(trim(text), '\s+') AS toks
-        |        FROM documents WHERE doc_id % 31 = 0)),
+        |${shingleCte("sh", "toks", "quality")},
+        |${benchShingleCte("bench")},
         |contaminated AS (SELECT DISTINCT doc_id FROM sh JOIN bench USING (s)),
         |kept AS (
         |  SELECT min(doc_id) AS doc_id, min(n_toks) AS n_toks
@@ -796,37 +681,9 @@ private[graft] object CurationQueries {
         |  FROM cnt c JOIN w$QtSteps w USING (b) GROUP BY 1),
         |qf AS (SELECT doc_id, z >= 0 AS q_ok FROM score),
         |corpus AS ($corpusSql),
-        |df AS (
-        |  SELECT doc_id,
-        |    doc_id = min(doc_id) OVER (PARTITION BY md5(text)) AS d_ok
-        |  FROM corpus),
-        |wd AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 17 = 0
-        |         THEN 'duplicate stanza alpha shared across documents'
-        |         ELSE text END AS text
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(CASE WHEN len(tk) >= 8
-        |      THEN list_transform(range(1, len(tk) - 6),
-        |           i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2], tk[i+3],
-        |                          tk[i+4], tk[i+5], tk[i+6], tk[i+7]))
-        |      ELSE [array_to_string(tk, ' ')] END)) AS s
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
-        |        FROM wd)),
-        |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 31 = 0),
-        |nsh AS (SELECT doc_id, count(*) AS n_shingles FROM sh
-        |        WHERE doc_id % 31 <> 0 GROUP BY doc_id),
-        |hits AS (
-        |  SELECT doc_id, count(*) AS n_hits
-        |  FROM sh JOIN bench USING (s)
-        |  WHERE doc_id % 31 <> 0
-        |  GROUP BY doc_id),
-        |cf AS (
-        |  SELECT n.doc_id,
-        |    NOT (n.n_shingles > 0 AND
-        |         coalesce(h.n_hits, 0) * 100 >= n.n_shingles * 10) AS c_ok
-        |  FROM nsh n LEFT JOIN hits h USING (doc_id)),
+        |$funnelDedupCte,
+        |$dupImplantCte,
+        |$funnelContamCtes,
         |agg AS (
         |  SELECT count(*) AS n_total,
         |    count(CASE WHEN q_ok THEN 1 END) AS n_q,
@@ -846,36 +703,10 @@ private[graft] object CurationQueries {
     // q125's lattice/scoring CTEs + a per-source greedy budget window —
     // integer running sums, (logw DESC, id) total order
     "q143_dsir_selection" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents),
-        |tokf AS (
-        |  SELECT doc_id,
-        |    ('0x' || substring(md5('f:graft:' || term), 1, 8))::BIGINT % 256
-        |      AS b
-        |  FROM tok WHERE length(term) > 0),
-        |ct AS (SELECT b, CAST(count(*) AS BIGINT) AS ct
-        |       FROM tokf JOIN documents USING (doc_id)
-        |       WHERE lang = 'en' GROUP BY b),
-        |cr AS (SELECT b, CAST(count(*) AS BIGINT) AS cr
-        |       FROM tokf GROUP BY b),
-        |tot AS (SELECT (SELECT CAST(sum(ct) AS BIGINT) FROM ct) AS tt,
-        |               (SELECT CAST(sum(cr) AS BIGINT) FROM cr) AS tr),
-        |lattice AS (
-        |  SELECT coalesce(ct.b, cr.b) AS b,
-        |    CAST(round((ln((coalesce(ct.ct, 0) + 1.0) / (tot.tt + 256))
-        |              - ln((coalesce(cr.cr, 0) + 1.0) / (tot.tr + 256)))
-        |      * 1000000) AS BIGINT) AS lr_micro
-        |  FROM ct FULL OUTER JOIN cr ON ct.b = cr.b CROSS JOIN tot),
-        |perdoc AS (
-        |  SELECT doc_id, CAST(sum(c * lr_micro) AS BIGINT) AS logw_micro
-        |  FROM (SELECT doc_id, b, CAST(count(*) AS BIGINT) AS c
-        |        FROM tokf GROUP BY doc_id, b) dbc
-        |  JOIN lattice USING (b) GROUP BY doc_id),
+      s"""WITH $dsirLatticeCtes,
         |scored AS (
         |  SELECT d.source, d.doc_id,
-        |    CAST(len(string_split_regex(trim(lower(d.text)), '\s+'))
+        |    CAST(len(string_split_regex(trim(lower(d.text)), '\\s+'))
         |      AS BIGINT) AS n_tokens,
         |    coalesce(p.logw_micro, 0) AS logw_micro
         |  FROM documents d LEFT JOIN perdoc p ON d.doc_id = p.doc_id),

@@ -249,6 +249,34 @@ private[graft] object DedupQueries {
     }),
   )
 
+  /** q53's near-dup components: blocked 3-shingle Jaccard ≥ 0.5 pairs
+    * as undirected edges, every label walked to everything reachable —
+    * `lab(doc_id, cluster_id)`, the min id per component. Needs
+    * `WITH RECURSIVE`. */
+  private val dupComponentCtes: String =
+    """sh AS (
+      |  SELECT doc_id, substr(text, 1, 32) AS block,
+      |    list_distinct(CASE WHEN len(toks) >= 3
+      |      THEN list_transform(range(1, len(toks) - 1),
+      |           i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))
+      |      ELSE [array_to_string(toks, ' ')] END) AS shingles
+      |  FROM (SELECT doc_id, text,
+      |        string_split_regex(trim(text), '\s+') AS toks FROM documents)
+      |  QUALIFY count(*) OVER (PARTITION BY substr(text, 1, 32)) <= 1000),
+      |pairs AS (
+      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+      |  FROM sh a JOIN sh b ON a.block = b.block AND a.doc_id < b.doc_id
+      |  WHERE round(len(list_intersect(a.shingles, b.shingles))::DOUBLE /
+      |      (len(a.shingles) + len(b.shingles)
+      |       - len(list_intersect(a.shingles, b.shingles))), 6) >= 0.5),
+      |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+      |          UNION ALL SELECT id_b, id_a FROM pairs),
+      |walk (id, label) AS (
+      |  SELECT doc_id, doc_id FROM documents
+      |  UNION
+      |  SELECT e.dst, w.label FROM walk w JOIN edges e ON w.id = e.src),
+      |lab AS (SELECT id AS doc_id, min(label) AS cluster_id FROM walk GROUP BY id)""".stripMargin
+
   val oracleSql: Map[String, String] = Map(
 
     // q31's sibling for the pair shape: same shared multi-table ±1
@@ -470,12 +498,8 @@ private[graft] object DedupQueries {
         |ORDER BY id_a, id_b""".stripMargin,
 
     "q84_semantic_dedup_exemplar" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cvec, nrm AS cnrm
-        |      FROM e ORDER BY vec_id LIMIT 8),
+      s"""WITH ${embNormCte("e")},
+        |${ivfExemplarCentroidsCte("c")},
         |assigned AS (
         |  SELECT e.vec_id, c.cid, e.v, e.nrm
         |  FROM e CROSS JOIN c
@@ -492,23 +516,7 @@ private[graft] object DedupQueries {
         |ORDER BY vec_id""".stripMargin,
 
     "q88_near_dup_lsh_portable" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |pv AS (
-        |  SELECT p.p, j.j,
-        |    CASE WHEN strpos('89abcdef',
-        |        substr(md5('graft:rhp:' || p.p || ':' || (j.j - 1)), 1, 1)) > 0
-        |      THEN 1.0 ELSE -1.0 END AS val
-        |  FROM generate_series(0, 3) AS p(p)
-        |  CROSS JOIN generate_series(1, 64) AS j(j)),
-        |planes AS (SELECT p, list(val ORDER BY j) AS pvec FROM pv GROUP BY p),
-        |sigs AS (
-        |  SELECT e.vec_id,
-        |    string_agg(CASE WHEN list_dot_product(e.v, pl.pvec) >= 0
-        |        THEN '1' ELSE '0' END, '' ORDER BY pl.p) AS sig
-        |  FROM e CROSS JOIN planes pl GROUP BY e.vec_id),
+      s"""WITH ${rhpSigCtes(nPlanes = 4, dim = 64)},
         |pairs AS (
         |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         |    round(list_dot_product(ea.v, eb.v) / (ea.nrm * eb.nrm), 6) AS cosine
@@ -577,28 +585,7 @@ private[graft] object DedupQueries {
     // same edge set as q25; the recursive walk propagates every label to
     // everything reachable, so min(label) per node = min id in component
     "q53_dup_clusters" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, substr(text, 1, 32) AS block,
-        |    list_distinct(CASE WHEN len(toks) >= 3
-        |      THEN list_transform(range(1, len(toks) - 1),
-        |           i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))
-        |      ELSE [array_to_string(toks, ' ')] END) AS shingles
-        |  FROM (SELECT doc_id, text,
-        |        string_split_regex(trim(text), '\s+') AS toks FROM documents)
-        |  QUALIFY count(*) OVER (PARTITION BY substr(text, 1, 32)) <= 1000),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM sh a JOIN sh b ON a.block = b.block AND a.doc_id < b.doc_id
-        |  WHERE round(len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-        |      (len(a.shingles) + len(b.shingles)
-        |       - len(list_intersect(a.shingles, b.shingles))), 6) >= 0.5),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |          UNION ALL SELECT id_b, id_a FROM pairs),
-        |walk (id, label) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.dst, w.label FROM walk w JOIN edges e ON w.id = e.src),
-        |lab AS (SELECT id AS doc_id, min(label) AS cluster_id FROM walk GROUP BY id)
+      s"""WITH RECURSIVE $dupComponentCtes
         |SELECT doc_id, cluster_id,
         |  count(*) OVER (PARTITION BY cluster_id) AS cluster_size
         |FROM lab ORDER BY doc_id""".stripMargin,
@@ -606,40 +593,19 @@ private[graft] object DedupQueries {
     // q53's recursive component walk + q23's quality formula + a
     // first_value window for the keep-best pick.
     "q71_canonical_doc" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, substr(text, 1, 32) AS block,
-        |    list_distinct(CASE WHEN len(toks) >= 3
-        |      THEN list_transform(range(1, len(toks) - 1),
-        |           i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))
-        |      ELSE [array_to_string(toks, ' ')] END) AS shingles
-        |  FROM (SELECT doc_id, text,
-        |        string_split_regex(trim(text), '\s+') AS toks FROM documents)
-        |  QUALIFY count(*) OVER (PARTITION BY substr(text, 1, 32)) <= 1000),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM sh a JOIN sh b ON a.block = b.block AND a.doc_id < b.doc_id
-        |  WHERE round(len(list_intersect(a.shingles, b.shingles))::DOUBLE /
-        |      (len(a.shingles) + len(b.shingles)
-        |       - len(list_intersect(a.shingles, b.shingles))), 6) >= 0.5),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-        |          UNION ALL SELECT id_b, id_a FROM pairs),
-        |walk (id, label) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.dst, w.label FROM walk w JOIN edges e ON w.id = e.src),
-        |lab AS (SELECT id AS doc_id, min(label) AS cluster_id FROM walk GROUP BY id),
+      s"""WITH RECURSIVE $dupComponentCtes,
         |qual AS (
         |  SELECT doc_id,
         |    floor((
         |      (CASE WHEN length(text) BETWEEN 100 AND 10000 THEN 1.0
         |            WHEN length(text) BETWEEN 20 AND 99 THEN 0.5 ELSE 0.1 END) * 0.4
-        |      + least(len(list_distinct(string_split_regex(trim(text), '\s+')))::DOUBLE
-        |           / greatest(len(string_split_regex(trim(text), '\s+')), 1), 1.0) * 0.3
-        |      + (1.0 - least(len(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::DOUBLE
+        |      + least(len(list_distinct(string_split_regex(trim(text), '\\s+')))::DOUBLE
+        |           / greatest(len(string_split_regex(trim(text), '\\s+')), 1), 1.0) * 0.3
+        |      + (1.0 - least(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::DOUBLE
         |           / greatest(length(text), 1) * 5, 1.0)) * 0.2
-        |      + least(round(len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
+        |      + least(round(len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
         |            x -> x IN ('the','a','of','and','to','in','is','it','that','for')))::DOUBLE
-        |           / greatest(len(string_split_regex(trim(lower(text)), '\s+')), 1), 6) * 5, 1.0) * 0.1
+        |           / greatest(len(string_split_regex(trim(lower(text)), '\\s+')), 1), 6) * 5, 1.0) * 0.1
         |    ) * 1000000.0) / 1000000.0 AS quality
         |  FROM documents)
         |SELECT lab.doc_id, lab.cluster_id,

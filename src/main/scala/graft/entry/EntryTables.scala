@@ -6,12 +6,13 @@ import org.apache.spark.sql.types._
 
 /** Shared plumbing for the per-family catalog modules: table readers
   * (incl. the schema-adaptive `events` reader), the cross-engine money
-  * convention, and the helpers several families' oracles share
-  * (merge snapshots/CTEs, the BPE merge table, the entropy oracle).
+  * convention, the relations several families share (merge
+  * snapshots, the curation funnel stages) and the oracle fragments
+  * several families' oracles interpolate (merge CTEs, the BPE merge
+  * table, embedding norms, IVF/Lloyd steps, top-k selects).
   *
-  * Everything here was hoisted verbatim out of the former monolithic
-  * `SparkEntry`; behavior is pinned by the unchanged correctness gates
-  * (`EntryContractSpec`, `CatalogDocSpec`, the DuckDB compare).
+  * Behavior is pinned by the correctness gates (`EntryContractSpec`,
+  * `CatalogDocSpec`, the DuckDB compare).
   */
 private[graft] object EntryTables {
 
@@ -137,7 +138,7 @@ private[graft] object EntryTables {
         // instead of being silently div-1000'd as if it were nanos.
         throw new IllegalArgumentException(
           s"events.ts: unhandled on-disk type $other — teach " +
-            "SparkEntry.events() this vintage")
+            "EntryTables.events() this vintage")
     }
   }
 
@@ -196,6 +197,37 @@ private[graft] object EntryTables {
           .otherwise(col("o_totalprice")))
     (existing, incoming)
   }
+
+  /** The curation funnel's dup-implanted corpus (q101, q144, q202):
+    * every 17th document's text replaced by one shared stanza. */
+  private[entry] def withDupImplant(docs: DataFrame): DataFrame =
+    docs.withColumn("text",
+      when(col("doc_id") % 17 === 0,
+        lit("duplicate stanza alpha shared across documents"))
+        .otherwise(col("text")))
+
+  /** The funnel's keep-first exact dedup, `(doc_id, d_ok)`: the flag as
+    * an AGGREGATE on the digest + id-keyed join back (the q149-tail
+    * shape) — never a content-keyed window, so a hot duplicate group
+    * reduces map-side instead of sorting on one task. The thin
+    * (id, digest) relation has two consumers, so the plan is cut there. */
+  private[entry] def funnelDedupStage(corpus: DataFrame): DataFrame = {
+    val dThin = corpus.select(col("doc_id"), md5(col("text")).as("__h"))
+      .localCheckpoint()
+    val dWin = dThin.groupBy(col("__h"))
+      .agg(min(col("doc_id")).as("doc_id"))
+      .select(col("doc_id"), lit(true).as("__w"))
+    dThin.join(dWin, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("__w"), lit(false)).as("d_ok"))
+  }
+
+  /** The funnel's decontamination stage, `(doc_id, c_ok)`: q94's ≥10 %
+    * 8-shingle overlap verdict against the held-out `bench`. */
+  private[entry] def funnelContamStage(corpus: DataFrame,
+                                       bench: DataFrame): DataFrame =
+    graft.ext.Dedup.contaminationReport(corpus, "doc_id", "text", bench,
+        shingleN = 8, dropPct = 10, useNative = true)
+      .select(col("doc_id"), (!col("dropped")).as("c_ok"))
 
   // ============================================================== oracles
 
@@ -325,10 +357,7 @@ private[graft] object EntryTables {
     */
   private[entry] def rhpMultiSigCtes(nTables: Int, nPlanes: Int,
                                      dim: Int): String =
-    s"""e AS MATERIALIZED (
-       |  SELECT vec_id, embedding::DOUBLE[] AS v,
-       |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-       |  FROM embeddings),
+    s"""${embNormCte("e", materialized = true)},
        |pv AS (
        |  SELECT t.t, p.p, j.j,
        |    CASE WHEN strpos('89abcdef',
@@ -346,11 +375,64 @@ private[graft] object EntryTables {
        |        THEN '1' ELSE '0' END, '' ORDER BY pl.p) AS sig
        |  FROM e CROSS JOIN planes pl GROUP BY pl.t, e.vec_id)""".stripMargin
 
+  /** q125's DSIR importance lattice: hashed 256-bucket token features
+    * `tokf(doc_id, b)`, the add-one smoothed log-ratio of the en target
+    * to the raw corpus per bucket in integer micro-nats
+    * `lattice(b, lr_micro)`, and each doc's exact integer dot product
+    * `perdoc(doc_id, logw_micro)`. */
+  private[entry] val dsirLatticeCtes: String =
+    """tok AS (
+      |  SELECT doc_id,
+      |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+      |  FROM documents),
+      |tokf AS (
+      |  SELECT doc_id,
+      |    ('0x' || substring(md5('f:graft:' || term), 1, 8))::BIGINT % 256
+      |      AS b
+      |  FROM tok WHERE length(term) > 0),
+      |ct AS (SELECT b, CAST(count(*) AS BIGINT) AS ct
+      |       FROM tokf JOIN documents USING (doc_id)
+      |       WHERE lang = 'en' GROUP BY b),
+      |cr AS (SELECT b, CAST(count(*) AS BIGINT) AS cr
+      |       FROM tokf GROUP BY b),
+      |tot AS (SELECT (SELECT CAST(sum(ct) AS BIGINT) FROM ct) AS tt,
+      |               (SELECT CAST(sum(cr) AS BIGINT) FROM cr) AS tr),
+      |lattice AS (
+      |  SELECT coalesce(ct.b, cr.b) AS b,
+      |    CAST(round((ln((coalesce(ct.ct, 0) + 1.0) / (tot.tt + 256))
+      |              - ln((coalesce(cr.cr, 0) + 1.0) / (tot.tr + 256)))
+      |      * 1000000) AS BIGINT) AS lr_micro
+      |  FROM ct FULL OUTER JOIN cr ON ct.b = cr.b CROSS JOIN tot),
+      |perdoc AS (
+      |  SELECT doc_id, CAST(sum(c * lr_micro) AS BIGINT) AS logw_micro
+      |  FROM (SELECT doc_id, b, CAST(count(*) AS BIGINT) AS c
+      |        FROM tokf GROUP BY doc_id, b) dbc
+      |  JOIN lattice USING (b) GROUP BY doc_id)""".stripMargin
+
+  /** The single-table portable-LSH CTEs (q86/q88): `e`, md5-derived ±1
+    * planes under the `graft:rhp:<p>:<j>` salt and per-vector
+    * bit-string signatures `sigs(vec_id, sig)`. */
+  private[entry] def rhpSigCtes(nPlanes: Int, dim: Int): String =
+    s"""${embNormCte("e")},
+       |pv AS (
+       |  SELECT p.p, j.j,
+       |    CASE WHEN strpos('89abcdef',
+       |        substr(md5('graft:rhp:' || p.p || ':' || (j.j - 1)), 1, 1)) > 0
+       |      THEN 1.0 ELSE -1.0 END AS val
+       |  FROM generate_series(0, ${nPlanes - 1}) AS p(p)
+       |  CROSS JOIN generate_series(1, $dim) AS j(j)),
+       |planes AS (SELECT p, list(val ORDER BY j) AS pvec FROM pv GROUP BY p),
+       |sigs AS (
+       |  SELECT e.vec_id,
+       |    string_agg(CASE WHEN list_dot_product(e.v, pl.pvec) >= 0
+       |        THEN '1' ELSE '0' END, '' ORDER BY pl.p) AS sig
+       |  FROM e CROSS JOIN planes pl GROUP BY e.vec_id)""".stripMargin
+
   /** Shared CTE prefix for the seeded-k-means family oracles (q75 and
     * the q43 indexed probe): the md5-derandomized k-means++ draw chain
     * (`sel1..selK` — each step's D² weights in exact micro longs, the
     * inverse-CDF winner via a running integer window sum), then `iters`
-    * unrolled q91-style Lloyd CTEs from those seeds, ending with the
+    * unrolled [[lloydStepCtes]] from those seeds, ending with the
     * trained-centroid relation `l{iters}n (cid, cvec, cnrm)`.
     * `AS MATERIALIZED` on every multiply-referenced CTE (the q119
     * lesson — chained re-evaluation is exponential without it).
@@ -382,33 +464,14 @@ private[graft] object EntryTables {
       .mkString(" UNION ALL ")
     val lloydCtes = (1 to iters).map { i =>
       val prev = if (i == 1) "l0" else s"l${i - 1}n"
-      s"""la$i AS (
-         |  SELECT c.cid AS list, e.v, e.nrm
-         |  FROM e CROSS JOIN $prev c
-         |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-         |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
-         |             c.cid) = 1),
-         |lc$i AS (
-         |  SELECT a.list, gs.pos - 1 AS pos,
-         |    a.v[gs.pos] / (CASE WHEN a.nrm > 0 THEN a.nrm ELSE 1 END) AS ux
-         |  FROM la$i a CROSS JOIN generate_series(1, $dim) AS gs(pos)),
-         |lm$i AS (
-         |  SELECT list, pos,
-         |    CAST(sum(CAST(ux AS DECIMAL(30,12))) AS DOUBLE) / count(*) AS m
-         |  FROM lc$i GROUP BY 1, 2),
-         |lnorm$i AS (
-         |  SELECT list, sqrt(CAST(sum(CAST(m * m AS DECIMAL(30,12))) AS DOUBLE)) AS mn
-         |  FROM lm$i GROUP BY 1),
+      s"""${lloydStepCtes(s"$i", s"$prev c", dim)},
          |l$i AS MATERIALIZED (
          |  SELECT m.list AS cid, list(m.m / n.mn ORDER BY m.pos) AS cvec
-         |  FROM lm$i m JOIN lnorm$i n USING (list) GROUP BY m.list),
+         |  FROM means$i m JOIN norms$i n USING (list) GROUP BY m.list),
          |l${i}n AS (SELECT cid, cvec, sqrt(list_dot_product(cvec, cvec)) AS cnrm
          |       FROM l$i)""".stripMargin
     }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED (
-       |  SELECT vec_id, embedding::DOUBLE[] AS v,
-       |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-       |  FROM embeddings),
+    s"""WITH ${embNormCte("e", materialized = true)},
        |sel1 AS MATERIALIZED (
        |  SELECT vec_id FROM e
        |  ORDER BY md5('graft:kpp:1:' || vec_id), vec_id LIMIT 1),
@@ -418,4 +481,160 @@ private[graft] object EntryTables {
        |       WHERE vec_id IN ($allSeeds)),
        |$lloydCtes""".stripMargin
   }
+
+  // ---- oracle fragments shared across families. SQL text only: no
+  // fragment is built from Spark-side code, so every oracle that
+  // interpolates one stays an independent reference.
+
+  /** `name(vec_id, v, nrm)`: every embedding as DOUBLE[] with its L2
+    * norm — the relation every cosine oracle scores against. */
+  private[entry] def embNormCte(name: String,
+                                materialized: Boolean = false): String =
+    s"""$name AS${if (materialized) " MATERIALIZED" else ""} (
+       |  SELECT vec_id, embedding::DOUBLE[] AS v,
+       |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
+       |  FROM embeddings)""".stripMargin
+
+  /** The closing select of every cosine top-k oracle: per query the `k`
+    * best of `scored(query_id, neighbor_id, sim)` by (sim DESC, id). */
+  private[entry] def simTopKSelect(k: Int): String =
+    s"""SELECT query_id,
+       |  row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank",
+       |  neighbor_id, sim
+       |FROM scored
+       |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= $k
+       |ORDER BY query_id, "rank"""".stripMargin
+
+  /** The q30 exact cosine leg: queries `q(query_id, qvec)` (vec_id % 100
+    * = 0) scored against every other vector of `corpus` (aliased `e`)
+    * into `scored(query_id, neighbor_id, sim)`, 6-decimal rounded. */
+  private[entry] def exactCosineCtes(q: String, scored: String,
+                                     corpus: String = "embeddings"): String =
+    s"""$q AS (SELECT vec_id AS query_id, embedding AS qvec
+       |      FROM embeddings WHERE vec_id % 100 = 0),
+       |$scored AS (
+       |  SELECT $q.query_id, e.vec_id AS neighbor_id,
+       |    round(list_dot_product($q.qvec::DOUBLE[], e.embedding::DOUBLE[]) /
+       |      (sqrt(list_dot_product($q.qvec::DOUBLE[], $q.qvec::DOUBLE[])) *
+       |       sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))), 6) AS sim
+       |  FROM $corpus e CROSS JOIN $q WHERE e.vec_id <> $q.query_id)""".stripMargin
+
+  /** The exemplar IVF coarse quantizer: the first 8 vectors of `e` as
+    * centroids `name(cid, cvec, cnrm)`. */
+  private[entry] def ivfExemplarCentroidsCte(name: String): String =
+    s"""$name AS (SELECT vec_id AS cid, v AS cvec, nrm AS cnrm
+       |      FROM e ORDER BY vec_id LIMIT 8)""".stripMargin
+
+  /** IVF list assignment and probing against the centroids `cents`
+    * (aliased `c`), by 6-decimal-rounded argmax cosine:
+    * `assigned(neighbor_id, list)` for every vector of `e` and
+    * `probes(query_id, list)`, the `nProbe` best lists of each query
+    * (vec_id % 100 = 0). */
+  private[entry] def ivfAssignProbeCtes(cents: String, nProbe: Int): String =
+    s"""assigned AS (
+       |  SELECT e.vec_id AS neighbor_id, c.cid AS list
+       |  FROM e CROSS JOIN $cents
+       |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
+       |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
+       |             c.cid) = 1),
+       |probes AS (
+       |  SELECT e.vec_id AS query_id, c.cid AS list
+       |  FROM e CROSS JOIN $cents
+       |  WHERE e.vec_id % 100 = 0
+       |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
+       |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
+       |             c.cid) <= $nProbe)""".stripMargin
+
+  /** One spherical Lloyd step of `e` against the centroids `cents`
+    * (aliased `c`): argmax assignment `assigned$sfx(list, v, nrm)`,
+    * unit-vector components `comp$sfx`, exact DECIMAL per-list means
+    * `means$sfx(list, pos, m)` and their norms `norms$sfx(list, mn)`. */
+  private[entry] def lloydStepCtes(sfx: String, cents: String,
+                                   dim: Int): String =
+    s"""assigned$sfx AS (
+       |  SELECT c.cid AS list, e.v, e.nrm
+       |  FROM e CROSS JOIN $cents
+       |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
+       |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
+       |             c.cid) = 1),
+       |comp$sfx AS (
+       |  SELECT a.list, gs.pos - 1 AS pos,
+       |    a.v[gs.pos] / (CASE WHEN a.nrm > 0 THEN a.nrm ELSE 1 END) AS ux
+       |  FROM assigned$sfx a CROSS JOIN generate_series(1, $dim) AS gs(pos)),
+       |means$sfx AS (
+       |  SELECT list, pos,
+       |    CAST(sum(CAST(ux AS DECIMAL(30,12))) AS DOUBLE) / count(*) AS m
+       |  FROM comp$sfx GROUP BY 1, 2),
+       |norms$sfx AS (
+       |  SELECT list, sqrt(CAST(sum(CAST(m * m AS DECIMAL(30,12))) AS DOUBLE)) AS mn
+       |  FROM means$sfx GROUP BY 1)""".stripMargin
+
+  /** The distinct 8-word shingles of the token list `v` (the whole text
+    * as one shingle when shorter) — q46's contamination unit. */
+  private[entry] def shingles8(v: String): String =
+    s"""list_distinct(CASE WHEN len($v) >= 8
+       |      THEN list_transform(range(1, len($v) - 6),
+       |           i -> concat_ws(' ', $v[i], $v[i+1], $v[i+2], $v[i+3],
+       |                          $v[i+4], $v[i+5], $v[i+6], $v[i+7]))
+       |      ELSE [array_to_string($v, ' ')] END)""".stripMargin
+
+  /** `name(doc_id, s)`: one row per distinct 8-shingle of each document
+    * of `src(doc_id, text)`, tokens split on whitespace as `v`. */
+  private[entry] def shingleCte(name: String, v: String, src: String): String =
+    s"""$name AS (
+       |  SELECT doc_id, unnest(${shingles8(v)}) AS s
+       |  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS $v
+       |        FROM $src))""".stripMargin
+
+  /** The curation funnel's dup-implanted corpus `wd(doc_id, text)`: every
+    * 17th document's text replaced by one shared stanza. */
+  private[entry] val dupImplantCte: String =
+    """wd AS (
+      |  SELECT doc_id,
+      |    CASE WHEN doc_id % 17 = 0
+      |         THEN 'duplicate stanza alpha shared across documents'
+      |         ELSE text END AS text
+      |  FROM documents)""".stripMargin
+
+  /** The funnel's fixed md5-weight quality stage (q99's logit) over
+    * `corpus(doc_id, text)`: `qf(doc_id, q_ok)`. */
+  private[entry] val funnelQualityCtes: String =
+    """qt AS (
+      |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS ts
+      |  FROM corpus),
+      |qf AS (
+      |  SELECT doc_id,
+      |    floor(CAST(list_sum(list_transform(ts, t ->
+      |      ('0x' || substr(md5('w:graft:' ||
+      |         CAST(('0x' || substr(md5('f:graft:' || t), 1, 8))::BIGINT % 1024
+      |              AS VARCHAR)), 1, 8))::BIGINT % 2001 - 1000)) AS BIGINT)
+      |      / (len(ts) * 1000.0) * 1e6) / 1e6 >= 0.0 AS q_ok
+      |  FROM qt)""".stripMargin
+
+  /** The funnel's keep-first exact dedup over `corpus(doc_id, text)`:
+    * `df(doc_id, d_ok)`. */
+  private[entry] val funnelDedupCte: String =
+    """df AS (
+      |  SELECT doc_id,
+      |    doc_id = min(doc_id) OVER (PARTITION BY md5(text)) AS d_ok
+      |  FROM corpus)""".stripMargin
+
+  /** The funnel's decontamination stage — q94's ≥10 % 8-shingle overlap
+    * verdict of `wd` against its held-out docs (doc_id % 31 = 0):
+    * `cf(doc_id, c_ok)`. */
+  private[entry] val funnelContamCtes: String =
+    s"""${shingleCte("sh", "tk", "wd")},
+       |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 31 = 0),
+       |nsh AS (SELECT doc_id, count(*) AS n_shingles FROM sh
+       |        WHERE doc_id % 31 <> 0 GROUP BY doc_id),
+       |hits AS (
+       |  SELECT doc_id, count(*) AS n_hits
+       |  FROM sh JOIN bench USING (s)
+       |  WHERE doc_id % 31 <> 0
+       |  GROUP BY doc_id),
+       |cf AS (
+       |  SELECT n.doc_id,
+       |    NOT (n.n_shingles > 0 AND
+       |         coalesce(h.n_hits, 0) * 100 >= n.n_shingles * 10) AS c_ok
+       |  FROM nsh n LEFT JOIN hits h USING (doc_id))""".stripMargin
 }

@@ -375,15 +375,155 @@ private[graft] object RetrievalQueries {
         col("r.n").as("n_anchors"))
   }
 
+  // ---- oracle fragments: SQL text only, each relation stated once for
+  // every oracle of this family that shares it
+
+  /** q123's whitespace tokens `toks(doc_id, term)`, per-doc lengths
+    * `dl` and the corpus scalars `corpus(n, t)`. */
+  private val bm25CorpusCtes: String =
+    """toks AS (
+      |  SELECT doc_id,
+      |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+      |  FROM documents),
+      |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
+      |       FROM toks GROUP BY doc_id),
+      |corpus AS (SELECT CAST(count(*) AS BIGINT) AS n,
+      |                  CAST(sum(dl) AS BIGINT) AS t FROM dl)""".stripMargin
+
+  /** Integer-micro idf over the term frequencies `tf(doc_id, term, tf)`. */
+  private def bm25IdfCte(tf: String): String =
+    s"""idf AS (
+       |  SELECT term,
+       |    CAST(round(ln((c.n - CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5)
+       |        / (CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5) + 1.0)
+       |      * 1000000) AS BIGINT) AS idf_micro
+       |  FROM $tf CROSS JOIN corpus c GROUP BY term, c.n)""".stripMargin
+
+  /** One term's BM25 contribution (k1 = 1.2, b = 0.75) in micro-units,
+    * before the final `// 1000000`: `idf`, `dl` and `corpus c` joined. */
+  private def bm25Micro(tf: String): String =
+    s"""(idf.idf_micro * ((1000000 * (2200000 * $tf.tf))
+       |       // (1000000 * $tf.tf + 300000
+       |           + (9 * ((1000000 * dl.dl * c.n) // c.t)) // 10)))""".stripMargin
+
+  /** Idf, per-term contributions and per-doc sums
+    * `scored(doc_id, bm25_micro)` over `tf(doc_id, term, tf)`. */
+  private def bm25ScoredCtes(tf: String): String =
+    s"""${bm25IdfCte(tf)},
+       |contrib AS (
+       |  SELECT $tf.doc_id,
+       |    ${bm25Micro(tf)}
+       |      // 1000000 AS c_micro
+       |  FROM $tf JOIN idf USING (term) JOIN dl USING (doc_id)
+       |    CROSS JOIN corpus c),
+       |scored AS (
+       |  SELECT doc_id, CAST(sum(c_micro) AS BIGINT) AS bm25_micro
+       |  FROM contrib GROUP BY doc_id)""".stripMargin
+
+  /** q123's fixed four-term query scored over the whole corpus. */
+  private val bm25FixedQueryCtes: String =
+    s"""$bm25CorpusCtes,
+       |tf AS (
+       |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM toks
+       |  WHERE term IN ('table', 'window', 'hash', 'stream')
+       |  GROUP BY doc_id, term),
+       |${bm25ScoredCtes("tf")}""".stripMargin
+
+  /** The hybrid family's two legs per query doc (doc_id % 100 = 0): the
+    * q123 BM25 over the query's distinct tokens `qt(query_id, term)`,
+    * top 20 as `lex(query_id, doc_id, bm25_micro, r)`, and q30's rounded
+    * cosine, top 20 as `dense(query_id, doc_id, r)`. */
+  private val hybridLegCtes: String =
+    s"""$bm25CorpusCtes,
+       |qt AS (SELECT DISTINCT doc_id AS query_id, term FROM toks
+       |       WHERE doc_id % 100 = 0),
+       |allt AS (SELECT DISTINCT term FROM qt),
+       |tf AS (
+       |  SELECT toks.doc_id, toks.term, CAST(count(*) AS BIGINT) AS tf
+       |  FROM toks JOIN allt USING (term)
+       |  GROUP BY toks.doc_id, toks.term),
+       |${bm25IdfCte("tf")},
+       |lexscore AS (
+       |  SELECT qt.query_id, tf.doc_id, CAST(sum(
+       |    ${bm25Micro("tf")}
+       |    // 1000000) AS BIGINT) AS bm25_micro
+       |  FROM tf JOIN qt USING (term) JOIN idf USING (term)
+       |    JOIN dl ON tf.doc_id = dl.doc_id
+       |    CROSS JOIN corpus c
+       |  WHERE tf.doc_id <> qt.query_id
+       |  GROUP BY qt.query_id, tf.doc_id),
+       |lex AS (
+       |  SELECT query_id, doc_id, bm25_micro,
+       |    row_number() OVER (PARTITION BY query_id
+       |      ORDER BY bm25_micro DESC, doc_id) AS r
+       |  FROM lexscore
+       |  QUALIFY row_number() OVER (PARTITION BY query_id
+       |    ORDER BY bm25_micro DESC, doc_id) <= 20),
+       |${embNormCte("emb")},
+       |dense AS (
+       |  SELECT q.vec_id AS query_id, e.vec_id AS doc_id,
+       |    row_number() OVER (PARTITION BY q.vec_id
+       |      ORDER BY round(list_dot_product(q.v, e.v) / (q.nrm * e.nrm), 6)
+       |        DESC, e.vec_id) AS r
+       |  FROM emb e
+       |    CROSS JOIN (SELECT * FROM emb WHERE vec_id % 100 = 0) q
+       |  WHERE e.vec_id <> q.vec_id
+       |  QUALIFY row_number() OVER (PARTITION BY q.vec_id
+       |    ORDER BY round(list_dot_product(q.v, e.v) / (q.nrm * e.nrm), 6)
+       |      DESC, e.vec_id) <= 20)""".stripMargin
+
+  /** `perq`/`rr`/`ov` and the closing select of the recall@k /
+    * reciprocal-rank oracles: `truth` and `system` expose
+    * (query_id, `id`, r). */
+  private def recallMetricsSql(truth: String, system: String,
+                               id: String): String =
+    s"""perq AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_truth
+       |         FROM $truth GROUP BY query_id),
+       |top1 AS (SELECT query_id, $id FROM $truth WHERE r = 1),
+       |rr AS (
+       |  SELECT t.query_id,
+       |    CAST(coalesce(1000000 // s.r, 0) AS BIGINT) AS rr_micro
+       |  FROM top1 t LEFT JOIN $system s
+       |    ON t.query_id = s.query_id AND t.$id = s.$id),
+       |ov AS (
+       |  SELECT s.query_id, CAST(count(*) AS BIGINT) AS n_overlap
+       |  FROM $system s JOIN $truth t
+       |    ON s.query_id = t.query_id AND s.$id = t.$id
+       |  GROUP BY s.query_id)
+       |SELECT p.query_id, rr.rr_micro,
+       |  coalesce(ov.n_overlap, 0) AS n_overlap,
+       |  (1000000 * coalesce(ov.n_overlap, 0)) // p.n_truth
+       |    AS recall_micro
+       |FROM perq p JOIN rr USING (query_id) LEFT JOIN ov USING (query_id)
+       |ORDER BY p.query_id""".stripMargin
+
+  /** q85's exemplar IVF over the `allowed` (lang = 'en') ids: `e`, the
+    * centroids, assignment and 2-list probing, and `scored(query_id,
+    * neighbor_id, sim)` — the probed, allowed candidates. */
+  private val filteredIvfCtes: String =
+    s"""${embNormCte("e")},
+       |allowed AS (
+       |  SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'),
+       |${ivfExemplarCentroidsCte("c")},
+       |${ivfAssignProbeCtes("c", nProbe = 2)},
+       |scored AS (
+       |  SELECT p.query_id, a.neighbor_id,
+       |    round(list_dot_product(qe.v, ne.v) / (qe.nrm * ne.nrm), 6) AS sim
+       |  FROM assigned a JOIN probes p USING (list)
+       |  JOIN allowed al ON al.vec_id = a.neighbor_id
+       |  JOIN e qe ON qe.vec_id = p.query_id
+       |  JOIN e ne ON ne.vec_id = a.neighbor_id
+       |  WHERE a.neighbor_id <> p.query_id)""".stripMargin
+
   val oracleSql: Map[String, String] = Map(
 
     // the q123 integer arithmetic with the fielded tf'/dl' built first:
     // weighted full-outer merge of body and anchor term frequencies,
     // weighted combined length, merged-field document frequency
     "q185_anchor_boosted_bm25" ->
-      """WITH btk AS (
+      s"""WITH btk AS (
         |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+        |    unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
         |  FROM documents),
         |btf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf_b
         |  FROM btk WHERE term IN ('table','stream','review','trusted','corpus')
@@ -395,7 +535,7 @@ private[graft] object RetrievalQueries {
         |          ELSE 'misc link' END, 'n': 1}]) AS u
         |  FROM documents) t),
         |atk AS (SELECT doc_id, n,
-        |    unnest(string_split_regex(trim(lower(anchor_norm)), '\s+')) AS term
+        |    unnest(string_split_regex(trim(lower(anchor_norm)), '\\s+')) AS term
         |  FROM anc),
         |atf AS (SELECT doc_id, term, CAST(sum(n) AS BIGINT) AS tf_a
         |  FROM atk WHERE term IN ('table','stream','review','trusted','corpus')
@@ -408,29 +548,13 @@ private[graft] object RetrievalQueries {
         |bdl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl_b
         |  FROM btk GROUP BY doc_id),
         |adl AS (SELECT doc_id, CAST(sum(n *
-        |    len(string_split_regex(trim(lower(anchor_norm)), '\s+')))
+        |    len(string_split_regex(trim(lower(anchor_norm)), '\\s+')))
         |    AS BIGINT) AS dl_a FROM anc GROUP BY doc_id),
         |dl AS (SELECT b.doc_id, b.dl_b + 2 * coalesce(a.dl_a, 0) AS dl
         |  FROM bdl b LEFT JOIN adl a ON a.doc_id = b.doc_id),
         |corpus AS (SELECT CAST(count(*) AS BIGINT) AS n,
         |                  CAST(sum(dl) AS BIGINT) AS t FROM dl),
-        |idf AS (
-        |  SELECT term,
-        |    CAST(round(ln((c.n - CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5)
-        |        / (CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5) + 1.0)
-        |      * 1000000) AS BIGINT) AS idf_micro
-        |  FROM tfm CROSS JOIN corpus c GROUP BY term, c.n),
-        |contrib AS (
-        |  SELECT tfm.doc_id,
-        |    (idf.idf_micro * ((1000000 * (2200000 * tfm.tf))
-        |       // (1000000 * tfm.tf + 300000
-        |           + (9 * ((1000000 * dl.dl * c.n) // c.t)) // 10)))
-        |      // 1000000 AS c_micro
-        |  FROM tfm JOIN idf USING (term) JOIN dl USING (doc_id)
-        |    CROSS JOIN corpus c),
-        |scored AS (
-        |  SELECT doc_id, CAST(sum(c_micro) AS BIGINT) AS bm25_micro
-        |  FROM contrib GROUP BY doc_id)
+        |${bm25ScoredCtes("tfm")}
         |SELECT doc_id,
         |  row_number() OVER (ORDER BY bm25_micro DESC, doc_id) AS "rank",
         |  bm25_micro, bm25_micro / 1000000.0 AS bm25
@@ -470,35 +594,7 @@ private[graft] object RetrievalQueries {
     // DuckDB's floor division ≡ Spark's `div` on these all-positive
     // operands; sums CAST to BIGINT (DuckDB sums BIGINT into HUGEINT)
     "q123_bm25_topk" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents),
-        |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-        |       FROM toks GROUP BY doc_id),
-        |corpus AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |                  CAST(sum(dl) AS BIGINT) AS t FROM dl),
-        |tf AS (
-        |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM toks
-        |  WHERE term IN ('table', 'window', 'hash', 'stream')
-        |  GROUP BY doc_id, term),
-        |idf AS (
-        |  SELECT term,
-        |    CAST(round(ln((c.n - CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5)
-        |        / (CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5) + 1.0)
-        |      * 1000000) AS BIGINT) AS idf_micro
-        |  FROM tf CROSS JOIN corpus c GROUP BY term, c.n),
-        |contrib AS (
-        |  SELECT tf.doc_id,
-        |    (idf.idf_micro * ((1000000 * (2200000 * tf.tf))
-        |       // (1000000 * tf.tf + 300000
-        |           + (9 * ((1000000 * dl.dl * c.n) // c.t)) // 10)))
-        |      // 1000000 AS c_micro
-        |  FROM tf JOIN idf USING (term) JOIN dl USING (doc_id)
-        |    CROSS JOIN corpus c),
-        |scored AS (
-        |  SELECT doc_id, CAST(sum(c_micro) AS BIGINT) AS bm25_micro
-        |  FROM contrib GROUP BY doc_id)
+      s"""WITH $bm25FixedQueryCtes
         |SELECT doc_id,
         |  row_number() OVER (ORDER BY bm25_micro DESC, doc_id) AS "rank",
         |  bm25_micro, bm25_micro / 1000000.0 AS bm25
@@ -511,60 +607,7 @@ private[graft] object RetrievalQueries {
     // integer reciprocal-rank — the full-outer + coalesce IS the RRF
     // "missing leg contributes zero" rule
     "q124_hybrid_rrf" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents),
-        |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-        |       FROM toks GROUP BY doc_id),
-        |corpus AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |                  CAST(sum(dl) AS BIGINT) AS t FROM dl),
-        |qt AS (SELECT DISTINCT doc_id AS query_id, term FROM toks
-        |       WHERE doc_id % 100 = 0),
-        |allt AS (SELECT DISTINCT term FROM qt),
-        |tf AS (
-        |  SELECT toks.doc_id, toks.term, CAST(count(*) AS BIGINT) AS tf
-        |  FROM toks JOIN allt USING (term)
-        |  GROUP BY toks.doc_id, toks.term),
-        |idf AS (
-        |  SELECT term,
-        |    CAST(round(ln((c.n - CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5)
-        |        / (CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5) + 1.0)
-        |      * 1000000) AS BIGINT) AS idf_micro
-        |  FROM tf CROSS JOIN corpus c GROUP BY term, c.n),
-        |lexscore AS (
-        |  SELECT qt.query_id, tf.doc_id, CAST(sum(
-        |    (idf.idf_micro * ((1000000 * (2200000 * tf.tf))
-        |       // (1000000 * tf.tf + 300000
-        |           + (9 * ((1000000 * dl.dl * c.n) // c.t)) // 10)))
-        |    // 1000000) AS BIGINT) AS bm25_micro
-        |  FROM tf JOIN qt USING (term) JOIN idf USING (term)
-        |    JOIN dl ON tf.doc_id = dl.doc_id
-        |    CROSS JOIN corpus c
-        |  WHERE tf.doc_id <> qt.query_id
-        |  GROUP BY qt.query_id, tf.doc_id),
-        |lex AS (
-        |  SELECT query_id, doc_id,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY bm25_micro DESC, doc_id) AS r
-        |  FROM lexscore
-        |  QUALIFY row_number() OVER (PARTITION BY query_id
-        |    ORDER BY bm25_micro DESC, doc_id) <= 20),
-        |emb AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |dense AS (
-        |  SELECT q.vec_id AS query_id, e.vec_id AS doc_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY round(list_dot_product(q.v, e.v) / (q.nrm * e.nrm), 6)
-        |        DESC, e.vec_id) AS r
-        |  FROM emb e
-        |    CROSS JOIN (SELECT * FROM emb WHERE vec_id % 100 = 0) q
-        |  WHERE e.vec_id <> q.vec_id
-        |  QUALIFY row_number() OVER (PARTITION BY q.vec_id
-        |    ORDER BY round(list_dot_product(q.v, e.v) / (q.nrm * e.nrm), 6)
-        |      DESC, e.vec_id) <= 20),
+      s"""WITH $hybridLegCtes,
         |fused AS (
         |  SELECT coalesce(l.query_id, d.query_id) AS query_id,
         |    coalesce(l.doc_id, d.doc_id) AS doc_id,
@@ -584,35 +627,7 @@ private[graft] object RetrievalQueries {
 
     // q123's BM25 CTEs feeding an R-bounded expansion ranking
     "q127_prf_expansion" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents),
-        |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-        |       FROM toks GROUP BY doc_id),
-        |corpus AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |                  CAST(sum(dl) AS BIGINT) AS t FROM dl),
-        |tf AS (
-        |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM toks
-        |  WHERE term IN ('table', 'window', 'hash', 'stream')
-        |  GROUP BY doc_id, term),
-        |idf AS (
-        |  SELECT term,
-        |    CAST(round(ln((c.n - CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5)
-        |        / (CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5) + 1.0)
-        |      * 1000000) AS BIGINT) AS idf_micro
-        |  FROM tf CROSS JOIN corpus c GROUP BY term, c.n),
-        |contrib AS (
-        |  SELECT tf.doc_id,
-        |    (idf.idf_micro * ((1000000 * (2200000 * tf.tf))
-        |       // (1000000 * tf.tf + 300000
-        |           + (9 * ((1000000 * dl.dl * c.n) // c.t)) // 10)))
-        |      // 1000000 AS c_micro
-        |  FROM tf JOIN idf USING (term) JOIN dl USING (doc_id)
-        |    CROSS JOIN corpus c),
-        |scored AS (
-        |  SELECT doc_id, CAST(sum(c_micro) AS BIGINT) AS bm25_micro
-        |  FROM contrib GROUP BY doc_id),
+      s"""WITH $bm25FixedQueryCtes,
         |r AS (SELECT doc_id FROM scored
         |      ORDER BY bm25_micro DESC, doc_id LIMIT 10),
         |rtf AS (
@@ -639,134 +654,13 @@ private[graft] object RetrievalQueries {
 
     // q124's legs feeding exact-integer recall@20 / reciprocal rank
     "q128_retrieval_metrics" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents),
-        |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-        |       FROM toks GROUP BY doc_id),
-        |corpus AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |                  CAST(sum(dl) AS BIGINT) AS t FROM dl),
-        |qt AS (SELECT DISTINCT doc_id AS query_id, term FROM toks
-        |       WHERE doc_id % 100 = 0),
-        |allt AS (SELECT DISTINCT term FROM qt),
-        |tf AS (
-        |  SELECT toks.doc_id, toks.term, CAST(count(*) AS BIGINT) AS tf
-        |  FROM toks JOIN allt USING (term)
-        |  GROUP BY toks.doc_id, toks.term),
-        |idf AS (
-        |  SELECT term,
-        |    CAST(round(ln((c.n - CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5)
-        |        / (CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5) + 1.0)
-        |      * 1000000) AS BIGINT) AS idf_micro
-        |  FROM tf CROSS JOIN corpus c GROUP BY term, c.n),
-        |lexscore AS (
-        |  SELECT qt.query_id, tf.doc_id, CAST(sum(
-        |    (idf.idf_micro * ((1000000 * (2200000 * tf.tf))
-        |       // (1000000 * tf.tf + 300000
-        |           + (9 * ((1000000 * dl.dl * c.n) // c.t)) // 10)))
-        |    // 1000000) AS BIGINT) AS bm25_micro
-        |  FROM tf JOIN qt USING (term) JOIN idf USING (term)
-        |    JOIN dl ON tf.doc_id = dl.doc_id
-        |    CROSS JOIN corpus c
-        |  WHERE tf.doc_id <> qt.query_id
-        |  GROUP BY qt.query_id, tf.doc_id),
-        |lex AS (
-        |  SELECT query_id, doc_id,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY bm25_micro DESC, doc_id) AS r
-        |  FROM lexscore
-        |  QUALIFY row_number() OVER (PARTITION BY query_id
-        |    ORDER BY bm25_micro DESC, doc_id) <= 20),
-        |emb AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |dense AS (
-        |  SELECT q.vec_id AS query_id, e.vec_id AS doc_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY round(list_dot_product(q.v, e.v) / (q.nrm * e.nrm), 6)
-        |        DESC, e.vec_id) AS r
-        |  FROM emb e
-        |    CROSS JOIN (SELECT * FROM emb WHERE vec_id % 100 = 0) q
-        |  WHERE e.vec_id <> q.vec_id
-        |  QUALIFY row_number() OVER (PARTITION BY q.vec_id
-        |    ORDER BY round(list_dot_product(q.v, e.v) / (q.nrm * e.nrm), 6)
-        |      DESC, e.vec_id) <= 20),
-        |perq AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_truth
-        |         FROM dense GROUP BY query_id),
-        |top1 AS (SELECT query_id, doc_id FROM dense WHERE r = 1),
-        |rr AS (
-        |  SELECT t.query_id,
-        |    CAST(coalesce(1000000 // l.r, 0) AS BIGINT) AS rr_micro
-        |  FROM top1 t LEFT JOIN lex l
-        |    ON t.query_id = l.query_id AND t.doc_id = l.doc_id),
-        |ov AS (
-        |  SELECT l.query_id, CAST(count(*) AS BIGINT) AS n_overlap
-        |  FROM lex l JOIN dense d
-        |    ON l.query_id = d.query_id AND l.doc_id = d.doc_id
-        |  GROUP BY l.query_id)
-        |SELECT p.query_id, rr.rr_micro,
-        |  coalesce(ov.n_overlap, 0) AS n_overlap,
-        |  (1000000 * coalesce(ov.n_overlap, 0)) // p.n_truth
-        |    AS recall_micro
-        |FROM perq p JOIN rr USING (query_id) LEFT JOIN ov USING (query_id)
-        |ORDER BY p.query_id""".stripMargin,
+      s"""WITH $hybridLegCtes,
+        |${recallMetricsSql("dense", "lex", "doc_id")}""".stripMargin,
 
     // q124's legs with the fusion replaced by NOT EXISTS — the anti-join
     // definition of hard negatives
     "q126_hard_negatives" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents),
-        |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-        |       FROM toks GROUP BY doc_id),
-        |corpus AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |                  CAST(sum(dl) AS BIGINT) AS t FROM dl),
-        |qt AS (SELECT DISTINCT doc_id AS query_id, term FROM toks
-        |       WHERE doc_id % 100 = 0),
-        |allt AS (SELECT DISTINCT term FROM qt),
-        |tf AS (
-        |  SELECT toks.doc_id, toks.term, CAST(count(*) AS BIGINT) AS tf
-        |  FROM toks JOIN allt USING (term)
-        |  GROUP BY toks.doc_id, toks.term),
-        |idf AS (
-        |  SELECT term,
-        |    CAST(round(ln((c.n - CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5)
-        |        / (CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5) + 1.0)
-        |      * 1000000) AS BIGINT) AS idf_micro
-        |  FROM tf CROSS JOIN corpus c GROUP BY term, c.n),
-        |lexscore AS (
-        |  SELECT qt.query_id, tf.doc_id, CAST(sum(
-        |    (idf.idf_micro * ((1000000 * (2200000 * tf.tf))
-        |       // (1000000 * tf.tf + 300000
-        |           + (9 * ((1000000 * dl.dl * c.n) // c.t)) // 10)))
-        |    // 1000000) AS BIGINT) AS bm25_micro
-        |  FROM tf JOIN qt USING (term) JOIN idf USING (term)
-        |    JOIN dl ON tf.doc_id = dl.doc_id
-        |    CROSS JOIN corpus c
-        |  WHERE tf.doc_id <> qt.query_id
-        |  GROUP BY qt.query_id, tf.doc_id),
-        |lex AS (
-        |  SELECT query_id, doc_id, bm25_micro,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY bm25_micro DESC, doc_id) AS r
-        |  FROM lexscore
-        |  QUALIFY row_number() OVER (PARTITION BY query_id
-        |    ORDER BY bm25_micro DESC, doc_id) <= 20),
-        |emb AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |dense AS (
-        |  SELECT q.vec_id AS query_id, e.vec_id AS doc_id
-        |  FROM emb e
-        |    CROSS JOIN (SELECT * FROM emb WHERE vec_id % 100 = 0) q
-        |  WHERE e.vec_id <> q.vec_id
-        |  QUALIFY row_number() OVER (PARTITION BY q.vec_id
-        |    ORDER BY round(list_dot_product(q.v, e.v) / (q.nrm * e.nrm), 6)
-        |      DESC, e.vec_id) <= 20)
+      s"""WITH $hybridLegCtes
         |SELECT l.query_id, l.doc_id, l.r AS "rank", l.bm25_micro
         |FROM lex l
         |WHERE NOT EXISTS (SELECT 1 FROM dense d
@@ -776,60 +670,7 @@ private[graft] object RetrievalQueries {
 
     // q124's fusion CTEs + q129's passage CTEs, composed per query
     "q130_rag_serving" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents),
-        |dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-        |       FROM toks GROUP BY doc_id),
-        |corpus AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |                  CAST(sum(dl) AS BIGINT) AS t FROM dl),
-        |qt AS (SELECT DISTINCT doc_id AS query_id, term FROM toks
-        |       WHERE doc_id % 100 = 0),
-        |allt AS (SELECT DISTINCT term FROM qt),
-        |tf AS (
-        |  SELECT toks.doc_id, toks.term, CAST(count(*) AS BIGINT) AS tf
-        |  FROM toks JOIN allt USING (term)
-        |  GROUP BY toks.doc_id, toks.term),
-        |idf AS (
-        |  SELECT term,
-        |    CAST(round(ln((c.n - CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5)
-        |        / (CAST(count(DISTINCT doc_id) AS BIGINT) + 0.5) + 1.0)
-        |      * 1000000) AS BIGINT) AS idf_micro
-        |  FROM tf CROSS JOIN corpus c GROUP BY term, c.n),
-        |lexscore AS (
-        |  SELECT qt.query_id, tf.doc_id, CAST(sum(
-        |    (idf.idf_micro * ((1000000 * (2200000 * tf.tf))
-        |       // (1000000 * tf.tf + 300000
-        |           + (9 * ((1000000 * dl.dl * c.n) // c.t)) // 10)))
-        |    // 1000000) AS BIGINT) AS bm25_micro
-        |  FROM tf JOIN qt USING (term) JOIN idf USING (term)
-        |    JOIN dl ON tf.doc_id = dl.doc_id
-        |    CROSS JOIN corpus c
-        |  WHERE tf.doc_id <> qt.query_id
-        |  GROUP BY qt.query_id, tf.doc_id),
-        |lex AS (
-        |  SELECT query_id, doc_id,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY bm25_micro DESC, doc_id) AS r
-        |  FROM lexscore
-        |  QUALIFY row_number() OVER (PARTITION BY query_id
-        |    ORDER BY bm25_micro DESC, doc_id) <= 20),
-        |emb AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |dense AS (
-        |  SELECT q.vec_id AS query_id, e.vec_id AS doc_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY round(list_dot_product(q.v, e.v) / (q.nrm * e.nrm), 6)
-        |        DESC, e.vec_id) AS r
-        |  FROM emb e
-        |    CROSS JOIN (SELECT * FROM emb WHERE vec_id % 100 = 0) q
-        |  WHERE e.vec_id <> q.vec_id
-        |  QUALIFY row_number() OVER (PARTITION BY q.vec_id
-        |    ORDER BY round(list_dot_product(q.v, e.v) / (q.nrm * e.nrm), 6)
-        |      DESC, e.vec_id) <= 20),
+      s"""WITH $hybridLegCtes,
         |fused AS (
         |  SELECT coalesce(l.query_id, d.query_id) AS query_id,
         |    coalesce(l.doc_id, d.doc_id) AS doc_id,
@@ -846,7 +687,7 @@ private[graft] object RetrievalQueries {
         |    ORDER BY rrf_micro DESC, doc_id) <= 5),
         |base AS (
         |  SELECT doc_id,
-        |    string_split_regex(trim(lower(text)), '\s+') AS arr
+        |    string_split_regex(trim(lower(text)), '\\s+') AS arr
         |  FROM documents
         |  WHERE doc_id IN (SELECT doc_id FROM fusedtop)),
         |pos AS (
@@ -916,10 +757,7 @@ private[graft] object RetrievalQueries {
     // shift keeps every // nonnegative, matching Spark's div exactly
     "q138_mmr_rerank" -> {
       val pre =
-        """WITH e AS (
-          |  SELECT vec_id, embedding::DOUBLE[] AS v,
-          |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-          |  FROM embeddings),
+        s"""WITH ${embNormCte("e")},
           |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn
           |      FROM e WHERE vec_id % 100 = 0),
           |cands AS (
@@ -981,12 +819,7 @@ private[graft] object RetrievalQueries {
     // q135's exact filtered top-k as truth, q136's funnel as system,
     // fed through q128's metric CTEs
     "q137_filtered_recall" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |allowed AS (
-        |  SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'),
+      s"""WITH $filteredIvfCtes,
         |q AS (SELECT vec_id AS query_id, v AS qvec, nrm AS qn
         |      FROM e WHERE vec_id % 100 = 0),
         |truth AS (
@@ -1000,115 +833,27 @@ private[graft] object RetrievalQueries {
         |    WHERE e.vec_id <> q.query_id)
         |  QUALIFY row_number() OVER (PARTITION BY query_id
         |    ORDER BY sim DESC, neighbor_id) <= 5),
-        |c AS (SELECT vec_id AS cid, v AS cvec, nrm AS cnrm
-        |      FROM e ORDER BY vec_id LIMIT 8),
-        |assigned AS (
-        |  SELECT e.vec_id AS neighbor_id, c.cid AS list
-        |  FROM e CROSS JOIN c
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
-        |             c.cid) = 1),
-        |probes AS (
-        |  SELECT e.vec_id AS query_id, c.cid AS list
-        |  FROM e CROSS JOIN c
-        |  WHERE e.vec_id % 100 = 0
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
-        |             c.cid) <= 2),
         |system AS (
         |  SELECT query_id, neighbor_id,
         |    row_number() OVER (PARTITION BY query_id
         |      ORDER BY sim DESC, neighbor_id) AS r
-        |  FROM (
-        |    SELECT p.query_id, a.neighbor_id,
-        |      round(list_dot_product(qe.v, ne.v) / (qe.nrm * ne.nrm), 6) AS sim
-        |    FROM assigned a JOIN probes p USING (list)
-        |    JOIN allowed al ON al.vec_id = a.neighbor_id
-        |    JOIN e qe ON qe.vec_id = p.query_id
-        |    JOIN e ne ON ne.vec_id = a.neighbor_id
-        |    WHERE a.neighbor_id <> p.query_id)
+        |  FROM scored
         |  QUALIFY row_number() OVER (PARTITION BY query_id
         |    ORDER BY sim DESC, neighbor_id) <= 5),
-        |perq AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_truth
-        |         FROM truth GROUP BY query_id),
-        |top1 AS (SELECT query_id, neighbor_id FROM truth WHERE r = 1),
-        |rr AS (
-        |  SELECT t.query_id,
-        |    CAST(coalesce(1000000 // s.r, 0) AS BIGINT) AS rr_micro
-        |  FROM top1 t LEFT JOIN system s
-        |    ON t.query_id = s.query_id AND t.neighbor_id = s.neighbor_id),
-        |ov AS (
-        |  SELECT s.query_id, CAST(count(*) AS BIGINT) AS n_overlap
-        |  FROM system s JOIN truth t
-        |    ON s.query_id = t.query_id AND s.neighbor_id = t.neighbor_id
-        |  GROUP BY s.query_id)
-        |SELECT p.query_id, rr.rr_micro,
-        |  coalesce(ov.n_overlap, 0) AS n_overlap,
-        |  (1000000 * coalesce(ov.n_overlap, 0)) // p.n_truth
-        |    AS recall_micro
-        |FROM perq p JOIN rr USING (query_id) LEFT JOIN ov USING (query_id)
-        |ORDER BY p.query_id""".stripMargin,
+        |${recallMetricsSql("truth", "system", "neighbor_id")}""".stripMargin,
 
     // q85's candidate CTEs + the allowed-id semi-join before rerank
     "q136_filtered_ivf" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |allowed AS (
-        |  SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'),
-        |c AS (SELECT vec_id AS cid, v AS cvec, nrm AS cnrm
-        |      FROM e ORDER BY vec_id LIMIT 8),
-        |assigned AS (
-        |  SELECT e.vec_id AS neighbor_id, c.cid AS list
-        |  FROM e CROSS JOIN c
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
-        |             c.cid) = 1),
-        |probes AS (
-        |  SELECT e.vec_id AS query_id, c.cid AS list
-        |  FROM e CROSS JOIN c
-        |  WHERE e.vec_id % 100 = 0
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
-        |             c.cid) <= 2),
-        |scored AS (
-        |  SELECT p.query_id, a.neighbor_id,
-        |    round(list_dot_product(qe.v, ne.v) / (qe.nrm * ne.nrm), 6) AS sim
-        |  FROM assigned a JOIN probes p USING (list)
-        |  JOIN allowed al ON al.vec_id = a.neighbor_id
-        |  JOIN e qe ON qe.vec_id = p.query_id
-        |  JOIN e ne ON ne.vec_id = a.neighbor_id
-        |  WHERE a.neighbor_id <> p.query_id)
-        |SELECT query_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank",
-        |  neighbor_id, sim
-        |FROM scored
-        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= 5
-        |ORDER BY query_id, "rank"""".stripMargin,
+      s"""WITH $filteredIvfCtes
+        |${simTopKSelect(5)}""".stripMargin,
 
     // q30's scorer over the metadata-restricted corpus
     "q135_filtered_ann" ->
-      """WITH corp AS (
+      s"""WITH corp AS (
         |  SELECT e.vec_id, e.embedding
         |  FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id
         |  WHERE d.lang = 'en'),
-        |q AS (SELECT vec_id AS query_id, embedding AS qvec
-        |      FROM embeddings WHERE vec_id % 100 = 0),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id AS neighbor_id,
-        |    round(list_dot_product(q.qvec::DOUBLE[], e.embedding::DOUBLE[]) /
-        |      (sqrt(list_dot_product(q.qvec::DOUBLE[], q.qvec::DOUBLE[])) *
-        |       sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))),
-        |      6) AS sim
-        |  FROM corp e CROSS JOIN q WHERE e.vec_id <> q.query_id)
-        |SELECT query_id,
-        |  row_number() OVER (PARTITION BY query_id
-        |    ORDER BY sim DESC, neighbor_id) AS "rank",
-        |  neighbor_id, sim
-        |FROM scored
-        |QUALIFY row_number() OVER (PARTITION BY query_id
-        |  ORDER BY sim DESC, neighbor_id) <= 5
-        |ORDER BY query_id, "rank"""".stripMargin,
+        |${exactCosineCtes("q", "scored", corpus = "corp")}
+        |${simTopKSelect(5)}""".stripMargin,
   )
 }

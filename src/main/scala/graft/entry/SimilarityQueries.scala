@@ -226,6 +226,65 @@ private[graft] object SimilarityQueries {
   )
 
 
+  // ---- oracle fragments: SQL text only, each relation stated once for
+  // every oracle of this family that shares it
+
+  /** The exemplar IVF's exact rerank of the probed lists:
+    * `scored(query_id, neighbor_id, sim)` over `assigned`/`probes`. */
+  private val ivfScoredCte: String =
+    """scored AS (
+      |  SELECT p.query_id, a.neighbor_id,
+      |    round(list_dot_product(qe.v, ne.v) / (qe.nrm * ne.nrm), 6) AS sim
+      |  FROM assigned a JOIN probes p USING (list)
+      |  JOIN e qe ON qe.vec_id = p.query_id
+      |  JOIN e ne ON ne.vec_id = a.neighbor_id
+      |  WHERE a.neighbor_id <> p.query_id)""".stripMargin
+
+  /** q112's int8 relation `name(vec_id, v, nrm, qmax, qvec)` — the same
+    * expression SHAPES as the Spark side (x * 127.0 / qmax
+    * left-associated), so every IEEE-double intermediate is
+    * bit-identical. */
+  private def int8QuantCte(name: String): String =
+    s"""$name AS (
+       |  SELECT vec_id,
+       |    embedding::DOUBLE[] AS v,
+       |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm,
+       |    list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) AS qmax,
+       |    CASE WHEN list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) = 0
+       |      THEN list_transform(embedding::DOUBLE[], x -> CAST(0 AS BIGINT))
+       |      ELSE list_transform(embedding::DOUBLE[], x -> CAST(round(
+       |        x * 127.0 / list_max(list_transform(embedding::DOUBLE[], y -> abs(y)))
+       |      ) AS BIGINT)) END AS qvec
+       |  FROM embeddings)""".stripMargin
+
+  /** q112's int8 scan: queries `q` (vec_id % 100 = 0) against every
+    * other vector of `quant`, (qs/127)·(cs/127)·idot / (qn·cn) as
+    * `cand(query_id, neighbor_id, approx_sim)`. */
+  private def int8ScanCtes(q: String, cand: String): String =
+    s"""$q AS (SELECT * FROM quant WHERE vec_id % 100 = 0),
+       |$cand AS (
+       |  SELECT $q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |    round(($q.qmax / 127.0) * (c.qmax / 127.0) *
+       |      list_dot_product($q.qvec::DOUBLE[], c.qvec::DOUBLE[]) /
+       |      ($q.nrm * c.nrm), 6) AS approx_sim
+       |  FROM quant c CROSS JOIN $q WHERE c.vec_id <> $q.vec_id)""".stripMargin
+
+  /** Exact rerank of an approximate scan: the 20 best of
+    * `cand(query_id, neighbor_id, approx_sim)` as `short`, rescored by
+    * exact cosine over `rel(vec_id, v, nrm)` into `scored`. */
+  private def rerankCtes(cand: String, rel: String, short: String,
+                         scored: String): String =
+    s"""$short AS (
+       |  SELECT query_id, neighbor_id FROM $cand
+       |  QUALIFY row_number() OVER (PARTITION BY query_id
+       |    ORDER BY approx_sim DESC, neighbor_id) <= 20),
+       |$scored AS (
+       |  SELECT s.query_id, s.neighbor_id,
+       |    round(list_dot_product(qe.v, ce.v) / (qe.nrm * ce.nrm), 6) AS sim
+       |  FROM $short s
+       |  JOIN $rel qe ON qe.vec_id = s.query_id
+       |  JOIN $rel ce ON ce.vec_id = s.neighbor_id)""".stripMargin
+
   /** The q75 oracle: the shared seeded-trainer prefix + the final
     * argmax assignment and integer per-cluster census. */
   private def kppKmeansOracleSql(nList: Int, iters: Int, dim: Int): String =
@@ -250,32 +309,9 @@ private[graft] object SimilarityQueries {
   private def kppIvfOracleSql(nList: Int, iters: Int, dim: Int,
                               nProbe: Int, k: Int): String =
     s"""${EntryTables.kppLloydCtes(nList, iters, dim)},
-       |assigned AS (
-       |  SELECT e.vec_id AS neighbor_id, c.cid AS list
-       |  FROM e CROSS JOIN l${iters}n c
-       |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-       |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
-       |             c.cid) = 1),
-       |probes AS (
-       |  SELECT e.vec_id AS query_id, c.cid AS list
-       |  FROM e CROSS JOIN l${iters}n c
-       |  WHERE e.vec_id % 100 = 0
-       |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-       |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
-       |             c.cid) <= $nProbe),
-       |scored AS (
-       |  SELECT p.query_id, a.neighbor_id,
-       |    round(list_dot_product(qe.v, ne.v) / (qe.nrm * ne.nrm), 6) AS sim
-       |  FROM assigned a JOIN probes p USING (list)
-       |  JOIN e qe ON qe.vec_id = p.query_id
-       |  JOIN e ne ON ne.vec_id = a.neighbor_id
-       |  WHERE a.neighbor_id <> p.query_id)
-       |SELECT query_id,
-       |  row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank",
-       |  neighbor_id, sim
-       |FROM scored
-       |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= $k
-       |ORDER BY query_id, "rank"""".stripMargin
+       |${ivfAssignProbeCtes(s"l${iters}n c", nProbe)},
+       |$ivfScoredCte
+       |${simTopKSelect(k)}""".stripMargin
 
   /** The q79 oracle: the shared seeded coarse-quantizer prefix, then
     * the residual relation, per-subspace md5-Forgy + L2-Lloyd codebook
@@ -372,12 +408,7 @@ private[graft] object SimilarityQueries {
        |  FROM shortlist sl
        |  JOIN e qe ON qe.vec_id = sl.query_id
        |  JOIN e ne ON ne.vec_id = sl.neighbor_id)
-       |SELECT query_id,
-       |  row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank",
-       |  neighbor_id, sim
-       |FROM scored
-       |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= $k
-       |ORDER BY query_id, "rank"""".stripMargin
+       |${simTopKSelect(k)}""".stripMargin
   }
 
   val oracleSql: Map[String, String] = Map(
@@ -405,72 +436,23 @@ private[graft] object SimilarityQueries {
          |  FROM cands
          |  JOIN e qe ON qe.vec_id = cands.query_id
          |  JOIN e ne ON ne.vec_id = cands.neighbor_id)
-         |SELECT query_id,
-         |  row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank",
-         |  neighbor_id, sim
-         |FROM scored
-         |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= 5
-         |ORDER BY query_id, "rank"""".stripMargin,
+         |${simTopKSelect(5)}""".stripMargin,
 
     "q30_topk_cosine" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qvec
-        |           FROM embeddings WHERE vec_id % 100 = 0),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id AS neighbor_id,
-        |    round(list_dot_product(q.qvec::DOUBLE[], e.embedding::DOUBLE[]) /
-        |      (sqrt(list_dot_product(q.qvec::DOUBLE[], q.qvec::DOUBLE[])) *
-        |       sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))), 6) AS sim
-        |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id)
-        |SELECT query_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank",
-        |  neighbor_id, sim
-        |FROM scored
-        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= 5
-        |ORDER BY query_id, "rank"""".stripMargin,
+      s"""WITH ${exactCosineCtes("q", "scored")}
+        |${simTopKSelect(5)}""".stripMargin,
 
     // q30's exact leg + q112's int8 leg composed (CTEs renamed apart),
     // intersected per query — recall itself in exact integer micro
     "q189_quantization_recall" ->
-      """WITH xq AS (SELECT vec_id AS query_id, embedding AS qvec
-        |            FROM embeddings WHERE vec_id % 100 = 0),
-        |xsc AS (
-        |  SELECT xq.query_id, e.vec_id AS neighbor_id,
-        |    round(list_dot_product(xq.qvec::DOUBLE[], e.embedding::DOUBLE[]) /
-        |      (sqrt(list_dot_product(xq.qvec::DOUBLE[], xq.qvec::DOUBLE[])) *
-        |       sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))), 6) AS sim
-        |  FROM embeddings e CROSS JOIN xq WHERE e.vec_id <> xq.query_id),
+      s"""WITH ${exactCosineCtes("xq", "xsc")},
         |xtk AS (
         |  SELECT query_id, neighbor_id FROM xsc
         |  QUALIFY row_number() OVER (PARTITION BY query_id
         |    ORDER BY sim DESC, neighbor_id) <= 5),
-        |quant AS (
-        |  SELECT vec_id,
-        |    embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm,
-        |    list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) AS qmax,
-        |    CASE WHEN list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) = 0
-        |      THEN list_transform(embedding::DOUBLE[], x -> CAST(0 AS BIGINT))
-        |      ELSE list_transform(embedding::DOUBLE[], x -> CAST(round(
-        |        x * 127.0 / list_max(list_transform(embedding::DOUBLE[], y -> abs(y)))
-        |      ) AS BIGINT)) END AS qvec
-        |  FROM embeddings),
-        |iq AS (SELECT * FROM quant WHERE vec_id % 100 = 0),
-        |icand AS (
-        |  SELECT iq.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    round((iq.qmax / 127.0) * (c.qmax / 127.0) *
-        |      list_dot_product(iq.qvec::DOUBLE[], c.qvec::DOUBLE[]) /
-        |      (iq.nrm * c.nrm), 6) AS approx_sim
-        |  FROM quant c CROSS JOIN iq WHERE c.vec_id <> iq.vec_id),
-        |ishort AS (
-        |  SELECT query_id, neighbor_id FROM icand
-        |  QUALIFY row_number() OVER (PARTITION BY query_id
-        |    ORDER BY approx_sim DESC, neighbor_id) <= 20),
-        |iscored AS (
-        |  SELECT s.query_id, s.neighbor_id,
-        |    round(list_dot_product(qe.v, ce.v) / (qe.nrm * ce.nrm), 6) AS sim
-        |  FROM ishort s
-        |  JOIN quant qe ON qe.vec_id = s.query_id
-        |  JOIN quant ce ON ce.vec_id = s.neighbor_id),
+        |${int8QuantCte("quant")},
+        |${int8ScanCtes("iq", "icand")},
+        |${rerankCtes("icand", "quant", "ishort", "iscored")},
         |itk AS (
         |  SELECT query_id, neighbor_id FROM iscored
         |  QUALIFY row_number() OVER (PARTITION BY query_id
@@ -485,50 +467,18 @@ private[graft] object SimilarityQueries {
         |FROM base b LEFT JOIN hits h ON h.query_id = b.query_id
         |ORDER BY b.query_id""".stripMargin,
 
-    // int8 quantization in SQL: same expression SHAPES as the Spark side
-    // (x * 127.0 / qmax left-associated; (qs/127)·(cs/127)·idot / (qn·cn))
-    // so every IEEE-double intermediate is bit-identical; the candidate
-    // dot itself is exact-integer, hazard-free by construction
+    // int8 quantization in SQL; the candidate dot itself is
+    // exact-integer, hazard-free by construction
     "q112_topk_int8" ->
-      """WITH quant AS (
-        |  SELECT vec_id,
-        |    embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm,
-        |    list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) AS qmax,
-        |    CASE WHEN list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) = 0
-        |      THEN list_transform(embedding::DOUBLE[], x -> CAST(0 AS BIGINT))
-        |      ELSE list_transform(embedding::DOUBLE[], x -> CAST(round(
-        |        x * 127.0 / list_max(list_transform(embedding::DOUBLE[], y -> abs(y)))
-        |      ) AS BIGINT)) END AS qvec
-        |  FROM embeddings),
-        |q AS (SELECT * FROM quant WHERE vec_id % 100 = 0),
-        |cand AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    round((q.qmax / 127.0) * (c.qmax / 127.0) *
-        |      list_dot_product(q.qvec::DOUBLE[], c.qvec::DOUBLE[]) /
-        |      (q.nrm * c.nrm), 6) AS approx_sim
-        |  FROM quant c CROSS JOIN q WHERE c.vec_id <> q.vec_id),
-        |shortlist AS (
-        |  SELECT query_id, neighbor_id FROM cand
-        |  QUALIFY row_number() OVER (PARTITION BY query_id
-        |    ORDER BY approx_sim DESC, neighbor_id) <= 20),
-        |scored AS (
-        |  SELECT s.query_id, s.neighbor_id,
-        |    round(list_dot_product(qe.v, ce.v) / (qe.nrm * ce.nrm), 6) AS sim
-        |  FROM shortlist s
-        |  JOIN quant qe ON qe.vec_id = s.query_id
-        |  JOIN quant ce ON ce.vec_id = s.neighbor_id)
-        |SELECT query_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank",
-        |  neighbor_id, sim
-        |FROM scored
-        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= 5
-        |ORDER BY query_id, "rank"""".stripMargin,
+      s"""WITH ${int8QuantCte("quant")},
+        |${int8ScanCtes("q", "cand")},
+        |${rerankCtes("cand", "quant", "shortlist", "scored")}
+        |${simTopKSelect(5)}""".stripMargin,
 
     // prefix slice v[1:16] scores the scan; full vectors rerank — same
     // left-associated list_dot_product accumulation as the Spark side
     "q115_topk_matryoshka" ->
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT vec_id, embedding::DOUBLE[] AS v,
         |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm,
         |    sqrt(list_dot_product(list_slice(embedding::DOUBLE[], 1, 16),
@@ -540,85 +490,22 @@ private[graft] object SimilarityQueries {
         |    round(list_dot_product(list_slice(q.v, 1, 16), list_slice(c.v, 1, 16))
         |      / (q.pn * c.pn), 6) AS approx_sim
         |  FROM base c CROSS JOIN q WHERE c.vec_id <> q.vec_id),
-        |shortlist AS (
-        |  SELECT query_id, neighbor_id FROM cand
-        |  QUALIFY row_number() OVER (PARTITION BY query_id
-        |    ORDER BY approx_sim DESC, neighbor_id) <= 20),
-        |scored AS (
-        |  SELECT s.query_id, s.neighbor_id,
-        |    round(list_dot_product(qe.v, ce.v) / (qe.nrm * ce.nrm), 6) AS sim
-        |  FROM shortlist s
-        |  JOIN base qe ON qe.vec_id = s.query_id
-        |  JOIN base ce ON ce.vec_id = s.neighbor_id)
-        |SELECT query_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank",
-        |  neighbor_id, sim
-        |FROM scored
-        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= 5
-        |ORDER BY query_id, "rank"""".stripMargin,
+        |${rerankCtes("cand", "base", "shortlist", "scored")}
+        |${simTopKSelect(5)}""".stripMargin,
 
     "q85_topk_ivf_exemplar" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cvec, nrm AS cnrm
-        |      FROM e ORDER BY vec_id LIMIT 8),
-        |assigned AS (
-        |  SELECT e.vec_id AS neighbor_id, c.cid AS list
-        |  FROM e CROSS JOIN c
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
-        |             c.cid) = 1),
-        |probes AS (
-        |  SELECT e.vec_id AS query_id, c.cid AS list
-        |  FROM e CROSS JOIN c
-        |  WHERE e.vec_id % 100 = 0
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
-        |             c.cid) <= 2),
-        |scored AS (
-        |  SELECT p.query_id, a.neighbor_id,
-        |    round(list_dot_product(qe.v, ne.v) / (qe.nrm * ne.nrm), 6) AS sim
-        |  FROM assigned a JOIN probes p USING (list)
-        |  JOIN e qe ON qe.vec_id = p.query_id
-        |  JOIN e ne ON ne.vec_id = a.neighbor_id
-        |  WHERE a.neighbor_id <> p.query_id)
-        |SELECT query_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank",
-        |  neighbor_id, sim
-        |FROM scored
-        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= 5
-        |ORDER BY query_id, "rank"""".stripMargin,
+      s"""WITH ${embNormCte("e")},
+        |${ivfExemplarCentroidsCte("c")},
+        |${ivfAssignProbeCtes("c", nProbe = 2)},
+        |$ivfScoredCte
+        |${simTopKSelect(5)}""".stripMargin,
 
     // q85's candidate CTEs + q112's quantization, composed — the same
     // fragments that hash-check standalone verify the funnel jointly
     "q121_topk_ivf_int8" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm,
-        |    list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) AS qmax,
-        |    CASE WHEN list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) = 0
-        |      THEN list_transform(embedding::DOUBLE[], x -> CAST(0 AS BIGINT))
-        |      ELSE list_transform(embedding::DOUBLE[], x -> CAST(round(
-        |        x * 127.0 / list_max(list_transform(embedding::DOUBLE[], y -> abs(y)))
-        |      ) AS BIGINT)) END AS qvec
-        |  FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cvec, nrm AS cnrm
-        |      FROM e ORDER BY vec_id LIMIT 8),
-        |assigned AS (
-        |  SELECT e.vec_id AS neighbor_id, c.cid AS list
-        |  FROM e CROSS JOIN c
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
-        |             c.cid) = 1),
-        |probes AS (
-        |  SELECT e.vec_id AS query_id, c.cid AS list
-        |  FROM e CROSS JOIN c
-        |  WHERE e.vec_id % 100 = 0
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
-        |             c.cid) <= 2),
+      s"""WITH ${int8QuantCte("e")},
+        |${ivfExemplarCentroidsCte("c")},
+        |${ivfAssignProbeCtes("c", nProbe = 2)},
         |cand AS (
         |  SELECT p.query_id, a.neighbor_id,
         |    round((qe.qmax / 127.0) * (ne.qmax / 127.0) *
@@ -628,41 +515,11 @@ private[graft] object SimilarityQueries {
         |  JOIN e qe ON qe.vec_id = p.query_id
         |  JOIN e ne ON ne.vec_id = a.neighbor_id
         |  WHERE a.neighbor_id <> p.query_id),
-        |shortlist AS (
-        |  SELECT query_id, neighbor_id FROM cand
-        |  QUALIFY row_number() OVER (PARTITION BY query_id
-        |    ORDER BY approx_sim DESC, neighbor_id) <= 20),
-        |scored AS (
-        |  SELECT s.query_id, s.neighbor_id,
-        |    round(list_dot_product(qe.v, ne.v) / (qe.nrm * ne.nrm), 6) AS sim
-        |  FROM shortlist s
-        |  JOIN e qe ON qe.vec_id = s.query_id
-        |  JOIN e ne ON ne.vec_id = s.neighbor_id)
-        |SELECT query_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank",
-        |  neighbor_id, sim
-        |FROM scored
-        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= 5
-        |ORDER BY query_id, "rank"""".stripMargin,
+        |${rerankCtes("cand", "e", "shortlist", "scored")}
+        |${simTopKSelect(5)}""".stripMargin,
 
     "q86_topk_lsh_portable" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |pv AS (
-        |  SELECT p.p, j.j,
-        |    CASE WHEN strpos('89abcdef',
-        |        substr(md5('graft:rhp:' || p.p || ':' || (j.j - 1)), 1, 1)) > 0
-        |      THEN 1.0 ELSE -1.0 END AS val
-        |  FROM generate_series(0, 3) AS p(p)
-        |  CROSS JOIN generate_series(1, 64) AS j(j)),
-        |planes AS (SELECT p, list(val ORDER BY j) AS pvec FROM pv GROUP BY p),
-        |sigs AS (
-        |  SELECT e.vec_id,
-        |    string_agg(CASE WHEN list_dot_product(e.v, pl.pvec) >= 0
-        |        THEN '1' ELSE '0' END, '' ORDER BY pl.p) AS sig
-        |  FROM e CROSS JOIN planes pl GROUP BY e.vec_id),
+      s"""WITH ${rhpSigCtes(nPlanes = 4, dim = 64)},
         |cands AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
         |  FROM sigs q JOIN sigs c USING (sig)
@@ -673,18 +530,10 @@ private[graft] object SimilarityQueries {
         |  FROM cands
         |  JOIN e qe ON qe.vec_id = cands.query_id
         |  JOIN e ne ON ne.vec_id = cands.neighbor_id)
-        |SELECT query_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank",
-        |  neighbor_id, sim
-        |FROM scored
-        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= 5
-        |ORDER BY query_id, "rank"""".stripMargin,
+        |${simTopKSelect(5)}""".stripMargin,
 
     "q89_pq_adc_exemplar" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        |  FROM embeddings),
+      s"""WITH ${embNormCte("e")},
         |u AS (
         |  SELECT vec_id, v, nrm,
         |    list_transform(v, x -> x / (CASE WHEN nrm > 0 THEN nrm ELSE 1 END)) AS uv
@@ -720,65 +569,20 @@ private[graft] object SimilarityQueries {
         |  FROM shortlist sl
         |  JOIN e qe ON qe.vec_id = sl.query_id
         |  JOIN e ne ON ne.vec_id = sl.neighbor_id)
-        |SELECT query_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS "rank",
-        |  neighbor_id, sim
-        |FROM scored
-        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) <= 5
-        |ORDER BY query_id, "rank"""".stripMargin,
+        |${simTopKSelect(5)}""".stripMargin,
 
     "q87_lloyd_step_exemplar" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |c AS (SELECT vec_id AS cid, v AS cvec, nrm AS cnrm
-        |      FROM e ORDER BY vec_id LIMIT 8),
-        |assigned AS (
-        |  SELECT c.cid AS list, e.v, e.nrm
-        |  FROM e CROSS JOIN c
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
-        |             c.cid) = 1),
-        |comp AS (
-        |  SELECT a.list, gs.pos - 1 AS pos,
-        |    a.v[gs.pos] / (CASE WHEN a.nrm > 0 THEN a.nrm ELSE 1 END) AS ux
-        |  FROM assigned a CROSS JOIN generate_series(1, 64) AS gs(pos)),
-        |means AS (
-        |  SELECT list, pos,
-        |    CAST(sum(CAST(ux AS DECIMAL(30,12))) AS DOUBLE) / count(*) AS m
-        |  FROM comp GROUP BY 1, 2),
-        |norms AS (
-        |  SELECT list, sqrt(CAST(sum(CAST(m * m AS DECIMAL(30,12))) AS DOUBLE)) AS mn
-        |  FROM means GROUP BY 1)
+      s"""WITH ${embNormCte("e")},
+        |${ivfExemplarCentroidsCte("c")},
+        |${lloydStepCtes("", "c", dim = 64)}
         |SELECT m.list, m.pos, floor(m.m / n.mn * 1e6) / 1e6 AS "value"
         |FROM means m JOIN norms n USING (list)
         |ORDER BY list, pos""".stripMargin,
 
     "q91_lloyd_iterate_exemplar" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        |  FROM embeddings),
-        |c0 AS (SELECT vec_id AS cid, v AS cvec, nrm AS cnrm
-        |       FROM e ORDER BY vec_id LIMIT 8),
-        |assigned0 AS (
-        |  SELECT c.cid AS list, e.v, e.nrm
-        |  FROM e CROSS JOIN c0 c
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
-        |             c.cid) = 1),
-        |comp0 AS (
-        |  SELECT a.list, gs.pos - 1 AS pos,
-        |    a.v[gs.pos] / (CASE WHEN a.nrm > 0 THEN a.nrm ELSE 1 END) AS ux
-        |  FROM assigned0 a CROSS JOIN generate_series(1, 64) AS gs(pos)),
-        |means0 AS (
-        |  SELECT list, pos,
-        |    CAST(sum(CAST(ux AS DECIMAL(30,12))) AS DOUBLE) / count(*) AS m
-        |  FROM comp0 GROUP BY 1, 2),
-        |norms0 AS (
-        |  SELECT list, sqrt(CAST(sum(CAST(m * m AS DECIMAL(30,12))) AS DOUBLE)) AS mn
-        |  FROM means0 GROUP BY 1),
+      s"""WITH ${embNormCte("e")},
+        |${ivfExemplarCentroidsCte("c0")},
+        |${lloydStepCtes("0", "c0 c", dim = 64)},
         |vals0 AS (
         |  SELECT m.list, m.pos, m.m / n.mn AS value
         |  FROM means0 m JOIN norms0 n USING (list)),
@@ -787,23 +591,7 @@ private[graft] object SimilarityQueries {
         |  FROM vals0 GROUP BY list),
         |c1n AS (SELECT cid, cvec, sqrt(list_dot_product(cvec, cvec)) AS cnrm
         |        FROM c1),
-        |assigned1 AS (
-        |  SELECT c.cid AS list, e.v, e.nrm
-        |  FROM e CROSS JOIN c1n c
-        |  QUALIFY row_number() OVER (PARTITION BY e.vec_id
-        |    ORDER BY round(list_dot_product(e.v, c.cvec) / (e.nrm * c.cnrm), 6) DESC,
-        |             c.cid) = 1),
-        |comp1 AS (
-        |  SELECT a.list, gs.pos - 1 AS pos,
-        |    a.v[gs.pos] / (CASE WHEN a.nrm > 0 THEN a.nrm ELSE 1 END) AS ux
-        |  FROM assigned1 a CROSS JOIN generate_series(1, 64) AS gs(pos)),
-        |means1 AS (
-        |  SELECT list, pos,
-        |    CAST(sum(CAST(ux AS DECIMAL(30,12))) AS DOUBLE) / count(*) AS m
-        |  FROM comp1 GROUP BY 1, 2),
-        |norms1 AS (
-        |  SELECT list, sqrt(CAST(sum(CAST(m * m AS DECIMAL(30,12))) AS DOUBLE)) AS mn
-        |  FROM means1 GROUP BY 1)
+        |${lloydStepCtes("1", "c1n c", dim = 64)}
         |SELECT m.list, m.pos, floor(m.m / n.mn * 1e6) / 1e6 AS "value"
         |FROM means1 m JOIN norms1 n USING (list)
         |ORDER BY list, pos""".stripMargin,

@@ -892,15 +892,8 @@ private[graft] object TextQueries {
     // hybrid family's r16 spread had. The regex chain is short enough
     // that one core beats two full-payload shuffles.
     val docs = t(s, dir, "documents")
-    val canon = graft.ext.UrlOps.withCanonicalUrl(
-      withPlantedUrl(docs), "url")
-    val links = graft.ext.UrlOps.extractOutlinks(
-        withPlantedPage(canon), "doc_id", "html", "url_canon", "url")
-      .filter(col("link_canon").isNotNull)
-    val cand = links.groupBy(col("link_canon"), col("link_host"))
-      .agg(min(col("doc_id")).as("found_by"))
-    val fresh = cand.join(
-      canon.select(col("url_canon").as("link_canon")).distinct(),
+    val (canon, cand) = linkDiscovery(docs)
+    val fresh = cand.join(fetchedSeen(canon).distinct(),
       Seq("link_canon"), "left_anti")
       .localCheckpoint()
     val verd = graft.ext.UrlOps.robotsVerdict(
@@ -924,47 +917,69 @@ private[graft] object TextQueries {
         col("s.payload.found_by").as("found_by"))
   }
 
-  /** q162's frontier with RECENCY live in the ranking (the r11
-    * verdict's directive #6 — q157 parsed `lastmod`, q154 ranked by
-    * depth alone): candidates are the q154 link discoveries UNIONED
-    * with the in-scope sitemap entries (found_by = −1 marks
-    * sitemap-discovered; a URL found both ways keeps min found_by and
-    * its sitemap lastmod via `max` — ISO dates compare
-    * chronologically as strings), anti-joined against the fetched
-    * seeds, robots-verdicted, then budgeted per host by
-    * `graft_top_k` ordered (recency_bucket ASC, depth ASC, url ASC) —
-    * the two integer terms pack into ONE ordinal
-    * (`bucket·2²⁰ + min(depth, 2²⁰−1)`, exact in a double far below
-    * 2⁵³), so the budget keeps O(k) state per host with map-side
-    * partial combine, exactly q154's shape. Fresh sitemap entries
-    * outrank stale ones outrank unknown-age link discoveries
-    * (bucket 12); the planted 2020 `/old/` entries land in bucket 11
-    * — stale but still age-attested. As-of date is a FIXED parameter
-    * (determinism/oracle-replay — never wall-clock). */
-  private def crawlFrontierRecency(s: SparkSession, dir: String,
-      asOf: String = "2026-02-10"): DataFrame = {
-    val docs = t(s, dir, "documents")
+  /** The outlink discovery head of the link frontiers (q154, q162,
+    * q173): the planted pages canonicalized — `canon`, whose URLs are
+    * also the fetched seed set — and their outlinks grouped per target
+    * with the lowest discovering doc id as
+    * `(link_canon, link_host, found_by)`. */
+  private def linkDiscovery(docs: DataFrame): (DataFrame, DataFrame) = {
     val canon = graft.ext.UrlOps.withCanonicalUrl(
       withPlantedUrl(docs), "url")
     val links = graft.ext.UrlOps.extractOutlinks(
         withPlantedPage(canon), "doc_id", "html", "url_canon", "url")
       .filter(col("link_canon").isNotNull)
-    val linkCand = links.groupBy(col("link_canon"), col("link_host"))
+    val cand = links.groupBy(col("link_canon"), col("link_host"))
       .agg(min(col("doc_id")).as("found_by"))
-      .withColumn("lastmod", lit(""))
-    val smCand = graft.ext.UrlOps.parseSitemap(
-        plantedSitemaps(docs), "host", "xml")
+    (canon, cand)
+  }
+
+  /** The fetched seed URLs of `canon` as the frontier's seen set. */
+  private def fetchedSeen(canon: DataFrame): DataFrame =
+    canon.select(col("url_canon").as("link_canon"))
+
+  /** q162's sitemap discoveries: the in-scope `<url>` entries as
+    * candidates `(link_canon, link_host, found_by = −1, lastmod)`. */
+  private def sitemapCand(docs: DataFrame): DataFrame =
+    graft.ext.UrlOps.parseSitemap(plantedSitemaps(docs), "host", "xml")
       .filter(col("in_scope"))
       .select(col("url_canon").as("link_canon"),
         col("url_host").as("link_host"),
         lit(-1L).as("found_by"), col("lastmod"))
-    val cand = linkCand.unionByName(smCand)
-      .groupBy(col("link_canon"), col("link_host"))
-      .agg(min(col("found_by")).as("found_by"),
-        max(col("lastmod")).as("lastmod"))
-    val fresh = cand.join(
-      canon.select(col("url_canon").as("link_canon")).distinct(),
-      Seq("link_canon"), "left_anti")
+
+  /** q181's throttle-aware schedule over the q154 frontier: each slot
+    * pushed past its host's Retry-After hold (max parsed delay over the
+    * 429/503 responses, as of the fixed date), spaced by the robots
+    * crawl-delay tier. Unordered. */
+  private def throttledFrontier(s: SparkSession, dir: String): DataFrame = {
+    val docs = t(s, dir, "documents")
+    val delays = graft.ext.UrlOps.robotsCrawlDelay(
+      plantedRobotsTxt(docs), "host", "txt", "graftbot")
+    val backoff = graft.io.WarcIngest.withHttpResponse(
+        withPlantedRetryHttp(docs), "payload")
+      .filter(col("http_status").isin(429L, 503L))
+      .withColumn("ra_us", graft.ext.UrlOps.retryAfterMicros(
+        col("http_retry_after"), "2026-02-10 00:00:00"))
+      .groupBy(col("host"))
+      .agg(max(col("ra_us")).as("retry_after_micros"))
+    graft.ext.UrlOps.throttledSchedule(
+        crawlFrontier(s, dir), "link_host", "rank", delays, backoff,
+        defaultDelayMicros = 1000000L)
+  }
+
+  /** The recency-budgeted frontier tail (q162, q171, q173, q176, q180):
+    * candidates `(link_canon, link_host, lastmod, payload…)` minus the
+    * `seen` URLs, robots-verdicted, then budgeted to 3 per host by
+    * `graft_top_k` (recency_bucket ASC, depth ASC, url ASC) — the two
+    * integer terms pack into ONE ordinal (`bucket·2²⁰ + min(depth,
+    * 2²⁰−1)`, exact in a double far below 2⁵³), so the budget keeps
+    * O(k) state per host with map-side partial combine. `fresh` is
+    * tiny but sits on the whole discovery and robotsVerdict consumes it
+    * twice, so the plan is cut there. The `payload` columns ride
+    * through to the output after `recency_bucket`; `asOf` is a FIXED
+    * date (determinism/oracle-replay — never wall-clock). */
+  private def recencyBudget(docs: DataFrame, cand: DataFrame,
+      seen: DataFrame, payload: Seq[String], asOf: String): DataFrame = {
+    val fresh = cand.join(seen.distinct(), Seq("link_canon"), "left_anti")
       .localCheckpoint()
     val verd = graft.ext.UrlOps.robotsVerdict(
       fresh, "link_canon", "link_canon", plantedRobotsRules(docs))
@@ -976,20 +991,44 @@ private[graft] object TextQueries {
         seg => seg =!= "")).cast("long"))
       .withColumn("recency_bucket",
         graft.ext.UrlOps.recencyBucket(col("lastmod"), asOf))
+    val carried = ("link_canon" +: payload) ++ Seq("recency_bucket", "depth")
     sched.groupBy(col("link_host"))
       .agg(call_function("graft_top_k",
         -(col("recency_bucket") * 1048576L +
           least(col("depth"), lit(1048575L))).cast("double"),
-        struct(col("link_canon"), col("found_by"),
-          col("recency_bucket"), col("depth")), lit(3)).as("top"))
+        struct(carried.map(col): _*), lit(3)).as("top"))
       .select(col("link_host"),
         posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("link_host"),
+      .select(Seq(col("link_host"),
         (col("pos") + 1).cast("long").as("rank"),
         col("s.payload.link_canon").as("url_canon"),
         col("s.payload.depth").as("depth"),
-        col("s.payload.recency_bucket").as("recency_bucket"),
-        col("s.payload.found_by").as("found_by"))
+        col("s.payload.recency_bucket").as("recency_bucket")) ++
+        payload.map(c => col(s"s.payload.$c").as(c)): _*)
+  }
+
+  /** q162's frontier with RECENCY live in the ranking (the r11
+    * verdict's directive #6 — q157 parsed `lastmod`, q154 ranked by
+    * depth alone): candidates are the q154 link discoveries UNIONED
+    * with the in-scope sitemap entries (found_by = −1 marks
+    * sitemap-discovered; a URL found both ways keeps min found_by and
+    * its sitemap lastmod via `max` — ISO dates compare
+    * chronologically as strings), anti-joined against the fetched
+    * seeds, robots-verdicted, then recency-budgeted per host
+    * ([[recencyBudget]]). Fresh sitemap entries outrank stale ones
+    * outrank unknown-age link discoveries (bucket 12); the planted 2020
+    * `/old/` entries land in bucket 11 — stale but still age-attested. */
+  private def crawlFrontierRecency(s: SparkSession, dir: String,
+      asOf: String = "2026-02-10"): DataFrame = {
+    val docs = t(s, dir, "documents")
+    val (canon, links) = linkDiscovery(docs)
+    val linkCand = links.withColumn("lastmod", lit(""))
+    val smCand = sitemapCand(docs)
+    val cand = linkCand.unionByName(smCand)
+      .groupBy(col("link_canon"), col("link_host"))
+      .agg(min(col("found_by")).as("found_by"),
+        max(col("lastmod")).as("lastmod"))
+    recencyBudget(docs, cand, fetchedSeen(canon), Seq("found_by"), asOf)
   }
 
   /** q171's planted CHILD sitemap bodies — the simulated fetch of
@@ -1083,33 +1122,7 @@ private[graft] object TextQueries {
       .groupBy(col("url_canon").as("link_canon"),
         col("url_host").as("link_host"))
       .agg(max(col("lastmod")).as("lastmod"))
-    val fresh = cand.join(
-      canon.select(col("url_canon").as("link_canon")).distinct(),
-      Seq("link_canon"), "left_anti")
-      .localCheckpoint()
-    val verd = graft.ext.UrlOps.robotsVerdict(
-      fresh, "link_canon", "link_canon", plantedRobotsRules(docs))
-    val sched = verd.filter(col("fetch_allowed"))
-      .withColumn("path", regexp_extract(
-        regexp_replace(col("link_canon"),
-          "^[a-z][a-z0-9+.-]*://[^/?]*", ""), "^([^?]*)", 1))
-      .withColumn("depth", size(filter(split(col("path"), "/"),
-        seg => seg =!= "")).cast("long"))
-      .withColumn("recency_bucket",
-        graft.ext.UrlOps.recencyBucket(col("lastmod"), asOf))
-    sched.groupBy(col("link_host"))
-      .agg(call_function("graft_top_k",
-        -(col("recency_bucket") * 1048576L +
-          least(col("depth"), lit(1048575L))).cast("double"),
-        struct(col("link_canon"), col("recency_bucket"), col("depth")),
-        lit(3)).as("top"))
-      .select(col("link_host"),
-        posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("link_host"),
-        (col("pos") + 1).cast("long").as("rank"),
-        col("s.payload.link_canon").as("url_canon"),
-        col("s.payload.depth").as("depth"),
-        col("s.payload.recency_bucket").as("recency_bucket"))
+    recencyBudget(docs, cand, fetchedSeen(canon), Nil, asOf)
       .orderBy("link_host", "rank")
   }
 
@@ -1127,20 +1140,9 @@ private[graft] object TextQueries {
   private def unifiedFrontier(s: SparkSession, dir: String,
       asOf: String = "2026-02-10"): DataFrame = {
     val docs = t(s, dir, "documents")
-    val canon = graft.ext.UrlOps.withCanonicalUrl(
-      withPlantedUrl(docs), "url")
-    val links = graft.ext.UrlOps.extractOutlinks(
-        withPlantedPage(canon), "doc_id", "html", "url_canon", "url")
-      .filter(col("link_canon").isNotNull)
-    val linkCand = links.groupBy(col("link_canon"), col("link_host"))
-      .agg(min(col("doc_id")).as("found_by"))
-      .withColumn("lastmod", lit(""))
-    val smCand = graft.ext.UrlOps.parseSitemap(
-        plantedSitemaps(docs), "host", "xml")
-      .filter(col("in_scope"))
-      .select(col("url_canon").as("link_canon"),
-        col("url_host").as("link_host"),
-        lit(-1L).as("found_by"), col("lastmod"))
+    val (canon, links) = linkDiscovery(docs)
+    val linkCand = links.withColumn("lastmod", lit(""))
+    val smCand = sitemapCand(docs)
     val children = graft.ext.UrlOps.parseSitemapIndex(
         plantedSitemaps(docs), "host", "xml")
       .filter(col("in_scope"))
@@ -1164,35 +1166,9 @@ private[graft] object TextQueries {
       .groupBy(col("link_canon"), col("link_host"))
       .agg(min(col("found_by")).as("found_by"),
         max(col("lastmod")).as("lastmod"))
-    val seen = canon.select(col("url_canon").as("link_canon"))
+    val seen = fetchedSeen(canon)
       .unionByName(gated.select(col("url").as("link_canon")))
-      .distinct()
-    val fresh = cand.join(seen, Seq("link_canon"), "left_anti")
-      .localCheckpoint()
-    val verd = graft.ext.UrlOps.robotsVerdict(
-      fresh, "link_canon", "link_canon", plantedRobotsRules(docs))
-    val sched = verd.filter(col("fetch_allowed"))
-      .withColumn("path", regexp_extract(
-        regexp_replace(col("link_canon"),
-          "^[a-z][a-z0-9+.-]*://[^/?]*", ""), "^([^?]*)", 1))
-      .withColumn("depth", size(filter(split(col("path"), "/"),
-        seg => seg =!= "")).cast("long"))
-      .withColumn("recency_bucket",
-        graft.ext.UrlOps.recencyBucket(col("lastmod"), asOf))
-    sched.groupBy(col("link_host"))
-      .agg(call_function("graft_top_k",
-        -(col("recency_bucket") * 1048576L +
-          least(col("depth"), lit(1048575L))).cast("double"),
-        struct(col("link_canon"), col("found_by"),
-          col("recency_bucket"), col("depth")), lit(3)).as("top"))
-      .select(col("link_host"),
-        posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("link_host"),
-        (col("pos") + 1).cast("long").as("rank"),
-        col("s.payload.link_canon").as("url_canon"),
-        col("s.payload.depth").as("depth"),
-        col("s.payload.recency_bucket").as("recency_bucket"),
-        col("s.payload.found_by").as("found_by"))
+    recencyBudget(docs, cand, seen, Seq("found_by"), asOf)
       .orderBy("link_host", "rank")
   }
 
@@ -1670,33 +1646,7 @@ private[graft] object TextQueries {
         .groupBy(col("url_canon").as("link_canon"),
           col("url_host").as("link_host"))
         .agg(max(col("lastmod")).as("lastmod"))
-      val fresh = cand.join(
-        canon.select(col("url_canon").as("link_canon")).distinct(),
-        Seq("link_canon"), "left_anti")
-        .localCheckpoint()
-      val verd = graft.ext.UrlOps.robotsVerdict(
-        fresh, "link_canon", "link_canon", plantedRobotsRules(docs))
-      val sched = verd.filter(col("fetch_allowed"))
-        .withColumn("path", regexp_extract(
-          regexp_replace(col("link_canon"),
-            "^[a-z][a-z0-9+.-]*://[^/?]*", ""), "^([^?]*)", 1))
-        .withColumn("depth", size(filter(split(col("path"), "/"),
-          seg => seg =!= "")).cast("long"))
-        .withColumn("recency_bucket",
-          graft.ext.UrlOps.recencyBucket(col("lastmod"), "2026-02-10"))
-      sched.groupBy(col("link_host"))
-        .agg(call_function("graft_top_k",
-          -(col("recency_bucket") * 1048576L +
-            least(col("depth"), lit(1048575L))).cast("double"),
-          struct(col("link_canon"), col("recency_bucket"),
-            col("depth")), lit(3)).as("top"))
-        .select(col("link_host"),
-          posexplode(col("top")).as(Seq("pos", "s")))
-        .select(col("link_host"),
-          (col("pos") + 1).cast("long").as("rank"),
-          col("s.payload.link_canon").as("url_canon"),
-          col("s.payload.depth").as("depth"),
-          col("s.payload.recency_bucket").as("recency_bucket"))
+      recencyBudget(docs, cand, fetchedSeen(canon), Nil, "2026-02-10")
         .orderBy("link_host", "rank")
     }),
 
@@ -1819,34 +1769,8 @@ private[graft] object TextQueries {
         .groupBy(col("link_canon"), col("link_host"))
         .agg(min(col("found_by")).as("found_by"),
           max(col("lastmod")).as("lastmod"))
-      val fresh = cand.join(
-        canon.select(col("url_canon").as("link_canon")).distinct(),
-        Seq("link_canon"), "left_anti")
-        .localCheckpoint()
-      val verd = graft.ext.UrlOps.robotsVerdict(
-        fresh, "link_canon", "link_canon", plantedRobotsRules(docs))
-      val sched = verd.filter(col("fetch_allowed"))
-        .withColumn("path", regexp_extract(
-          regexp_replace(col("link_canon"),
-            "^[a-z][a-z0-9+.-]*://[^/?]*", ""), "^([^?]*)", 1))
-        .withColumn("depth", size(filter(split(col("path"), "/"),
-          seg => seg =!= "")).cast("long"))
-        .withColumn("recency_bucket",
-          graft.ext.UrlOps.recencyBucket(col("lastmod"), "2026-02-10"))
-      sched.groupBy(col("link_host"))
-        .agg(call_function("graft_top_k",
-          -(col("recency_bucket") * 1048576L +
-            least(col("depth"), lit(1048575L))).cast("double"),
-          struct(col("link_canon"), col("found_by"),
-            col("recency_bucket"), col("depth")), lit(3)).as("top"))
-        .select(col("link_host"),
-          posexplode(col("top")).as(Seq("pos", "s")))
-        .select(col("link_host"),
-          (col("pos") + 1).cast("long").as("rank"),
-          col("s.payload.link_canon").as("url_canon"),
-          col("s.payload.depth").as("depth"),
-          col("s.payload.recency_bucket").as("recency_bucket"),
-          col("s.payload.found_by").as("found_by"))
+      recencyBudget(docs, cand, fetchedSeen(canon), Seq("found_by"),
+          "2026-02-10")
         .orderBy("link_host", "rank")
     }),
 
@@ -1859,19 +1783,7 @@ private[graft] object TextQueries {
     // 0. Both side tables pruned to the frontier's hosts before the
     // broadcast (UrlOps.throttledSchedule).
     "q181_throttled_schedule" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val delays = graft.ext.UrlOps.robotsCrawlDelay(
-        plantedRobotsTxt(docs), "host", "txt", "graftbot")
-      val backoff = graft.io.WarcIngest.withHttpResponse(
-          withPlantedRetryHttp(docs), "payload")
-        .filter(col("http_status").isin(429L, 503L))
-        .withColumn("ra_us", graft.ext.UrlOps.retryAfterMicros(
-          col("http_retry_after"), "2026-02-10 00:00:00"))
-        .groupBy(col("host"))
-        .agg(max(col("ra_us")).as("retry_after_micros"))
-      graft.ext.UrlOps.throttledSchedule(
-          crawlFrontier(s, dir), "link_host", "rank", delays, backoff,
-          defaultDelayMicros = 1000000L)
+      throttledFrontier(s, dir)
         .select(col("link_host"), col("rank"), col("url_canon"),
           col("depth"), col("found_by"), col("fetch_at_micros"))
         .orderBy("link_host", "rank")
@@ -2061,19 +1973,8 @@ private[graft] object TextQueries {
     // sixth tombstoned) so all CDC classes are exercised on real keys.
     "q192_crawl_cycle" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      // legs 1+2: frontier → throttle-aware schedule (q181 verbatim)
-      val delays = graft.ext.UrlOps.robotsCrawlDelay(
-        plantedRobotsTxt(docs), "host", "txt", "graftbot")
-      val backoff = graft.io.WarcIngest.withHttpResponse(
-          withPlantedRetryHttp(docs), "payload")
-        .filter(col("http_status").isin(429L, 503L))
-        .withColumn("ra_us", graft.ext.UrlOps.retryAfterMicros(
-          col("http_retry_after"), "2026-02-10 00:00:00"))
-        .groupBy(col("host"))
-        .agg(max(col("ra_us")).as("retry_after_micros"))
-      val sched = graft.ext.UrlOps.throttledSchedule(
-          crawlFrontier(s, dir), "link_host", "rank", delays, backoff,
-          defaultDelayMicros = 1000000L)
+      // legs 1+2: frontier → throttle-aware schedule (q181's)
+      val sched = throttledFrontier(s, dir)
         .localCheckpoint() // feeds gate, corpus, sim AND the output
       // leg 3: the robots-TTL gate, ages from the persisted cache
       val budget = sched.groupBy(col("link_host"))
@@ -3183,10 +3084,7 @@ private[graft] object TextQueries {
       // shingle decontamination) all fold over the text of the same
       // one-row-group scan — spread once at the source
       val docs = par(t(s, dir, "documents"), "doc_id")
-      val withDups = docs.withColumn("text",
-        when(col("doc_id") % 17 === 0,
-          lit("duplicate stanza alpha shared across documents"))
-          .otherwise(col("text")))
+      val withDups = withDupImplant(docs)
       val bench = withDups.filter(col("doc_id") % 31 === 0)
       val corpus = withDups.filter(col("doc_id") % 31 =!= 0)
       // stage 1: the CCNet perplexity gate under the PERSISTED LM
@@ -3204,19 +3102,8 @@ private[graft] object TextQueries {
       // stage 2: the trained quality gate (q99's flag)
       val qf = QualityModel.qualityClassifierScore(corpus, "text")
         .select(col("doc_id"), col("kept").as("q_ok"))
-      // stage 3: keep-first exact dedup as an AGGREGATE on the digest
-      // (the q149-tail shape — never a content-keyed window)
-      val dThin = corpus.select(col("doc_id"), md5(col("text")).as("__h"))
-        .localCheckpoint()
-      val dWin = dThin.groupBy(col("__h"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"), lit(true).as("__w"))
-      val df = dThin.join(dWin, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("__w"), lit(false)).as("d_ok"))
-      // stage 4: benchmark decontamination (q94's verdict)
-      val cf = Dedup.contaminationReport(corpus, "doc_id", "text", bench,
-          shingleN = 8, dropPct = 10, useNative = true)
-        .select(col("doc_id"), (!col("dropped")).as("c_ok"))
+      val df = funnelDedupStage(corpus) // stage 3
+      val cf = funnelContamStage(corpus, bench) // stage 4
       pf.join(qf, "doc_id").join(df, "doc_id").join(cf, "doc_id")
         .agg(
           count(lit(1)).as("n_total"),
@@ -4051,32 +3938,59 @@ private[graft] object TextQueries {
        |${unigramVocabCtes("2", "cnt2", 2L)}
        |SELECT piece, cnt, cost_micro FROM v2 ORDER BY piece""".stripMargin
 
-  /** The q148 oracle: Viterbi under the FIXED vocabulary constant,
-    * reassembled per document in word order. */
-  private def unigramTokenizeOracleSql: String = {
-    val vals = UnigramFixedVocab
-      .map { case (p, c) => s"('$p', CAST($c AS BIGINT))" }.mkString(", ")
-    s"""WITH RECURSIVE
-       |aug AS (SELECT doc_id, text || ' abba' AS text FROM documents),
-       |words AS MATERIALIZED (
+  /** [[UnigramFixedVocab]] as SQL VALUES rows `(piece, cost_micro)`. */
+  private def unigramFixedVocabValues: String = UnigramFixedVocab
+    .map { case (p, c) => s"('$p', CAST($c AS BIGINT))" }.mkString(", ")
+
+  /** The distinct non-empty lowercase words of `src(doc_id, text)` as
+    * `words(word)` — the Viterbi recursion's input. */
+  private def unigramWordsCte(src: String): String =
+    s"""words AS MATERIALIZED (
        |  SELECT DISTINCT word FROM (
        |    SELECT unnest(string_split_regex(trim(lower(text)), '\\s+'))
        |      AS word
-       |    FROM aug)
-       |  WHERE length(word) > 0),
-       |vq(piece, cost_micro) AS (VALUES $vals),
-       |${unigramFwdBt("q", "vq")},
-       |segl AS MATERIALIZED (
-       |  SELECT word, list(piece ORDER BY pos) AS pieces
-       |  FROM btq WHERE piece IS NOT NULL GROUP BY word),
-       |docw AS (
+       |    FROM $src)
+       |  WHERE length(word) > 0)""".stripMargin
+
+  /** Every non-empty word occurrence of `src(doc_id, text)` in order:
+    * `docw(doc_id, wpos, word)`. */
+  private def unigramDocWordsCte(src: String): String =
+    s"""docw AS (
        |  SELECT doc_id, wpos, ws[wpos] AS word
        |  FROM (SELECT doc_id, ws,
        |          unnest(generate_series(1, len(ws))) AS wpos
        |        FROM (SELECT doc_id,
        |                string_split_regex(trim(lower(text)), '\\s+') AS ws
-       |              FROM aug))
-       |  WHERE length(ws[wpos]) > 0),
+       |              FROM $src))
+       |  WHERE length(ws[wpos]) > 0)""".stripMargin
+
+  /** The perplexity oracles' (q200/q202) per-word Viterbi cost over
+    * `src(doc_id, text)` under the fixed vocabulary `vpx`: exact micro
+    * total and piece count `wcost(word, wc, wt)`, plus `docw`. */
+  private def fixedVocabWordCostCtes(src: String): String =
+    s"""${unigramWordsCte(src)},
+       |vpx(piece, cost_micro) AS (VALUES $unigramFixedVocabValues),
+       |${unigramFwdBt("px", "vpx")},
+       |segp AS MATERIALIZED (
+       |  SELECT word, piece FROM btpx WHERE piece IS NOT NULL),
+       |wcost AS (
+       |  SELECT p.word, CAST(sum(v.cost_micro) AS BIGINT) AS wc,
+       |    CAST(count(*) AS BIGINT) AS wt
+       |  FROM segp p JOIN vpx v USING (piece) GROUP BY p.word),
+       |${unigramDocWordsCte(src)}""".stripMargin
+
+  /** The q148 oracle: Viterbi under the FIXED vocabulary constant,
+    * reassembled per document in word order. */
+  private def unigramTokenizeOracleSql: String = {
+    s"""WITH RECURSIVE
+       |aug AS (SELECT doc_id, text || ' abba' AS text FROM documents),
+       |${unigramWordsCte("aug")},
+       |vq(piece, cost_micro) AS (VALUES $unigramFixedVocabValues),
+       |${unigramFwdBt("q", "vq")},
+       |segl AS MATERIALIZED (
+       |  SELECT word, list(piece ORDER BY pos) AS pieces
+       |  FROM btq WHERE piece IS NOT NULL GROUP BY word),
+       |${unigramDocWordsCte("aug")},
        |tok AS (
        |  SELECT doc_id, flatten(list(pieces ORDER BY wpos)) AS toks
        |  FROM docw JOIN segl USING (word) GROUP BY doc_id)
@@ -4092,32 +4006,9 @@ private[graft] object TextQueries {
     * per-doc exact micro totals with multiplicity, per-char integer
     * division, the same threshold. */
   private def perplexityFilterOracleSql: String = {
-    val vals = UnigramFixedVocab
-      .map { case (p, c) => s"('$p', CAST($c AS BIGINT))" }.mkString(", ")
     s"""WITH RECURSIVE
        |aug AS (SELECT doc_id, text FROM documents),
-       |words AS MATERIALIZED (
-       |  SELECT DISTINCT word FROM (
-       |    SELECT unnest(string_split_regex(trim(lower(text)), '\\s+'))
-       |      AS word
-       |    FROM aug)
-       |  WHERE length(word) > 0),
-       |vpx(piece, cost_micro) AS (VALUES $vals),
-       |${unigramFwdBt("px", "vpx")},
-       |segp AS MATERIALIZED (
-       |  SELECT word, piece FROM btpx WHERE piece IS NOT NULL),
-       |wcost AS (
-       |  SELECT p.word, CAST(sum(v.cost_micro) AS BIGINT) AS wc,
-       |    CAST(count(*) AS BIGINT) AS wt
-       |  FROM segp p JOIN vpx v USING (piece) GROUP BY p.word),
-       |docw AS (
-       |  SELECT doc_id, ws[wpos] AS word
-       |  FROM (SELECT doc_id, ws,
-       |          unnest(generate_series(1, len(ws))) AS wpos
-       |        FROM (SELECT doc_id,
-       |                string_split_regex(trim(lower(text)), '\\s+') AS ws
-       |              FROM aug))
-       |  WHERE length(ws[wpos]) > 0),
+       |${fixedVocabWordCostCtes("aug")},
        |agg AS (
        |  SELECT d.doc_id, CAST(sum(w.wt) AS BIGINT) AS n_toks,
        |    CAST(sum(w.wc) AS BIGINT) AS total_c,
@@ -4136,43 +4027,16 @@ private[graft] object TextQueries {
 
   /** q202: the q101 funnel oracle with the CCNet perplexity stage in
     * front — the same recursive-CTE Viterbi as q200's oracle, run over
-    * the dup-implanted corpus text, each later stage's CTE verbatim
-    * from the q101 oracle (quality logit, keep-first min-window as a
-    * window over the digest, q94 contamination verdict), intersected
-    * in stage order. */
+    * the dup-implanted corpus text, each later stage the q101 oracle's
+    * shared fragment (quality logit, keep-first min-window as a window
+    * over the digest, q94 contamination verdict), intersected in stage
+    * order. */
   private def ccnetFunnelOracleSql: String = {
-    val vals = UnigramFixedVocab
-      .map { case (p, c) => s"('$p', CAST($c AS BIGINT))" }.mkString(", ")
     s"""WITH RECURSIVE
-       |wd AS (
-       |  SELECT doc_id,
-       |    CASE WHEN doc_id % 17 = 0
-       |         THEN 'duplicate stanza alpha shared across documents'
-       |         ELSE text END AS text
-       |  FROM documents),
+       |$dupImplantCte,
        |corpus AS MATERIALIZED (
        |  SELECT doc_id, text FROM wd WHERE doc_id % 31 <> 0),
-       |words AS MATERIALIZED (
-       |  SELECT DISTINCT word FROM (
-       |    SELECT unnest(string_split_regex(trim(lower(text)), '\\s+'))
-       |      AS word
-       |    FROM corpus)
-       |  WHERE length(word) > 0),
-       |vpx(piece, cost_micro) AS (VALUES $vals),
-       |${unigramFwdBt("px", "vpx")},
-       |segp AS MATERIALIZED (
-       |  SELECT word, piece FROM btpx WHERE piece IS NOT NULL),
-       |wcost AS (
-       |  SELECT p.word, CAST(sum(v.cost_micro) AS BIGINT) AS wc
-       |  FROM segp p JOIN vpx v USING (piece) GROUP BY p.word),
-       |docw AS (
-       |  SELECT doc_id, ws[wpos] AS word
-       |  FROM (SELECT doc_id, ws,
-       |          unnest(generate_series(1, len(ws))) AS wpos
-       |        FROM (SELECT doc_id,
-       |                string_split_regex(trim(lower(text)), '\\s+') AS ws
-       |              FROM corpus))
-       |  WHERE length(ws[wpos]) > 0),
+       |${fixedVocabWordCostCtes("corpus")},
        |pagg AS (
        |  SELECT d.doc_id, CAST(sum(w.wc) AS BIGINT) AS total_c,
        |    CAST(sum(length(d.word)) AS BIGINT) AS n_ch
@@ -4182,42 +4046,9 @@ private[graft] object TextQueries {
        |    coalesce(a.total_c // nullif(a.n_ch, 0) < 2400000, false)
        |      AS p_ok
        |  FROM corpus LEFT JOIN pagg a USING (doc_id)),
-       |qt AS (
-       |  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS ts
-       |  FROM corpus),
-       |qf AS (
-       |  SELECT doc_id,
-       |    floor(CAST(list_sum(list_transform(ts, t ->
-       |      ('0x' || substr(md5('w:graft:' ||
-       |         CAST(('0x' || substr(md5('f:graft:' || t), 1, 8))::BIGINT % 1024
-       |              AS VARCHAR)), 1, 8))::BIGINT % 2001 - 1000)) AS BIGINT)
-       |      / (len(ts) * 1000.0) * 1e6) / 1e6 >= 0.0 AS q_ok
-       |  FROM qt),
-       |df AS (
-       |  SELECT doc_id,
-       |    doc_id = min(doc_id) OVER (PARTITION BY md5(text)) AS d_ok
-       |  FROM corpus),
-       |sh AS (
-       |  SELECT doc_id, unnest(list_distinct(CASE WHEN len(tk) >= 8
-       |      THEN list_transform(range(1, len(tk) - 6),
-       |           i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2], tk[i+3],
-       |                          tk[i+4], tk[i+5], tk[i+6], tk[i+7]))
-       |      ELSE [array_to_string(tk, ' ')] END)) AS s
-       |  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
-       |        FROM wd)),
-       |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 31 = 0),
-       |nsh AS (SELECT doc_id, count(*) AS n_shingles FROM sh
-       |        WHERE doc_id % 31 <> 0 GROUP BY doc_id),
-       |hits AS (
-       |  SELECT doc_id, count(*) AS n_hits
-       |  FROM sh JOIN bench USING (s)
-       |  WHERE doc_id % 31 <> 0
-       |  GROUP BY doc_id),
-       |cf AS (
-       |  SELECT n.doc_id,
-       |    NOT (n.n_shingles > 0 AND
-       |         coalesce(h.n_hits, 0) * 100 >= n.n_shingles * 10) AS c_ok
-       |  FROM nsh n LEFT JOIN hits h USING (doc_id)),
+       |$funnelQualityCtes,
+       |$funnelDedupCte,
+       |$funnelContamCtes,
        |agg AS (
        |  SELECT count(*) AS n_total,
        |    count(CASE WHEN p_ok THEN 1 END) AS n_p,
@@ -4800,24 +4631,11 @@ private[graft] object TextQueries {
     * the shared parse chain, the length gate, then the shared HTTP
     * extraction feeding the (status, media type) census. */
   private def warcHealthOracleSql: String = {
-    val crlf = "chr(13) || chr(10)"
     "WITH aug AS (" + urlPlantSql + "),\n" + httpPlantCte + ",\n" +
       "pp AS (SELECT a.doc_id, a.url, pl.p AS http, " +
       "'fetchTimeMs: ' || CAST(a.doc_id AS VARCHAR) AS p2 " +
       "FROM aug a JOIN pl ON a.doc_id = pl.doc_id),\n" +
-      "wf AS (SELECT doc_id, " +
-      "'WARC/1.0' || " + crlf + " || 'WARC-Type: warcinfo' || " + crlf +
-      " || 'Content-Length: 15' || " + crlf + " || " + crlf +
-      " || 'software: graft' || " + crlf + " || " + crlf + " || " +
-      "'WARC/1.0' || " + crlf + " || 'WARC-Type: response' || " + crlf +
-      " || 'WARC-Target-URI: ' || url || " + crlf +
-      " || 'Content-Length: ' || CAST(length(http) AS VARCHAR) || " +
-      crlf + " || " + crlf + " || http || " + crlf + " || " + crlf +
-      " || 'WARC/1.0' || " + crlf + " || 'WARC-Type: metadata' || " +
-      crlf + " || 'Content-Length: ' || CAST(CASE WHEN doc_id % 4 = 0 " +
-      "THEN length(p2) + 5 ELSE length(p2) END AS VARCHAR) || " +
-      crlf + " || " + crlf + " || p2 || " + crlf + " || " + crlf +
-      " AS txt FROM pp),\n" + warcParseCtes + ",\n" +
+      warcFileCte + ",\n" + warcParseCtes + ",\n" +
       "hr AS (SELECT doc_id, payload AS p FROM r3 " +
       "WHERE warc_type = 'response' " +
       "AND coalesce(length(payload) = content_length, false)),\n" +
@@ -6148,6 +5966,27 @@ private[graft] object TextQueries {
       "url_host = sitemap_host AS in_scope FROM sc " +
       "ORDER BY sitemap_host, url_canon"
 
+  /** The planted WARC file per doc of `pp(doc_id, url, http, p2)` as
+    * `wf(doc_id, txt)`: a warcinfo record, the response record wrapping
+    * `http`, and a metadata record carrying `p2` whose Content-Length
+    * overstates every 4th doc's payload by 5. */
+  private def warcFileCte: String = {
+    val crlf = "chr(13) || chr(10)"
+    "wf AS (SELECT doc_id, " +
+      "'WARC/1.0' || " + crlf + " || 'WARC-Type: warcinfo' || " + crlf +
+      " || 'Content-Length: 15' || " + crlf + " || " + crlf +
+      " || 'software: graft' || " + crlf + " || " + crlf + " || " +
+      "'WARC/1.0' || " + crlf + " || 'WARC-Type: response' || " + crlf +
+      " || 'WARC-Target-URI: ' || url || " + crlf +
+      " || 'Content-Length: ' || CAST(length(http) AS VARCHAR) || " +
+      crlf + " || " + crlf + " || http || " + crlf + " || " + crlf +
+      " || 'WARC/1.0' || " + crlf + " || 'WARC-Type: metadata' || " +
+      crlf + " || 'Content-Length: ' || CAST(CASE WHEN doc_id % 4 = 0 " +
+      "THEN length(p2) + 5 ELSE length(p2) END AS VARCHAR) || " +
+      crlf + " || " + crlf + " || p2 || " + crlf + " || " + crlf +
+      " AS txt FROM pp)"
+  }
+
   /** q158: the WARC plant and parse replayed — same construction
     * (lengths via `length()` over shared pieces), same version-line
     * split, first-blank-line header bound, and Content-Length
@@ -6160,19 +5999,7 @@ private[graft] object TextQueries {
       crlf + " || " + crlf + " || '<html><body>doc ' || " +
       "CAST(doc_id AS VARCHAR) || '</body></html>' AS http, " +
       "'fetchTimeMs: ' || CAST(doc_id AS VARCHAR) AS p2 FROM aug),\n" +
-      "wf AS (SELECT doc_id, " +
-      "'WARC/1.0' || " + crlf + " || 'WARC-Type: warcinfo' || " + crlf +
-      " || 'Content-Length: 15' || " + crlf + " || " + crlf +
-      " || 'software: graft' || " + crlf + " || " + crlf + " || " +
-      "'WARC/1.0' || " + crlf + " || 'WARC-Type: response' || " + crlf +
-      " || 'WARC-Target-URI: ' || url || " + crlf +
-      " || 'Content-Length: ' || CAST(length(http) AS VARCHAR) || " +
-      crlf + " || " + crlf + " || http || " + crlf + " || " + crlf +
-      " || 'WARC/1.0' || " + crlf + " || 'WARC-Type: metadata' || " +
-      crlf + " || 'Content-Length: ' || CAST(CASE WHEN doc_id % 4 = 0 " +
-      "THEN length(p2) + 5 ELSE length(p2) END AS VARCHAR) || " +
-      crlf + " || " + crlf + " || p2 || " + crlf + " || " + crlf +
-      " AS txt FROM pp),\n" + warcParseCtes + "\n" +
+      warcFileCte + ",\n" + warcParseCtes + "\n" +
       "SELECT doc_id, rec_no, warc_type, target_uri, content_length, " +
       "CAST(length(payload) AS BIGINT) AS payload_len, " +
       "coalesce(length(payload) = content_length, false) " +
@@ -6218,19 +6045,7 @@ private[graft] object TextQueries {
       "'HTTP/1.1 200 OK' || " + crlf + " || 'Content-Type: text/html' || " +
       crlf + " || " + crlf + " || " + q149HtmlSql + " AS http, " +
       "'fetchTimeMs: ' || CAST(doc_id AS VARCHAR) AS p2 FROM w0),\n" +
-      "wf AS (SELECT doc_id, " +
-      "'WARC/1.0' || " + crlf + " || 'WARC-Type: warcinfo' || " + crlf +
-      " || 'Content-Length: 15' || " + crlf + " || " + crlf +
-      " || 'software: graft' || " + crlf + " || " + crlf + " || " +
-      "'WARC/1.0' || " + crlf + " || 'WARC-Type: response' || " + crlf +
-      " || 'WARC-Target-URI: ' || url || " + crlf +
-      " || 'Content-Length: ' || CAST(length(http) AS VARCHAR) || " +
-      crlf + " || " + crlf + " || http || " + crlf + " || " + crlf +
-      " || 'WARC/1.0' || " + crlf + " || 'WARC-Type: metadata' || " +
-      crlf + " || 'Content-Length: ' || CAST(CASE WHEN doc_id % 4 = 0 " +
-      "THEN length(p2) + 5 ELSE length(p2) END AS VARCHAR) || " +
-      crlf + " || " + crlf + " || p2 || " + crlf + " || " + crlf +
-      " AS txt FROM pp),\n" + warcParseCtes + ",\n" +
+      warcFileCte + ",\n" + warcParseCtes + ",\n" +
       "aug AS (SELECT doc_id, list_extract(string_split(payload, " +
       crlf + " || " + crlf + "), 2) AS html FROM r3 " +
       "WHERE warc_type = 'response' " +
@@ -6717,35 +6532,9 @@ private[graft] object TextQueries {
     // ln only on the ≤nBuckets lattice, doc scores are exact integer
     // dot products; ('0x'||hex)::BIGINT ≡ Spark conv(hex,16,10)
     "q125_dsir_weights" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-        |  FROM documents),
-        |tokf AS (
-        |  SELECT doc_id,
-        |    ('0x' || substring(md5('f:graft:' || term), 1, 8))::BIGINT % 256
-        |      AS b
-        |  FROM tok WHERE length(term) > 0),
-        |ct AS (SELECT b, CAST(count(*) AS BIGINT) AS ct
-        |       FROM tokf JOIN documents USING (doc_id)
-        |       WHERE lang = 'en' GROUP BY b),
-        |cr AS (SELECT b, CAST(count(*) AS BIGINT) AS cr
-        |       FROM tokf GROUP BY b),
-        |tot AS (SELECT (SELECT CAST(sum(ct) AS BIGINT) FROM ct) AS tt,
-        |               (SELECT CAST(sum(cr) AS BIGINT) FROM cr) AS tr),
-        |lattice AS (
-        |  SELECT coalesce(ct.b, cr.b) AS b,
-        |    CAST(round((ln((coalesce(ct.ct, 0) + 1.0) / (tot.tt + 256))
-        |              - ln((coalesce(cr.cr, 0) + 1.0) / (tot.tr + 256)))
-        |      * 1000000) AS BIGINT) AS lr_micro
-        |  FROM ct FULL OUTER JOIN cr ON ct.b = cr.b CROSS JOIN tot),
-        |perdoc AS (
-        |  SELECT doc_id, CAST(sum(c * lr_micro) AS BIGINT) AS logw_micro
-        |  FROM (SELECT doc_id, b, CAST(count(*) AS BIGINT) AS c
-        |        FROM tokf GROUP BY doc_id, b) dbc
-        |  JOIN lattice USING (b) GROUP BY doc_id)
+      s"""WITH $dsirLatticeCtes
         |SELECT d.doc_id,
-        |  CAST(len(string_split_regex(trim(lower(d.text)), '\s+')) AS BIGINT)
+        |  CAST(len(string_split_regex(trim(lower(d.text)), '\\s+')) AS BIGINT)
         |    AS n_tokens,
         |  coalesce(p.logw_micro, 0) AS logw_micro,
         |  coalesce(p.logw_micro, 0) / 1000000.0 AS logw

@@ -31,9 +31,6 @@ object Merge {
       deletes: DataFrame
   )
 
-  private def pkCond(l: DataFrame, r: DataFrame, pk: Seq[String]): Column =
-    pk.map(k => l(k) === r(k)).reduce(_ && _)
-
   /** Compare columns = shared non-PK columns (etl2.py:284,289 intersects
     * column sets before `.compare`).
     */

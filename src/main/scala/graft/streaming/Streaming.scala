@@ -78,17 +78,6 @@ object EventStreams {
       joinType)
   }
 
-  /** Sliding event-time window (1h window, 15m slide). */
-  def slidingCounts(events: DataFrame, tsCol: String = "ts",
-                    lateness: String = "1 hour"): DataFrame =
-    events
-      .withWatermark(tsCol, lateness)
-      .groupBy(window(col(tsCol), "1 hour", "15 minutes").as("w"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("event_type"), col("n"))
-
   /** Streaming benchmark decontamination: flag documents on an ingest
     * stream whose n-gram shingles overlap a STATIC held-out bench corpus
     * — so contaminated documents are caught at ingest time, not in a

@@ -1,12 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.col
 
 /** The `SPARK_GRAFT_ONLY` dev-loop filter contract (round-10
   * directive): prefix and family-glob selection shared by Verify and
   * Bench through one definition site, with the no-match typo guard.
   */
-class BenchUtilSpec extends AnyFunSuite {
+class BenchUtilSpec extends SparkSpec {
 
   private val qs = Map(
     "q13_merge" -> 1, "q130_rag_serving" -> 2, "q131_image" -> 3,
@@ -60,5 +60,16 @@ class BenchUtilSpec extends AnyFunSuite {
     Files.write(prior, """{"contended":true,"value":1}""".getBytes)
     assert(Bench.benchOutPath(dir, contended = true) == prior)
     assert(Bench.benchOutPath(dir, contended = false) == prior)
+  }
+
+  test("drain: a meter read after an action sees its shuffle stages") {
+    val meter = new BenchUtil.ShuffleMeter
+    spark.sparkContext.addSparkListener(meter)
+    try {
+      spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count()
+        .collect()
+      BenchUtil.drain(spark.sparkContext)
+      assert(meter.writeBytes > 0)
+    } finally spark.sparkContext.removeSparkListener(meter)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.{AnomalyDetect, EventStreams, MetricEvent, MicroBatchMerge, Session, SessionEvent, Sessionize}
+import graft.entry.EntryTables
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -265,7 +266,7 @@ class StreamingSpec extends SparkSpec {
     // ground truth computed independently in plain Scala from the same rows;
     // the read goes through the catalog's schema-adaptive events() helper so
     // a testdata ts-type change cannot desynchronize spec and engine
-    val rows = SparkEntry.events(spark, "/root/testdata/sf0.001")
+    val rows = EntryTables.events(spark, "/root/testdata/sf0.001")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_micros"))
       .as[(Long, Long)].collect()
     val gap = Sessionize.GapMicros

@@ -1,5 +1,6 @@
 package graft
 
+import graft.entry.EntryTables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -36,7 +37,7 @@ class TestDataCanarySpec extends SparkSpec {
     val onDisk = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
     assert(tsVintages.contains(onDisk),
       s"$dir events.ts: unhandled on-disk type $onDisk — teach " +
-        "SparkEntry.events() this vintage before any catalog query runs")
+        "EntryTables.events() this vintage before any catalog query runs")
     val df = read
     assert(df.schema("ts").dataType == TimestampType,
       s"$dir events.ts surfaced as ${df.schema("ts").dataType}, " +
@@ -46,7 +47,7 @@ class TestDataCanarySpec extends SparkSpec {
   }
 
   test("every testdata table reads and materializes under the engine") {
-    // the engine reads events with this conf set (SparkEntry.events);
+    // the engine reads events with this conf set (EntryTables.events);
     // without it a TIMESTAMP(NANOS)-vintage events.parquet would fail
     // this plain read even though the engine handles it fine
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -62,7 +63,7 @@ class TestDataCanarySpec extends SparkSpec {
 
   test("events.ts vintage is handled by the schema-adaptive reader") {
     sfDirs.foreach { dir =>
-      try checkEvents(dir, SparkEntry.events(spark, dir))
+      try checkEvents(dir, EntryTables.events(spark, dir))
       catch { case e: org.apache.spark.sql.AnalysisException =>
         fail(s"$dir events.ts: events() no longer analyzes — ${e.getMessage}", e)
       }
@@ -103,7 +104,7 @@ class TestDataCanarySpec extends SparkSpec {
       val s2 = spark.newSession()
       val key = "spark.sql.legacy.parquet.nanosAsLong"
       val before = s2.conf.getOption(key)
-      val df = SparkEntry.events(s2, tmp)
+      val df = EntryTables.events(s2, tmp)
       assert(df.schema("ts").dataType == TimestampType)
       assert(df.count() == 3)
       assert(s2.conf.getOption(key) == before,
@@ -124,7 +125,7 @@ class TestDataCanarySpec extends SparkSpec {
           "'' AS props")
         .write.mode("overwrite").parquet(s"$tmp/events.parquet")
       val caught = intercept[Throwable] {
-        checkEvents(tmp, SparkEntry.events(spark, tmp))
+        checkEvents(tmp, EntryTables.events(spark, tmp))
       }
       assert(caught.getMessage.contains("events.ts"),
         s"canary failure must name the column, got: ${caught.getMessage}")
