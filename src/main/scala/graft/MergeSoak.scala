@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * scd2History; etl2.py:298-412) — at ~10^7 rows with a realistic
   * changed/deleted mix and a skewed key layout, recording wall time,
   * change-class counts, shuffle volume, and the Exchange count of the
-  * merge plan (the "ONE shuffle per side" claim `mergeJoin` documents).
+  * merge plan (the "ONE shuffle per side" claim `Merge.mergeFrame`
+  * documents; postState and scd2History both project from that frame).
   * Results go to BASELINE.md ("Merge/SCD2 soak").
   *
   * Usage: `sbt 'runMain graft.MergeSoak [n]'` (default 10000000).

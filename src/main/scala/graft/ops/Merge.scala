@@ -64,30 +64,69 @@ object Merge {
     Changes(inserts, updates, updatesOld, deletes)
   }
 
-  /** Post-merge state — the functional equivalent of the reference's
-    * insert/UPDATE/tombstone sequence (T2-T4, etl2.py:329-412) computed as
-    * one relation instead of per-row JDBC statements:
-    *
-    * - new keys appended with `is_deleted=false`, `updated_at=now`
-    * - changed keys take the incoming payload, keep existing `is_deleted`
-    *   (etl2.py:376-378), `updated_at=now`
-    * - keys missing from incoming are tombstoned `is_deleted=true`,
-    *   `updated_at=now` — but only when not already deleted, so the merge
-    *   is a true no-op on re-apply (the reference re-runs its whole load
-    *   twice, etl2.py:440-458, relying on this idempotence)
-    * - unchanged keys pass through untouched
+  /** One merge, flat: the post-state columns (`postCols`), the
+    * `__superseded` flag (the row's existing version is updated or
+    * tombstoned) and that superseded image's history columns (`histCols`,
+    * source → output name; null on every other row). `frame` may be
+    * pinned (`localCheckpoint`) and the copy handed to both projections.
+    */
+  final case class MergeFrame(frame: DataFrame, pk: Seq[String],
+                              postCols: Seq[String],
+                              histCols: Seq[(String, String)]) {
+
+    /** Post-merge state — the functional equivalent of the reference's
+      * insert/UPDATE/tombstone sequence (T2-T4, etl2.py:329-412) computed
+      * as one relation instead of per-row JDBC statements:
+      *
+      * - new keys appended with `is_deleted=false`, `updated_at=now`
+      * - changed keys take the incoming payload, keep existing
+      *   `is_deleted` (etl2.py:376-378), `updated_at=now`
+      * - keys missing from incoming are tombstoned `is_deleted=true`,
+      *   `updated_at=now` — but only when not already deleted, so the
+      *   merge is a true no-op on re-apply (the reference re-runs its
+      *   whole load twice, etl2.py:440-458, relying on this idempotence)
+      * - unchanged keys pass through untouched
+      */
+    def postState: DataFrame = frame.select(postCols.map(col): _*)
+
+    /** SCD2 history rows: superseded images of updated rows plus final
+      * images of deleted rows, each with a validity interval
+      * `[valid_from = old.updated_at, valid_to = now)` (T3/T4,
+      * etl2.py:354-368, 387-401). Appending is made idempotent with a
+      * left-anti join against already-recorded history keys — replacing
+      * the reference's caught-IntegrityError duplicate suppression
+      * (etl2.py:364-368) with a set-based equivalent.
+      */
+    def history(existingHistory: Option[DataFrame] = None): DataFrame = {
+      val rows = frame.filter(col(Superseded))
+        .select(histCols.map { case (src, out) => col(src).as(out) }: _*)
+      existingHistory match {
+        case Some(h) => rows.join(h.select((pk :+ "valid_from").map(col): _*),
+                                  pk :+ "valid_from", "left_anti")
+        case None => rows
+      }
+    }
+  }
+
+  private val Superseded = "__superseded"
+
+  /** Shared one-shot merge frame: incoming FULL OUTER existing on pk,
+    * with presence + change-class flags, projected to one [[MergeFrame]].
+    * ONE shuffle per side — post-state and history project from this
+    * single join instead of re-joining/re-scanning `existing` per change
+    * class (the naive 4-branch union shuffles the big side ~5×; at
+    * fact-table scale that IS the job cost). A superseded version's
+    * `valid_to` and its successor's `updated_at` are the same `now` in
+    * the same projection.
     *
     * `now` is injectable for deterministic tests/oracles (SURVEY.md §7.4).
     */
-  /** Shared one-shot merge frame: incoming FULL OUTER existing on pk, with
-    * presence + change-class flags. ONE shuffle per side — every merge
-    * output (post-state, history) projects from this single join instead
-    * of re-joining/re-scanning `existing` per change class (the naive
-    * 4-branch union shuffles the big side ~5×; at fact-table scale that
-    * IS the job cost).
-    */
-  private def mergeJoin(incoming: DataFrame, existing: DataFrame,
-                        pk: Seq[String]) = {
+  def mergeFrame(incoming: DataFrame, existing: DataFrame, pk: Seq[String],
+                 now: Column = current_timestamp()): MergeFrame = {
+    val payload = incoming.columns.toSeq
+    require(existing.columns.contains("is_deleted") &&
+              existing.columns.contains("updated_at"),
+            "existing state must carry is_deleted/updated_at bookkeeping")
     val cmp = compareCols(incoming, existing, pk)
     val n = incoming.withColumn("__n", lit(true)).alias("n")
     val d = existing.withColumn("__d", lit(true)).alias("d")
@@ -103,26 +142,15 @@ object Merge {
     // already-tombstoned rows missing from incoming stay untouched — this
     // is what makes re-applying a batch a true no-op (T5)
     val isTombstone = !inN && inD && !col("d.is_deleted")
-    (joined, isInsert, isUpdate, isTombstone)
-  }
-
-  def postState(incoming: DataFrame, existing: DataFrame, pk: Seq[String],
-                now: Column = current_timestamp()): DataFrame = {
-    val payload = incoming.columns.toSeq
-    require(existing.columns.contains("is_deleted") &&
-              existing.columns.contains("updated_at"),
-            "existing state must carry is_deleted/updated_at bookkeeping")
-
-    val (joined, isInsert, isUpdate, isTombstone) =
-      mergeJoin(incoming, existing, pk)
     val takeNew = isInsert || isUpdate
+    val superseded = isUpdate || isTombstone
 
-    val outCols = (payload ++ Seq("updated_at", "is_deleted")).distinct
-    val projected = outCols.map {
+    val postCols = (payload ++ Seq("updated_at", "is_deleted")).distinct
+    val post = postCols.map {
       case k if pk.contains(k) =>
         coalesce(col(s"n.$k"), col(s"d.$k")).as(k)
       case "updated_at" =>
-        when(isInsert || isUpdate || isTombstone, now)
+        when(isInsert || superseded, now)
           .otherwise(col("d.updated_at")).as("updated_at")
       case "is_deleted" =>
         when(isInsert, lit(false))
@@ -132,37 +160,38 @@ object Merge {
         when(takeNew, col(s"n.$c")).otherwise(col(s"d.$c")).as(c)
       case c => col(s"n.$c").as(c) // incoming-only column
     }
-    joined.select(projected: _*)
+    // history rows are superseded EXISTING images: update → old image
+    // as-is; delete → old image with is_deleted forced true. The key is
+    // the post-state key (equal on superseded rows); every other column
+    // gets its own, null unless superseded.
+    val hist = existing.columns.toSeq.zipWithIndex.map {
+      case (k, _) if pk.contains(k) => (k, k, None)
+      case ("updated_at", i) => (s"__h$i", "valid_from", Some(col("d.updated_at")))
+      case ("is_deleted", i) =>
+        (s"__h$i", "is_deleted",
+          Some(when(isTombstone, lit(true)).otherwise(col("d.is_deleted"))))
+      case (c, i) => (s"__h$i", c, Some(col(s"d.$c")))
+    } :+ ((s"__h${existing.columns.length}", "valid_to", Some(now)))
+    val histOnly = hist.collect { case (src, _, Some(e)) =>
+      when(superseded, e).as(src) }
+    MergeFrame(
+      joined.select((post ++ (superseded.as(Superseded) +: histOnly)): _*),
+      pk, postCols, hist.map { case (src, out, _) => (src, out) })
   }
 
-  /** SCD2 history rows for one merge: superseded images of updated rows
-    * plus final images of deleted rows, each with a validity interval
-    * `[valid_from = old.updated_at, valid_to = now)` (T3/T4,
-    * etl2.py:354-368, 387-401). Appending is made idempotent with a
-    * left-anti join against already-recorded history keys — replacing the
-    * reference's caught-IntegrityError duplicate suppression
-    * (etl2.py:364-368) with a set-based equivalent.
-    */
+  def postState(incoming: DataFrame, existing: DataFrame, pk: Seq[String],
+                now: Column = current_timestamp()): DataFrame =
+    mergeFrame(incoming, existing, pk, now).postState
+
   def scd2History(incoming: DataFrame, existing: DataFrame, pk: Seq[String],
                   existingHistory: Option[DataFrame] = None,
-                  now: Column = current_timestamp()): DataFrame = {
-    val (joined, _, isUpdate, isTombstone) = mergeJoin(incoming, existing, pk)
-    // history rows are superseded EXISTING images: update → old image as-is;
-    // delete → old image with is_deleted forced true
-    val histCols = existing.columns.toSeq.map {
-      case "updated_at" => col("d.updated_at").as("valid_from")
-      case "is_deleted" =>
-        when(isTombstone, lit(true)).otherwise(col("d.is_deleted"))
-          .as("is_deleted")
-      case c => col(s"d.$c").as(c)
-    }
-    val rows = joined.filter(isUpdate || isTombstone)
-      .select(histCols: _*)
-      .withColumn("valid_to", now)
-    existingHistory match {
-      case Some(h) => rows.join(h.select((pk :+ "valid_from").map(col): _*),
-                                pk :+ "valid_from", "left_anti")
-      case None => rows
-    }
-  }
+                  now: Column = current_timestamp()): DataFrame =
+    mergeFrame(incoming, existing, pk, now).history(existingHistory)
+
+  /** The wall clock, read once per call, as a literal: every relation
+    * stamped with it carries the same instant however many actions
+    * evaluate it. `current_timestamp()` instead resolves anew in each
+    * query. */
+  def clock(): Column =
+    lit(java.sql.Timestamp.from(java.time.Instant.now()))
 }

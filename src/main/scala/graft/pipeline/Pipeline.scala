@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   *
   * Differences from the reference, by design (SURVEY.md §7.4):
   * - violations are ONE queryable DataFrame, not CSV side-files + logs;
-  * - rules run once (the reference re-validates and re-loads twice;
+  * - rules run once per table: the fold is one annotated
+  *   relation, pinned in [[applyRules]], that the cleaned rows and the
+  *   report both read (the reference re-validates and re-loads twice;
   *   idempotence is a tested property here, not a runtime behavior);
   * - load order derives from the declared FK graph, not a hard-coded list.
   */
@@ -48,37 +50,45 @@ object Pipeline {
     * (run_all_checks, data_quality_checker.py:351-372). Tables with no
     * config pass through unchecked, mirroring the reference's
     * skip-with-warning (:357-359).
+    *
+    * Each configured table's annotated relation ([[Rules.annotate]]) is
+    * pinned once with `localCheckpoint`: the cleaned rows and the
+    * violations both read the pinned blocks, so however many sinks
+    * consume them, the source is scanned and the fold (PK window, FK
+    * joins) runs once per table.
     */
   def applyRules(registry: Map[String, DataFrame],
                  configs: Seq[TableConfig]): (Map[String, DataFrame], DataFrame) = {
     val byName = configs.map(c => c.name -> c).toMap
-    var violations: Option[DataFrame] = None
+    var violations: Seq[DataFrame] = Nil
     val cleaned = registry.map { case (name, df) =>
       byName.get(name) match {
         case Some(cfg) =>
-          val res = Rules.applyAll(df, cfg, registry)
-          violations = Some(violations
-            .map(_.unionByName(res.violations)).getOrElse(res.violations))
+          val a = Rules.annotate(df, cfg, registry)
+          val res = a.over(a.frame.localCheckpoint())
+          violations :+= res.violations
           name -> res.cleaned
         case None => name -> df
       }
     }
-    val allViolations = violations.getOrElse(
-      Violations.empty(registry.values.head))
-    (cleaned, allViolations)
+    (cleaned, violations.reduceOption(_ unionByName _)
+      .getOrElse(Violations.empty(SparkSession.active)))
   }
 
   /** Stage 8: FK-ordered incremental merge of every cleaned table into its
     * existing state (load loop, etl2.py:414-437). `existing` maps table
     * name → current stored state (absent = initial load). SCD2 history is
     * produced for tables flagged in `scd2Tables` (the reference tracks
-    * products & sellers, etl2.py:349).
+    * products & sellers, etl2.py:349). Post-state and history of a table
+    * are two projections of one [[Merge.mergeFrame]]; the default `now`
+    * is read once per call, so they stamp the same instant even when
+    * separate actions consume them.
     */
   def mergeAll(cleaned: Map[String, DataFrame],
                existing: Map[String, DataFrame],
                configs: Seq[TableConfig],
                scd2Tables: Set[String] = Set("products", "sellers"),
-               now: org.apache.spark.sql.Column = current_timestamp())
+               now: org.apache.spark.sql.Column = Merge.clock())
       : (Map[String, DataFrame], Map[String, DataFrame]) = {
     val ordered = TableConfig.fkOrdered(configs).filter(c => cleaned.contains(c.name))
     val post = scala.collection.mutable.LinkedHashMap[String, DataFrame]()
@@ -87,10 +97,9 @@ object Pipeline {
       val incoming = cleaned(cfg.name)
       existing.get(cfg.name) match {
         case Some(ex) =>
-          post(cfg.name) = Merge.postState(incoming, ex, cfg.primaryKey, now)
-          if (scd2Tables.contains(cfg.name))
-            hist(cfg.name) = Merge.scd2History(incoming, ex, cfg.primaryKey,
-              now = now)
+          val m = Merge.mergeFrame(incoming, ex, cfg.primaryKey, now)
+          post(cfg.name) = m.postState
+          if (scd2Tables.contains(cfg.name)) hist(cfg.name) = m.history()
         case None =>
           post(cfg.name) = incoming
             .withColumn("updated_at", now)
@@ -108,7 +117,7 @@ object Pipeline {
   def runOnRegistry(registry: Map[String, DataFrame],
                     configs: Seq[TableConfig],
                     existing: Map[String, DataFrame] = Map.empty,
-                    now: org.apache.spark.sql.Column = current_timestamp())
+                    now: org.apache.spark.sql.Column = Merge.clock())
       : Result = {
     val (cleaned, violations) = applyRules(registry, configs)
     val (post, hist) = mergeAll(cleaned, existing, configs, now = now)
@@ -118,6 +127,6 @@ object Pipeline {
   /** One full batch run. */
   def run(spark: SparkSession, sourceDir: String, configs: Seq[TableConfig],
           existing: Map[String, DataFrame] = Map.empty,
-          now: org.apache.spark.sql.Column = current_timestamp()): Result =
+          now: org.apache.spark.sql.Column = Merge.clock()): Result =
     runOnRegistry(ingest(spark, sourceDir), configs, existing, now)
 }

@@ -1,7 +1,7 @@
 package graft.rules
 
 import graft.model.TableConfig
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,29 +16,91 @@ final case class RuleResult(cleaned: DataFrame, violations: DataFrame)
 object Violations {
   val columns: Seq[String] = Seq("table", "rule", "column", "record_key", "detail")
 
+  private def fields(table: String, rule: String, column: String,
+                     recordKey: Column, detail: Column): Seq[Column] = Seq(
+    lit(table).as("table"), lit(rule).as("rule"), lit(column).as("column"),
+    recordKey.cast(StringType).as("record_key"),
+    detail.cast(StringType).as("detail"))
+
   /** Shape an arbitrary row-set into the shared violations schema. */
   def shape(df: DataFrame, table: String, rule: String, column: String,
             recordKey: Column, detail: Column): DataFrame =
-    df.select(
-      lit(table).as("table"), lit(rule).as("rule"), lit(column).as("column"),
-      recordKey.cast(StringType).as("record_key"),
-      detail.cast(StringType).as("detail"))
+    df.select(fields(table, rule, column, recordKey, detail): _*)
 
-  def empty(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
+  /** One violation as a struct of the shared schema, null where `cond`
+    * does not hold: a row-level verdict of the annotated fold. */
+  def row(cond: Column, table: String, rule: String, column: String,
+          recordKey: Column, detail: Column): Column =
+    when(cond, struct(fields(table, rule, column, recordKey, detail): _*))
+
+  def empty(spark: SparkSession): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       StructType(columns.map(StructField(_, StringType))))
+}
+
+/** The standard fold over one table as ONE annotated relation: the input
+  * columns (`columns`) plus whatever helper columns the rules add (a PK
+  * rank, FK presence markers). Each rule contributes a keep predicate
+  * and violation structs, each violation gated by the keep predicates of
+  * the rules before it, so the fold order of the reference holds without
+  * re-deriving a cleaned frame per rule. Table-level reports (column
+  * types, the null census) are functions of the finished relation.
+  *
+  * [[over]] derives both outputs from any frame with the annotated
+  * relation's columns: the lazy `frame` itself, or a pinned copy of it,
+  * so the cleaned rows and the report share one evaluation of the fold.
+  */
+final case class Annotated(
+    frame: DataFrame,
+    columns: Seq[String],
+    keeps: Seq[Column] = Nil,
+    rowViolations: Seq[Column] = Nil,
+    tableViolations: Seq[DataFrame => DataFrame] = Nil) {
+
+  /** True on the rows every rule so far keeps. */
+  def keep: Column = keeps.reduceOption(_ && _).getOrElse(lit(true))
+
+  /** A violation reported only on rows every earlier rule kept. */
+  def violation(cond: Column, table: String, rule: String, column: String,
+                recordKey: Column, detail: Column): Column =
+    Violations.row(keep && cond, table, rule, column, recordKey, detail)
+
+  /** A helper column name not yet taken in `frame`. */
+  def fresh: String =
+    Iterator.from(frame.columns.length).map(i => s"__rule$i")
+      .find(n => !frame.columns.contains(n)).get
+
+  def result: RuleResult = over(frame)
+
+  def over(annotated: DataFrame): RuleResult = {
+    val cleaned = annotated.filter(keep).select(columns.map(col): _*)
+    // the filter is codegen'd; array_compact is not, so it only sees
+    // the rows that carry a violation
+    val rows =
+      if (rowViolations.isEmpty) Nil
+      else Seq(annotated
+        .filter(rowViolations.map(_.isNotNull).reduce(_ || _))
+        .select(explode(array_compact(array(rowViolations: _*))).as("v"))
+        .select("v.*"))
+    val all = rows ++ tableViolations.map(_(annotated))
+    RuleResult(cleaned, all.reduceOption(_ unionByName _)
+      .getOrElse(Violations.empty(annotated.sparkSession)))
   }
 }
 
 /** One declarative data-quality rule over a table (SURVEY.md §2.11). Rules
-  * that need sibling tables (FK checks) receive the whole registry.
+  * that need sibling tables (FK checks) receive the whole registry. A rule
+  * adds its verdicts to the fold's [[Annotated]] relation; applied alone,
+  * it runs the same fold over a one-rule list.
   */
 trait Rule {
   def name: String
+  def annotate(a: Annotated, cfg: TableConfig,
+               registry: Map[String, DataFrame]): Annotated
   def apply(df: DataFrame, cfg: TableConfig,
-            registry: Map[String, DataFrame] = Map.empty): RuleResult
+            registry: Map[String, DataFrame] = Map.empty): RuleResult =
+    Rules.applyAll(df, cfg, registry, Seq(this))
 }
 
 object Rules {
@@ -52,64 +114,63 @@ object Rules {
     * all non-PK columns (the reference keeps pandas file order, which has
     * no distributed analog); a key-only frame orders by the key itself,
     * since its duplicates are identical rows. Dedup is one row_number
-    * window over the key — a single shuffle on the PK.
+    * window over the key — a single shuffle on the PK. Null-key rows rank
+    * in their own partitions, so they leave the non-null ranks alone, and
+    * rows an earlier rule dropped rank apart from the survivors.
     */
   object PrimaryKeyRule extends Rule {
     val name = "primary_key"
-    def apply(df: DataFrame, cfg: TableConfig,
-              registry: Map[String, DataFrame]): RuleResult = {
+    def annotate(a: Annotated, cfg: TableConfig,
+                 registry: Map[String, DataFrame]): Annotated = {
       val pk = cfg.primaryKey
-      if (pk.isEmpty) return RuleResult(df, Violations.empty(df))
+      if (pk.isEmpty) return a
       val anyNull = pk.map(col(_).isNull).reduce(_ || _)
-      val nullViol = Violations.shape(df.filter(anyNull), cfg.name, name,
-        pk.mkString(","), keyExpr(pk), lit("null primary key component"))
-
-      val nonNull = df.filter(!anyNull)
-      val rest = df.columns.toSeq.filterNot(pk.contains)
+      val rest = a.columns.filterNot(pk.contains)
       val order = (if (rest.isEmpty) pk else rest).map(col)
+      val part = pk.map(col) ++ (if (a.keeps.isEmpty) Nil else Seq(a.keep))
       val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(pk.map(col): _*)
+        .partitionBy(part: _*)
         .orderBy(order: _*)
-      val numbered = nonNull.withColumn("__rn", row_number().over(w))
-      val dupViol = Violations.shape(numbered.filter(col("__rn") > 1),
-        cfg.name, name, pk.mkString(","), keyExpr(pk),
-        lit("duplicate primary key"))
-      val cleaned = numbered.filter(col("__rn") === 1).drop("__rn")
-      RuleResult(cleaned, nullViol.unionByName(dupViol))
+      val rn = a.fresh
+      val key = keyExpr(pk)
+      a.copy(
+        frame = a.frame.withColumn(rn, row_number().over(w)),
+        keeps = a.keeps :+ (!anyNull && col(rn) === 1),
+        rowViolations = a.rowViolations ++ Seq(
+          a.violation(anyNull, cfg.name, name, pk.mkString(","), key,
+            lit("null primary key component")),
+          a.violation(!anyNull && col(rn) > 1, cfg.name, name,
+            pk.mkString(","), key, lit("duplicate primary key"))))
     }
   }
 
   /** FK referential integrity (data_quality_checker.py:131-164): null FKs
     * are reported but kept; non-null FKs with no parent are reported and
-    * dropped. Violations via left-anti, cleaned set via left-semi ∪ nulls —
-    * both shuffle on the key once; small parents broadcast under AQE.
+    * dropped. One left join per FK against the parent's distinct keys,
+    * whose joined key doubles as the presence marker; small parents
+    * broadcast under AQE. Each FK sees the survivors of the FKs before it.
     */
   object ForeignKeyRule extends Rule {
     val name = "foreign_key"
-    def apply(df: DataFrame, cfg: TableConfig,
-              registry: Map[String, DataFrame]): RuleResult = {
-      var cleaned = df
-      var viols = Violations.empty(df)
-      cfg.foreignKeys.foreach { fk =>
-        registry.get(fk.refTable).foreach { parent =>
-          val parentKeys = parent.select(col(fk.refColumn).as(fk.column)).distinct()
-          val nullFk = cleaned.filter(col(fk.column).isNull)
-          val nullViol = Violations.shape(nullFk, cfg.name, name, fk.column,
-            keyExpr(cfg.primaryKey),
-            lit(s"null foreign key → ${fk.refTable}.${fk.refColumn}"))
-          val unmatched = cleaned.filter(col(fk.column).isNotNull)
-            .join(parentKeys, Seq(fk.column), "left_anti")
-          val unmatchedViol = Violations.shape(unmatched, cfg.name, name,
-            fk.column, keyExpr(cfg.primaryKey),
-            concat(lit("dangling foreign key value="), col(fk.column)))
-          cleaned = cleaned.filter(col(fk.column).isNull)
-            .unionByName(cleaned.filter(col(fk.column).isNotNull)
-              .join(parentKeys, Seq(fk.column), "left_semi"))
-          viols = viols.unionByName(nullViol).unionByName(unmatchedViol)
+    def annotate(a: Annotated, cfg: TableConfig,
+                 registry: Map[String, DataFrame]): Annotated =
+      cfg.foreignKeys.foldLeft(a) { (acc, fk) =>
+        registry.get(fk.refTable).fold(acc) { parent =>
+          val hit = acc.fresh
+          val parentKeys = parent.select(col(fk.refColumn).as(hit)).distinct()
+          val k = col(fk.column)
+          acc.copy(
+            frame = acc.frame.join(parentKeys, k === col(hit), "left"),
+            keeps = acc.keeps :+ (k.isNull || col(hit).isNotNull),
+            rowViolations = acc.rowViolations ++ Seq(
+              acc.violation(k.isNull, cfg.name, name, fk.column,
+                keyExpr(cfg.primaryKey),
+                lit(s"null foreign key → ${fk.refTable}.${fk.refColumn}")),
+              acc.violation(k.isNotNull && col(hit).isNull, cfg.name, name,
+                fk.column, keyExpr(cfg.primaryKey),
+                concat(lit("dangling foreign key value="), k))))
         }
       }
-      RuleResult(cleaned, viols)
-    }
   }
 
   /** Declared-vs-actual column type validation + missing-column detection
@@ -127,9 +188,9 @@ object Rules {
         case (FloatType, DoubleType) | (DoubleType, FloatType) => true
         case _ => false
       }
-    def apply(df: DataFrame, cfg: TableConfig,
-              registry: Map[String, DataFrame]): RuleResult = {
-      val actual = df.schema.map(f => f.name -> f.dataType).toMap
+    def annotate(a: Annotated, cfg: TableConfig,
+                 registry: Map[String, DataFrame]): Annotated = {
+      val actual = a.columns.map(c => c -> a.frame.schema(c).dataType).toMap
       val issues = cfg.columns.flatMap { c =>
         actual.get(c.name) match {
           case None => Some((c.name, s"missing column (declared ${c.dataType.sql})"))
@@ -138,12 +199,12 @@ object Rules {
           case _ => None
         }
       }
-      val spark = df.sparkSession
+      val spark = a.frame.sparkSession
       import spark.implicits._
       val viols = issues.toDF("column", "detail")
         .select(lit(cfg.name).as("table"), lit(name).as("rule"), col("column"),
                 lit(null).cast(StringType).as("record_key"), col("detail"))
-      RuleResult(df, viols)
+      a.copy(tableViolations = a.tableViolations :+ ((_: DataFrame) => viols))
     }
   }
 
@@ -158,26 +219,32 @@ object Rules {
     df.agg(aggs.head, aggs.tail.toSeq: _*)
   }
 
+  /** Counts the nulls of the rows every earlier rule kept. */
   object NullCensusRule extends Rule {
     val name = "null_census"
-    def apply(df: DataFrame, cfg: TableConfig,
-              registry: Map[String, DataFrame]): RuleResult = {
-      val census = nullCensus(df)
-      val stacked = census.select(
-        explode(map(df.columns.flatMap(c =>
-          Seq(lit(c), col(c).cast(StringType))): _*)).as(Seq("column", "nulls")))
-        .filter(col("nulls") =!= "0")
-      val viols = stacked.select(lit(cfg.name).as("table"), lit(name).as("rule"),
-        col("column"), lit(null).cast(StringType).as("record_key"),
-        concat(lit("null count="), col("nulls")).as("detail"))
-      RuleResult(df, viols)
+    def annotate(a: Annotated, cfg: TableConfig,
+                 registry: Map[String, DataFrame]): Annotated = {
+      val kept = a.keep
+      val cols = a.columns
+      def viols(annotated: DataFrame): DataFrame = {
+        val census = nullCensus(annotated.filter(kept).select(cols.map(col): _*))
+        val stacked = census.select(
+          explode(map(cols.flatMap(c =>
+            Seq(lit(c), col(c).cast(StringType))): _*)).as(Seq("column", "nulls")))
+          .filter(col("nulls") =!= "0")
+        stacked.select(lit(cfg.name).as("table"), lit(name).as("rule"),
+          col("column"), lit(null).cast(StringType).as("record_key"),
+          concat(lit("null count="), col("nulls")).as("detail"))
+      }
+      a.copy(tableViolations = a.tableViolations :+ (viols _))
     }
   }
 
   /** Emoji / supplementary-Unicode detection over string columns
     * (data_quality_checker.py:197-223). The reference's six Unicode blocks,
-    * as one codegen'd `rlike` per string column folded into a single
-    * aggregate pass — vs the reference's per-cell Python regex loop.
+    * as one codegen'd `rlike` per string column, all in the fold's one
+    * pass — vs the reference's per-cell Python regex loop. Only rows the
+    * earlier rules kept are reported.
     */
   val EmojiPattern: String =
     "[\\x{1F600}-\\x{1F64F}\\x{1F300}-\\x{1F5FF}\\x{1F680}-\\x{1F6FF}" +
@@ -185,18 +252,14 @@ object Rules {
 
   object EmojiRule extends Rule {
     val name = "emoji"
-    def apply(df: DataFrame, cfg: TableConfig,
-              registry: Map[String, DataFrame]): RuleResult = {
-      val stringCols = df.schema.fields
-        .filter(_.dataType == StringType).map(_.name)
-      if (stringCols.isEmpty) return RuleResult(df, Violations.empty(df))
-      val perCol = stringCols.map { c =>
-        Violations.shape(
-          df.filter(col(c).isNotNull && col(c).rlike(EmojiPattern)),
+    def annotate(a: Annotated, cfg: TableConfig,
+                 registry: Map[String, DataFrame]): Annotated = {
+      val stringCols = a.columns
+        .filter(c => a.frame.schema(c).dataType == StringType)
+      a.copy(rowViolations = a.rowViolations ++ stringCols.map(c =>
+        a.violation(col(c).isNotNull && col(c).rlike(EmojiPattern),
           cfg.name, name, c, keyExpr(cfg.primaryKey),
-          lit("emoji / symbol characters present"))
-      }
-      RuleResult(df, perCol.reduce(_ unionByName _))
+          lit("emoji / symbol characters present"))))
     }
   }
 
@@ -214,7 +277,7 @@ object Rules {
       val numeric = df.schema.fields
         .filter(_.dataType.isInstanceOf[NumericType]).map(_.name)
         .filterNot(n => skip.exists(s => n.toLowerCase.contains(s)))
-      if (numeric.isEmpty) return RuleResult(df, Violations.empty(df))
+      if (numeric.isEmpty) return RuleResult(df, Violations.empty(df.sparkSession))
       val perCol = numeric.map { c =>
         Violations.shape(df.filter(col(c) < 0), table, name, c,
           if (pk.nonEmpty) keyExpr(pk) else lit(null),
@@ -286,12 +349,18 @@ object Rules {
   def standardRules: Seq[Rule] =
     Seq(PrimaryKeyRule, ForeignKeyRule, ColumnTypeRule, NullCensusRule, EmojiRule)
 
-  /** Fold a rule set over one table, accumulating violations. */
+  /** Fold a rule set over one table into its annotated relation. */
+  def annotate(df: DataFrame, cfg: TableConfig,
+               registry: Map[String, DataFrame],
+               rules: Seq[Rule] = standardRules): Annotated =
+    rules.foldLeft(Annotated(df, df.columns.toSeq)) { (a, r) =>
+      r.annotate(a, cfg, registry)
+    }
+
+  /** Fold a rule set over one table, accumulating violations. Lazy: the
+    * cleaned rows and the report each re-run the fold when read. */
   def applyAll(df: DataFrame, cfg: TableConfig,
                registry: Map[String, DataFrame],
                rules: Seq[Rule] = standardRules): RuleResult =
-    rules.foldLeft(RuleResult(df, Violations.empty(df))) { (acc, r) =>
-      val res = r(acc.cleaned, cfg, registry)
-      RuleResult(res.cleaned, acc.violations.unionByName(res.violations))
-    }
+    annotate(df, cfg, registry, rules).result
 }

@@ -1484,9 +1484,9 @@ object Sessionize {
 
 /** The reference's scheduled incremental load (T1-T5, etl2.py:298-467) as
   * a Structured Streaming job: a file-source stream feeds `foreachBatch`,
-  * each batch merging into parquet-backed state exactly like the batch
-  * `Merge` — same classify/postState/scd2History code, so streaming and
-  * batch semantics cannot drift apart.
+  * each batch merging into parquet-backed state through the batch
+  * `Merge.mergeFrame` — the frame `postState` and `scd2History` project
+  * from — so streaming and batch semantics cannot drift apart.
   */
 object MicroBatchMerge {
 
@@ -1502,15 +1502,20 @@ object MicroBatchMerge {
     *    recovery on every entry, so a retried batch always sees complete
     *    pre-batch state (never silently re-initializes from nothing);
     *  - history is appended BEFORE the swap with the already-recorded
-    *    history passed to `scd2History`, whose (pk, valid_from) anti-join
-    *    drops rows a crashed-and-retried batch already wrote — append
-    *    stays idempotent end to end.
+    *    history passed to `MergeFrame.history`, whose (pk, valid_from)
+    *    anti-join drops rows a crashed-and-retried batch already wrote —
+    *    append stays idempotent end to end.
+    *
+    * One pass: the batch's merge frame is pinned with `localCheckpoint`
+    * (the [[RevisitStream.applyBatch]] idiom), so the history append and
+    * the state write read one evaluation of its join, and `now` is one
+    * instant read at the start of the batch ([[Merge.clock]]), so a
+    * superseded version's `valid_to` equals its successor's `updated_at`.
     */
   def applyBatch(spark: SparkSession, batch: DataFrame, pk: Seq[String],
                  stateDir: String, historyDir: String): Long = {
     import org.apache.hadoop.fs.Path
     val statePath = new Path(stateDir)
-    val oldPath = new Path(stateDir + ".old")
     val historyPath = new Path(historyDir)
     val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -1520,19 +1525,17 @@ object MicroBatchMerge {
     val recordedHistory: Option[DataFrame] =
       if (fs.exists(historyPath)) Some(spark.read.parquet(historyDir)) else None
 
-    val (newState, history) = existing match {
+    val now = Merge.clock()
+    existing match {
       case Some(ex) =>
-        (Merge.postState(batch, ex, pk),
-         Some(Merge.scd2History(batch, ex, pk,
-           existingHistory = recordedHistory)))
+        val m = Merge.mergeFrame(batch, ex, pk, now)
+        val merged = m.copy(frame = m.frame.localCheckpoint())
+        merged.history(recordedHistory).write.mode("append").parquet(historyDir)
+        swapState(spark, stateDir, merged.postState)
       case None =>
-        (batch.withColumn("updated_at", current_timestamp())
-           .withColumn("is_deleted", lit(false)), None)
+        swapState(spark, stateDir, batch.withColumn("updated_at", now)
+          .withColumn("is_deleted", lit(false)))
     }
-
-    history.foreach(_.write.mode("append").parquet(historyDir))
-
-    swapState(spark, stateDir, newState)
   }
 
   /** The rename-aside state swap shared by [[applyBatch]] and

@@ -79,6 +79,68 @@ class PipelineSpec extends SparkSpec {
     assert(r2.history.get("customers").forall(_.count() == 0))
   }
 
+  test("mergeAll's default now stamps post-state and history alike") {
+    val cfg = TableConfig("sellers", Seq(
+      ColumnSpec("seller_id", StringType, primaryKey = true),
+      ColumnSpec("seller_city", StringType)))
+    val existing = Seq(("s1", "rio", false), ("s2", "sp", false))
+      .toDF("seller_id", "seller_city", "is_deleted")
+      .withColumn("updated_at", lit("2020-01-01 00:00:00").cast("timestamp"))
+    val incoming = Seq(("s1", "recife")).toDF("seller_id", "seller_city")
+    val (post, hist) = Pipeline.mergeAll(Map("sellers" -> incoming),
+      Map("sellers" -> existing), Seq(cfg))
+    // two separate actions, as two sinks would run them
+    val updatedAt = post("sellers").select("seller_id", "updated_at")
+      .as[(String, java.sql.Timestamp)].collect().toMap
+    val validTo = hist("sellers").select("seller_id", "valid_to")
+      .as[(String, java.sql.Timestamp)].collect().toMap
+    assert(validTo.keySet == Set("s1", "s2"))
+    assert(validTo == updatedAt)
+  }
+
+  test("an arrival folder without CSV files yields empty outputs") {
+    val dir = Files.createTempDirectory("graft_empty").toString
+    val res = Pipeline.run(spark, dir, configs)
+    assert(res.cleaned.isEmpty && res.postStates.isEmpty)
+    assert(res.violations.columns.toSeq == graft.rules.Violations.columns)
+    assert(res.violations.isEmpty)
+  }
+
+  test("standard fold plan: one Window per report branch, none once pinned") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Window}
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val dir = Files.createTempDirectory("graft_fold_plan").toString
+    Seq((1L, "a", Some(10L)), (1L, "b", Some(11L)), (2L, "c", Some(99L)),
+      (3L, "d", None)).toDF("id", "name", "ref").write.parquet(s"$dir/t")
+    Seq(10L, 11L).toDF("pid").write.parquet(s"$dir/parent")
+    val registry = Map("t" -> spark.read.parquet(s"$dir/t"),
+      "parent" -> spark.read.parquet(s"$dir/parent"))
+    val cfg = TableConfig("t",
+      Seq(ColumnSpec("id", LongType, primaryKey = true),
+        ColumnSpec("name", StringType), ColumnSpec("ref", LongType)),
+      Seq(FkRef("ref", "parent", "pid")))
+    def nodes(df: DataFrame)(p: LogicalPlan => Boolean): Int =
+      df.queryExecution.optimizedPlan.collect { case n if p(n) => n }.size
+
+    // lazy: the row-verdict branch and the census branch each hold the
+    // fold's one PK window
+    val lazyViolations = graft.rules.Rules.applyAll(registry("t"), cfg,
+      registry).violations
+    assert(nodes(lazyViolations)(_.isInstanceOf[Window]) <= 2,
+      lazyViolations.queryExecution.optimizedPlan.toString)
+
+    // pinned: both outputs read the checkpointed relation only
+    val (cleaned, violations) = Pipeline.applyRules(registry, Seq(cfg))
+    for (df <- Seq(cleaned("t"), violations)) {
+      val plan = df.queryExecution.optimizedPlan
+      assert(nodes(df)(n => n.isInstanceOf[Window] || n.isInstanceOf[Join] ||
+        n.isInstanceOf[LogicalRelation]) == 0, plan.toString)
+    }
+    assertSameRows(cleaned("t"), Seq(Seq(1L, "a", 10L), Seq(3L, "d", null)))
+    assert(violations.count() == 4) // duplicate, dangling, null FK, census
+  }
+
   test("jdbc SQL generation: update, tombstone, merge") {
     assert(JdbcUpsert.updateSql("t", Seq("a", "b"), Seq("id")) ==
       "UPDATE t SET a = ?, b = ? WHERE id = ?")

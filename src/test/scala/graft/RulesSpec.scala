@@ -162,4 +162,39 @@ class RulesSpec extends SparkSpec {
     assert(rules == Set("primary_key", "foreign_key"))
     assert(r.cleaned.count() == 1) // id=1 kept once; id=2 dropped by FK
   }
+  test("standard fold: every rule sees only the survivors of the rules before it") {
+    val t = TableConfig("t",
+      Seq(ColumnSpec("id", LongType, primaryKey = true),
+        ColumnSpec("name", StringType),
+        ColumnSpec("ref", LongType),
+        ColumnSpec("qty", IntegerType)),
+      Seq(FkRef("ref", "parent", "pid")))
+    val child = Seq(
+      (None, "nullpk", Some(10L), Some("1")),    // null PK: dropped
+      (Some(1L), "a", Some(10L), Some("1")),     // duplicate winner
+      (Some(1L), "b", Some(99L), Some("1")),     // duplicate loser, dangling FK
+      (Some(2L), "c", None, Some("2")),          // null FK: kept
+      (Some(3L), "d", Some(77L), Some("3")),     // dangling FK: dropped
+      (Some(4L), "e 😀", Some(10L), Some("4")),  // emoji on a survivor
+      (Some(5L), "f 😀", Some(88L), None)        // emoji + null on an FK-dropped row
+    ).toDF("id", "name", "ref", "qty")           // qty: string, declared int
+    val parent = Seq(10L).toDF("pid")
+    val r = Rules.applyAll(child, t, Map("parent" -> parent))
+
+    assert(r.cleaned.columns.toSeq == child.columns.toSeq)
+    assertSameRows(r.cleaned, Seq(
+      Seq(1L, "a", 10L, "1"), Seq(2L, "c", null, "2"),
+      Seq(4L, "e 😀", 10L, "4")))
+    assert(r.violations.columns.toSeq == Violations.columns)
+    assertSameRows(r.violations, Seq(
+      Seq("t", "primary_key", "id", "", "null primary key component"),
+      Seq("t", "primary_key", "id", "1", "duplicate primary key"),
+      Seq("t", "foreign_key", "ref", "2", "null foreign key → parent.pid"),
+      Seq("t", "foreign_key", "ref", "3", "dangling foreign key value=77"),
+      Seq("t", "foreign_key", "ref", "5", "dangling foreign key value=88"),
+      Seq("t", "column_types", "qty", null,
+        "type mismatch: declared INT, actual STRING"),
+      Seq("t", "null_census", "ref", null, "null count=1"),
+      Seq("t", "emoji", "name", "4", "emoji / symbol characters present")))
+  }
 }

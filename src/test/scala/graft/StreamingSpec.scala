@@ -178,6 +178,26 @@ class StreamingSpec extends SparkSpec {
     assert(rowsOf(spark.read.parquet(state).orderBy("id")) == before)
   }
 
+  test("applyBatch closes each SCD2 interval at its successor's updated_at") {
+    val dir = Files.createTempDirectory("graft_interval").toString
+    val state = s"$dir/state"
+    val hist = s"$dir/history"
+    val b1 = Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "name", "price")
+    MicroBatchMerge.applyBatch(spark, b1, Seq("id"), state, hist)
+    // id=1 updated, id=2 absent (tombstoned)
+    val b2 = Seq((1L, "a2", 10.0)).toDF("id", "name", "price")
+    MicroBatchMerge.applyBatch(spark, b2, Seq("id"), state, hist)
+    def stamps(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(col("id"), col(c)).as[(Long, java.sql.Timestamp)]
+        .collect().toMap
+    val updatedAt = stamps(spark.read.parquet(state), "updated_at")
+    val validTo = stamps(spark.read.parquet(hist), "valid_to")
+    assert(validTo.keySet == Set(1L, 2L))
+    // no window in which neither the old nor the new version is valid
+    assert(validTo(1L) == updatedAt(1L))
+    assert(validTo(2L) == updatedAt(2L))
+  }
+
   test("applyBatch recovers state after a crash between rename-aside and swap-in") {
     val dir = Files.createTempDirectory("graft_crash").toString
     val state = s"$dir/state"
