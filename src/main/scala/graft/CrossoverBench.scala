@@ -59,13 +59,13 @@ object CrossoverBench {
 
       val (bruteRows, bruteSec) = time {
         Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k,
-            dim = Some(64), useNative = true)
+            dim = Some(64))
           .select("query_id", "neighbor_id")
           .as[(Long, Long)].collect().toSet
       }
       val (lshRows, lshSec) = time {
         Similarity.lshTopK(emb, queries, "vec_id", "embedding", k,
-            nPlanes = 14, nTables = 6, useNative = true)
+            nPlanes = 14, nTables = 6)
           .select("query_id", "neighbor_id")
           .as[(Long, Long)].collect().toSet
       }
@@ -90,14 +90,14 @@ object CrossoverBench {
       // constant, not a crossover
       val (int8Rows, int8Sec) = time {
         Similarity.int8TopK(emb, queries, "vec_id", "embedding", k,
-            dim = 64, candK = 4 * k, useNative = true)
+            dim = 64, candK = 4 * k)
           .select("query_id", "neighbor_id")
           .as[(Long, Long)].collect().toSet
       }
       // truncated: O(n²) over the first 16 of 64 dims (4x fewer FLOPs)
       val (truncRows, truncSec) = time {
         Similarity.truncatedTopK(emb, queries, "vec_id", "embedding", k,
-            dim = 64, prefixDim = 16, candK = 4 * k, useNative = true)
+            dim = 64, prefixDim = 16, candK = 4 * k)
           .select("query_id", "neighbor_id")
           .as[(Long, Long)].collect().toSet
       }

@@ -67,13 +67,12 @@ object DecontaminationBench {
 
       val (exactRows, exactSec) = time {
         Dedup.contaminationHits(docs, "doc_id", "text", bench,
-            shingleN = 8, useNative = true)
+            shingleN = 8)
           .as[(Long, Long)].collect().toSet
       }
       val (bloomRows, bloomSec) = time {
         Dedup.contaminationHitsBloom(docs, "doc_id", "text", bench,
-            shingleN = 8, expectedItems = 20000L, fpp = 0.01,
-            useNative = true)
+            shingleN = 8, expectedItems = 20000L, fpp = 0.01)
           .as[(Long, Long)].collect().toSet
       }
       require(exactRows == bloomRows,

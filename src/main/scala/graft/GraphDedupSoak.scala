@@ -75,7 +75,7 @@ object GraphDedupSoak {
     def edgesOf(docs: DataFrame, cap: Int): DataFrame =
       Dedup.prefixBlockedNearDupPairs(docs, "doc_id", "text",
         prefixLen = 32, shingleN = 3, minJaccard = 0.5,
-        maxBlockSize = cap, useNative = true)
+        maxBlockSize = cap)
 
     // ---- full soak: capped edges + CC at soakN --------------------------
     val docs = soakDocs(spark, soakN, seed = 11L)

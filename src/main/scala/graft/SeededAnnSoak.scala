@@ -60,8 +60,8 @@ object SeededAnnSoak {
       val agg = c.crossJoin(broadcast(q))
         .filter(col("neighbor_id") =!= col("query_id"))
         .select(col("query_id"), col("neighbor_id"),
-          round(Similarity.dotFast(col("qv"), col("cv"), 64,
-            useNative = true) / (col("qn") * col("cn")), 6).as("sim"))
+          round(Similarity.dotNative(col("qv"), col("cv"), 64) /
+            (col("qn") * col("cn")), 6).as("sim"))
         .groupBy("query_id")
         .agg(call_function("graft_top_k", col("sim"), col("neighbor_id"),
           lit(k)).as("t"))

@@ -71,7 +71,7 @@ private[graft] object CurationQueries {
       Dedup.contaminationReport(
           docs.filter(col("doc_id") % 31 =!= 0), "doc_id", "text",
           bench = docs.filter(col("doc_id") % 31 === 0),
-          shingleN = 8, dropPct = 10, useNative = true)
+          shingleN = 8, dropPct = 10)
         .orderBy("doc_id")
     }),
 
@@ -104,8 +104,7 @@ private[graft] object CurationQueries {
       // streaming.ReleasePipeline's micro-batch loop, and
       // ReleasePipelineSpec pins two-micro-batches ≡ this one-batch plan
       val curated = graft.streaming.ReleasePipeline.curate(
-        aug, "doc_id", "text", bench, shingleN = 8, dropPct = 10,
-        useNative = true)
+        aug, "doc_id", "text", bench, shingleN = 8, dropPct = 10)
       graft.streaming.ReleasePipeline.release(curated, "doc_id", "lang",
         budget = 300L, nShards = 4)
     }),
@@ -241,7 +240,7 @@ private[graft] object CurationQueries {
           TextOps.stopwordCount(col("text"), TextOps.Stopwords("en")))
         .filter(col("n_stop") * 25 > col("n_toks")) // ratio > 0.04, int-exact
       val contaminated = Dedup.contaminationHits(cleaned, "doc_id", "text",
-          bench, shingleN = 8, useNative = true).select("doc_id")
+          bench, shingleN = 8).select("doc_id")
       val kept = cleaned.withColumn("h", sha2(col("text"), 256))
         .groupBy("h")
         .agg(min(col("doc_id")).as("doc_id"), min(col("n_toks")).as("n_toks"))
@@ -263,8 +262,7 @@ private[graft] object CurationQueries {
       Dedup.contaminationHitsBloom(
           docs.filter(col("doc_id") % 31 =!= 0), "doc_id", "text",
           bench = docs.filter(col("doc_id") % 31 === 0),
-          shingleN = 8, expectedItems = 200000L, fpp = 0.01,
-          useNative = true)
+          shingleN = 8, expectedItems = 200000L, fpp = 0.01)
         .orderBy("doc_id")
     }),
 
@@ -293,7 +291,7 @@ private[graft] object CurationQueries {
       Dedup.contaminationHits(
           docs.filter(col("doc_id") % 31 =!= 0), "doc_id", "text",
           bench = docs.filter(col("doc_id") % 31 === 0),
-          shingleN = 8, useNative = true)
+          shingleN = 8)
         .orderBy("doc_id")
     }),
 

@@ -57,7 +57,7 @@ private[graft] object DedupQueries {
     "q25_near_dup_jaccard" -> ((s, dir) => {
       Dedup.prefixBlockedNearDupPairs(t(s, dir, "documents"), "doc_id", "text",
           prefixLen = 32, shingleN = 3, minJaccard = 0.5,
-          maxBlockSize = 1000, useNative = true)
+          maxBlockSize = 1000)
         .orderBy("id_a", "id_b")
     }),
 
@@ -69,7 +69,7 @@ private[graft] object DedupQueries {
     "q26_minhash_near_dup" -> ((s, dir) => {
       Dedup.minhashNearDupPairs(t(s, dir, "documents"), "doc_id", "text",
           minJaccard = 0.5, shingleN = 3, k = 64, bands = 16,
-          useNative = true, portable = true)
+          portable = true)
         .orderBy("id_a", "id_b")
     }),
 
@@ -80,7 +80,7 @@ private[graft] object DedupQueries {
     "q27_simhash" -> ((s, dir) => {
       t(s, dir, "documents")
         .select(col("doc_id"),
-          Dedup.simhash64Portable(col("text"), useNative = true).as("s"))
+          Dedup.simhash64Portable(col("text")).as("s"))
         .select(col("doc_id"), col("s.simhash_hi").as("simhash_hi"),
           col("s.simhash_lo").as("simhash_lo"))
         .orderBy("doc_id")
@@ -153,7 +153,7 @@ private[graft] object DedupQueries {
     // native DotExpr per pair — bit-identical, spec-pinned) -------------------
     "q37_cosine_near_dup" -> ((s, dir) => {
       Dedup.cosineNearDupPairsExact(t(s, dir, "embeddings"),
-          "vec_id", "embedding", minCosine = 0.4, useNative = true)
+          "vec_id", "embedding", minCosine = 0.4)
         .orderBy("id_a", "id_b")
     }),
 
@@ -194,7 +194,7 @@ private[graft] object DedupQueries {
       val docs = t(s, dir, "documents")
       val edges = Dedup.prefixBlockedNearDupPairs(docs, "doc_id", "text",
         prefixLen = 32, shingleN = 3, minJaccard = 0.5,
-        maxBlockSize = 1000, useNative = true)
+        maxBlockSize = 1000)
       graft.ext.Graph.connectedComponents(docs, "doc_id", edges, "id_a", "id_b")
         .select(col("id").as("doc_id"), col("component").as("cluster_id"))
         .withColumn("cluster_size",
@@ -211,7 +211,7 @@ private[graft] object DedupQueries {
       val docs = t(s, dir, "documents")
       val edges = Dedup.prefixBlockedNearDupPairs(docs, "doc_id", "text",
         prefixLen = 32, shingleN = 3, minJaccard = 0.5,
-        maxBlockSize = 1000, useNative = true)
+        maxBlockSize = 1000)
       val scored = docs.withColumn("quality",
         TextOps.qualityScore(col("text")))
       Dedup.canonicalDocs(scored, "doc_id", "quality", edges, "id_a", "id_b")

@@ -226,7 +226,7 @@ private[graft] object EntryTables {
   private[entry] def funnelContamStage(corpus: DataFrame,
                                        bench: DataFrame): DataFrame =
     graft.ext.Dedup.contaminationReport(corpus, "doc_id", "text", bench,
-        shingleN = 8, dropPct = 10, useNative = true)
+        shingleN = 8, dropPct = 10)
       .select(col("doc_id"), (!col("dropped")).as("c_ok"))
 
   // ============================================================== oracles

@@ -71,7 +71,7 @@ private[graft] object RetrievalQueries {
         .withColumn("doc", expr("vec_id div 8"))
       val queries = toks.filter(col("doc") % 10 === 0)
       graft.ext.MultiVector.maxSimTopK(toks, queries, "doc", "vec_id",
-          "embedding", k = 5, dim = 64, useNative = true)
+          "embedding", k = 5, dim = 64)
         .orderBy("query_doc", "rank")
     }),
 
@@ -130,7 +130,7 @@ private[graft] object RetrievalQueries {
         .select(col("query_id"), col("doc_id"), col("rank"))
       val dense = Similarity.bruteForceTopK(emb,
           emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-          k = 20, dim = Some(64), useNative = true)
+          k = 20, dim = Some(64))
         .select(col("query_id"), col("neighbor_id").as("doc_id"),
           col("rank"))
       Retrieval.rrfFuse(lex, dense, "query_id", "doc_id", k = 5)
@@ -155,7 +155,7 @@ private[graft] object RetrievalQueries {
           col("bm25_micro"))
       val dense = Similarity.bruteForceTopK(emb,
           emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-          k = 20, dim = Some(64), useNative = true)
+          k = 20, dim = Some(64))
         .select(col("query_id"), col("neighbor_id").as("doc_id"))
       Retrieval.hardNegatives(lex, dense, "query_id", "doc_id")
         .orderBy("query_id", "rank")
@@ -201,7 +201,7 @@ private[graft] object RetrievalQueries {
       def denseLeg(): DataFrame =
         Similarity.bruteForceTopK(emb,
             emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-            k = 20, dim = Some(64), useNative = true)
+            k = 20, dim = Some(64))
           .select(col("query_id"), col("neighbor_id").as("doc_id"),
             col("rank"))
           .localCheckpoint()
@@ -240,7 +240,7 @@ private[graft] object RetrievalQueries {
         .select(col("query_id"), col("doc_id"), col("rank"))
       val dense = Similarity.bruteForceTopK(emb,
           emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-          k = 20, dim = Some(64), useNative = true)
+          k = 20, dim = Some(64))
         .select(col("query_id"), col("neighbor_id").as("doc_id"),
           col("rank"))
       // the fused top-5 feeds BOTH the passage extractor and the final
@@ -273,7 +273,7 @@ private[graft] object RetrievalQueries {
         .filter(col("lang") === "en").drop("lang")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       Similarity.bruteForceTopK(corpus, queries, "vec_id", "embedding",
-          k = 5, dim = Some(64), useNative = true)
+          k = 5, dim = Some(64))
         .orderBy("query_id", "rank")
     }),
 
@@ -310,7 +310,7 @@ private[graft] object RetrievalQueries {
       val (truth, system) = graft.ext.Warehouse.inParallel(
         Similarity.bruteForceTopK(
             emb.join(allowed, Seq("vec_id")), queries, "vec_id",
-            "embedding", k = 5, dim = Some(64), useNative = true)
+            "embedding", k = 5, dim = Some(64))
           .select(col("query_id"), col("neighbor_id"), col("rank"))
           .localCheckpoint(),
         graft.ext.Ivf.ivfFilteredTopKExemplar(emb, queries,
@@ -331,7 +331,7 @@ private[graft] object RetrievalQueries {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       val cands = Similarity.bruteForceTopK(emb, queries, "vec_id",
-          "embedding", k = 10, dim = Some(64), useNative = true)
+          "embedding", k = 10, dim = Some(64))
         .select(col("query_id"), col("neighbor_id"),
           round(col("sim") * 1000000).cast("long").as("rel_micro"))
         .localCheckpoint()
@@ -346,8 +346,8 @@ private[graft] object RetrievalQueries {
         .join(vn.select(col("vec_id").as("id_b"), col("v").as("vb"),
           col("nrm").as("nb")), Seq("id_b"))
         .select(col("query_id"), col("id_a"), col("id_b"),
-          round(Similarity.dotFast(col("va"), col("vb"), 64,
-            useNative = true) / (col("na") * col("nb")) * 1000000)
+          round(Similarity.dotNative(col("va"), col("vb"), 64) /
+            (col("na") * col("nb")) * 1000000)
             .cast("long").as("sim_micro"))
         .localCheckpoint()
       Retrieval.mmrRerank(cands, pairs, "query_id", "neighbor_id", k = 5)

@@ -27,7 +27,7 @@ private[graft] object SimilarityQueries {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 5,
-          dim = Some(64), useNative = true)
+          dim = Some(64))
         .orderBy("query_id", "rank")
     }),
 
@@ -149,7 +149,7 @@ private[graft] object SimilarityQueries {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       Similarity.int8TopK(emb, queries, "vec_id", "embedding", k = 5,
-          dim = 64, candK = 20, useNative = true)
+          dim = 64, candK = 20)
         .orderBy("query_id", "rank")
     }),
 
@@ -166,10 +166,10 @@ private[graft] object SimilarityQueries {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       val exact = Similarity.bruteForceTopK(emb, queries, "vec_id",
-          "embedding", k = 5, dim = Some(64), useNative = true)
+          "embedding", k = 5, dim = Some(64))
         .select(col("query_id"), col("neighbor_id"))
       val approx = Similarity.int8TopK(emb, queries, "vec_id",
-          "embedding", k = 5, dim = 64, candK = 20, useNative = true)
+          "embedding", k = 5, dim = 64, candK = 20)
         .select(col("query_id"), col("neighbor_id"))
       val hits = exact.join(approx, Seq("query_id", "neighbor_id"),
           "left_semi")
@@ -189,7 +189,7 @@ private[graft] object SimilarityQueries {
       val emb = t(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") % 100 === 0)
       Similarity.truncatedTopK(emb, queries, "vec_id", "embedding", k = 5,
-          dim = 64, prefixDim = 16, candK = 20, useNative = true)
+          dim = 64, prefixDim = 16, candK = 20)
         .orderBy("query_id", "rank")
     }),
 

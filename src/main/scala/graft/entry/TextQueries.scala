@@ -3401,9 +3401,10 @@ private[graft] object TextQueries {
     // statistics — the df/idf side aggregates over the whole corpus while
     // staying one lazy plan (broadcast 1-row N, term-keyed shuffles)
     "q48_tfidf_topk" -> ((s, dir) => {
-      TextOps.tfidfTopTerms(t(s, dir, "documents"), "doc_id", "text", k = 5,
-          useNative = true) // graft_top_k ranking — no window sort of the
-        .orderBy("doc_id", "rank") // scored term relation (≡, spec-pinned)
+      // graft_top_k ranking — no window sort of the scored term
+      // relation (≡, spec-pinned)
+      TextOps.tfidfTopTerms(t(s, dir, "documents"), "doc_id", "text", k = 5)
+        .orderBy("doc_id", "rank")
     }),
 
     // ---- repetition quality signals (oracle-checked): top-token share +
@@ -3411,8 +3412,7 @@ private[graft] object TextQueries {
     // Native shingling (bit-identical, spec-pinned) — the HOF bigram path
     // was the catalog's slowest remaining constant (4.8 s at sf0.1).
     "q47_repetition" -> ((s, dir) => {
-      TextOps.repetitionStats(t(s, dir, "documents"), "doc_id", "text",
-          useNative = true)
+      TextOps.repetitionStats(t(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id")
     }),
 

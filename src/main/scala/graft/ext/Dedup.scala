@@ -116,24 +116,24 @@ object Dedup {
   /** Word n-gram shingles (distinct). Documents shorter than `n` tokens
     * yield their whole token sequence as a single shingle.
     *
-    * `useNative = true` routes through `graft.plans.WordShinglesExpr`
-    * (identical output incl. first-occurrence order — spec-pinned;
-    * requires `GraftFunctions.register`): the HOF pays an interpreted
-    * lambda frame + slice allocation per token position — the dominant
-    * remaining constant in the near-dup family. Tokenization stays in
-    * the codegen'd `split` either way.
+    * Runs as the native `graft.plans.WordShinglesExpr` (requires
+    * `GraftFunctions.register`); [[wordShinglesHof]] is its reference
+    * formulation (identical output incl. first-occurrence order —
+    * spec-pinned). Tokenization stays in the codegen'd `split`.
     */
-  def wordShingles(text: Column, n: Int,
-                   useNative: Boolean = false): Column = {
+  def wordShingles(text: Column, n: Int): Column =
+    call_function("graft_word_shingles", TextOps.tokens(text), lit(n))
+
+  /** Reference formulation of [[wordShingles]] as a HOF over the token
+    * array: it pays an interpreted lambda frame + slice allocation per
+    * token position, the constant the native expression removes.
+    */
+  def wordShinglesHof(text: Column, n: Int): Column = {
     val toks = TextOps.tokens(text)
-    if (useNative) {
-      call_function("graft_word_shingles", toks, lit(n))
-    } else {
-      val grams = transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + lit(1), lit(n))))
-      array_distinct(
-        when(size(toks) >= n, grams).otherwise(array(concat_ws(" ", toks))))
-    }
+    val grams = transform(sequence(lit(0), size(toks) - n),
+      i => concat_ws(" ", slice(toks, i + lit(1), lit(n))))
+    array_distinct(
+      when(size(toks) >= n, grams).otherwise(array(concat_ws(" ", toks))))
   }
 
   /** Jaccard similarity of two (distinct-element) arrays, rounded to 6
@@ -186,7 +186,8 @@ object Dedup {
   }
 
   /** Native-expression MinHash signature (tier-(b) Catalyst extension,
-    * `graft.plans.MinHashSigExpr`): bit-identical to `minhashSignature`
+    * `graft.plans.MinHashSigExpr`), the signature every xxhash64 MinHash
+    * operator uses: bit-identical to its reference [[minhashSignature]]
     * but one JVM loop per row instead of k×|shingles| interpreted lambda
     * frames. Requires `GraftFunctions.register(spark)` (or the
     * `graft.plans.GraftExtensions` session extension).
@@ -197,14 +198,18 @@ object Dedup {
   /** Cross-engine-PORTABLE MinHash signature: md5-based shingle hash and
     * md5-derived affine coefficients (closed formula — no PRNG stream),
     * so the exact signature reproduces in any engine with md5 + integer
-    * arithmetic; this is what makes q26 DuckDB-oracle-checkable. Native
-    * path = [[graft.plans.MinHashMd5SigExpr]], bit-identical to this HOF
-    * fold (spec-pinned). The xxhash64 [[minhashSignature]] stays the
+    * arithmetic; this is what makes q26 DuckDB-oracle-checkable. Runs as
+    * the native [[graft.plans.MinHashMd5SigExpr]]; the HOF fold
+    * [[minhashSignaturePortableHof]] is its bit-identical reference
+    * (spec-pinned). The xxhash64 [[minhashSignatureNative]] stays the
     * fastest in-Spark variant.
     */
-  def minhashSignaturePortable(shingles: Column, k: Int,
-                               useNative: Boolean = false): Column = {
-    if (useNative) return call_function("graft_minhash_md5_sig", shingles, lit(k))
+  def minhashSignaturePortable(shingles: Column, k: Int): Column =
+    call_function("graft_minhash_md5_sig", shingles, lit(k))
+
+  /** Reference formulation of [[minhashSignaturePortable]]: the md5
+    * shingle hash and affine permutations as a HOF fold. */
+  def minhashSignaturePortableHof(shingles: Column, k: Int): Column = {
     val p = graft.plans.MinHashMd5SigExpr.P
     val (as, bs) = graft.plans.MinHashMd5SigExpr.coefficients(k)
     val coeffs = array((0 until k).map(i =>
@@ -244,24 +249,18 @@ object Dedup {
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             shingleN: Int = 3, k: Int = 64, bands: Int = 16,
                             maxBucketSize: Int = 1000,
-                            useNative: Boolean = false,
                             portable: Boolean = false): DataFrame = {
-    val sh = wordShingles(col(textCol), shingleN, useNative)
-    val sigExpr =
-      if (portable) minhashSignaturePortable(sh, k, useNative)
-      else if (useNative) minhashSignatureNative(sh, k)
-      else minhashSignature(sh, k)
-    val bandKeys =
-      if (portable) lshBandKeysPortable(col("sig"), k, bands)
-      else lshBandKeys(col("sig"), k, bands)
-    val sig = df.select(col(idCol), sigExpr.as("sig"))
+    val sig = df.select(col(idCol),
+      minhashSigExpr(wordShingles(col(textCol), shingleN), k, portable)
+        .as("sig"))
     // the thin (id, band, bucket) relation has three consumers (the
     // cap aggregate + both self-join branches) and sits on top of the
     // signature computation — cut the plan here so minhashing runs
     // ONCE (the localCheckpoint discipline; without it the cap's
     // aggregate side re-signatured the corpus, measured 1.85× on q26)
     val buckets = sig.select(col(idCol),
-        posexplode(bandKeys).as(Seq("band", "bucket")))
+        posexplode(minhashBandExpr(col("sig"), k, bands, portable))
+          .as(Seq("band", "bucket")))
       .localCheckpoint()
     // degenerate-bucket cap as a map-side-combining AGGREGATE over the
     // (band, bucket) key + semi-join back — never a count window: a
@@ -290,12 +289,11 @@ object Dedup {
   def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           minJaccard: Double, shingleN: Int = 3,
                           k: Int = 64, bands: Int = 16,
-                          useNative: Boolean = false,
                           portable: Boolean = false): DataFrame = {
     val cands = minhashCandidatePairs(df, idCol, textCol, shingleN, k, bands,
-      useNative = useNative, portable = portable)
+      portable = portable)
     val sh = df.select(col(idCol),
-      wordShingles(col(textCol), shingleN, useNative).as("sh"))
+      wordShingles(col(textCol), shingleN).as("sh"))
     cands
       .join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
@@ -305,11 +303,10 @@ object Dedup {
 
   // ------------------------------------------------ persisted minhash index
 
-  private[ext] def minhashSigExpr(sh: Column, k: Int, useNative: Boolean,
-                             portable: Boolean): Column =
-    if (portable) minhashSignaturePortable(sh, k, useNative)
-    else if (useNative) minhashSignatureNative(sh, k)
-    else minhashSignature(sh, k)
+  private[ext] def minhashSigExpr(sh: Column, k: Int,
+                                  portable: Boolean): Column =
+    if (portable) minhashSignaturePortable(sh, k)
+    else minhashSignatureNative(sh, k)
 
   private[ext] def minhashBandExpr(sig: Column, k: Int, bands: Int,
                               portable: Boolean): Column =
@@ -331,12 +328,11 @@ object Dedup {
   def writeMinhashIndex(df: DataFrame, idCol: String, textCol: String,
                         table: String, shingleN: Int = 3, k: Int = 64,
                         bands: Int = 16, nBuckets: Int = 32,
-                        useNative: Boolean = false,
                         portable: Boolean = false): Unit = {
     val based = df.select(col(idCol),
-      wordShingles(col(textCol), shingleN, useNative).as("sh"))
+      wordShingles(col(textCol), shingleN).as("sh"))
     based
-      .select(col(idCol), minhashSigExpr(col("sh"), k, useNative, portable)
+      .select(col(idCol), minhashSigExpr(col("sh"), k, portable)
         .as("sig"))
       .select(col(idCol),
         posexplode(minhashBandExpr(col("sig"), k, bands, portable))
@@ -354,8 +350,8 @@ object Dedup {
     // the hyperparameters DEFINE the signature/band-key family: persist
     // them so probes/appends/repairs can fail loudly on a mismatch
     // instead of silently writing or matching under the wrong family
-    Seq((shingleN, k, bands, useNative, portable))
-      .toDF("shingle_n", "k", "bands", "use_native", "portable")
+    Seq((shingleN, k, bands, portable))
+      .toDF("shingle_n", "k", "bands", "portable")
       .coalesce(1)
       .write.mode("overwrite").saveAsTable(s"${table}_meta")
   }
@@ -366,14 +362,18 @@ object Dedup {
     * run under exactly these values; a mismatch produces band keys from
     * a DIFFERENT family that never error, just never match (or, for a
     * repair, postings that disagree with every future probe while the
-    * structural audit stays self-consistently green).
+    * structural audit stays self-consistently green). Native and
+    * reference signatures are bit-identical, so how a signature is
+    * computed is not part of the family.
     */
   final case class MinhashMeta(shingleN: Int, k: Int, bands: Int,
-                               useNative: Boolean, portable: Boolean)
+                               portable: Boolean)
 
   /** The [[MinhashMeta]] persisted with the index at `table`; `None`
     * for indexes written before the sidecar existed (callers then rely
     * on supplying the build-time values, the pre-meta contract).
+    * Columns are read by name, so an older sidecar that also carries a
+    * `use_native` column loads the same.
     */
   def loadMinhashMeta(spark: org.apache.spark.sql.SparkSession,
                       table: String): Option[MinhashMeta] =
@@ -381,8 +381,7 @@ object Dedup {
     else {
       val r = spark.table(s"${table}_meta").head()
       Some(MinhashMeta(r.getAs[Int]("shingle_n"), r.getAs[Int]("k"),
-        r.getAs[Int]("bands"), r.getAs[Boolean]("use_native"),
-        r.getAs[Boolean]("portable")))
+        r.getAs[Int]("bands"), r.getAs[Boolean]("portable")))
     }
 
   /** Fail loudly when `supplied` doesn't match the index's persisted
@@ -410,21 +409,21 @@ object Dedup {
     */
   def appendToMinhashIndex(df: DataFrame, idCol: String, textCol: String,
                            table: String, shingleN: Int = 3, k: Int = 64,
-                           bands: Int = 16, useNative: Boolean = false,
+                           bands: Int = 16,
                            portable: Boolean = false): Unit = {
     requireMinhashMeta(df.sparkSession, table,
-      MinhashMeta(shingleN, k, bands, useNative, portable), "append")
+      MinhashMeta(shingleN, k, bands, portable), "append")
     // This is the per-batch hot path of the continuous-ingest loop: the
     // shingled batch feeds BOTH writes, so cache it for their duration —
     // one source scan and one shingle computation per ingest cycle, not
     // two (the band write materializes the cache; the sidecar write
     // reads it back).
     val based = df.select(col(idCol),
-        wordShingles(col(textCol), shingleN, useNative).as("sh"))
+        wordShingles(col(textCol), shingleN).as("sh"))
       .persist()
     try {
       based
-        .select(col(idCol), minhashSigExpr(col("sh"), k, useNative, portable)
+        .select(col(idCol), minhashSigExpr(col("sh"), k, portable)
           .as("sig"))
         .select(col(idCol),
           posexplode(minhashBandExpr(col("sig"), k, bands, portable))
@@ -450,14 +449,13 @@ object Dedup {
                           textCol: String, minJaccard: Double,
                           shingleN: Int = 3, k: Int = 64, bands: Int = 16,
                           maxBucketSize: Int = 1000,
-                          useNative: Boolean = false,
                           portable: Boolean = false): DataFrame = {
     requireMinhashMeta(spark, table,
-      MinhashMeta(shingleN, k, bands, useNative, portable), "probe")
+      MinhashMeta(shingleN, k, bands, portable), "probe")
     val batch = newDocs.select(col(idCol).as("id_new"),
-        wordShingles(col(textCol), shingleN, useNative).as("sh_new"))
+        wordShingles(col(textCol), shingleN).as("sh_new"))
       .select(col("id_new"), col("sh_new"),
-        minhashSigExpr(col("sh_new"), k, useNative, portable).as("sig"))
+        minhashSigExpr(col("sh_new"), k, portable).as("sig"))
     val batchBands = batch.select(col("id_new"),
       posexplode(minhashBandExpr(col("sig"), k, bands, portable))
         .as(Seq("band", "bucket")))
@@ -505,13 +503,12 @@ object Dedup {
   def prefixBlockedNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                                 prefixLen: Int, shingleN: Int,
                                 minJaccard: Double,
-                                maxBlockSize: Int = Int.MaxValue,
-                                useNative: Boolean = false): DataFrame = {
+                                maxBlockSize: Int = Int.MaxValue): DataFrame = {
     // shingles computed once per document BEFORE the pair join — a doc in
     // m pairs would otherwise re-shingle m times
     val keyed = df.select(col(idCol),
       substring(col(textCol), 1, prefixLen).as("block"),
-      wordShingles(col(textCol), shingleN, useNative).as("sh"))
+      wordShingles(col(textCol), shingleN).as("sh"))
     // block sizes as a map-side-combining AGGREGATE over (block) alone
     // + semi-join back — never a count window, which would sort every
     // boilerplate block's rows WITH their shingle arrays on one task
@@ -848,12 +845,11 @@ object Dedup {
     * at scale the contaminated set is tiny relative to the corpus.
     */
   def contaminationHits(docs: DataFrame, idCol: String, textCol: String,
-                        bench: DataFrame, shingleN: Int = 8,
-                        useNative: Boolean = false): DataFrame = {
+                        bench: DataFrame, shingleN: Int = 8): DataFrame = {
     val docSh = docs.select(col(idCol),
-      explode(wordShingles(col(textCol), shingleN, useNative)).as("sh"))
+      explode(wordShingles(col(textCol), shingleN)).as("sh"))
     val benchSh = bench
-      .select(explode(wordShingles(col(textCol), shingleN, useNative)).as("sh"))
+      .select(explode(wordShingles(col(textCol), shingleN)).as("sh"))
       .distinct()
     docSh.join(benchSh, "sh")
       .groupBy(col(idCol))
@@ -887,13 +883,12 @@ object Dedup {
   def contaminationHitsBloom(docs: DataFrame, idCol: String, textCol: String,
                              bench: DataFrame, shingleN: Int = 8,
                              expectedItems: Long = 100000L,
-                             fpp: Double = 0.01,
-                             useNative: Boolean = false): DataFrame = {
+                             fpp: Double = 0.01): DataFrame = {
     // persisted: the sketch-building ACTION below materializes benchSh
     // once, and the exact verify join then reuses the cached blocks
     // instead of re-running the bench scan + shingle + distinct shuffle
     val benchSh = bench
-      .select(explode(wordShingles(col(textCol), shingleN, useNative)).as("sh"))
+      .select(explode(wordShingles(col(textCol), shingleN)).as("sh"))
       .distinct()
       .persist()
     val bf = benchSh.stat.bloomFilter("sh", expectedItems, fpp)
@@ -903,7 +898,7 @@ object Dedup {
       bos.toByteArray
     }
     val docSh = docs.select(col(idCol),
-        explode(wordShingles(col(textCol), shingleN, useNative)).as("sh"))
+        explode(wordShingles(col(textCol), shingleN)).as("sh"))
       .filter(call_function("graft_bloom_contains", col("sh"), lit(bytes)))
     docSh.join(benchSh, "sh")
       .groupBy(col(idCol))
@@ -936,13 +931,12 @@ object Dedup {
     */
   def contaminationReport(docs: DataFrame, idCol: String, textCol: String,
                           bench: DataFrame, shingleN: Int = 8,
-                          dropPct: Int = 10,
-                          useNative: Boolean = false): DataFrame = {
+                          dropPct: Int = 10): DataFrame = {
     require(dropPct >= 0 && dropPct <= 100, s"dropPct in [0,100]: $dropPct")
     val docSh = docs.select(col(idCol),
-      explode(wordShingles(col(textCol), shingleN, useNative)).as("sh"))
+      explode(wordShingles(col(textCol), shingleN)).as("sh"))
     val benchSh = bench
-      .select(explode(wordShingles(col(textCol), shingleN, useNative))
+      .select(explode(wordShingles(col(textCol), shingleN))
         .as("sh"))
       .distinct()
       .withColumn("__hit", lit(1))
@@ -961,35 +955,36 @@ object Dedup {
     * vote +1/-1 into 64 counters; the sign vector folds into one long.
     * Near-duplicates land within small Hamming distance. One projection.
     *
-    * `useNative = true` routes the vote fold through the native
-    * `graft.plans.SimHash64Expr` (bit-identical — spec-pinned; requires
-    * `GraftFunctions.register(spark)`): the HOF fold allocates a
-    * 64-element vote array and 64 interpreted lambda frames PER TOKEN,
-    * the native loop hashes each token once into a local int[64].
-    * Tokenization stays in the codegen'd `split` either way.
+    * Runs as the native `graft.plans.SimHash64Expr` (requires
+    * `GraftFunctions.register(spark)`): one loop hashes each token once
+    * into a local int[64]. [[simhash64Hof]] is its bit-identical
+    * reference (spec-pinned). Tokenization stays in the codegen'd
+    * `split`.
     */
-  def simhash64(text: Column, useNative: Boolean = false): Column = {
-    if (useNative) {
-      call_function("graft_simhash64", TextOps.tokens(text))
-    } else {
-      val bitsOf: Column => Column = t =>
-        array((0 until 64).map(b =>
-          when(shiftright(xxhash64(t), b).bitwiseAND(lit(1L)) === 1L, 1L)
-            .otherwise(-1L)): _*)
-      // null token = no vote (when(t.isNull, acc)): the MinHash null
-      // no-op convention, bit-identical to the native expr's skip
-      val counters = aggregate(
-        TextOps.tokens(text),
-        array_repeat(lit(0L), 64),
-        (acc, t) => when(t.isNull, acc)
-          .otherwise(zip_with(acc, bitsOf(t), (x, y) => x + y)))
-      // assemble sign bits into one long with shift/OR (bit ops — no
-      // ANSI-mode overflow checks, unlike a *2+bit fold)
-      (0 until 64).map(i =>
-        when(element_at(counters, i + 1) > 0, shiftleft(lit(1L), i))
-          .otherwise(0L))
-        .reduce((a, b) => a.bitwiseOR(b))
-    }
+  def simhash64(text: Column): Column =
+    call_function("graft_simhash64", TextOps.tokens(text))
+
+  /** Reference formulation of [[simhash64]] as a HOF vote fold: it
+    * allocates a 64-element vote array and 64 interpreted lambda frames
+    * PER TOKEN. */
+  def simhash64Hof(text: Column): Column = {
+    val bitsOf: Column => Column = t =>
+      array((0 until 64).map(b =>
+        when(shiftright(xxhash64(t), b).bitwiseAND(lit(1L)) === 1L, 1L)
+          .otherwise(-1L)): _*)
+    // null token = no vote (when(t.isNull, acc)): the MinHash null
+    // no-op convention, bit-identical to the native expr's skip
+    val counters = aggregate(
+      TextOps.tokens(text),
+      array_repeat(lit(0L), 64),
+      (acc, t) => when(t.isNull, acc)
+        .otherwise(zip_with(acc, bitsOf(t), (x, y) => x + y)))
+    // assemble sign bits into one long with shift/OR (bit ops — no
+    // ANSI-mode overflow checks, unlike a *2+bit fold)
+    (0 until 64).map(i =>
+      when(element_at(counters, i + 1) > 0, shiftleft(lit(1L), i))
+        .otherwise(0L))
+      .reduce((a, b) => a.bitwiseOR(b))
   }
 
   /** Hamming distance between two 64-bit fingerprints. */
@@ -1001,44 +996,45 @@ object Dedup {
     * always non-negative, so no engine's signed-64 shift/overflow rules
     * are in play. Same vote fold and strict `counter > 0` sign rule as
     * [[simhash64]]; Hamming distance = `hamming64(hi_a, hi_b) +
-    * hamming64(lo_a, lo_b)`. The native path
-    * ([[graft.plans.SimHashMd5Expr]]) is bit-identical to the HOF
-    * (spec-pinned) and to the DuckDB formulation (q27's oracle).
+    * hamming64(lo_a, lo_b)`. Runs as the native
+    * [[graft.plans.SimHashMd5Expr]], bit-identical to the reference
+    * [[simhash64PortableHof]] (spec-pinned) and to the DuckDB
+    * formulation (q27's oracle).
     */
-  def simhash64Portable(text: Column, useNative: Boolean = false): Column = {
-    if (useNative) {
-      call_function("graft_simhash_md5", TextOps.tokens(text))
-    } else {
-      // per-token (hi, lo): big-endian values of md5 hex digits 1-8 / 9-16
-      val hashOf: Column => Column = t => {
-        val m = md5(t)
-        struct(conv(substring(m, 1, 8), 16, 10).cast("long").as("hi"),
-          conv(substring(m, 9, 8), 16, 10).cast("long").as("lo"))
-      }
-      val bitsOf: Column => Column = h =>
-        array(((0 until 32).map(b =>
-          when(shiftright(h.getField("lo"), b).bitwiseAND(lit(1L)) === 1L, 1L)
-            .otherwise(-1L)) ++
-          (0 until 32).map(b =>
-            when(shiftright(h.getField("hi"), b).bitwiseAND(lit(1L)) === 1L, 1L)
-              .otherwise(-1L))): _*)
-      // null token = no vote, same skip as the native SimHashMd5Expr and
-      // any engine's unnest (which omits null rows)
-      val counters = aggregate(
-        TextOps.tokens(text),
-        array_repeat(lit(0L), 64),
-        (acc, t) => when(t.isNull, acc)
-          .otherwise(zip_with(acc, bitsOf(hashOf(t)), (x, y) => x + y)))
-      val loSig = (0 until 32).map(b =>
-        when(element_at(counters, b + 1) > 0, shiftleft(lit(1L), b))
-          .otherwise(0L))
-        .reduce((a, b) => a.bitwiseOR(b))
-      val hiSig = (0 until 32).map(b =>
-        when(element_at(counters, b + 33) > 0, shiftleft(lit(1L), b))
-          .otherwise(0L))
-        .reduce((a, b) => a.bitwiseOR(b))
-      struct(hiSig.as("simhash_hi"), loSig.as("simhash_lo"))
+  def simhash64Portable(text: Column): Column =
+    call_function("graft_simhash_md5", TextOps.tokens(text))
+
+  /** Reference formulation of [[simhash64Portable]] as a HOF vote fold. */
+  def simhash64PortableHof(text: Column): Column = {
+    // per-token (hi, lo): big-endian values of md5 hex digits 1-8 / 9-16
+    val hashOf: Column => Column = t => {
+      val m = md5(t)
+      struct(conv(substring(m, 1, 8), 16, 10).cast("long").as("hi"),
+        conv(substring(m, 9, 8), 16, 10).cast("long").as("lo"))
     }
+    val bitsOf: Column => Column = h =>
+      array(((0 until 32).map(b =>
+        when(shiftright(h.getField("lo"), b).bitwiseAND(lit(1L)) === 1L, 1L)
+          .otherwise(-1L)) ++
+        (0 until 32).map(b =>
+          when(shiftright(h.getField("hi"), b).bitwiseAND(lit(1L)) === 1L, 1L)
+            .otherwise(-1L))): _*)
+    // null token = no vote, same skip as the native SimHashMd5Expr and
+    // any engine's unnest (which omits null rows)
+    val counters = aggregate(
+      TextOps.tokens(text),
+      array_repeat(lit(0L), 64),
+      (acc, t) => when(t.isNull, acc)
+        .otherwise(zip_with(acc, bitsOf(hashOf(t)), (x, y) => x + y)))
+    val loSig = (0 until 32).map(b =>
+      when(element_at(counters, b + 1) > 0, shiftleft(lit(1L), b))
+        .otherwise(0L))
+      .reduce((a, b) => a.bitwiseOR(b))
+    val hiSig = (0 until 32).map(b =>
+      when(element_at(counters, b + 33) > 0, shiftleft(lit(1L), b))
+        .otherwise(0L))
+      .reduce((a, b) => a.bitwiseOR(b))
+    struct(hiSig.as("simhash_hi"), loSig.as("simhash_lo"))
   }
 
   // ------------------------------------------- embedding-cosine near-dup
@@ -1049,8 +1045,7 @@ object Dedup {
     * scale.
     */
   def cosineNearDupPairsExact(emb: DataFrame, idCol: String, vecCol: String,
-                              minCosine: Double, dim: Int = 64,
-                              useNative: Boolean = false): DataFrame = {
+                              minCosine: Double, dim: Int = 64): DataFrame = {
     // norms computed ONCE per vector (n rows), not once per pair (n²);
     // the per-pair work is a single unrolled codegen'd dot product.
     // The repartition is a deliberate optimization BARRIER, not a
@@ -1069,7 +1064,7 @@ object Dedup {
       col("nrm").as("nb"))
     a.crossJoin(b).filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(Similarity.dotFast(col("va"), col("vb"), dim, useNative) /
+        round(Similarity.dotNative(col("va"), col("vb"), dim) /
           (col("na") * col("nb")), 6).as("cosine"))
       .filter(col("cosine") >= minCosine)
   }
@@ -1095,8 +1090,7 @@ object Dedup {
   def semanticDedupKeptIds(emb: DataFrame, idCol: String, vecCol: String,
                            minCosine: Double, nList: Int = 64,
                            dim: Int = 64, sampleSize: Int = 20000,
-                           iters: Int = 10,
-                           useNative: Boolean = true): DataFrame = {
+                           iters: Int = 10): DataFrame = {
     val centroids = Ivf.trainCentroids(emb, vecCol, nList, dim,
       sampleSize, iters)
     val assigned = emb.select(col(idCol),
@@ -1110,7 +1104,7 @@ object Dedup {
       col("v").as("vb"), col("nrm").as("nb"))
     val dropped = a.join(b, "list")
       .filter(col("id_a") < col("id_b"))
-      .filter(round(Similarity.dotFast(col("va"), col("vb"), dim, useNative) /
+      .filter(round(Similarity.dotNative(col("va"), col("vb"), dim) /
         (col("na") * col("nb")), 6) >= minCosine)
       .select(col("id_b").as(idCol)).distinct()
     emb.select(col(idCol)).join(dropped, Seq(idCol), "left_anti")
@@ -1144,26 +1138,22 @@ object Dedup {
   def semanticDedupKeptIdsSeeded(emb: DataFrame, idCol: String,
                                  vecCol: String, minCosine: Double,
                                  nList: Int = 8, iters: Int = 2,
-                                 dim: Int = 64,
-                                 useNative: Boolean = true): DataFrame = {
-    val ids = Ivf.kppSeedIds(emb, idCol, vecCol, nList, dim,
-      useNative = useNative)
+                                 dim: Int = 64): DataFrame = {
+    val ids = Ivf.kppSeedIds(emb, idCol, vecCol, nList, dim)
     val withNorm = Similarity.withVecNorm(emb, idCol, vecCol)
       .repartition(col(idCol))
     val seeds = withNorm.filter(col(idCol).isin(ids: _*))
       .select(col(idCol).as("cid"), col("v").as("cvec"),
         col("nrm").as("cnrm"))
     val cents = Ivf.assembleCentroids(
-        Ivf.lloydIterateFrom(withNorm, seeds, idCol, iters, dim, useNative))
+        Ivf.lloydIterateFrom(withNorm, seeds, idCol, iters, dim))
       .localCheckpoint()
-    semanticDedupWithCents(emb, withNorm, cents, idCol, minCosine, dim,
-      useNative)
+    semanticDedupWithCents(emb, withNorm, cents, idCol, minCosine, dim)
   }
 
   def semanticDedupKeptIdsExemplar(emb: DataFrame, idCol: String,
                                    vecCol: String, minCosine: Double,
-                                   k: Int = 8, dim: Int = 64,
-                                   useNative: Boolean = true): DataFrame = {
+                                   k: Int = 8, dim: Int = 64): DataFrame = {
     // same per-vector norm precompute + optimization barrier as
     // cosineNearDupPairsExact (the unrolled dot must not re-derive
     // norms per pair)
@@ -1172,8 +1162,7 @@ object Dedup {
     val cents = withNorm.orderBy(col(idCol)).limit(k)
       .select(col(idCol).as("cid"), col("v").as("cvec"),
         col("nrm").as("cnrm"))
-    semanticDedupWithCents(emb, withNorm, cents, idCol, minCosine, dim,
-      useNative)
+    semanticDedupWithCents(emb, withNorm, cents, idCol, minCosine, dim)
   }
 
   /** The shared cluster-then-dedup-within-cluster tail under an
@@ -1182,11 +1171,10 @@ object Dedup {
     */
   private def semanticDedupWithCents(emb: DataFrame, withNorm: DataFrame,
                                      cents: DataFrame, idCol: String,
-                                     minCosine: Double, dim: Int,
-                                     useNative: Boolean): DataFrame = {
+                                     minCosine: Double, dim: Int): DataFrame = {
     val scored = withNorm.crossJoin(broadcast(cents))
       .select(col(idCol), col("v"), col("nrm"), col("cid"),
-        round(Similarity.dotFast(col("v"), col("cvec"), dim, useNative) /
+        round(Similarity.dotNative(col("v"), col("cvec"), dim) /
           (col("nrm") * col("cnrm")), 6).as("sim"))
     val wAssign = Window.partitionBy(idCol)
       .orderBy(col("sim").desc, col("cid"))
@@ -1200,7 +1188,7 @@ object Dedup {
       col("v").as("vb"), col("nrm").as("nb"))
     val dropped = a.join(b, "cid")
       .filter(col("id_a") < col("id_b"))
-      .filter(round(Similarity.dotFast(col("va"), col("vb"), dim, useNative) /
+      .filter(round(Similarity.dotNative(col("va"), col("vb"), dim) /
         (col("na") * col("nb")), 6) >= minCosine)
       .select(col("id_b").as(idCol)).distinct()
     emb.select(col(idCol)).join(dropped, Seq(idCol), "left_anti")
@@ -1215,15 +1203,11 @@ object Dedup {
   def cosineNearDupPairsLsh(emb: DataFrame, idCol: String, vecCol: String,
                             minCosine: Double, nPlanes: Int = 6,
                             nTables: Int = 8, seed: Long = 42L,
-                            dim: Int = 64,
-                            useNative: Boolean = false): DataFrame = {
-    val tables = (0 until nTables).map(t =>
-      t -> Similarity.hyperplanes(nPlanes, dim, seed + t))
-    val keys = array(tables.map { case (t, planes) =>
+                            dim: Int = 64): DataFrame = {
+    val keys = array((0 until nTables).map { t =>
       struct(lit(t).as("tbl"),
-        (if (useNative)
-           Similarity.rhpSignatureNative(col(vecCol), nPlanes, dim, seed + t)
-         else Similarity.rhpSignature(col(vecCol), planes)).as("bucket"))
+        Similarity.rhpSignatureNative(col(vecCol), nPlanes, dim, seed + t)
+          .as("bucket"))
     }: _*)
     val keyed = emb.select(col(idCol), col(vecCol), explode(keys).as("key"))
     val a = keyed.select(col("key"), col(idCol).as("id_a"))
@@ -1239,7 +1223,7 @@ object Dedup {
       .join(vecs.select(col(idCol).as("id_b"), col("v").as("vb"),
         col("nrm").as("nb")), "id_b")
       .select(col("id_a"), col("id_b"),
-        round(Similarity.dotFast(col("va"), col("vb"), dim, useNative) /
+        round(Similarity.dotNative(col("va"), col("vb"), dim) /
           (col("na") * col("nb")), 6).as("cosine"))
       .filter(col("cosine") >= minCosine)
   }
@@ -1264,8 +1248,7 @@ object Dedup {
   def cosineNearDupPairsLshPortableMulti(emb: DataFrame, idCol: String,
                                          vecCol: String, minCosine: Double,
                                          nTables: Int = 4, nPlanes: Int = 6,
-                                         dim: Int = 64,
-                                         useNative: Boolean = true)
+                                         dim: Int = 64)
       : DataFrame = {
     val base = Similarity.withVecNorm(emb, idCol, vecCol)
       .withColumn("sigs", array((0 until nTables).map(t =>
@@ -1280,7 +1263,7 @@ object Dedup {
       col("v").as("vb"), col("nrm").as("nb"))
     a.join(b, Seq("tbl", "sig")).filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(Similarity.dotFast(col("va"), col("vb"), dim, useNative) /
+        round(Similarity.dotNative(col("va"), col("vb"), dim) /
           (col("na") * col("nb")), 6).as("cosine"))
       .filter(col("cosine") >= minCosine)
       .distinct()
@@ -1288,8 +1271,8 @@ object Dedup {
 
   def cosineNearDupPairsLshPortable(emb: DataFrame, idCol: String,
                                     vecCol: String, minCosine: Double,
-                                    nPlanes: Int = 4, dim: Int = 64,
-                                    useNative: Boolean = true): DataFrame = {
+                                    nPlanes: Int = 4,
+                                    dim: Int = 64): DataFrame = {
     val planes = Similarity.portablePlanes(nPlanes, dim)
     // norms + signature once per row behind an optimization barrier
     // (the exemplar-family pattern: a collapsed projection would
@@ -1303,7 +1286,7 @@ object Dedup {
       col("v").as("vb"), col("nrm").as("nb"))
     a.join(b, "sig").filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(Similarity.dotFast(col("va"), col("vb"), dim, useNative) /
+        round(Similarity.dotNative(col("va"), col("vb"), dim) /
           (col("na") * col("nb")), 6).as("cosine"))
       .filter(col("cosine") >= minCosine)
   }

@@ -409,22 +409,20 @@ object IndexAudit {
     */
   def repairMinhashPostings(spark: SparkSession, table: String,
                             idCol: String, k: Int = 64, bands: Int = 16,
-                            useNative: Boolean = false,
                             portable: Boolean = false): Unit = {
     // shingleN lives only in the sidecar contents (already shingled),
     // so the repair checks the signature-family half of the meta
     Dedup.loadMinhashMeta(spark, table).foreach { m =>
-      require(m.k == k && m.bands == bands && m.useNative == useNative &&
-        m.portable == portable,
+      require(m.k == k && m.bands == bands && m.portable == portable,
         s"repair of $table under (k=$k, bands=$bands, " +
-          s"useNative=$useNative, portable=$portable), but the index " +
+          s"portable=$portable), but the index " +
           s"was built with $m — the rewrite would be a silent " +
           s"signature-family corruption. Pass the build-time values.")
     }
     writeBucketed(
       spark.table(s"${table}_shingles")
         .select(col(idCol),
-          Dedup.minhashSigExpr(col("sh"), k, useNative, portable).as("sig"))
+          Dedup.minhashSigExpr(col("sh"), k, portable).as("sig"))
         .select(col(idCol),
           posexplode(Dedup.minhashBandExpr(col("sig"), k, bands, portable))
             .as(Seq("band", "bucket")))

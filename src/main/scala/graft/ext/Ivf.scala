@@ -194,13 +194,11 @@ object Ivf {
     // NO distinct here: each corpus vector lives in exactly one list and
     // probe lists are distinct by construction, so a (query, neighbor)
     // pair cannot repeat — a dedup would add a full shuffle over the
-    // largest intermediate for nothing. Rerank is shared with LSH
-    // (registration is already a precondition, so the native dot is on).
+    // largest intermediate for nothing. Rerank is shared with LSH.
     val cands = c.join(q, "list")
       .filter(col("neighbor_id") =!= col("query_id"))
       .select("query_id", "neighbor_id")
-    Similarity.rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim,
-      useNative = true)
+    Similarity.rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim)
   }
 
   /** [[ivfTopK]] with EXEMPLAR centroids — the `nList` lowest-id corpus
@@ -224,11 +222,10 @@ object Ivf {
     */
   def ivfTopKExemplar(corpus: DataFrame, queries: DataFrame, idCol: String,
                       vecCol: String, k: Int, nList: Int = 8, nProbe: Int = 2,
-                      dim: Int = 64, useNative: Boolean = true): DataFrame = {
+                      dim: Int = 64): DataFrame = {
     val cands = exemplarCandidates(corpus, queries, idCol, vecCol, nList,
-      nProbe, dim, useNative)
-    Similarity.rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim,
-      useNative)
+      nProbe, dim)
+    Similarity.rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim)
   }
 
   /** Filtered ANN over a SHARED index, exemplar member: the index
@@ -247,14 +244,12 @@ object Ivf {
   def ivfFilteredTopKExemplar(corpus: DataFrame, queries: DataFrame,
                               idCol: String, vecCol: String,
                               allowed: DataFrame, k: Int, nList: Int = 8,
-                              nProbe: Int = 2, dim: Int = 64,
-                              useNative: Boolean = true): DataFrame = {
+                              nProbe: Int = 2, dim: Int = 64): DataFrame = {
     val cands = exemplarCandidates(corpus, queries, idCol, vecCol, nList,
-        nProbe, dim, useNative)
+        nProbe, dim)
       .join(broadcast(allowed.select(col(idCol).as("neighbor_id"))),
         Seq("neighbor_id"), "left_semi")
-    Similarity.rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim,
-      useNative)
+    Similarity.rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim)
   }
 
   /** The exemplar-IVF candidate relation (query_id, neighbor_id):
@@ -264,8 +259,8 @@ object Ivf {
     */
   private[ext] def exemplarCandidates(corpus: DataFrame, queries: DataFrame,
                                       idCol: String, vecCol: String,
-                                      nList: Int, nProbe: Int, dim: Int,
-                                      useNative: Boolean): DataFrame = {
+                                      nList: Int, nProbe: Int,
+                                      dim: Int): DataFrame = {
     // norms once per row behind an optimization barrier (the shared
     // exemplar-family pattern — see Similarity.withVecNorm), and the
     // barrier's hash partitioning on id is exactly what the argmax
@@ -275,8 +270,7 @@ object Ivf {
     val base = prep(corpus)
     val cents = base.orderBy(col(idCol)).limit(nList)
       .select(col(idCol).as("cid"), col("v").as("cvec"), col("nrm").as("cnrm"))
-    centroidCandidates(base, prep(queries), cents, idCol, nProbe, dim,
-      useNative)
+    centroidCandidates(base, prep(queries), cents, idCol, nProbe, dim)
   }
 
   /** The candidate relation (query_id, neighbor_id) under an ARBITRARY
@@ -289,12 +283,11 @@ object Ivf {
     */
   private[ext] def centroidCandidates(base: DataFrame, qbase: DataFrame,
                                       cents: DataFrame, idCol: String,
-                                      nProbe: Int, dim: Int,
-                                      useNative: Boolean): DataFrame = {
+                                      nProbe: Int, dim: Int): DataFrame = {
     def nearestLists(src: DataFrame, keep: Int, outId: String): DataFrame = {
       val scored = src.crossJoin(broadcast(cents))
         .select(col(idCol), col("cid"),
-          round(Similarity.dotFast(col("v"), col("cvec"), dim, useNative) /
+          round(Similarity.dotNative(col("v"), col("cvec"), dim) /
             (col("nrm") * col("cnrm")), 6).as("sim"))
       if (keep == 1)
         // the corpus-side assignment — argmax as a partial aggregate
@@ -326,22 +319,19 @@ object Ivf {
     */
   def ivfTopKSeeded(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, k: Int, nList: Int = 8, nProbe: Int = 2,
-                    iters: Int = 2, dim: Int = 64,
-                    useNative: Boolean = true): DataFrame = {
-    val ids = kppSeedIds(corpus, idCol, vecCol, nList, dim,
-      useNative = useNative)
+                    iters: Int = 2, dim: Int = 64): DataFrame = {
+    val ids = kppSeedIds(corpus, idCol, vecCol, nList, dim)
     def prep(df: DataFrame) =
       Similarity.withVecNorm(df, idCol, vecCol).repartition(col(idCol))
     val base = prep(corpus)
     val seeds = base.filter(col(idCol).isin(ids: _*))
       .select(col(idCol).as("cid"), col("v").as("cvec"), col("nrm").as("cnrm"))
     val cents = assembleCentroids(
-        lloydIterateFrom(base, seeds, idCol, iters, dim, useNative))
+        lloydIterateFrom(base, seeds, idCol, iters, dim))
       .localCheckpoint()
     val cands = centroidCandidates(base, prep(queries), cents, idCol,
-      nProbe, dim, useNative)
-    Similarity.rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim,
-      useNative)
+      nProbe, dim)
+    Similarity.rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim)
   }
 
   /** IVF × int8 composition, exemplar member (q121): candidates come
@@ -357,20 +347,16 @@ object Ivf {
   def ivfInt8TopKExemplar(corpus: DataFrame, queries: DataFrame,
                           idCol: String, vecCol: String, k: Int,
                           nList: Int = 8, nProbe: Int = 2, dim: Int = 64,
-                          candK: Int = 20,
-                          useNative: Boolean = true): DataFrame = {
+                          candK: Int = 20): DataFrame = {
     val cands = exemplarCandidates(corpus, queries, idCol, vecCol, nList,
-      nProbe, dim, useNative)
+      nProbe, dim)
     val c8 = Similarity.withInt8(corpus, idCol, vecCol)
       .select(col(idCol).as("neighbor_id"), col("nrm").as("cn"),
         col("qmax").as("cmax"), col("qvec").as("cq"))
     val q8 = Similarity.withInt8(queries, idCol, vecCol)
       .select(col(idCol).as("query_id"), col("nrm").as("qn"),
         col("qmax").as("qmaxv"), col("qvec").as("qq"))
-    val idot =
-      if (useNative) call_function("graft_dot_i8", col("qq"), col("cq"),
-        lit(dim))
-      else Similarity.dotInt8(col("qq"), col("cq"))
+    val idot = Similarity.dotInt8Native(col("qq"), col("cq"), dim)
     // same expression shape as q112 and its oracle
     val approx = round(
       (col("qmaxv") / 127.0) * (col("cmax") / 127.0) * idot.cast("double") /
@@ -382,8 +368,7 @@ object Ivf {
     val shortlist = scored.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= candK)
       .select("query_id", "neighbor_id")
-    Similarity.rerankTopK(shortlist, corpus, queries, idCol, vecCol, k, dim,
-      useNative)
+    Similarity.rerankTopK(shortlist, corpus, queries, idCol, vecCol, k, dim)
   }
 
   /** One spherical-Lloyd refinement step from EXEMPLAR seeds, returned
@@ -405,9 +390,8 @@ object Ivf {
     * exactly the small-denominator-rational shape that hazard bites).
     */
   def lloydStepExemplar(emb: DataFrame, idCol: String, vecCol: String,
-                        nList: Int = 8, dim: Int = 64,
-                        useNative: Boolean = true): DataFrame =
-    lloydIterateExemplar(emb, idCol, vecCol, nList, iters = 1, dim, useNative)
+                        nList: Int = 8, dim: Int = 64): DataFrame =
+    lloydIterateExemplar(emb, idCol, vecCol, nList, iters = 1, dim)
 
   /** `iters` spherical-Lloyd steps from the exemplar seeds, the whole
     * refinement expressed as a RELATIONAL FIXPOINT: centroids stay a
@@ -421,13 +405,13 @@ object Ivf {
     * agree. Only the FINAL values are truncated to the 1e-6 lattice.
     */
   def lloydIterateExemplar(emb: DataFrame, idCol: String, vecCol: String,
-                           nList: Int = 8, iters: Int = 2, dim: Int = 64,
-                           useNative: Boolean = true): DataFrame = {
+                           nList: Int = 8, iters: Int = 2,
+                           dim: Int = 64): DataFrame = {
     val base = Similarity.withVecNorm(emb, idCol, vecCol)
       .repartition(col(idCol))
     val seeds = base.orderBy(col(idCol)).limit(nList)
       .select(col(idCol).as("cid"), col("v").as("cvec"), col("nrm").as("cnrm"))
-    lloydIterateFrom(base, seeds, idCol, iters, dim, useNative)
+    lloydIterateFrom(base, seeds, idCol, iters, dim)
       .select(col("list"), col("pos"),
         (floor(col("value") * lit(1e6)) / lit(1e6)).as("value"))
   }
@@ -469,8 +453,8 @@ object Ivf {
   }
 
   private[graft] def lloydIterateFrom(base: DataFrame, seeds: DataFrame,
-                                      idCol: String, iters: Int, dim: Int,
-                                      useNative: Boolean): DataFrame = {
+                                      idCol: String, iters: Int,
+                                      dim: Int): DataFrame = {
     require(iters >= 1, "at least one Lloyd step")
     val dec = org.apache.spark.sql.types.DecimalType(30, 12)
     // one refinement: argmax-assign to cents, DECIMAL per-(list, pos)
@@ -478,7 +462,7 @@ object Ivf {
     def step(cents: DataFrame): DataFrame = {
       val scored = base.crossJoin(broadcast(cents))
         .select(col(idCol), col("v"), col("nrm"), col("cid"),
-          round(Similarity.dotFast(col("v"), col("cvec"), dim, useNative) /
+          round(Similarity.dotNative(col("v"), col("cvec"), dim) /
             (col("nrm") * col("cnrm")), 6).as("sim"))
       val assigned = argmaxAssign(scored, idCol, "v", "nrm")
         .select(col("list"), col("v"), col("nrm"))
@@ -546,8 +530,7 @@ object Ivf {
     * Requires a non-degenerate corpus (ΣD² > 0 at every step).
     */
   def kppSeedIds(emb: DataFrame, idCol: String, vecCol: String, nList: Int,
-                 dim: Int = 64, salt: String = "graft:kpp",
-                 useNative: Boolean = true): Seq[Long] = {
+                 dim: Int = 64, salt: String = "graft:kpp"): Seq[Long] = {
     graft.plans.GraftFunctions.register(emb.sparkSession)
     val base = Similarity.withVecNorm(emb, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -571,7 +554,7 @@ object Ivf {
           col(idCol))))
       while (seeds.length < nList) {
         val simCols = seeds.map { case (_, v, n) =>
-          round(Similarity.dotFast(col("v"), typedlit(v), dim, useNative) /
+          round(Similarity.dotNative(col("v"), typedlit(v), dim) /
             (col("nrm") * lit(n)) * lit(1000000.0)).cast("long")
         }
         val best =
@@ -613,19 +596,18 @@ object Ivf {
     * (relational semantics, as q91).
     */
   def kmeansPlusPlusStats(emb: DataFrame, idCol: String, vecCol: String,
-                          nList: Int = 8, iters: Int = 2, dim: Int = 64,
-                          useNative: Boolean = true): DataFrame = {
-    val ids = kppSeedIds(emb, idCol, vecCol, nList, dim,
-      useNative = useNative)
+                          nList: Int = 8, iters: Int = 2,
+                          dim: Int = 64): DataFrame = {
+    val ids = kppSeedIds(emb, idCol, vecCol, nList, dim)
     val base = Similarity.withVecNorm(emb, idCol, vecCol)
       .repartition(col(idCol))
     val seeds = base.filter(col(idCol).isin(ids: _*))
       .select(col(idCol).as("cid"), col("v").as("cvec"), col("nrm").as("cnrm"))
     val cents = assembleCentroids(
-      lloydIterateFrom(base, seeds, idCol, iters, dim, useNative))
+      lloydIterateFrom(base, seeds, idCol, iters, dim))
     val scored = base.crossJoin(broadcast(cents))
       .select(col(idCol), col("cid"),
-        round(Similarity.dotFast(col("v"), col("cvec"), dim, useNative) /
+        round(Similarity.dotNative(col("v"), col("cvec"), dim) /
           (col("nrm") * col("cnrm")), 6).as("sim"))
     argmaxAssign(scored, idCol)
       .select(col("list").as("cluster_id"),
@@ -707,8 +689,7 @@ object Ivf {
       .withColumn("nrm", Similarity.norm(col("v")))
     rows.join(broadcast(crows), "list")
       .select(col("list"),
-        round(Similarity.dotFast(col("v"), col("cvec"), dim,
-            useNative = true) /
+        round(Similarity.dotNative(col("v"), col("cvec"), dim) /
           (col("nrm") * col("cnrm")) * lit(1000000.0)).cast("long").as("cm"))
       .groupBy("list")
       .agg(count(lit(1)).as("n"), sum(col("cm")).as("__s"))
@@ -803,7 +784,6 @@ object Ivf {
     val cands = c.join(q, "list")
       .filter(col("neighbor_id") =!= col("query_id"))
       .select("query_id", "neighbor_id")
-    Similarity.rerankTopK(cands, indexed, queries, idCol, vecCol, k, dim,
-      useNative = true)
+    Similarity.rerankTopK(cands, indexed, queries, idCol, vecCol, k, dim)
   }
 }

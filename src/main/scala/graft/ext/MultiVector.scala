@@ -28,8 +28,8 @@ object MultiVector {
       .withColumn(n, Similarity.norm(col(v)))
 
   private def microCos(qv: Column, cv: Column, qn: Column, cn: Column,
-                       dim: Int, useNative: Boolean): Column =
-    round(Similarity.dotFast(qv, cv, dim, useNative) / (qn * cn)
+                       dim: Int): Column =
+    round(Similarity.dotNative(qv, cv, dim) / (qn * cn)
       * lit(1000000.0)).cast("long")
 
   /** Exact MaxSim top-k: every query token scores against every corpus
@@ -42,8 +42,7 @@ object MultiVector {
     * full web corpus.
     */
   def maxSimTopK(corpus: DataFrame, queries: DataFrame, docCol: String,
-                 idCol: String, vecCol: String, k: Int, dim: Int,
-                 useNative: Boolean = false): DataFrame = {
+                 idCol: String, vecCol: String, k: Int, dim: Int): DataFrame = {
     val c = prepTokens(corpus, docCol, idCol, vecCol,
       "cand_doc", "ctok", "cv", "cn")
     val q = prepTokens(queries, docCol, idCol, vecCol,
@@ -51,7 +50,7 @@ object MultiVector {
     val pair = c.crossJoin(broadcast(q))
       .filter(col("cand_doc") =!= col("query_doc"))
       .select(col("query_doc"), col("qtok"), col("cand_doc"),
-        microCos(col("qv"), col("cv"), col("qn"), col("cn"), dim, useNative)
+        microCos(col("qv"), col("cv"), col("qn"), col("cn"), dim)
           .as("micro"))
     val mx = pair.groupBy("query_doc", "cand_doc", "qtok")
       .agg(max(col("micro")).as("m"))
@@ -84,8 +83,7 @@ object MultiVector {
     */
   def maxSimTopKPooled(corpus: DataFrame, queries: DataFrame, docCol: String,
                        idCol: String, vecCol: String, k: Int, dim: Int,
-                       candDocs: Int = 50,
-                       useNative: Boolean = false): DataFrame = {
+                       candDocs: Int = 50): DataFrame = {
     val cPool = pooledVectors(corpus, docCol, vecCol, dim)
       .select(col("doc").as("cand_doc"), col("pooled").as("cpv"))
       .withColumn("cpn", Similarity.norm(col("cpv")))
@@ -95,7 +93,7 @@ object MultiVector {
     val scored = cPool.crossJoin(broadcast(qPool))
       .filter(col("cand_doc") =!= col("query_doc"))
       .select(col("query_doc"), col("cand_doc"),
-        round(Similarity.dotFast(col("qpv"), col("cpv"), dim, useNative) /
+        round(Similarity.dotNative(col("qpv"), col("cpv"), dim) /
           (col("qpn") * col("cpn")), 6).as("psim"))
     val w = Window.partitionBy("query_doc")
       .orderBy(col("psim").desc, col("cand_doc"))
@@ -110,7 +108,7 @@ object MultiVector {
       "query_doc", "qtok", "qv", "qn")
     val pair = cands.join(q, "query_doc").join(c, "cand_doc")
       .select(col("query_doc"), col("qtok"), col("cand_doc"),
-        microCos(col("qv"), col("cv"), col("qn"), col("cn"), dim, useNative)
+        microCos(col("qv"), col("cv"), col("qn"), col("cn"), dim)
           .as("micro"))
     val mx = pair.groupBy("query_doc", "cand_doc", "qtok")
       .agg(max(col("micro")).as("m"))

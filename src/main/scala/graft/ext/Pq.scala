@@ -241,8 +241,7 @@ object Pq {
       .filter(col("__r") <= k * rerankFactor)
       .select("query_id", "neighbor_id")
 
-    Similarity.rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim,
-      useNative = true)
+    Similarity.rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim)
   }
 
   /** IVF-PQ under fully ENGINE-NEUTRAL training — q79's oracle-checked
@@ -269,13 +268,12 @@ object Pq {
                       vecCol: String, k: Int = 5, nList: Int = 8,
                       nProbe: Int = 2, iters: Int = 2, m: Int = 4,
                       ksub: Int = 8, cbIters: Int = 2, candK: Int = 15,
-                      dim: Int = 64, useNative: Boolean = true): DataFrame = {
+                      dim: Int = 64): DataFrame = {
     require(dim % m == 0, s"dim $dim must split into m=$m subspaces")
     val dsub = dim / m
     GraftFunctions.register(corpus.sparkSession)
     val dec = org.apache.spark.sql.types.DecimalType(30, 12)
-    val ids = Ivf.kppSeedIds(corpus, idCol, vecCol, nList, dim,
-      useNative = useNative)
+    val ids = Ivf.kppSeedIds(corpus, idCol, vecCol, nList, dim)
     def prep(df: DataFrame) =
       Similarity.withVecNorm(df, idCol, vecCol).repartition(col(idCol))
     val base = prep(corpus)
@@ -283,13 +281,13 @@ object Pq {
       .select(col(idCol).as("cid"), col("v").as("cvec"),
         col("nrm").as("cnrm"))
     val cents = Ivf.assembleCentroids(
-        Ivf.lloydIterateFrom(base, seeds, idCol, iters, dim, useNative))
+        Ivf.lloydIterateFrom(base, seeds, idCol, iters, dim))
       .localCheckpoint()
     // residual against the assigned (for probes: each probed) centroid
     def resid(src: DataFrame, outId: String, keep: Int): DataFrame = {
       val scored = src.crossJoin(broadcast(cents))
         .select(col(idCol), col("v"), col("nrm"), col("cid"), col("cvec"),
-          round(Similarity.dotFast(col("v"), col("cvec"), dim, useNative) /
+          round(Similarity.dotNative(col("v"), col("cvec"), dim) /
             (col("nrm") * col("cnrm")), 6).as("sim"))
       def residCol: Column = zip_with(
         transform(col("v"), x =>
@@ -436,7 +434,7 @@ object Pq {
       .filter(col("__rn") <= candK)
       .select("query_id", "neighbor_id")
     Similarity.rerankTopK(shortlist, corpus, queries, idCol, vecCol, k,
-      dim, useNative)
+      dim)
   }
 
   // ---------------------------------------------------------- persistence
@@ -595,8 +593,7 @@ object Pq {
       .withColumn("__r", row_number().over(w))
       .filter(col("__r") <= k * rerankFactor)
       .select("query_id", "neighbor_id")
-    Similarity.rerankTopK(cands, indexed, queries, idCol, vecCol, k, dim,
-      useNative = true)
+    Similarity.rerankTopK(cands, indexed, queries, idCol, vecCol, k, dim)
   }
 
   /** Nearest-`nProbe` coarse lists for a query vector — the same
@@ -636,8 +633,7 @@ object Pq {
   def pqAdcTopKExemplar(corpus: DataFrame, queries: DataFrame,
                         idCol: String, vecCol: String, k: Int, m: Int = 8,
                         ksub: Int = 16, dim: Int = 64,
-                        rerankFactor: Int = 3,
-                        useNative: Boolean = true): DataFrame = {
+                        rerankFactor: Int = 3): DataFrame = {
     val dsub = dim / m
     require(m * dsub == dim, s"dim $dim not divisible by m $m")
     def prep(df: DataFrame) = Similarity.withVecNorm(df, idCol, vecCol)
@@ -683,7 +679,6 @@ object Pq {
     val shortlist = adc.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= k * rerankFactor)
       .select("query_id", "neighbor_id")
-    Similarity.rerankTopK(shortlist, corpus, queries, idCol, vecCol, k, dim,
-      useNative)
+    Similarity.rerankTopK(shortlist, corpus, queries, idCol, vecCol, k, dim)
   }
 }

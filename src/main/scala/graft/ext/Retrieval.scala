@@ -586,8 +586,8 @@ object Retrieval {
           .filter(col("id_a") =!= col("id_b"))
           .join(broadcast(va), "id_a").join(broadcast(vb), "id_b")
           .select(col(queryIdCol), col("id_a"), col("id_b"),
-            round(Similarity.dotFast(col("va"), col("vb"), dim,
-                useNative = true) / (col("na") * col("nb")) *
+            round(Similarity.dotNative(col("va"), col("vb"), dim) /
+                (col("na") * col("nb")) *
               lit(1000000.0)).cast("long").as("sim_micro"))
         val reranked = mmrRerank(
           fused.select(col(queryIdCol), col(idCol),

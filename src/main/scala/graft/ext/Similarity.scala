@@ -55,9 +55,6 @@ object Similarity {
   def dotNative(a: Column, b: Column, dim: Int): Column =
     call_function("graft_dot", a, b, lit(dim))
 
-  def dotFast(a: Column, b: Column, dim: Int, useNative: Boolean): Column =
-    if (useNative) dotNative(a, b, dim) else dotUnrolled(a, b, dim)
-
   def norm(a: Column): Column =
     sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
 
@@ -89,8 +86,7 @@ object Similarity {
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int,
-                     dim: Option[Int] = None,
-                     useNative: Boolean = false): DataFrame = {
+                     dim: Option[Int] = None): DataFrame = {
     def prep(df: DataFrame, id: String, v: String, n: String) =
       df.select(col(idCol).as(id),
           transform(col(vecCol), x => x.cast("double")).as(v))
@@ -98,7 +94,7 @@ object Similarity {
     val q = prep(queries, "query_id", "qvec", "qn")
     val c = prep(corpus, "neighbor_id", "cvec", "cn")
     val dotCol = dim match {
-      case Some(d) => dotFast(col("qvec"), col("cvec"), d, useNative)
+      case Some(d) => dotNative(col("qvec"), col("cvec"), d)
       case None => dot(col("qvec"), col("cvec"))
     }
     val scored = c.crossJoin(broadcast(q))
@@ -129,7 +125,6 @@ object Similarity {
     */
   def rerankTopK(cands: DataFrame, corpus: DataFrame, queries: DataFrame,
                  idCol: String, vecCol: String, k: Int, dim: Int,
-                 useNative: Boolean = false,
                  broadcastLimit: Int = BroadcastQueryRowLimit): DataFrame = {
     def prep(df: DataFrame, id: String, v: String, n: String) =
       df.select(col(idCol).as(id),
@@ -154,7 +149,7 @@ object Similarity {
       .join(prep(corpus, "neighbor_id", "cvec", "cn"), "neighbor_id")
       .join(qSide, "query_id")
       .select(col("query_id"), col("neighbor_id"),
-        round(dotFast(col("qvec"), col("cvec"), dim, useNative) /
+        round(dotNative(col("qvec"), col("cvec"), dim) /
           (col("qn") * col("cn")), 6).as("sim"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
@@ -190,15 +185,18 @@ object Similarity {
           when(col("qmax") === 0.0, lit(0L))
             .otherwise(round(x * lit(127.0) / col("qmax")).cast("long"))))
 
-  /** Exact long dot over two quantized code arrays (HOF fold). The
-    * native `graft_dot_i8` (`Int8DotExpr`) is bit-identical — trivially,
-    * since every intermediate is an exact integer — at ~100× less
-    * per-pair cost; [[int8TopK]] picks by `useNative`.
+  /** Exact long dot over two quantized code arrays (HOF fold) — the
+    * reference formulation of [[dotInt8Native]], which is bit-identical
+    * (trivially, since every intermediate is an exact integer;
+    * spec-pinned).
     */
   def dotInt8(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
-  private def dotInt8Native(a: Column, b: Column, dim: Int): Column =
+  /** Native int8 code dot (`graft_dot_i8`, `Int8DotExpr`): the scan dot
+    * of every int8 operator, at ~100× less per-pair cost than
+    * [[dotInt8]]. */
+  def dotInt8Native(a: Column, b: Column, dim: Int): Column =
     call_function("graft_dot_i8", a, b, lit(dim))
 
   /** Int8 scalar-quantized top-k: the candidate scan runs entirely on
@@ -220,8 +218,7 @@ object Similarity {
     * spec-measured vs brute force).
     */
   def int8TopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-               vecCol: String, k: Int, dim: Int, candK: Int = 20,
-               useNative: Boolean = false): DataFrame = {
+               vecCol: String, k: Int, dim: Int, candK: Int = 20): DataFrame = {
     // withInt8 keeps the caller's id column name; re-project explicitly
     val c = withInt8(corpus, idCol, vecCol)
       .select(col(idCol).as("neighbor_id"), col("nrm").as("cn"),
@@ -229,8 +226,7 @@ object Similarity {
     val q = withInt8(queries, idCol, vecCol)
       .select(col(idCol).as("query_id"), col("nrm").as("qn"),
         col("qmax").as("qmaxv"), col("qvec").as("qq"))
-    val idot = if (useNative) dotInt8Native(col("qq"), col("cq"), dim)
-               else dotInt8(col("qq"), col("cq"))
+    val idot = dotInt8Native(col("qq"), col("cq"), dim)
     // same expression shape as the oracle: (qs/127 * cs/127 * idot) / (qn*cn)
     val approx = round(
       (col("qmaxv") / 127.0) * (col("cmax") / 127.0) * idot.cast("double") /
@@ -243,13 +239,13 @@ object Similarity {
     val cands = scored.withColumn("crank", row_number().over(w))
       .filter(col("crank") <= candK)
       .select("query_id", "neighbor_id")
-    rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim, useNative)
+    rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim)
   }
 
   /** Matryoshka-style truncated-dimension top-k (Kusupati et al. 2022 —
     * public paper; no code consulted): the candidate scan scores cosine
     * on only the first `prefixDim` dimensions — prefix dot over prefix
-    * norms, reusing [[dotFast]] which reads exactly the first `dim`
+    * norms, reusing [[dotNative]] which reads exactly the first `dim`
     * slots — keeps the best `candK` per query, and full-dimension exact
     * cosine reranks that shortlist (shared [[rerankTopK]]).
     *
@@ -268,26 +264,26 @@ object Similarity {
     */
   def truncatedTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, k: Int, dim: Int, prefixDim: Int,
-                    candK: Int = 20, useNative: Boolean = false): DataFrame = {
+                    candK: Int = 20): DataFrame = {
     require(prefixDim >= 1 && prefixDim <= dim,
       s"prefixDim $prefixDim must be in [1, $dim]")
     def prep(df: DataFrame, id: String, v: String, pn: String) =
       df.select(col(idCol).as(id),
           transform(col(vecCol), x => x.cast("double")).as(v))
-        .withColumn(pn, sqrt(dotFast(col(v), col(v), prefixDim, useNative)))
+        .withColumn(pn, sqrt(dotNative(col(v), col(v), prefixDim)))
     val c = prep(corpus, "neighbor_id", "cvec", "cpn")
     val q = prep(queries, "query_id", "qvec", "qpn")
     val scored = c.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(dotFast(col("qvec"), col("cvec"), prefixDim, useNative) /
+        round(dotNative(col("qvec"), col("cvec"), prefixDim) /
           (col("qpn") * col("cpn")), 6).as("approx_sim"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("approx_sim").desc, col("neighbor_id"))
     val cands = scored.withColumn("crank", row_number().over(w))
       .filter(col("crank") <= candK)
       .select("query_id", "neighbor_id")
-    rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim, useNative)
+    rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim)
   }
 
   /** Deterministic random hyperplanes (seeded), shipped as literals. */
@@ -366,8 +362,7 @@ object Similarity {
   def lshTopKPortableMulti(corpus: DataFrame, queries: DataFrame,
                            idCol: String, vecCol: String, k: Int,
                            nTables: Int = 4, nPlanes: Int = 6,
-                           dim: Int = 64,
-                           useNative: Boolean = true): DataFrame = {
+                           dim: Int = 64): DataFrame = {
     val sigsOf = (df: DataFrame, outId: String) =>
       df.select(col(idCol).as(outId),
           posexplode(array((0 until nTables).map(t =>
@@ -377,7 +372,7 @@ object Similarity {
       .join(sigsOf(queries, "query_id"), Seq("tbl", "sig"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select("query_id", "neighbor_id").distinct()
-    rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim, useNative)
+    rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim)
   }
 
   /** LSH top-k with the portable plane family — the oracle-checkable
@@ -391,7 +386,7 @@ object Similarity {
     */
   def lshTopKPortable(corpus: DataFrame, queries: DataFrame, idCol: String,
                       vecCol: String, k: Int, nPlanes: Int = 4,
-                      dim: Int = 64, useNative: Boolean = true): DataFrame = {
+                      dim: Int = 64): DataFrame = {
     val planes = portablePlanes(nPlanes, dim)
     val csig = corpus.select(col(idCol).as("neighbor_id"),
       rhpSignature(col(vecCol), planes).as("sig"))
@@ -400,7 +395,7 @@ object Similarity {
     val cands = csig.join(qsig, "sig")
       .filter(col("neighbor_id") =!= col("query_id"))
       .select("query_id", "neighbor_id")
-    rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim, useNative)
+    rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim)
   }
 
   /** Native-expression RHP signature (`graft.plans.RhpSigExpr`,
@@ -429,15 +424,13 @@ object Similarity {
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, nPlanes: Int = 12, nTables: Int = 4,
-              seed: Long = 42L, useNative: Boolean = false): DataFrame = {
+              seed: Long = 42L): DataFrame = {
     val dim = 64 // embeddings table layout; parameterize when schema varies
-    val tables = (0 until nTables).map(t =>
-      t -> hyperplanes(nPlanes, dim, seed + t))
+    val tables = 0 until nTables
     def sig(vec: Column, t: Int): Column =
-      if (useNative) rhpSignatureNative(vec, nPlanes, dim, seed + t)
-      else rhpSignature(vec, tables(t)._2)
+      rhpSignatureNative(vec, nPlanes, dim, seed + t)
 
-    def corpusKeys(vec: Column): Column = array(tables.map { case (t, _) =>
+    def corpusKeys(vec: Column): Column = array(tables.map { t =>
       struct(lit(t).as("tbl"), sig(vec, t).as("bucket"))
     }: _*)
 
@@ -446,12 +439,12 @@ object Similarity {
     // plan instead of once per probe (nPlanes+1 times), which otherwise
     // explodes codegen size (CollapseProject keeps multi-referenced
     // non-trivial aliases un-inlined)
-    val sigCols = tables.map { case (t, _) =>
+    val sigCols = tables.map { t =>
       sig(col(vecCol), t).as(s"__sig_$t")
     }
     val qSigned = queries.select(
       (col(idCol).as("query_id") +: sigCols): _*)
-    val probeArr = array(tables.flatMap { case (t, _) =>
+    val probeArr = array(tables.flatMap { t =>
       (-1 until nPlanes).map { bit =>
         val base = col(s"__sig_$t")
         val probe = if (bit < 0) base else base.bitwiseXOR(lit(1L << bit))
@@ -468,6 +461,6 @@ object Similarity {
       .filter(col("neighbor_id") =!= col("query_id"))
       .select("query_id", "neighbor_id")
       .distinct() // a pair can collide in several tables/probes
-    rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim, useNative)
+    rerankTopK(cands, corpus, queries, idCol, vecCol, k, dim)
   }
 }

@@ -392,7 +392,7 @@ object TextOps {
     * cross-engine determinism conventions.
     */
   def tfidfTopTerms(df: DataFrame, idCol: String, textCol: String,
-                    k: Int, useNative: Boolean = false): DataFrame = {
+                    k: Int): DataFrame = {
     val terms = df
       .select(col(idCol), explode(tokens(lower(col(textCol)))).as("term"))
       .groupBy(col(idCol), col("term"))
@@ -405,27 +405,19 @@ object TextOps {
       .withColumn("tfidf",
         round(col("tf") *
           (log((col("n_docs") + lit(1.0)) / (col("df") + lit(1.0))) + 1.0), 6))
-    if (useNative) {
-      // graft_top_k's (ord DESC, payload ASC) total order IS this
-      // window's (tfidf DESC, term ASC) — identical rows (spec-pinned),
-      // but the scored term relation is never window-sorted: the
-      // aggregate keeps O(k) per document and combines map-side, so the
-      // shuffle carries ≤k candidates per (partition, doc) instead of
-      // every (doc, term) score. Requires GraftFunctions.register.
-      scored.groupBy(col(idCol))
-        .agg(call_function("graft_top_k",
-          col("tfidf"), col("term"), lit(k)).as("__top"))
-        .select(col(idCol), posexplode(col("__top")).as(Seq("__p", "__s")))
-        .select(col(idCol), (col("__p") + 1).cast("int").as("rank"),
-          col("__s.payload").as("term"), col("__s.ord").as("tfidf"))
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(idCol))
-        .orderBy(col("tfidf").desc, col("term"))
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col(idCol), col("rank"), col("term"), col("tfidf"))
-    }
+    // graft_top_k's (ord DESC, payload ASC) total order IS the
+    // (tfidf DESC, term ASC) row_number window order — identical rows
+    // (TopKAggSpec), but the scored term relation is never
+    // window-sorted: the aggregate keeps O(k) per document and combines
+    // map-side, so the shuffle carries ≤k candidates per
+    // (partition, doc) instead of every (doc, term) score. Requires
+    // GraftFunctions.register.
+    scored.groupBy(col(idCol))
+      .agg(call_function("graft_top_k",
+        col("tfidf"), col("term"), lit(k)).as("__top"))
+      .select(col(idCol), posexplode(col("__top")).as(Seq("__p", "__s")))
+      .select(col(idCol), (col("__p") + 1).cast("int").as("rank"),
+        col("__s.payload").as("term"), col("__s.ord").as("tfidf"))
   }
 
   /** Repetition-based quality signals (the Gopher-style filters): share
@@ -439,10 +431,10 @@ object TextOps {
     * distributed plan at scale — the shuffle carries tokens + ids, and
     * both aggregations are partial-combinable.
     */
-  def repetitionStats(df: DataFrame, idCol: String, textCol: String,
-                      useNative: Boolean = false): DataFrame = {
+  def repetitionStats(df: DataFrame, idCol: String,
+                      textCol: String): DataFrame = {
     val toks = tokens(col(textCol))
-    val bigrams = Dedup.wordShingles(col(textCol), 2, useNative)
+    val bigrams = Dedup.wordShingles(col(textCol), 2)
     val perDoc = df.select(col(idCol),
       size(toks).as("__n_toks"),
       when(size(toks) >= 2,

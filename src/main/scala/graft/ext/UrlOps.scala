@@ -96,38 +96,39 @@ object UrlOps {
     * parameter was removed), `url_had_fragment` to `df`. One
     * projection, no shuffle.
     *
-    * `useNative = true` (the default) routes through
-    * `graft.plans.UrlCanonExpr` — ONE string walk per URL instead of
-    * the ~12 regex executions of the column chain (measured
+    * Runs as `graft.plans.UrlCanonExpr` — ONE string walk per URL
+    * instead of the ~12 regex executions of the column chain (measured
     * 31 µs/link at sf0.1, BASELINE.md round 11; at 10¹¹ crawl links
-    * the chain is ~860 CPU-hours). Output is bit-identical — each rule is
-    * transcribed, and `UrlOpsSpec` property-pins native ≡ chain over
-    * generated URLs plus every planted shape. The column chain
-    * ([[canonicalUrl]]/[[urlHost]]) stays as the reference
-    * formulation and the parity oracle. */
-  def withCanonicalUrl(df: DataFrame, urlCol: String,
-      useNative: Boolean = true): DataFrame = {
+    * the chain is ~860 CPU-hours). Output is bit-identical to the
+    * reference [[withCanonicalUrlChain]] — each rule is transcribed,
+    * and `UrlOpsSpec` property-pins native ≡ chain over generated URLs
+    * plus every planted shape. */
+  def withCanonicalUrl(df: DataFrame, urlCol: String): DataFrame = {
     val u = col(urlCol)
-    if (useNative) {
-      graft.plans.GraftFunctions.register(df.sparkSession)
-      df.withColumn("__uc", call_function("graft_url_canon", u))
-        .withColumn("url_canon", col("__uc.canon"))
-        .withColumn("url_host", col("__uc.host"))
-        .withColumn("url_had_tracking", col("__uc.had_tracking"))
-        .withColumn("url_had_fragment", u.contains("#"))
-        .drop("__uc")
-    } else {
-      val rawQs = when(u.contains("?"),
-        regexp_replace(regexp_replace(u, "#.*$", ""), "^[^?]*\\?", ""))
-        .otherwise(lit(""))
-      val hadTracking = exists(filter(split(rawQs, "&"), p => p =!= ""),
-        p => TrackingParamPrefixes.map(pre => p.startsWith(pre))
-          .reduce(_ || _))
-      df.withColumn("url_canon", canonicalUrl(u))
-        .withColumn("url_host", urlHost(u))
-        .withColumn("url_had_tracking", hadTracking)
-        .withColumn("url_had_fragment", u.contains("#"))
-    }
+    graft.plans.GraftFunctions.register(df.sparkSession)
+    df.withColumn("__uc", call_function("graft_url_canon", u))
+      .withColumn("url_canon", col("__uc.canon"))
+      .withColumn("url_host", col("__uc.host"))
+      .withColumn("url_had_tracking", col("__uc.had_tracking"))
+      .withColumn("url_had_fragment", u.contains("#"))
+      .drop("__uc")
+  }
+
+  /** Reference formulation of [[withCanonicalUrl]]: the same four
+    * columns from the column chain ([[canonicalUrl]]/[[urlHost]]) — the
+    * parity oracle for the native walk. */
+  def withCanonicalUrlChain(df: DataFrame, urlCol: String): DataFrame = {
+    val u = col(urlCol)
+    val rawQs = when(u.contains("?"),
+      regexp_replace(regexp_replace(u, "#.*$", ""), "^[^?]*\\?", ""))
+      .otherwise(lit(""))
+    val hadTracking = exists(filter(split(rawQs, "&"), p => p =!= ""),
+      p => TrackingParamPrefixes.map(pre => p.startsWith(pre))
+        .reduce(_ || _))
+    df.withColumn("url_canon", canonicalUrl(u))
+      .withColumn("url_host", urlHost(u))
+      .withColumn("url_had_tracking", hadTracking)
+      .withColumn("url_had_fragment", u.contains("#"))
   }
 
   /** Host-level crawl rollup over canonicalized URLs: per host the
@@ -322,41 +323,34 @@ object UrlOps {
     * survive the projection, so downstream exchanges (the
     * [[hostLinkGraph]] rollup, the q154 frontier) carry URLs only.
     *
-    * `useNative = true` (the default) routes the per-link
-    * classify→resolve→canonicalize through
+    * The per-link classify→resolve→canonicalize runs as
     * `graft.plans.LinkResolveExpr` — ONE string walk per href instead
-    * of the ~23 regex executions the collapsed column chain pays
-    * (classification whens inline into the resolution whens under
-    * Catalyst's project collapse, re-running their regexes — the q153
-    * round-12 regression). Bit-identical output, native ≡ chain
-    * property-pinned in `UrlOpsSpec`; the chain stays as the
-    * reference formulation and the oracle's shape. */
+    * of the ~23 regex executions the collapsed column chain
+    * [[extractOutlinksChain]] pays (classification whens inline into
+    * the resolution whens under Catalyst's project collapse, re-running
+    * their regexes — the q153 round-12 regression). Bit-identical
+    * output, native ≡ chain property-pinned in `UrlOpsSpec`. */
   def extractOutlinks(df: DataFrame, idCol: String, htmlCol: String,
-      baseCanonCol: String, baseRawCol: String,
-      useNative: Boolean = true): DataFrame = {
-    if (useNative) {
-      // ONE native walk per harvested href classifies, resolves
-      // (RFC 3986 §5.2.3 merge included) and canonicalizes —
-      // plans/LinkResolveExpr; the column chain below re-pays its
-      // classification regexes once Catalyst collapses link_kind into
-      // link_url (the q153 round-12 regression) and runs ~23 regex
-      // executions per link in total. Output is bit-identical — each
-      // rule transcribed, native ≡ chain property-pinned in
-      // UrlOpsSpec; the chain stays as the reference formulation and
-      // the oracle's shape.
-      graft.plans.GraftFunctions.register(df.sparkSession)
-      return df.select(col(idCol), col(baseCanonCol).as("base_canon"),
-          col(baseRawCol).as("base_raw"),
-          explode(regexp_extract_all(col(htmlCol), lit(HrefPattern),
-            lit(1))).as("href_raw"))
-        .withColumn("__lr", call_function("graft_link_resolve",
-          col("href_raw"), col("base_canon"), col("base_raw")))
-        .withColumn("link_kind", col("__lr.kind"))
-        .withColumn("link_url", col("__lr.url"))
-        .withColumn("link_canon", col("__lr.canon"))
-        .withColumn("link_host", col("__lr.host"))
-        .drop("__lr", "base_raw")
-    }
+      baseCanonCol: String, baseRawCol: String): DataFrame = {
+    graft.plans.GraftFunctions.register(df.sparkSession)
+    df.select(col(idCol), col(baseCanonCol).as("base_canon"),
+        col(baseRawCol).as("base_raw"),
+        explode(regexp_extract_all(col(htmlCol), lit(HrefPattern),
+          lit(1))).as("href_raw"))
+      .withColumn("__lr", call_function("graft_link_resolve",
+        col("href_raw"), col("base_canon"), col("base_raw")))
+      .withColumn("link_kind", col("__lr.kind"))
+      .withColumn("link_url", col("__lr.url"))
+      .withColumn("link_canon", col("__lr.canon"))
+      .withColumn("link_host", col("__lr.host"))
+      .drop("__lr", "base_raw")
+  }
+
+  /** Reference formulation of [[extractOutlinks]]: classification and
+    * resolution as a column chain (the oracle's shape), then one
+    * native canonicalization per kept link. Same columns and rows. */
+  def extractOutlinksChain(df: DataFrame, idCol: String, htmlCol: String,
+      baseCanonCol: String, baseRawCol: String): DataFrame = {
     // all base pieces bind to the POST-select alias: the input column
     // name is the caller's and may collide with generated names.
     val base = col("base_canon")
@@ -499,8 +493,8 @@ object UrlOps {
     * the `nofollow` TOKEN (space-separated list membership,
     * case-insensitive — `rel="noopener NOFOLLOW ugc"` is nofollow,
     * `rel="nofollowme"` is not). Resolution and classification are
-    * the native one-pass walk ([[extractOutlinks]]'s `useNative`
-    * path, bit-identical columns).
+    * the native one-pass walk of [[extractOutlinks]] (bit-identical
+    * columns).
     *
     * `carry` names caller columns to ride the harvest projection
     * (page-level [[withMetaRobots]] flags, typically) — the page HTML

@@ -18,8 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * a reused window, deduplicated with a LinkedHashSet (which preserves
   * exactly `array_distinct`'s keep-first order). Documents shorter than
   * `n` tokens yield their whole token sequence as a single shingle, like
-  * the HOF's `otherwise` branch. Tokenization stays in the codegen'd
-  * `split` either way. CodegenFallback: the eval loop IS the fast path.
+  * the HOF's `otherwise` branch; a null token array (null text) yields
+  * one empty shingle, as the HOF's `concat_ws` over a null array does.
+  * Tokenization stays in the codegen'd `split` either way.
+  * CodegenFallback: the eval loop IS the fast path.
   */
 final case class WordShinglesExpr(child: Expression, n: Int)
     extends UnaryExpression with CodegenFallback {
@@ -27,7 +29,7 @@ final case class WordShinglesExpr(child: Expression, n: Int)
   require(n >= 1, s"shingle size must be positive: $n")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
+  override def nullable: Boolean = false
 
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -41,6 +43,12 @@ final case class WordShinglesExpr(child: Expression, n: Int)
   }
 
   private val space = UTF8String.fromString(" ")
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val arr = child.eval(input)
+    if (arr == null) new GenericArrayData(Array[AnyRef](UTF8String.EMPTY_UTF8))
+    else nullSafeEval(arr)
+  }
 
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]

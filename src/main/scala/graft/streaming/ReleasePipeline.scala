@@ -35,10 +35,10 @@ object ReleasePipeline {
     * redact PII in the survivors (appends `<textCol>_redacted`).
     */
   def curate(docs: DataFrame, idCol: String, textCol: String,
-             bench: DataFrame, shingleN: Int = 8, dropPct: Int = 10,
-             useNative: Boolean = true): DataFrame = {
+             bench: DataFrame, shingleN: Int = 8,
+             dropPct: Int = 10): DataFrame = {
     val kept = Dedup.contaminationReport(docs, idCol, textCol, bench,
-        shingleN, dropPct, useNative)
+        shingleN, dropPct)
       .filter(!col("dropped")).select(idCol)
     TextOps.redactPii(docs.join(kept, Seq(idCol), "left_semi"), textCol)
   }
@@ -67,7 +67,6 @@ object ReleasePipeline {
             bench: DataFrame, idCol: String, textCol: String,
             curatedDir: String, checkpointDir: String,
             shingleN: Int = 8, dropPct: Int = 10,
-            useNative: Boolean = true,
             trigger: Trigger = Trigger.ProcessingTime("8 minutes"))
       : StreamingQuery = {
     val schema = spark.read.parquet(schemaSource).schema
@@ -84,8 +83,7 @@ object ReleasePipeline {
         // micro-batch idempotent (a plain append would duplicate the
         // batch's documents and silently break streaming ≡ batch) — the
         // same discipline as MicroBatchMerge's idempotent sink
-        curate(batch.toDF(), idCol, textCol, bench, shingleN, dropPct,
-            useNative)
+        curate(batch.toDF(), idCol, textCol, bench, shingleN, dropPct)
           .write.mode("overwrite").parquet(s"$curatedDir/batch=$batchId")
         ()
       }

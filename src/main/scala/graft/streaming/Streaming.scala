@@ -817,7 +817,6 @@ object EventStreams {
                          textCol: String, minJaccard: Double,
                          shingleN: Int = 3, k: Int = 64, bands: Int = 16,
                          maxBucketSize: Int = 1000,
-                         useNative: Boolean = false,
                          portable: Boolean = false)(
       onBatch: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -825,7 +824,7 @@ object EventStreams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         onBatch(graft.ext.Dedup.minhashProbeIndexed(batch.sparkSession,
           table, batch, idCol, textCol, minJaccard, shingleN, k, bands,
-          maxBucketSize, useNative, portable), batchId)
+          maxBucketSize, portable), batchId)
       }
       .start()
 }
@@ -1491,8 +1490,7 @@ object Sessionize {
 object MicroBatchMerge {
 
   /** Apply one incoming batch to the persistent state at `stateDir`,
-    * appending superseded versions to `historyDir`. Returns the new state
-    * row count (forcing materialization).
+    * appending superseded versions to `historyDir`.
     *
     * Crash safety:
     *  - the state swap is rename-ASIDE, never delete-then-rename: current
@@ -1513,7 +1511,7 @@ object MicroBatchMerge {
     * superseded version's `valid_to` equals its successor's `updated_at`.
     */
   def applyBatch(spark: SparkSession, batch: DataFrame, pk: Seq[String],
-                 stateDir: String, historyDir: String): Long = {
+                 stateDir: String, historyDir: String): Unit = {
     import org.apache.hadoop.fs.Path
     val statePath = new Path(stateDir)
     val historyPath = new Path(historyDir)
@@ -1540,22 +1538,19 @@ object MicroBatchMerge {
 
   /** The rename-aside state swap shared by [[applyBatch]] and
     * [[RevisitStream.applyBatch]]: write `.tmp` fully, move current
-    * state to `.old`, move `.tmp` in, drop `.old`. Returns the new
-    * state's row count (forcing materialization). */
+    * state to `.old`, move `.tmp` in, drop `.old`. */
   private[streaming] def swapState(spark: SparkSession, stateDir: String,
-                                   newState: DataFrame): Long = {
+                                   newState: DataFrame): Unit = {
     import org.apache.hadoop.fs.Path
     val statePath = new Path(stateDir)
     val oldPath = new Path(stateDir + ".old")
     val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = stateDir + ".tmp"
     newState.write.mode("overwrite").parquet(tmp)
-    val n = spark.read.parquet(tmp).count()
     if (fs.exists(oldPath)) fs.delete(oldPath, true)
     if (fs.exists(statePath)) fs.rename(statePath, oldPath)
     fs.rename(new Path(tmp), statePath)
     fs.delete(oldPath, true)
-    n
   }
 
   /** Startup/entry recovery for the rename-aside swap: if a crash left no
@@ -1589,7 +1584,6 @@ object MicroBatchMerge {
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         applyBatch(spark, batch.toDF(), pk, stateDir, historyDir)
-        ()
       }
       .start()
   }
@@ -1645,11 +1639,11 @@ object RevisitStream {
   }
 
   /** Apply ONE revisit batch: emit the batch's CDC rows, swap in the
-    * merged state. Returns the new state row count. */
+    * merged state. */
   def applyBatch(spark: SparkSession, batch: DataFrame, urlCol: String,
                  statusCol: String, newBodyCol: String, bodyCol: String,
                  stateDir: String, now: Column,
-                 onBatch: DataFrame => Unit = _ => ()): Long = {
+                 onBatch: DataFrame => Unit = _ => ()): Unit = {
     MicroBatchMerge.resolveState(spark, stateDir)
     val corpus = spark.read.parquet(stateDir)
     val merged = graft.ext.UrlOps.revisitMerge(corpus, batch, urlCol,
@@ -1680,7 +1674,6 @@ object RevisitStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyBatch(batch.sparkSession, batch, urlCol, statusCol,
           newBodyCol, bodyCol, stateDir, nowFor(batchId), onBatch)
-        ()
       }
       .start()
 

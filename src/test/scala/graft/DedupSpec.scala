@@ -86,11 +86,10 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val both = docs.select(col("doc_id"), col("text")).unionByName(edge)
       .select(col("doc_id"),
+        Dedup.minhashSignaturePortableHof(
+          Dedup.wordShinglesHof(col("text"), 3), 64).as("hof"),
         Dedup.minhashSignaturePortable(
-          Dedup.wordShingles(col("text"), 3), 64).as("hof"),
-        Dedup.minhashSignaturePortable(
-          Dedup.wordShingles(col("text"), 3, useNative = true), 64,
-          useNative = true).as("nat"))
+          Dedup.wordShingles(col("text"), 3), 64).as("nat"))
       .as[(Long, Seq[Long], Seq[Long])].collect()
     both.foreach { case (id, h, n) =>
       assert(h == n, s"doc $id portable sig: native != HOF")
@@ -105,7 +104,7 @@ class DedupSpec extends SparkSpec {
     // does on this corpus: exact dups always collide in every band
     val pairs = Dedup.minhashNearDupPairs(docs, "doc_id", "text",
         minJaccard = 0.5, shingleN = 3, k = 64, bands = 16,
-        useNative = true, portable = true)
+        portable = true)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)) && pairs.contains((1L, 5L)) &&
       pairs.contains((2L, 5L)))
@@ -119,8 +118,8 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val both = docs.select(col("doc_id"), col("text")).unionByName(edge)
       .select(col("doc_id"),
-        Dedup.simhash64Portable(col("text")).as("hof"),
-        Dedup.simhash64Portable(col("text"), useNative = true).as("nat"))
+        Dedup.simhash64PortableHof(col("text")).as("hof"),
+        Dedup.simhash64Portable(col("text")).as("nat"))
       .collect()
     both.foreach { r =>
       assert(r.getStruct(1) == r.getStruct(2),
@@ -210,23 +209,37 @@ class DedupSpec extends SparkSpec {
     graft.plans.GraftFunctions.register(spark)
     val edge = Seq((20L, "one two"), (21L, ""), (22L, "a b c"),
       (23L, "  padded   tokens  here now  "),
-      (24L, "rep rep rep rep rep")) // duplicate shingles -> distinct order
+      (24L, "rep rep rep rep rep"), // duplicate shingles -> distinct order
+      (25L, null: String)) // null text -> one empty shingle
       .toDF("doc_id", "text")
     val both = docs.select(col("doc_id"), col("text")).unionByName(edge)
       .select(col("doc_id"),
-        Dedup.wordShingles(col("text"), 3).as("hof"),
-        Dedup.wordShingles(col("text"), 3, useNative = true).as("nat"))
+        Dedup.wordShinglesHof(col("text"), 3).as("hof"),
+        Dedup.wordShingles(col("text"), 3).as("nat"))
       .as[(Long, Seq[String], Seq[String])].collect()
     assert(both.nonEmpty)
     both.foreach { case (id, h, n) =>
       assert(h == n, s"doc $id: $h vs $n") // incl. first-occurrence order
     }
-    // full pipeline parity: prefix-blocked pairs identical either way
-    def pairs(nat: Boolean) =
-      Dedup.prefixBlockedNearDupPairs(docs, "doc_id", "text",
-        prefixLen = 16, shingleN = 3, minJaccard = 0.5, useNative = nat)
-        .as[(Long, Long, Double)].collect().toSet
-    assert(pairs(true) == pairs(false))
+    // full pipeline parity: the operator's prefix-blocked pairs equal the
+    // same blocking + exact Jaccard over the reference shingles
+    val pairs = Dedup.prefixBlockedNearDupPairs(docs, "doc_id", "text",
+        prefixLen = 16, shingleN = 3, minJaccard = 0.5)
+      .as[(Long, Long, Double)].collect().toSet
+    val ref = docs.select(col("doc_id"),
+      substring(col("text"), 1, 16).as("block"),
+      Dedup.wordShinglesHof(col("text"), 3).as("sh"))
+    val refPairs = ref.select(col("block"), col("doc_id").as("id_a"),
+        col("sh").as("sh_a"))
+      .join(ref.select(col("block"), col("doc_id").as("id_b"),
+        col("sh").as("sh_b")), "block")
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"),
+        Dedup.jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+      .filter(col("jaccard") >= 0.5)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(pairs.nonEmpty)
+    assert(pairs == refPairs)
   }
 
   test("simhash native vote fold is bit-identical to the HOF fold") {
@@ -237,8 +250,8 @@ class DedupSpec extends SparkSpec {
     val both = docs.select(col("doc_id"), col("text"))
       .unionByName(edge)
       .select(col("doc_id"),
-        Dedup.simhash64(col("text")).as("hof"),
-        Dedup.simhash64(col("text"), useNative = true).as("native"))
+        Dedup.simhash64Hof(col("text")).as("hof"),
+        Dedup.simhash64(col("text")).as("native"))
       .as[(Long, Long, Long)].collect()
     assert(both.nonEmpty)
     both.foreach { case (id, h, n) =>
@@ -399,9 +412,9 @@ class DedupSpec extends SparkSpec {
     // guard at the expression level via a lit array with a null element.
     import org.apache.spark.sql.functions.{array, lit}
     val hofDf = spark.range(1).select(
-      graft.ext.Dedup.simhash64(lit("a b c")).as("hof_text"))
+      graft.ext.Dedup.simhash64Hof(lit("a b c")).as("hof_text"))
     val natDf = spark.range(1).select(
-      graft.ext.Dedup.simhash64(lit("a b c"), useNative = true).as("nat"))
+      graft.ext.Dedup.simhash64(lit("a b c")).as("nat"))
     assert(hofDf.head().getLong(0) == natDf.head().getLong(0))
   }
 

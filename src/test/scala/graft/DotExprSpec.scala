@@ -67,11 +67,22 @@ class DotExprSpec extends SparkSpec {
   test("cosineNearDupPairsExact results identical native vs unrolled") {
     GraftFunctions.register(spark)
     val emb = CrossoverBench.syntheticEmbeddings(spark, 300, 64, seed = 3L)
-    def run(nat: Boolean) =
-      graft.ext.Dedup.cosineNearDupPairsExact(emb, "vec_id", "embedding",
-          minCosine = 0.4, useNative = nat)
-        .as[(Long, Long, Double)].collect().toSet
-    assert(run(true) == run(false))
-    assert(run(true).nonEmpty)
+    val pairs = graft.ext.Dedup.cosineNearDupPairsExact(emb, "vec_id",
+        "embedding", minCosine = 0.4)
+      .as[(Long, Long, Double)].collect().toSet
+    // reference: the same all-pairs cosine over the unrolled dot
+    val v = Similarity.withVecNorm(emb, "vec_id", "embedding")
+    val ref = v.select(col("vec_id").as("id_a"), col("v").as("va"),
+        col("nrm").as("na"))
+      .crossJoin(v.select(col("vec_id").as("id_b"), col("v").as("vb"),
+        col("nrm").as("nb")))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"),
+        round(Similarity.dotUnrolled(col("va"), col("vb"), 64) /
+          (col("na") * col("nb")), 6).as("cosine"))
+      .filter(col("cosine") >= 0.4)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(pairs == ref)
+    assert(pairs.nonEmpty)
   }
 }

@@ -43,7 +43,7 @@ class IvfSpec extends SparkSpec {
     // as a recall dip
     GraftFunctions.register(spark)
     val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding",
-        k = 5, dim = Some(64), useNative = true)
+        k = 5, dim = Some(64))
       .as[(Long, Int, Long, Double)].collect().toSet
     val full = Ivf.ivfTopKExemplar(emb, queries, "vec_id", "embedding",
         k = 5, nList = 8, nProbe = 8)

@@ -39,10 +39,19 @@ class MinHashExprSpec extends SparkSpec {
 
   test("candidate pairs identical between native and HOF paths") {
     GraftFunctions.register(spark)
-    def run(native: Boolean) =
-      Dedup.minhashCandidatePairs(docs, "doc_id", "text", useNative = native)
-        .as[(Long, Long)].collect().toSet
-    assert(run(true) == run(false))
-    assert(run(true).contains((1L, 2L)))
+    val pairs = Dedup.minhashCandidatePairs(docs, "doc_id", "text")
+      .as[(Long, Long)].collect().toSet
+    // reference: HOF shingles + HOF signature, banded (16 bands of 4
+    // rows); a pair is a candidate iff some band slice is identical
+    val sigs = docs.select(col("doc_id"),
+        Dedup.minhashSignature(Dedup.wordShinglesHof(col("text"), 3), 64))
+      .as[(Long, Seq[Long])].collect()
+    val ref = (for {
+      (a, sa) <- sigs; (b, sb) <- sigs
+      if a < b && sa.grouped(4).zip(sb.grouped(4)).exists { case (x, y) =>
+        x == y }
+    } yield (a, b)).toSet
+    assert(pairs == ref)
+    assert(pairs.contains((1L, 2L)))
   }
 }

@@ -28,13 +28,13 @@ class MinHashIndexSpec extends SparkSpec {
     val loc = java.nio.file.Files.createTempDirectory("graft_mhidx").toString
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_mhdb LOCATION '$loc'")
     Dedup.writeMinhashIndex(corpus, "doc_id", "text", "graft_mhdb.mh_idx",
-      nBuckets = 4, useNative = true)
+      nBuckets = 4)
     "graft_mhdb.mh_idx"
   }
 
   test("probe finds cross near-dups, skips novel docs, jaccard verified") {
     val got = Dedup.minhashProbeIndexed(spark, table, batch, "doc_id",
-        "text", minJaccard = 0.5, useNative = true)
+        "text", minJaccard = 0.5)
       .as[(Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     assert(got.keySet == Set((10L, 1L), (10L, 2L)))
@@ -44,7 +44,7 @@ class MinHashIndexSpec extends SparkSpec {
   test("probe parity: indexed pairs equal the in-place pipeline's cross pairs") {
     val everything = corpus.unionByName(batch)
     val all = Dedup.minhashNearDupPairs(everything, "doc_id", "text",
-        minJaccard = 0.5, useNative = true)
+        minJaccard = 0.5)
       .as[(Long, Long, Double)].collect().toSet
     // restrict to (corpus, batch) cross pairs; the index probe reports
     // them as (id_new, id_corpus)
@@ -53,7 +53,7 @@ class MinHashIndexSpec extends SparkSpec {
       case (a, b, j) if b < 10L && a >= 10L => (a, b, j)
     }
     val indexed = Dedup.minhashProbeIndexed(spark, table, batch, "doc_id",
-        "text", minJaccard = 0.5, useNative = true)
+        "text", minJaccard = 0.5)
       .as[(Long, Long, Double)].collect().toSet
     assert(indexed == crossFromAll,
       s"index probe diverged:\n$crossFromAll\nvs\n$indexed")
@@ -65,7 +65,7 @@ class MinHashIndexSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val batchBands = batch.select(col("doc_id").as("id_new"),
-          Dedup.wordShingles(col("text"), 3, useNative = true).as("sh"))
+          Dedup.wordShingles(col("text"), 3).as("sh"))
         .select(col("id_new"),
           Dedup.minhashSignatureNative(col("sh"), 64).as("sig"))
         .select(col("id_new"),
@@ -89,17 +89,16 @@ class MinHashIndexSpec extends SparkSpec {
     val loc = java.nio.file.Files.createTempDirectory("graft_mhidx_a").toString
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_mhdb_a LOCATION '$loc'")
     Dedup.writeMinhashIndex(corpus, "doc_id", "text", "graft_mhdb_a.mh_idx",
-      nBuckets = 4, useNative = true)
+      nBuckets = 4)
     // ingest cycle 1: batch probes, novel docs appended
-    Dedup.appendToMinhashIndex(batch, "doc_id", "text", "graft_mhdb_a.mh_idx",
-      useNative = true)
+    Dedup.appendToMinhashIndex(batch, "doc_id", "text", "graft_mhdb_a.mh_idx")
     // ingest cycle 2: a near-dup of CYCLE-1 doc 11 (not of the original
     // corpus) must now be caught
     val batch2 = Seq(
       (20L, "fresh novel batch content sharing nothing with the corpus now")
     ).toDF("doc_id", "text")
     val got = Dedup.minhashProbeIndexed(spark, "graft_mhdb_a.mh_idx", batch2,
-        "doc_id", "text", minJaccard = 0.5, useNative = true)
+        "doc_id", "text", minJaccard = 0.5)
       .select("id_new", "id_corpus").as[(Long, Long)].collect().toSet
     assert(got == Set((20L, 11L)))
     // the appended files honor the bucket layout: probe join still reads
@@ -108,7 +107,7 @@ class MinHashIndexSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val probeBands = batch2.select(col("doc_id").as("id_new"),
-          Dedup.wordShingles(col("text"), 3, useNative = true).as("sh"))
+          Dedup.wordShingles(col("text"), 3).as("sh"))
         .select(col("id_new"),
           Dedup.minhashSignatureNative(col("sh"), 64).as("sig"))
         .select(col("id_new"),
@@ -126,19 +125,18 @@ class MinHashIndexSpec extends SparkSpec {
 
   test("probe/append/repair under mismatched hyperparameters fail loudly " +
     "(meta sidecar)") {
-    // the index was built with (shingleN=3, k=64, bands=16, native,
+    // the index was built with (shingleN=3, k=64, bands=16,
     // non-portable); any other family would produce band keys that never
     // match — the sidecar turns that silent corruption into a throw
     val m = Dedup.loadMinhashMeta(spark, table)
-    assert(m.contains(Dedup.MinhashMeta(3, 64, 16, useNative = true,
-      portable = false)))
+    assert(m.contains(Dedup.MinhashMeta(3, 64, 16, portable = false)))
     intercept[IllegalArgumentException] {
       Dedup.minhashProbeIndexed(spark, table, batch, "doc_id", "text",
-        minJaccard = 0.3, k = 32, useNative = true)
+        minJaccard = 0.3, k = 32)
     }
     intercept[IllegalArgumentException] {
       Dedup.appendToMinhashIndex(batch, "doc_id", "text", table,
-        bands = 8, useNative = true)
+        bands = 8)
     }
     intercept[IllegalArgumentException] {
       graft.ext.IndexAudit.repairMinhashPostings(spark, table, "doc_id",
@@ -146,14 +144,35 @@ class MinHashIndexSpec extends SparkSpec {
     }
     // the matching family still works after the failed attempts
     assert(Dedup.minhashProbeIndexed(spark, table, batch, "doc_id", "text",
-      minJaccard = 0.3, useNative = true).count() > 0)
+      minJaccard = 0.3).count() > 0)
+  }
+
+  test("a sidecar that still carries use_native accepts probe and append") {
+    // older sidecars persisted how signatures were computed as a fifth
+    // column; native and reference signatures are bit-identical, so the
+    // column must not make an index reject a matching family
+    val loc = java.nio.file.Files.createTempDirectory("graft_mhidx_u").toString
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_mhdb_u LOCATION '$loc'")
+    val t = "graft_mhdb_u.mh_idx"
+    Dedup.writeMinhashIndex(corpus, "doc_id", "text", t, nBuckets = 4)
+    Seq((3, 64, 16, true, false))
+      .toDF("shingle_n", "k", "bands", "use_native", "portable")
+      .coalesce(1).write.mode("overwrite").saveAsTable(s"${t}_meta")
+    assert(Dedup.loadMinhashMeta(spark, t)
+      .contains(Dedup.MinhashMeta(3, 64, 16, portable = false)))
+    val got = Dedup.minhashProbeIndexed(spark, t, batch, "doc_id", "text",
+        minJaccard = 0.5)
+      .select("id_new", "id_corpus").as[(Long, Long)].collect().toSet
+    assert(got == Set((10L, 1L), (10L, 2L)))
+    Dedup.appendToMinhashIndex(batch, "doc_id", "text", t)
+    assert(spark.table(s"${t}_shingles").count() == 6L)
   }
 
   test("append scans the batch once: both writes consume the shingle cache") {
     val loc = java.nio.file.Files.createTempDirectory("graft_mhidx_s").toString
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_mhdb_s LOCATION '$loc'")
     Dedup.writeMinhashIndex(corpus, "doc_id", "text", "graft_mhdb_s.mh_idx",
-      nBuckets = 4, useNative = true)
+      nBuckets = 4)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -167,7 +186,7 @@ class MinHashIndexSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       Dedup.appendToMinhashIndex(batch, "doc_id", "text",
-        "graft_mhdb_s.mh_idx", useNative = true)
+        "graft_mhdb_s.mh_idx")
       // the execution-listener bus is async; wait for both write plans
       val deadline = System.nanoTime() + 10000000000L
       import scala.jdk.CollectionConverters._
@@ -198,7 +217,7 @@ class MinHashIndexSpec extends SparkSpec {
     )
     val expected = Dedup.minhashProbeIndexed(spark, table,
         allDocs.toDF("doc_id", "text"), "doc_id", "text",
-        minJaccard = 0.5, useNative = true)
+        minJaccard = 0.5)
       .as[(Long, Long, Double)].collect().toSet
     assert(expected.nonEmpty)
 
@@ -207,7 +226,7 @@ class MinHashIndexSpec extends SparkSpec {
       .MemoryStream[(Long, String)]
     val q = EventStreams.nearDupProbeStream(
         in.toDF().toDF("doc_id", "text"), table, "doc_id", "text",
-        minJaccard = 0.5, useNative = true) { (pairs, _) =>
+        minJaccard = 0.5) { (pairs, _) =>
       collected ++= pairs.as[(Long, Long, Double)].collect()
     }
     try {
@@ -221,10 +240,9 @@ class MinHashIndexSpec extends SparkSpec {
     val loc = java.nio.file.Files.createTempDirectory("graft_mhidx_p").toString
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_mhdb_p LOCATION '$loc'")
     Dedup.writeMinhashIndex(corpus, "doc_id", "text", "graft_mhdb_p.mh_idx",
-      nBuckets = 4, useNative = true, portable = true)
+      nBuckets = 4, portable = true)
     val got = Dedup.minhashProbeIndexed(spark, "graft_mhdb_p.mh_idx", batch,
-        "doc_id", "text", minJaccard = 0.5, useNative = true,
-        portable = true)
+        "doc_id", "text", minJaccard = 0.5, portable = true)
       .select("id_new", "id_corpus").as[(Long, Long)].collect().toSet
     assert(got == Set((10L, 1L), (10L, 2L)))
   }

@@ -30,11 +30,11 @@ class MultiVectorSpec extends SparkSpec {
       .cache()
     val queries = toks.filter(col("doc") % 10 === 0)
     val got = MultiVector.maxSimTopKPooled(toks, queries, "doc", "vec_id",
-        "embedding", k = 5, dim = 64, candDocs = 40, useNative = true)
+        "embedding", k = 5, dim = 64, candDocs = 40)
       .select("query_doc", "rank", "cand_doc", "maxsim_micro")
       .as[(Long, Int, Long, Long)].collect().toSet
     val want = MultiVector.maxSimTopK(toks, queries, "doc", "vec_id",
-        "embedding", k = 5, dim = 64, useNative = true)
+        "embedding", k = 5, dim = 64)
       .select("query_doc", "rank", "cand_doc", "maxsim_micro")
       .as[(Long, Int, Long, Long)].collect().toSet
     assert(got == want)
@@ -50,10 +50,9 @@ class MultiVectorSpec extends SparkSpec {
       df.filter(col("rank") <= 3).select("query_doc", "cand_doc")
         .as[(Long, Long)].collect().toSet
     val exact = pairs(MultiVector.maxSimTopK(toks, queries, "doc", "vec_id",
-      "embedding", k = 3, dim = 64, useNative = true))
+      "embedding", k = 3, dim = 64))
     val approx = pairs(MultiVector.maxSimTopKPooled(toks, queries, "doc",
-      "vec_id", "embedding", k = 3, dim = 64, candDocs = 12,
-      useNative = true))
+      "vec_id", "embedding", k = 3, dim = 64, candDocs = 12))
     val recall = (exact & approx).size.toDouble / exact.size
     assert(recall >= 0.85, s"recall $recall too low")
   }

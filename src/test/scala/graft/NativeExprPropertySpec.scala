@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
 /** Property-based equality of every native Catalyst expression against
-  * its declarative twin, over GENERATED inputs — unicode text, degenerate
-  * whitespace, random float vectors — not just the hand-picked fixtures
-  * in the per-operator specs. Any divergence here means flipping a
-  * `useNative` flag could change query results.
+  * its named reference formulation (`wordShinglesHof`, `simhash64Hof`,
+  * `minhashSignature`, `rhpSignature`, `dotUnrolled`, …), over GENERATED
+  * inputs — unicode text, degenerate whitespace, random float vectors —
+  * not just the hand-picked fixtures in the per-operator specs.
+  * Production operators run only the native expressions; any divergence
+  * here means they no longer compute what the reference defines.
   */
 class NativeExprPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -32,10 +34,10 @@ class NativeExprPropertySpec extends SparkSpec {
     val df = texts(seed = 1L, n = 60).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val rows = df.select(col("id"),
-        Dedup.wordShingles(col("text"), 3).as("sh_h"),
-        Dedup.wordShingles(col("text"), 3, useNative = true).as("sh_n"),
-        Dedup.simhash64(col("text")).as("sim_h"),
-        Dedup.simhash64(col("text"), useNative = true).as("sim_n"))
+        Dedup.wordShinglesHof(col("text"), 3).as("sh_h"),
+        Dedup.wordShingles(col("text"), 3).as("sh_n"),
+        Dedup.simhash64Hof(col("text")).as("sim_h"),
+        Dedup.simhash64(col("text")).as("sim_n"))
       .as[(Long, Seq[String], Seq[String], Long, Long)].collect()
     assert(rows.length == 60)
     rows.foreach { case (id, shH, shN, simH, simN) =>
@@ -87,14 +89,13 @@ class NativeExprPropertySpec extends SparkSpec {
     GraftFunctions.register(spark)
     val df = texts(seed = 333L, n = 50).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    val sh = Dedup.wordShingles(col("text"), 3)
     val rows = df.select(col("id"),
-        Dedup.minhashSignaturePortable(sh, 32).as("mh"),
+        Dedup.minhashSignaturePortableHof(
+          Dedup.wordShinglesHof(col("text"), 3), 32).as("mh"),
         Dedup.minhashSignaturePortable(
-          Dedup.wordShingles(col("text"), 3, useNative = true), 32,
-          useNative = true).as("mn"),
-        Dedup.simhash64Portable(col("text")).as("sh_h"),
-        Dedup.simhash64Portable(col("text"), useNative = true).as("sh_n"))
+          Dedup.wordShingles(col("text"), 3), 32).as("mn"),
+        Dedup.simhash64PortableHof(col("text")).as("sh_h"),
+        Dedup.simhash64Portable(col("text")).as("sh_n"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[Long](1) == r.getSeq[Long](2),

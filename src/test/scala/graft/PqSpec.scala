@@ -212,7 +212,7 @@ class PqSpec extends SparkSpec {
     val small = emb.filter(col("vec_id") < 500).cache()
     val q = small.filter(col("vec_id") % 100 === 0)
     val exact = Similarity.bruteForceTopK(small, q, "vec_id", "embedding",
-        k = 5, dim = Some(Dim), useNative = true)
+        k = 5, dim = Some(Dim))
       .as[(Long, Int, Long, Double)].collect().toSet
     val full = Pq.pqAdcTopKExemplar(small, q, "vec_id", "embedding",
         k = 5, m = M, ksub = Ksub, rerankFactor = 100)

@@ -63,7 +63,7 @@ class RagServeSpec extends SparkSpec {
       .select(col("query_id"), col("doc_id"), col("rank"))
     val dense = Similarity.bruteForceTopK(emb,
         emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-        k = legK, dim = Some(64), useNative = true)
+        k = legK, dim = Some(64))
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
     val fused = Retrieval.rrfFuse(lex, dense, "query_id", "doc_id", k)
       .localCheckpoint()

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * (`Similarity.rhpSignature`) and the native expression
   * (`graft.plans.RhpSigExpr`) — including the degenerate inputs where the
   * two formulations could silently diverge: null vectors, null elements,
-  * length-mismatched vectors, and NaN dots. Flipping `useNative` at an LSH
-  * call site must never change a candidate set.
+  * length-mismatched vectors, and NaN dots. The LSH operators run the
+  * native signature; it must never change a candidate set.
   */
 class RhpExprSpec extends SparkSpec {
   import spark.implicits._
@@ -76,11 +76,26 @@ class RhpExprSpec extends SparkSpec {
         (i, Array.fill(64)(rnd.nextFloat() * 2 - 1)))
       .toDF("vec_id", "embedding")
     val queries = emb.filter(col("vec_id") % 50 === 0)
-    def run(nat: Boolean) =
-      Similarity.lshTopK(emb, queries, "vec_id", "embedding", k = 3,
-          useNative = nat)
-        .as[(Long, Int, Long, Double)].collect().toSet
-    assert(run(true) == run(false))
+    val got = Similarity.lshTopK(emb, queries, "vec_id", "embedding", k = 3)
+      .as[(Long, Int, Long, Double)].collect().toSet
+    // reference: lshTopK's defaults (12 planes, 4 tables, seed 42) with
+    // HOF signatures; candidates are bucket mates within one bit
+    // (single-bit multi-probe), reranked by the shared exact rerank
+    val sigs = emb.select(col("vec_id"), array((0 until 4).map(t =>
+        Similarity.rhpSignature(col("embedding"),
+          Similarity.hyperplanes(12, 64, 42L + t))): _*))
+      .as[(Long, Seq[Long])].collect()
+    val cands = (for {
+      (q, sq) <- sigs if q % 50 == 0
+      (c, sc) <- sigs
+      if c != q && sq.zip(sc).exists { case (x, y) =>
+        java.lang.Long.bitCount(x ^ y) <= 1 }
+    } yield (q, c)).toSeq.toDF("query_id", "neighbor_id")
+    val ref = Similarity.rerankTopK(cands, emb, queries, "vec_id",
+        "embedding", k = 3, dim = 64)
+      .as[(Long, Int, Long, Double)].collect().toSet
+    assert(got.nonEmpty)
+    assert(got == ref)
   }
 
   test("non-literal config argument fails with the intended message") {

@@ -20,7 +20,7 @@ class SemanticDedupSpec extends SparkSpec {
     */
   private def exactKept(minCosine: Double): Set[Long] = {
     val dropped = Dedup.cosineNearDupPairsExact(emb, "vec_id", "embedding",
-        minCosine, useNative = true)
+        minCosine)
       .select("id_b").as[Long].collect().toSet
     emb.select("vec_id").as[Long].collect().toSet -- dropped
   }

@@ -131,11 +131,11 @@ class SimilaritySpec extends SparkSpec {
       .cache()
     val queries = emb.filter(col("vec_id") % 100 === 0)
     val got = Similarity.int8TopK(emb, queries, "vec_id", "embedding",
-        k = 5, dim = 64, candK = 500, useNative = true)
+        k = 5, dim = 64, candK = 500)
       .select("query_id", "rank", "neighbor_id", "sim")
       .as[(Long, Int, Long, Double)].collect().toSet
     val want = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding",
-        k = 5, dim = Some(64), useNative = true)
+        k = 5, dim = Some(64))
       .select("query_id", "rank", "neighbor_id", "sim")
       .as[(Long, Int, Long, Double)].collect().toSet
     assert(got == want)
@@ -152,9 +152,9 @@ class SimilaritySpec extends SparkSpec {
       df.filter(col("rank") <= 3).select("query_id", "neighbor_id")
         .as[(Long, Long)].collect().toSet
     val exact = pairs(Similarity.bruteForceTopK(emb, queries, "vec_id",
-      "embedding", 3, dim = Some(64), useNative = true))
+      "embedding", 3, dim = Some(64)))
     val approx = pairs(Similarity.int8TopK(emb, queries, "vec_id",
-      "embedding", k = 3, dim = 64, candK = 12, useNative = true))
+      "embedding", k = 3, dim = 64, candK = 12))
     val recall = (exact & approx).size.toDouble / exact.size
     assert(recall >= 0.95, s"recall $recall too low")
   }
@@ -165,11 +165,11 @@ class SimilaritySpec extends SparkSpec {
       .cache()
     val queries = emb.filter(col("vec_id") % 100 === 0)
     val got = Similarity.truncatedTopK(emb, queries, "vec_id", "embedding",
-        k = 5, dim = 64, prefixDim = 16, candK = 400, useNative = true)
+        k = 5, dim = 64, prefixDim = 16, candK = 400)
       .select("query_id", "rank", "neighbor_id", "sim")
       .as[(Long, Int, Long, Double)].collect().toSet
     val want = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding",
-        k = 5, dim = Some(64), useNative = true)
+        k = 5, dim = Some(64))
       .select("query_id", "rank", "neighbor_id", "sim")
       .as[(Long, Int, Long, Double)].collect().toSet
     assert(got == want)
@@ -191,10 +191,9 @@ class SimilaritySpec extends SparkSpec {
       df.filter(col("rank") <= 3).select("query_id", "neighbor_id")
         .as[(Long, Long)].collect().toSet
     val exact = pairs(Similarity.bruteForceTopK(emb, queries, "vec_id",
-      "embedding", 3, dim = Some(64), useNative = true))
+      "embedding", 3, dim = Some(64)))
     val approx = pairs(Similarity.truncatedTopK(emb, queries, "vec_id",
-      "embedding", k = 3, dim = 64, prefixDim = 16, candK = 12,
-      useNative = true))
+      "embedding", k = 3, dim = 64, prefixDim = 16, candK = 12))
     val recall = (exact & approx).size.toDouble / exact.size
     assert(recall >= 0.95, s"recall $recall too low")
   }
@@ -235,7 +234,7 @@ class SimilaritySpec extends SparkSpec {
     got.foreach { case (q, n) =>
       assert(sig(q) == sig(n), s"pair ($q, $n) not bucket-mates") }
     val expected = Similarity.bruteForceTopK(emb, queries, "vec_id",
-        "embedding", k = 1000, dim = Some(64), useNative = true)
+        "embedding", k = 1000, dim = Some(64))
       .select("query_id", "neighbor_id", "rank").as[(Long, Long, Int)]
       .collect().groupBy(_._1).toSeq.flatMap { case (q, rows) =>
         rows.sortBy(_._3).map(_._2).filter(n => sig(n) == sig(q))

@@ -178,6 +178,53 @@ class StreamingSpec extends SparkSpec {
     assert(rowsOf(spark.read.parquet(state).orderBy("id")) == before)
   }
 
+  test("applyBatch never reads back the state it has just written") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft_noreread").toString
+    val state = s"$dir/state"
+    val hist = s"$dir/history"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit = {
+        qe.analyzed.foreach {
+          case l: LogicalRelation => l.relation match {
+            case h: HadoopFsRelation =>
+              h.location.rootPaths.foreach(p => reads.add(p.toString))
+            case _ =>
+          }
+          case _ =>
+        }
+        plans.add(qe.analyzed.toString)
+      }
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val b1 = Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "name", "price")
+      MicroBatchMerge.applyBatch(spark, b1, Seq("id"), state, hist)
+      val b2 = Seq((1L, "a2", 10.0), (3L, "c", 30.0)).toDF("id", "name", "price")
+      MicroBatchMerge.applyBatch(spark, b2, Seq("id"), state, hist)
+      // the listener bus is async and in order: once a sentinel query
+      // arrives, every query the two batches ran has been delivered
+      spark.range(1).toDF("graft_listener_sentinel").collect()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!plans.asScala.exists(_.contains("graft_listener_sentinel")) &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+      assert(plans.asScala.exists(_.contains("graft_listener_sentinel")))
+      // the state writes were seen, and no query read the written files
+      assert(plans.asScala.exists(_.contains(s"$state.tmp")))
+      assert(!reads.asScala.exists(_.endsWith("state.tmp")),
+        s"applyBatch re-read its own output: ${reads.asScala.toList}")
+    } finally spark.listenerManager.unregister(listener)
+    assert(spark.read.parquet(state).count() == 3)
+  }
+
   test("applyBatch closes each SCD2 interval at its successor's updated_at") {
     val dir = Files.createTempDirectory("graft_interval").toString
     val state = s"$dir/state"

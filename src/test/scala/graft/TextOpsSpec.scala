@@ -129,16 +129,22 @@ class TextOpsSpec extends SparkSpec {
     val df = (1L to 200L).map(i =>
         (i, Seq.fill(12)(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
       .toDF("doc_id", "text").repartition(8)
-    val win = TextOps.tfidfTopTerms(df, "doc_id", "text", k = 3)
-      .as[(Long, Int, String, Double)].collect().toSet
-    val nat = TextOps.tfidfTopTerms(df, "doc_id", "text", k = 3,
-        useNative = true)
+    // reference: every scored term of a document (k ≥ vocabulary size),
+    // ranked per document by the window order (tfidf DESC, term ASC)
+    // and cut at k
+    val all = TextOps.tfidfTopTerms(df, "doc_id", "text", k = vocab.size)
+      .as[(Long, Int, String, Double)].collect()
+    val win = all.groupBy(_._1).values.flatMap { rows =>
+      rows.sortBy(r => (-r._4, r._3)).take(3).zipWithIndex
+        .map { case (r, i) => (r._1, i + 1, r._3, r._4) }
+    }.toSet
+    val nat = TextOps.tfidfTopTerms(df, "doc_id", "text", k = 3)
       .as[(Long, Int, String, Double)].collect().toSet
     assert(nat == win)
     assert(nat.nonEmpty)
-    // and the native path's plan really dropped the window sort
-    val plan = TextOps.tfidfTopTerms(df, "doc_id", "text", k = 3,
-      useNative = true).queryExecution.executedPlan.toString
+    // and the plan really has no window sort
+    val plan = TextOps.tfidfTopTerms(df, "doc_id", "text", k = 3)
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"window survived the rewrite:\n$plan")
   }
 

@@ -435,12 +435,12 @@ class UrlOpsSpec extends SparkSpec {
     val df = gen.toDF("u")
     graft.plans.GraftFunctions.register(spark)
     val both = UrlOps.withCanonicalUrl(
-        UrlOps.withCanonicalUrl(df, "u", useNative = false)
+        UrlOps.withCanonicalUrlChain(df, "u")
           .withColumnRenamed("url_canon", "c_ref")
           .withColumnRenamed("url_host", "h_ref")
           .withColumnRenamed("url_had_tracking", "t_ref")
           .drop("url_had_fragment"),
-        "u", useNative = true)
+        "u")
       .select("u", "c_ref", "url_canon", "h_ref", "url_host",
         "t_ref", "url_had_tracking")
       .collect()
@@ -486,8 +486,9 @@ class UrlOpsSpec extends SparkSpec {
     } yield (i.toLong * 100 + j,
       "<a href=\"" + h.replace("\"", "") + "\">x</a>", bc, br)
     val df = rows.toDF("id", "html", "bc", "br")
-    def run(native: Boolean) = UrlOps.extractOutlinks(
-        df, "id", "html", "bc", "br", useNative = native)
+    def run(native: Boolean) = (if (native) UrlOps.extractOutlinks(
+        df, "id", "html", "bc", "br")
+      else UrlOps.extractOutlinksChain(df, "id", "html", "bc", "br"))
       .select("id", "href_raw", "link_kind", "link_url", "link_canon",
         "link_host")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
