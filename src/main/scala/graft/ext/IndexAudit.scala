@@ -444,8 +444,7 @@ object IndexAudit {
   def repairIvfAssignments(spark: SparkSession, table: String,
                            idCol: String, vecCol: String): Unit = {
     graft.plans.GraftFunctions.register(spark)
-    val dim = Ivf.loadDim(spark, table)
-    val centroids = Ivf.loadCentroids(spark, table)
+    val (dim, centroids) = Ivf.loadModel(spark, table)
     val stage = s"${table}__repair"
     writeBucketed(
       spark.table(table).select(col(idCol), col(vecCol),
@@ -526,8 +525,7 @@ object IndexAudit {
     */
   def driftIvf(spark: SparkSession, table: String, idCol: String,
                vecCol: String, tolMicro: Long = 20000L): DataFrame = {
-    val dim = Ivf.loadDim(spark, table)
-    val cents = Ivf.loadCentroids(spark, table)
+    val (dim, cents) = Ivf.loadModel(spark, table)
     driftReport(spark, table,
       Ivf.distortionByList(spark, table, vecCol, dim, cents), tolMicro)
   }
@@ -605,8 +603,7 @@ object IndexAudit {
     */
   def auditIvf(spark: SparkSession, table: String, idCol: String,
                vecCol: String): DataFrame = {
-    val dim = Ivf.loadDim(spark, table)
-    val centroids = Ivf.loadCentroids(spark, table)
+    val (dim, centroids) = Ivf.loadModel(spark, table)
     val shapeRem = (centroids.length % dim).toLong
     val bad = spark.table(table)
       .filter(element_at(

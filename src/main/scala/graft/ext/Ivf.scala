@@ -708,8 +708,7 @@ object Ivf {
   def appendToIndex(corpus: DataFrame, idCol: String, vecCol: String,
                     table: String): Unit = {
     val spark = corpus.sparkSession
-    val dim = loadDim(spark, table)
-    val centroids = loadCentroids(spark, table)
+    val (dim, centroids) = loadModel(spark, table)
     corpus
       .select(col(idCol), col(vecCol),
         element_at(assignLists(col(vecCol), centroids, dim, 1), 1).as("list"))
@@ -728,8 +727,8 @@ object Ivf {
   def rebuildIndex(spark: SparkSession, table: String, idCol: String,
                    vecCol: String, nListOverride: Option[Int] = None,
                    sampleSize: Int = 20000, iters: Int = 10): Unit = {
-    val dim = loadDim(spark, table)
-    val nList = nListOverride.getOrElse(loadCentroids(spark, table).length / dim)
+    val (dim, centroids) = loadModel(spark, table)
+    val nList = nListOverride.getOrElse(centroids.length / dim)
     val (nBuckets, _, _) = IndexAudit.bucketSpecOf(spark, table)
     val rows = spark.table(table).select(col(idCol), col(vecCol))
       .localCheckpoint()
@@ -737,18 +736,17 @@ object Ivf {
     writeIndex(rows, idCol, vecCol, cents, dim, table, nBuckets)
   }
 
-  /** Reload the centroid matrix persisted by [[writeIndex]]. */
-  def loadCentroids(spark: SparkSession, table: String): Array[Double] = {
-    import spark.implicits._
-    spark.table(s"${table}_centroids")
-      .orderBy("pos").select("value").as[Double].collect()
-  }
-
-  /** The vector dimensionality the index at `table` was written with. */
-  def loadDim(spark: SparkSession, table: String): Int = {
-    import spark.implicits._
-    spark.table(s"${table}_centroids")
-      .select("dim").limit(1).as[Int].head()
+  /** Reload the model persisted by [[writeIndex]]: the vector
+    * dimensionality and the row-major centroid matrix. One job: the
+    * `(pos, value, dim)` rows (≤ nList·dim of them) are collected
+    * unsorted and put in `pos` order on the driver.
+    */
+  def loadModel(spark: SparkSession, table: String): (Int, Array[Double]) = {
+    val rows = spark.table(s"${table}_centroids")
+      .select(col("pos"), col("value"), col("dim")).collect()
+    require(rows.nonEmpty, s"empty IVF model in $table")
+    (rows(0).getInt(2),
+      rows.sortBy(_.getInt(0)).map(_.getDouble(1)))
   }
 
   /** The vector column name the index at `table` was written with
@@ -775,8 +773,7 @@ object Ivf {
   def ivfTopKIndexed(spark: SparkSession, table: String, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int,
                      nProbe: Int = 4): DataFrame = {
-    val dim = loadDim(spark, table)
-    val centroids = loadCentroids(spark, table)
+    val (dim, centroids) = loadModel(spark, table)
     val indexed = spark.table(table)
     val c = indexed.select(col(idCol).as("neighbor_id"), col("list"))
     val q = queries.select(col(idCol).as("query_id"),

@@ -568,9 +568,7 @@ object Retrieval {
     val selected =
       if (lambdaMicro >= 1000000L) fused
       else {
-        val cents = graft.ext.Ivf.loadCentroids(spark, ivfTable)
-        val dim = graft.ext.Ivf.loadDim(spark, ivfTable)
-        require(cents.nonEmpty && dim > 0, s"empty IVF model in $ivfTable")
+        val (dim, _) = graft.ext.Ivf.loadModel(spark, ivfTable)
         val cands = fused.select(col(queryIdCol), col(idCol))
         val vecs = spark.table(ivfTable)
           .join(broadcast(cands.select(col(idCol)).distinct()), Seq(idCol))

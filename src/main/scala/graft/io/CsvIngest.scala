@@ -65,7 +65,9 @@ object CsvIngest {
   }
 
   /** Read one CSV with the reference's semantics: header, inferred types,
-    * 'nan'/'?' → null, heuristic timestamp parsing — one scan.
+    * 'nan'/'?' → null, heuristic timestamp parsing. With a declared
+    * `schema` the read is one scan; without one, `inferSchema` makes a
+    * full pass over the file to type the columns before the real read.
     */
   def readCsv(spark: SparkSession, path: String,
               schema: Option[StructType] = None): DataFrame = {

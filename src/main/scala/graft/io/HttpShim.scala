@@ -1,9 +1,13 @@
 package graft.io
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ExecutorService, Executors, ThreadFactory,
+  TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.control.NonFatal
 
 /** S12 — the reference's HTTP JSON serving shim (main.py:6-30): FastAPI
   * routes `/payments` and `/reviews` that read a CSV per request and
@@ -18,13 +22,25 @@ import java.nio.charset.StandardCharsets
   * plane — but `maxRows` caps the collect so a mis-pointed route cannot
   * OOM the driver.
   *
+  * Requests are served concurrently on a fixed pool of daemon threads
+  * (`graft-http-N`), one per available processor, so one request's
+  * driver-side planning and tiny jobs overlap another's instead of
+  * queueing behind it. Each request's jobs run under the job group
+  * `http:<route>` (description: the raw query string), cleared when
+  * the request ends so a pooled thread never carries it over.
+  *
   * `port = 0` binds an ephemeral port (tests); `Shim.port` reports it.
   */
 object HttpShim {
 
-  final case class Shim(server: HttpServer) {
+  final case class Shim(server: HttpServer, pool: ExecutorService) {
     def port: Int = server.getAddress.getPort
-    def stop(): Unit = server.stop(0)
+    /** Stop accepting, then retire the dispatch pool. */
+    def stop(): Unit = {
+      server.stop(0)
+      pool.shutdown()
+      pool.awaitTermination(10, TimeUnit.SECONDS)
+    }
   }
 
   def start(routes: Map[String, () => DataFrame], port: Int = 0,
@@ -40,11 +56,27 @@ object HttpShim {
                    port: Int = 0, maxRows: Int = 100000): Shim = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     routes.foreach { case (path, mk) =>
-      server.createContext(s"/$path", handler(mk, maxRows))
+      server.createContext(s"/$path", handler(path, mk, maxRows))
     }
-    server.setExecutor(null) // serve on the dispatch thread; shim semantics
+    val pool = dispatchPool()
+    server.setExecutor(pool)
     server.start()
-    Shim(server)
+    Shim(server, pool)
+  }
+
+  /** A fixed pool of daemon threads named `graft-http-N`, one per
+    * available processor: daemon, so a shim that is never stopped
+    * cannot keep the JVM alive. */
+  private def dispatchPool(): ExecutorService = {
+    val n = new AtomicInteger(0)
+    Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors,
+      new ThreadFactory {
+        override def newThread(r: Runnable): Thread = {
+          val t = new Thread(r, s"graft-http-${n.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        }
+      })
   }
 
   /** `?a=1&b=x` → Map(a -> 1, b -> x), URL-decoded; absent/blank query
@@ -392,17 +424,25 @@ object HttpShim {
     sb.append("\"").toString
   }
 
-  private def handler(mk: HttpExchange => DataFrame,
+  private def handler(route: String, mk: HttpExchange => DataFrame,
                       maxRows: Int): HttpHandler =
     new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
+        val sc = SparkSession.getActiveSession
+          .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
         val body =
-          try mk(ex).limit(maxRows).toJSON.collect().mkString("[", ",", "]")
-          catch {
-            // parity with read_csv's catch-all error object (main.py:21-22)
-            case e: Exception =>
+          try {
+            // a route may set its own group; the one it sets wins
+            sc.foreach(_.setJobGroup(s"http:$route",
+              Option(ex.getRequestURI.getRawQuery).getOrElse("")))
+            mk(ex).limit(maxRows).toJSON.collect().mkString("[", ",", "]")
+          } catch {
+            // parity with read_csv's catch-all error object
+            // (main.py:21-22); NonFatal also answers an operator's
+            // AssertionError instead of dropping the connection
+            case NonFatal(e) =>
               s"""{"error":${jsonQuote(String.valueOf(e.getMessage))}}"""
-          }
+          } finally sc.foreach(_.clearJobGroup())
         val bytes = body.getBytes(StandardCharsets.UTF_8)
         ex.getResponseHeaders.set("Content-Type", "application/json")
         ex.sendResponseHeaders(200, bytes.length)

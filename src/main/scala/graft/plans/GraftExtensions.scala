@@ -318,16 +318,20 @@ object GraftFunctions {
       }))
 
   /** Idempotent runtime registration on an existing session: the native
-    * functions plus the [[LevenshteinBandRule]] optimizer rule.
+    * functions plus the [[LevenshteinBandRule]] optimizer rule. Safe to
+    * call from concurrent requests: the rule's check-then-append is one
+    * critical section, so it is never added twice.
     */
   def register(spark: SparkSession): Unit = {
     all.foreach { case (ident, info, builder) =>
       spark.sessionState.functionRegistry
         .registerFunction(ident, info, builder)
     }
-    if (!spark.experimental.extraOptimizations.contains(LevenshteinBandRule)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ LevenshteinBandRule
+    val methods = spark.experimental
+    methods.synchronized {
+      if (!methods.extraOptimizations.contains(LevenshteinBandRule))
+        methods.extraOptimizations =
+          methods.extraOptimizations :+ LevenshteinBandRule
     }
   }
 }

@@ -17,6 +17,8 @@ class HttpShimSpec extends SparkSpec {
     val conn = new URI(s"http://127.0.0.1:$port$path").toURL
       .openConnection().asInstanceOf[HttpURLConnection]
     conn.setRequestMethod("GET")
+    // a server that drops a request fails the case instead of hanging it
+    conn.setReadTimeout(120000)
     val code = conn.getResponseCode
     val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
     val body = Option(is)
@@ -432,6 +434,158 @@ class HttpShimSpec extends SparkSpec {
     } finally {
       shim.stop()
       spark.sql("DROP DATABASE IF EXISTS graft_hprdb CASCADE")
+    }
+  }
+
+  test("requests are served on named daemon pool threads, and stop() " +
+    "retires every one of them") {
+    val servedBy = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    val shim = HttpShim.start(Map("who" -> { () =>
+      servedBy.add(Thread.currentThread())
+      Seq(1).toDF("x")
+    }))
+    val bodies = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    try {
+      val clients = (1 to 4).map(_ => new Thread(() =>
+        (1 to 3).foreach(_ => bodies.add(get(shim.port, "/who")._2))))
+      clients.foreach(_.start()); clients.foreach(_.join())
+    } finally shim.stop()
+    assert(bodies.size == 12 &&
+      bodies.toArray.forall(_ == """[{"x":1}]"""), bodies)
+    val threads = servedBy.toArray(Array.empty[Thread]).toSeq
+    assert(threads.nonEmpty)
+    threads.foreach { t =>
+      assert(t.getName.startsWith("graft-http-") && t.isDaemon, t.getName)
+    }
+    // a worker leaves the pool's books just before its thread ends
+    val deadline = System.nanoTime() + 10000000000L
+    while (threads.exists(_.isAlive) && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert(!threads.exists(_.isAlive),
+      threads.filter(_.isAlive).map(_.getName).mkString(", "))
+  }
+
+  test("a route that throws AssertionError answers the error object, " +
+    "and the next request is still served") {
+    val shim = HttpShim.start(Map(
+      // Predef's assert (java.lang.AssertionError), as an operator's
+      // assert throws; the suite's own assert throws an Exception
+      "boom" -> { () => Predef.assert(1 + 1 == 3, "boom"); Seq(1).toDF("x") },
+      "ok" -> (() => Seq(2).toDF("x"))))
+    try {
+      val (c1, b1) = get(shim.port, "/boom")
+      assert(c1 == 200 && b1 == """{"error":"assertion failed: boom"}""", b1)
+      val (c2, b2) = get(shim.port, "/ok")
+      assert(c2 == 200 && b2 == """[{"x":2}]""", b2)
+    } finally shim.stop()
+  }
+
+  test("each request runs under the job group http:<route>, a route's " +
+    "own group wins, and no pooled thread keeps a group afterwards") {
+    val sc = spark.sparkContext
+    val atEntry = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.jobGroup.id")))
+          .filter(g => g.startsWith("http:") || g == "mine")
+          .foreach(jobGroups.add)
+    }
+    sc.addSparkListener(listener)
+    val shim = HttpShim.startDynamic(Map(
+      "seen" -> { _ =>
+        atEntry.add(sc.getLocalProperty("spark.jobGroup.id") + " | " +
+          sc.getLocalProperty("spark.job.description"))
+        Seq(1).toDF("x").repartition(2)
+      },
+      "own" -> { _ =>
+        sc.setJobGroup("mine", "set by the route")
+        Seq(2).toDF("x").repartition(2)
+      }))
+    try {
+      assert(get(shim.port, "/seen?a=1&b=x")._1 == 200)
+      assert(atEntry.peek() == "http:seen | a=1&b=x", atEntry)
+      assert(get(shim.port, "/own")._1 == 200)
+      org.apache.spark.GraftListenerBus.drain(sc)
+      val groups = jobGroups.toArray.toSeq.map(String.valueOf)
+      assert(groups.contains("http:seen") && groups.contains("mine") &&
+        !groups.contains("http:own"), groups)
+      // occupy every pool thread at once: none carries a group
+      val n = Runtime.getRuntime.availableProcessors
+      val barrier = new java.util.concurrent.CyclicBarrier(n)
+      val left = (1 to n).map(_ => shim.pool.submit(
+        new java.util.concurrent.Callable[String] {
+          override def call(): String = {
+            barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
+            sc.getLocalProperty("spark.jobGroup.id")
+          }
+        })).map(_.get())
+      assert(left.forall(_ == null), left)
+    } finally {
+      shim.stop()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("concurrent requests over /search, /similar and /quality return " +
+    "the bytes the same requests return served one at a time") {
+    import graft.ext.{Ivf, QualityModel, Retrieval}
+    graft.plans.GraftFunctions.register(spark)
+    val loc = Files.createTempDirectory("graft_httpconc").toString
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_concdb LOCATION '$loc'")
+    val docs = Seq(
+      (0L, "cat dog cat mouse", true), (1L, "cat fish", false),
+      (2L, "dog dog dog", true), (3L, "bird mouse cat dog fish", true),
+      (4L, "bird bird", false))
+      .toDF("doc_id", "text", "label")
+    Retrieval.writeBm25Index(docs, "doc_id", "text", "graft_concdb.bm25",
+      nBuckets = 4)
+    val emb = spark.read
+      .parquet("/root/testdata/sf0.001/embeddings.parquet")
+    Ivf.writeIndex(emb, "vec_id", "embedding",
+      Ivf.trainCentroids(emb, "embedding", nList = 8, dim = 64,
+        sampleSize = 500, iters = 2),
+      64, "graft_concdb.ivf", nBuckets = 4)
+    QualityModel.writeQualityModel(spark, "graft_concdb.qm",
+      QualityModel.trainQualityClassifier(docs, "doc_id", "text", "label",
+        nBuckets = 32, steps = 3).toSeq)
+    val ids = emb.select("vec_id").orderBy("vec_id").limit(3)
+      .as[Long].collect().toSeq
+    val paths = Seq("/search?q=cat%20mouse&k=3", "/search?q=dog&k=2",
+        "/search?q=bird%20fish") ++
+      ids.map(id => s"/similar?id=$id&k=3") ++
+      Seq("/quality?text=cat%20dog", "/quality?text=bird%20bird%20fish")
+    val shim = HttpShim.startDynamic(
+      HttpShim.retrievalRoutes(spark, "graft_concdb.bm25") ++
+        HttpShim.annRoutes(spark, "graft_concdb.ivf", "vec_id", "embedding") ++
+        HttpShim.qualityRoutes(spark, "graft_concdb.qm"))
+    try {
+      val serial = paths.map(p => p -> get(shim.port, p)._2).toMap
+      serial.foreach { case (p, b) =>
+        assert(b.startsWith("[{"), s"$p -> $b")
+      }
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val served = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+      val clients = (0 until 4).map { c => new Thread(() => {
+        go.await()
+        (0 until 8).foreach { i =>
+          val p = paths((c * 8 + i) % paths.size)
+          served.add(p -> get(shim.port, p)._2)
+        }
+      })}
+      clients.foreach(_.start())
+      go.countDown()
+      clients.foreach(_.join())
+      val got = served.toArray(Array.empty[(String, String)]).toSeq
+      assert(got.size == 32)
+      got.foreach { case (p, b) =>
+        assert(b == serial(p), s"$p: concurrent=$b serial=${serial(p)}")
+      }
+    } finally {
+      shim.stop()
+      spark.sql("DROP DATABASE IF EXISTS graft_concdb CASCADE")
     }
   }
 }

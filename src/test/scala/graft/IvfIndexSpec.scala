@@ -30,7 +30,32 @@ class IvfIndexSpec extends SparkSpec {
 
   test("centroids round-trip bit-exactly through the catalog") {
     val trained = centroids // forces the index write
-    assert(Ivf.loadCentroids(spark, table).toSeq == trained.toSeq)
+    assert(Ivf.loadModel(spark, table) match {
+      case (dim, c) => dim == 64 && c.toSeq == trained.toSeq
+    })
+  }
+
+  test("loadModel equals the ordered (pos) read, whatever the stored " +
+    "row order; an empty model fails its require") {
+    centroids // force index write
+    // the same model stored in descending pos order over several files
+    val shuffled = "graft_ivfdb.shuffled_idx"
+    spark.table(s"${table}_centroids").orderBy(col("pos").desc)
+      .repartition(3)
+      .write.mode("overwrite").saveAsTable(s"${shuffled}_centroids")
+    def orderedRead(t: String): (Int, Seq[Double]) =
+      (spark.table(s"${t}_centroids").select("dim").limit(1).as[Int].head(),
+        spark.table(s"${t}_centroids").orderBy("pos").select("value")
+          .as[Double].collect().toSeq)
+    Seq(table, shuffled).foreach { t =>
+      val (dim, c) = Ivf.loadModel(spark, t)
+      assert((dim, c.toSeq) == orderedRead(t), t)
+    }
+    val empty = "graft_ivfdb.empty_idx"
+    spark.table(s"${table}_centroids").limit(0)
+      .write.mode("overwrite").saveAsTable(s"${empty}_centroids")
+    val e = intercept[IllegalArgumentException](Ivf.loadModel(spark, empty))
+    assert(e.getMessage == s"requirement failed: empty IVF model in $empty")
   }
 
   test("the model persists its column names: serving binds by name, " +
@@ -112,7 +137,7 @@ class IvfIndexSpec extends SparkSpec {
       val c = indexed.select(col("vec_id").as("neighbor_id"), col("list"))
       val q = queries.select(col("vec_id").as("query_id"),
         explode(Ivf.assignLists(col("embedding"),
-          Ivf.loadCentroids(spark, table), dim = 64, probes = 4)).as("list"))
+          Ivf.loadModel(spark, table)._2, dim = 64, probes = 4)).as("list"))
       val cands = c.join(q, "list")
       val plan = cands.queryExecution.executedPlan.toString
       val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
