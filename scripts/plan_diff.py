@@ -15,7 +15,14 @@ code:
 - lambda class names (`Multimodal$$$Lambda$4979/0x...@2c5dfc9b`);
 - JVM identity hashes of literals (`UnsafeArrayData@7a50b5f7`, `[B@1be49fb9`);
 - the warehouse path prefix (`file:/.../spark-warehouse`), which follows
-  the working directory of the run.
+  the working directory of the run;
+- the order of a distinct-aggregate `Expand`'s groups and columns. Spark
+  orders them by a hash of the expressions, and expression ids come from
+  one JVM-wide counter, so one query's plan depends on how many
+  expressions the queries before it in the same JVM made. Each such
+  `Expand` is put in column-name order: its rows, its `gid` numbers (and
+  every `gid = k` that reads them), and each list that holds exactly its
+  output columns.
 
 Prints the queries whose normalized plans differ (plus any query dumped
 on one side only) and exits 1 if there is any; exits 0 when every plan
@@ -36,7 +43,105 @@ RULES = [
 ]
 
 
+EXPAND_ARGS = re.compile(r"^Arguments: \[(\[.*\])\], \[(.*)\]$")
+
+
+def split_items(s: str) -> list:
+    """Split a comma-separated list at the top level of its brackets."""
+    items, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch in "([{":
+            depth += 1
+        elif ch in ")]}":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            items.append(s[start:i].strip())
+            start = i + 1
+    items.append(s[start:].strip())
+    return items
+
+
+def closing(s: str, i: int) -> int:
+    """Index of the bracket that closes the one at `i`."""
+    depth = 0
+    for j in range(i, len(s)):
+        if s[j] in "([{":
+            depth += 1
+        elif s[j] in ")]}":
+            depth -= 1
+            if depth == 0:
+                return j
+    return len(s) - 1
+
+
+def reorder_lists(s: str, rank: dict) -> str:
+    """Put each bracketed list whose items name every column of `rank`,
+    one column per item, in rank order; items that name no column keep
+    their places (a partition count, say)."""
+    pats = {c: re.compile(r"(?<![\w.])" + re.escape(c) + r"(?![\w])")
+            for c in rank}
+    out, i = [], 0
+    while i < len(s):
+        if s[i] not in "([":
+            out.append(s[i])
+            i += 1
+            continue
+        j = closing(s, i)
+        items = split_items(s[i + 1:j])
+        refs = [[c for c, p in pats.items() if p.search(it)] for it in items]
+        named = [k for k, r in enumerate(refs) if r]
+        if (all(len(refs[k]) == 1 for k in named) and
+                sorted(refs[k][0] for k in named) == sorted(rank)):
+            ordered = sorted(named, key=lambda k: rank[refs[k][0]])
+            new = list(items)
+            for slot, k in zip(named, ordered):
+                new[slot] = items[k]
+            items = new
+        items = [reorder_lists(it, rank) for it in items]
+        out.append(s[i] + ", ".join(items) + s[j])
+        i = j + 1
+    return "".join(out)
+
+
+def canonical_expands(text: str) -> str:
+    """Put each distinct-aggregate Expand (rows `[..., gid]`, outputs
+    `[..., gid#id]`) in column-name order, relabel its gids to match,
+    and reorder the lists that carry its output columns."""
+    lines = text.split("\n")
+    for n, line in enumerate(lines):
+        m = EXPAND_ARGS.match(line)
+        if not m or n < 2 or "Expand" not in lines[n - 2]:
+            continue
+        rows = [split_items(r.strip("[]")) for r in split_items(m.group(1))]
+        outs = split_items(m.group(2))
+        if (not outs[-1].startswith("gid#") or
+                not all(len(r) == len(outs) and r[-1].isdigit() for r in rows)):
+            continue
+        cols = outs[:-1]
+        perm = sorted(range(len(cols)),
+                      key=lambda k: (re.sub(r"#\d+", "", cols[k]), k))
+        rows = [[r[k] for k in perm] + [r[-1]] for r in rows]
+        rows.sort(key=lambda r: [re.sub(r"#\d+", "", x) for x in r[:-1]])
+        gids = sorted((r[-1] for r in rows), key=int)
+        relabel = {r[-1]: g for r, g in zip(rows, gids)}
+        rows = [r[:-1] + [relabel[r[-1]]] for r in rows]
+        lines[n] = ("Arguments: [" +
+                    ", ".join("[" + ", ".join(r) + "]" for r in rows) +
+                    "], [" + ", ".join([cols[k] for k in perm] + [outs[-1]]) +
+                    "]")
+        gid = re.escape(outs[-1])
+        rank = {c: i for i, c in enumerate([cols[k] for k in perm] + [outs[-1]])}
+        for k, other in enumerate(lines):
+            if k != n:
+                other = re.sub(r"(?<![\w.])(" + gid + r" = )(\d+)",
+                               lambda g: g.group(1) + relabel.get(
+                                   g.group(2), g.group(2)), other)
+                lines[k] = reorder_lists(other, rank)
+    return "\n".join(lines)
+
+
 def normalize(text: str) -> str:
+    text = canonical_expands(text)
     for pattern, repl in RULES:
         text = pattern.sub(repl, text)
     return text

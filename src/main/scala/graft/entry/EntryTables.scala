@@ -16,8 +16,27 @@ import org.apache.spark.sql.types._
   */
 private[graft] object EntryTables {
 
-  def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** One input table (`<dir>/<name>.parquet`), read with the schema
+    * inferred once per version of its files ([[graft.io.VersionMemo]]), so building a query starts no
+    * parquet schema-inference job after the first read. The session's
+    * settings that change what inference returns (the `events` reader's
+    * `nanosAsLong` among them) are part of the key. */
+  def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = graft.io.VersionMemo(s,
+        ("parquet-schema", path, ParquetInferenceConfs.map(s.conf.getOption)),
+        Seq(path)) {
+      s.read.parquet(path).schema
+    }
+    s.read.schema(schema).parquet(path)
+  }
+
+  private val ParquetInferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
 
   /** Spread a scan across the session's cores before a compute-heavy
     * narrow chain (regex extraction, language ID, per-char folds):

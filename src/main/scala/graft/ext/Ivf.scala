@@ -737,16 +737,22 @@ object Ivf {
   }
 
   /** Reload the model persisted by [[writeIndex]]: the vector
-    * dimensionality and the row-major centroid matrix. One job: the
-    * `(pos, value, dim)` rows (≤ nList·dim of them) are collected
-    * unsorted and put in `pos` order on the driver.
+    * dimensionality and the row-major centroid matrix. One job per
+    * version of `<table>_centroids` ([[graft.io.VersionMemo]]; a warm
+    * call runs none): the `(pos, value, dim)` rows (≤ nList·dim of
+    * them) are collected unsorted and put in `pos` order on the
+    * driver. The matrix is a fresh copy on every call.
     */
   def loadModel(spark: SparkSession, table: String): (Int, Array[Double]) = {
-    val rows = spark.table(s"${table}_centroids")
-      .select(col("pos"), col("value"), col("dim")).collect()
-    require(rows.nonEmpty, s"empty IVF model in $table")
-    (rows(0).getInt(2),
-      rows.sortBy(_.getInt(0)).map(_.getDouble(1)))
+    val (dim, centroids) = graft.io.VersionMemo.table(spark, "ivf-model",
+        Seq(s"${table}_centroids")) {
+      val rows = spark.table(s"${table}_centroids")
+        .select(col("pos"), col("value"), col("dim")).collect()
+      require(rows.nonEmpty, s"empty IVF model in $table")
+      (rows(0).getInt(2),
+        rows.sortBy(_.getInt(0)).map(_.getDouble(1)))
+    }
+    (dim, centroids.clone())
   }
 
   /** The vector column name the index at `table` was written with
@@ -772,7 +778,17 @@ object Ivf {
     */
   def ivfTopKIndexed(spark: SparkSession, table: String, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int,
-                     nProbe: Int = 4): DataFrame = {
+                     nProbe: Int = 4): DataFrame =
+    ivfProbe(spark, table, queries, idCol, vecCol, k, nProbe,
+      queriesFitBroadcast = false)
+
+  /** [[ivfTopKIndexed]]; `queriesFitBroadcast` tells the rerank the
+    * query side is known to be below its broadcast limit, so it builds
+    * the plan without counting the queries first. */
+  private[graft] def ivfProbe(spark: SparkSession, table: String,
+                              queries: DataFrame, idCol: String,
+                              vecCol: String, k: Int, nProbe: Int,
+                              queriesFitBroadcast: Boolean): DataFrame = {
     val (dim, centroids) = loadModel(spark, table)
     val indexed = spark.table(table)
     val c = indexed.select(col(idCol).as("neighbor_id"), col("list"))
@@ -781,6 +797,7 @@ object Ivf {
     val cands = c.join(q, "list")
       .filter(col("neighbor_id") =!= col("query_id"))
       .select("query_id", "neighbor_id")
-    Similarity.rerankTopK(cands, indexed, queries, idCol, vecCol, k, dim)
+    Similarity.rerankTopK(cands, indexed, queries, idCol, vecCol, k, dim,
+      queriesFitBroadcast = queriesFitBroadcast)
   }
 }

@@ -266,17 +266,24 @@ object QualityModel {
   }
 
   /** Load a persisted quality model back into the dense lattice +
-    * salt [[writeQualityModel]] recorded. */
+    * salt [[writeQualityModel]] recorded. Read once per version of the
+    * two tables ([[graft.io.VersionMemo]]): a warm call runs no job,
+    * and a rewrite (`refreshQualityModel`) is loaded on the next call.
+    * The lattice is a fresh copy on every call. */
   def loadQualityModel(spark: org.apache.spark.sql.SparkSession,
                        table: String): (Array[Long], String) = {
-    val rows = spark.table(table)
-      .select(col("bucket"), col("w_micro")).collect()
-    require(rows.nonEmpty, s"empty model table $table")
-    val w = new Array[Long](rows.length)
-    rows.foreach(r => w(r.getLong(0).toInt) = r.getLong(1))
-    val salt = spark.table(s"${table}_meta")
-      .select(col("salt")).head.getString(0)
-    (w, salt)
+    val (w, salt) = graft.io.VersionMemo.table(spark, "quality-model",
+        Seq(table, s"${table}_meta")) {
+      val rows = spark.table(table)
+        .select(col("bucket"), col("w_micro")).collect()
+      require(rows.nonEmpty, s"empty model table $table")
+      val w = new Array[Long](rows.length)
+      rows.foreach(r => w(r.getLong(0).toInt) = r.getLong(1))
+      val salt = spark.table(s"${table}_meta")
+        .select(col("salt")).head.getString(0)
+      (w, salt)
+    }
+    (w.clone(), salt)
   }
 
   /** Score a corpus against a PERSISTED quality model — the serving

@@ -376,15 +376,22 @@ object Retrieval {
 
   /** The indexed corpus' id column, as recorded by [[writeBm25Index]]
     * in `<table>_meta`; falls back to the postings' second column for
-    * indexes persisted before the name was recorded.
+    * indexes persisted before the name was recorded. Read once per
+    * version of the postings and meta ([[graft.io.VersionMemo]]), which
+    * also refreshes both tables in this session whenever their files
+    * have moved: appends may land from another session (a streaming
+    * ingest clone), and a probe that calls this first serves the grown
+    * corpus. A warm call with unmoved files runs no job and no refresh.
     */
   private def bm25IdCol(spark: org.apache.spark.sql.SparkSession,
-                        table: String): String = {
-    val meta = spark.table(s"${table}_meta")
-    if (meta.columns.contains("id_col"))
-      meta.select(col("id_col")).head.getString(0)
-    else spark.table(table).columns(1)
-  }
+                        table: String): String =
+    graft.io.VersionMemo.table(spark, "bm25-id-col",
+        Seq(table, s"${table}_meta")) {
+      val meta = spark.table(s"${table}_meta")
+      if (meta.columns.contains("id_col"))
+        meta.select(col("id_col")).head.getString(0)
+      else spark.table(table).columns(1)
+    }
 
   /** Probe a PERSISTED BM25 index ([[writeBm25Index]]) with a query
     * term set — bit-identical scores to the one-shot [[bm25TopK]] over
@@ -399,13 +406,9 @@ object Retrieval {
                     table: String, queryTerms: Seq[String],
                     k: Int): DataFrame = {
     require(queryTerms.nonEmpty && k > 0, "need query terms and k > 0")
-    // appends may land from another session (a streaming ingest
-    // clone): re-list both relations so the probe serves the grown
-    // corpus — the cost is a file listing, bounded by index file count
-    spark.catalog.refreshTable(table)
-    spark.catalog.refreshTable(s"${table}_meta")
-    val meta = spark.table(s"${table}_meta").select(col("n"), col("t"))
+    // first: re-lists both relations if another session appended
     val idCol = bm25IdCol(spark, table)
+    val meta = spark.table(s"${table}_meta").select(col("n"), col("t"))
     // drop("df"): tolerate the legacy denormalized-df layout — df now
     // comes from the scan itself (exact across appends; see
     // writeBm25Index)
@@ -459,16 +462,14 @@ object Retrieval {
                         queryIdCol: String, textCol: String,
                         k: Int, excludeSelf: Boolean = false): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    // cross-session append visibility — the bm25ProbeTopK rationale
-    spark.catalog.refreshTable(table)
-    spark.catalog.refreshTable(s"${table}_meta")
+    // first: cross-session append visibility (see bm25IdCol)
+    val idCol = bm25IdCol(spark, table)
     val qt = queries.select(col(queryIdCol),
         explode(array_distinct(TextOps.tokens(lower(col(textCol)))))
           .as("term"))
       .filter(length(col("term")) > 0)
     val terms = qt.select(col("term")).distinct()
       .collect().map(_.getString(0)).toSeq
-    val idCol = bm25IdCol(spark, table)
     val matched =
       if (terms.isEmpty) spark.table(table).filter(lit(false))
       else spark.table(table).filter(col("term").isin(terms: _*))

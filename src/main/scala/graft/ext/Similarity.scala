@@ -121,11 +121,14 @@ object Similarity {
     * an oversized one must degrade to a planner-chosen shuffle join, not
     * die on a driver OOM / broadcast size limit. Within the gate the
     * broadcast shape is the soak-pinned one (thin pairs first, query
-    * vectors never sorted).
+    * vectors never sorted). A caller that knows its query side is
+    * within the gate (a served single-id probe) passes
+    * `queriesFitBroadcast` and skips the count job.
     */
   def rerankTopK(cands: DataFrame, corpus: DataFrame, queries: DataFrame,
                  idCol: String, vecCol: String, k: Int, dim: Int,
-                 broadcastLimit: Int = BroadcastQueryRowLimit): DataFrame = {
+                 broadcastLimit: Int = BroadcastQueryRowLimit,
+                 queriesFitBroadcast: Boolean = false): DataFrame = {
     def prep(df: DataFrame, id: String, v: String, n: String) =
       df.select(col(idCol).as(id),
           transform(col(vecCol), x => x.cast("double")).as(v))
@@ -142,7 +145,8 @@ object Similarity {
     // vs ~2 GB for the thin form. Same rows either way (inner joins).
     val preppedQ = prep(queries, "query_id", "qvec", "qn")
     val qSide =
-      if (queries.limit(broadcastLimit + 1).count() <= broadcastLimit)
+      if (queriesFitBroadcast ||
+          queries.limit(broadcastLimit + 1).count() <= broadcastLimit)
         broadcast(preppedQ)
       else preppedQ
     val scored = cands

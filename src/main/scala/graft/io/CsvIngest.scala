@@ -65,21 +65,28 @@ object CsvIngest {
   }
 
   /** Read one CSV with the reference's semantics: header, inferred types,
-    * 'nan'/'?' → null, heuristic timestamp parsing. With a declared
-    * `schema` the read is one scan; without one, `inferSchema` makes a
-    * full pass over the file to type the columns before the real read.
+    * 'nan'/'?' → null, heuristic timestamp parsing. The rows are read
+    * when the result runs, so every call sees the file as it is then.
+    * Without a declared `schema`, the types are inferred once per
+    * version of the file ([[VersionMemo]]: paths, lengths, modification
+    * times): the first read of a version makes `inferSchema`'s full pass
+    * over the file, and later reads of the same version reuse that
+    * schema and start no job before they run. A rewritten file is
+    * inferred again on its next read.
     */
   def readCsv(spark: SparkSession, path: String,
               schema: Option[StructType] = None): DataFrame = {
-    var reader = spark.read
+    def reader = spark.read
       .option("header", "true")
       .option("nullValue", "nan")
       .option("timestampFormat", TimestampFormat)
-    reader = schema match {
-      case Some(s) => reader.schema(s)
-      case None => reader.option("inferSchema", "true")
-    }
-    withHeuristicTimestamps(sweepNullTokens(reader.csv(path)))
+    val typed = schema.getOrElse(VersionMemo(spark,
+        ("csv-schema", path, Seq("spark.sql.session.timeZone",
+          "spark.sql.timestampType").map(spark.conf.getOption)),
+        Seq(path)) {
+      reader.option("inferSchema", "true").csv(path).schema
+    })
+    withHeuristicTimestamps(sweepNullTokens(reader.schema(typed).csv(path)))
   }
 
   /** Scan a directory of CSVs into a name→DataFrame registry

@@ -14,13 +14,18 @@ import scala.util.control.NonFatal
   * return it as a JSON array of row objects (an `{"error": ...}` object
   * on failure, still HTTP 200 — main.py:14-22).
   *
-  * Spark-first equivalent: each route maps to a DataFrame THUNK evaluated
-  * per request (the reference re-reads the file per request; same
-  * freshness semantics), serialized with `toJSON` so row objects are
-  * keyed by column name exactly like DictReader rows. Serving collects to
-  * the driver by design — this is a small-result API shim, not a data
-  * plane — but `maxRows` caps the collect so a mis-pointed route cannot
-  * OOM the driver.
+  * Spark-first equivalent: each route maps to a DataFrame built per
+  * request and serialized with `toJSON`, so row objects are keyed by
+  * column name exactly like DictReader rows. State per table version,
+  * rows per request: what a route derives from its artifact's files (a
+  * model's weights, an index's id column, a CSV's inferred schema) is
+  * loaded once per version of those files ([[VersionMemo]]) and reused
+  * until they change, while the rows themselves are read by every
+  * request, as the reference re-reads its file. A rewrite, an append or
+  * a retrained model is served from the very next request. Serving
+  * collects to the driver by design — this is a small-result API shim,
+  * not a data plane — but `maxRows` caps the collect so a mis-pointed
+  * route cannot OOM the driver.
   *
   * Requests are served concurrently on a fixed pool of daemon threads
   * (`graft-http-N`), one per available processor, so one request's
@@ -120,28 +125,38 @@ object HttpShim {
   /** `/similar?id=<doc>[&k=N]` answered from a PERSISTED IVF index
     * ([[graft.ext.Ivf.writeIndex]]) — more-like-this serving over the
     * vector family, completing the served-index trio (lexical BM25,
-    * quality model, ANN). The query vector comes from the index itself
-    * (one bucketed-id lookup), then the stock indexed probe runs, so a
-    * served neighbor list is bit-identical to the batch probe
-    * (spec-pinned). An id absent from the index surfaces as the
-    * standard `{"error": ...}` object.
+    * quality model, ANN). The query vector comes from the index itself,
+    * then the stock indexed probe runs, so a served neighbor list is
+    * bit-identical to the batch probe (spec-pinned). The id lookup is
+    * part of the probe plan: the requested id is left-joined to its
+    * stored row, and an id absent from the index fails the probe with
+    * an error naming it (the standard `{"error": ...}` object), so
+    * building the route's DataFrame runs no job.
     */
   def annRoutes(spark: org.apache.spark.sql.SparkSession,
                 table: String, idCol: String, vecCol: String,
                 defaultK: Int = 10, nProbe: Int = 4)
       : Map[String, HttpExchange => DataFrame] = Map(
     "similar" -> { ex =>
+      import org.apache.spark.sql.functions.{broadcast, col, lit,
+        raise_error, when}
+      import spark.implicits._
       val params = queryParams(ex.getRequestURI.getRawQuery)
       val id = params.getOrElse("id",
         throw new IllegalArgumentException("missing ?id= parameter")).toLong
       val k = params.get("k").map(_.toInt).getOrElse(defaultK)
-      val q = spark.table(table)
-        .filter(org.apache.spark.sql.functions.col(idCol) === id)
-        .select(org.apache.spark.sql.functions.col(idCol),
-          org.apache.spark.sql.functions.col(vecCol))
-      require(q.take(1).nonEmpty, s"id $id not in index $table")
-      graft.ext.Ivf.ivfTopKIndexed(spark, table, q, idCol, vecCol, k,
-        nProbe)
+      val index = spark.table(table)
+      val stored = index.filter(col(idCol) === id)
+        .select(col(idCol), col(vecCol), lit(true).as("__found"))
+      val q = Seq(id).toDF(idCol)
+        .select(col(idCol).cast(index.schema(idCol).dataType).as(idCol))
+        .join(broadcast(stored), Seq(idCol), "left")
+        .select(col(idCol),
+          when(col("__found").isNull,
+              raise_error(lit(s"id $id not in index $table")))
+            .otherwise(col(vecCol)).as(vecCol))
+      graft.ext.Ivf.ivfProbe(spark, table, q, idCol, vecCol, k, nProbe,
+        queriesFitBroadcast = true)
     })
 
   /** `/quality?text=<document>` answered from a PERSISTED trained
@@ -424,6 +439,17 @@ object HttpShim {
     sb.append("\"").toString
   }
 
+  /** The message a failed request answers. A `raise_error` in a route's
+    * plan reaches the driver wrapped in the job's failure; its own
+    * message is answered, as a driver-side `require` would have been. */
+  private def errorText(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
+      .collectFirst {
+        case t: org.apache.spark.SparkThrowable
+            if t.getCondition == "USER_RAISED_EXCEPTION" =>
+          t.getMessageParameters.get("errorMessage")
+      }.getOrElse(String.valueOf(e.getMessage))
+
   private def handler(route: String, mk: HttpExchange => DataFrame,
                       maxRows: Int): HttpHandler =
     new HttpHandler {
@@ -440,8 +466,7 @@ object HttpShim {
             // parity with read_csv's catch-all error object
             // (main.py:21-22); NonFatal also answers an operator's
             // AssertionError instead of dropping the connection
-            case NonFatal(e) =>
-              s"""{"error":${jsonQuote(String.valueOf(e.getMessage))}}"""
+            case NonFatal(e) => s"""{"error":${jsonQuote(errorText(e))}}"""
           } finally sc.foreach(_.clearJobGroup())
         val bytes = body.getBytes(StandardCharsets.UTF_8)
         ex.getResponseHeaders.set("Content-Type", "application/json")

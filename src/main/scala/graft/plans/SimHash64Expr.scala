@@ -18,13 +18,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * lambda frames per token (measured 9 s at sf0.1). Here each token is
   * hashed once and votes into a local int[64] — zero per-element
   * expression dispatch. CodegenFallback is deliberate: the eval loop IS
-  * the fast path (same rationale as [[MinHashSigExpr]]).
+  * the fast path (same rationale as [[MinHashSigExpr]]). A null token
+  * array (null text) casts no vote and yields 0, as the HOF fold does.
   */
 final case class SimHash64Expr(child: Expression)
     extends UnaryExpression with CodegenFallback {
 
   override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
+  override def nullable: Boolean = false
 
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -35,6 +36,11 @@ final case class SimHash64Expr(child: Expression)
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
           s"graft_simhash64 expects array<string>, got ${other.sql}")
     }
+  }
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val arr = child.eval(input)
+    if (arr == null) 0L else nullSafeEval(arr)
   }
 
   override def nullSafeEval(input: Any): Any = {

@@ -28,7 +28,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, St
   * (the [[SimHash64Expr]] sign rule). Null tokens are SKIPPED — no vote —
   * matching both the MinHash null no-op convention and what any engine
   * unnesting the token array (the q27 oracle shape) computes, since
-  * unnest simply omits null rows.
+  * unnest simply omits null rows. A null token array (null text) casts
+  * no vote and yields `(0, 0)`, as the HOF fold does.
   */
 final case class SimHashMd5Expr(child: Expression)
     extends UnaryExpression with CodegenFallback {
@@ -36,7 +37,7 @@ final case class SimHashMd5Expr(child: Expression)
   override def dataType: DataType = StructType(Seq(
     StructField("simhash_hi", LongType, nullable = false),
     StructField("simhash_lo", LongType, nullable = false)))
-  override def nullable: Boolean = child.nullable
+  override def nullable: Boolean = false
 
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -47,6 +48,11 @@ final case class SimHashMd5Expr(child: Expression)
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
           s"graft_simhash_md5 expects array<string>, got ${other.sql}")
     }
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val arr = child.eval(input)
+    if (arr == null) InternalRow(0L, 0L) else nullSafeEval(arr)
   }
 
   override def nullSafeEval(input: Any): Any = {

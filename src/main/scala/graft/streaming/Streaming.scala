@@ -209,11 +209,8 @@ object EventStreams {
     queries.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // the micro-batch runs on a CLONED session with its own
-        // relation cache: an append (new postings files) or meta bump
-        // (overwritten file) between batches would otherwise serve a
-        // stale listing — or die on the replaced meta file
-        batch.sparkSession.catalog.refreshTable(table)
-        batch.sparkSession.catalog.refreshTable(s"${table}_meta")
+        // relation cache; the probe refreshes both tables in it
+        // whenever an append or meta bump has moved their files
         onBatch(graft.ext.Retrieval.bm25ProbePerQuery(batch.sparkSession,
           table, batch, queryIdCol, textCol, k), batchId)
       }

@@ -114,7 +114,8 @@ class DedupSpec extends SparkSpec {
   test("portable md5 simhash: native ≡ HOF, single-token doc pinned bit-exactly") {
     graft.plans.GraftFunctions.register(spark)
     val edge = Seq((30L, "hello"), (31L, ""), (32L, "  spaced   out  "),
-      (33L, "rep rep rep unique tail here"))
+      (33L, "rep rep rep unique tail here"),
+      (34L, null: String)) // null text -> (0, 0), no vote cast
       .toDF("doc_id", "text")
     val both = docs.select(col("doc_id"), col("text")).unionByName(edge)
       .select(col("doc_id"),
@@ -245,7 +246,8 @@ class DedupSpec extends SparkSpec {
   test("simhash native vote fold is bit-identical to the HOF fold") {
     graft.plans.GraftFunctions.register(spark)
     val edge = Seq((10L, "one"), (11L, ""), (12L, "  spaced   out  "),
-      (13L, "the quick brown fox jumps over the lazy dog"))
+      (13L, "the quick brown fox jumps over the lazy dog"),
+      (14L, null: String)) // null text -> 0, no vote cast
       .toDF("doc_id", "text")
     val both = docs.select(col("doc_id"), col("text"))
       .unionByName(edge)

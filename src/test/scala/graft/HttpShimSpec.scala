@@ -28,6 +28,18 @@ class HttpShimSpec extends SparkSpec {
     (code, body)
   }
 
+  /** 300 deterministic 64-dim float vectors, each component from its
+    * own md5 digest, so they spread over the IVF lists. */
+  private def embeddings: org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{array, concat_ws, conv, lit, md5,
+      substring}
+    spark.range(300).select(col("id").as("vec_id"),
+      array((0 until 64).map(j =>
+        (conv(substring(md5(concat_ws(":", col("id").cast("string"),
+            lit(j.toString))), 1, 4), 16, 10).cast("double") / 65535.0 - 0.5)
+          .cast("float")): _*).as("embedding"))
+  }
+
   test("serves /payments and /reviews as JSON row arrays") {
     val payments = Seq((1L, "credit_card", 93.77), (2L, "boleto", 24.39))
       .toDF("order_id", "payment_type", "payment_value")
@@ -108,7 +120,9 @@ class HttpShimSpec extends SparkSpec {
         .toJSON.collect().mkString("[", ",", "]")
       assert(body == expect, s"served=$body expect=$expect")
       val (c2, b2) = get(shim.port, "/similar?id=999999999")
-      assert(c2 == 200 && b2.startsWith("""{"error":"""), b2)
+      assert(c2 == 200 &&
+        b2 == """{"error":"id 999999999 not in index graft_httpanndb.idx"}""",
+        b2)
       val (c3, b3) = get(shim.port, "/similar")
       assert(c3 == 200 && b3.startsWith("""{"error":"""), b3)
     } finally shim.stop()
@@ -586,6 +600,187 @@ class HttpShimSpec extends SparkSpec {
     } finally {
       shim.stop()
       spark.sql("DROP DATABASE IF EXISTS graft_concdb CASCADE")
+    }
+  }
+
+  test("the next request serves an artifact's new version: " +
+    "refreshQualityModel, appendToBm25Index and Ivf.appendToIndex, " +
+    "each equal to the batch operator") {
+    import graft.ext.{Ivf, QualityModel, Retrieval}
+    graft.plans.GraftFunctions.register(spark)
+    val loc = Files.createTempDirectory("graft_httpver").toString
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_verdb LOCATION '$loc'")
+    val docs = Seq(
+      (0L, "cat dog cat mouse", true), (1L, "cat fish", false),
+      (2L, "dog dog dog", true), (3L, "bird mouse cat dog fish", true))
+      .toDF("doc_id", "text", "label")
+    Retrieval.writeBm25Index(docs, "doc_id", "text", "graft_verdb.bm25",
+      nBuckets = 4)
+    val emb = embeddings
+    Ivf.writeIndex(emb, "vec_id", "embedding",
+      Ivf.trainCentroids(emb, "embedding", nList = 8, dim = 64,
+        sampleSize = 500, iters = 2),
+      64, "graft_verdb.ivf", nBuckets = 4)
+    QualityModel.writeQualityModel(spark, "graft_verdb.qm",
+      QualityModel.trainQualityClassifier(docs, "doc_id", "text", "label",
+        nBuckets = 32, steps = 3).toSeq)
+    val probeId = emb.select("vec_id").orderBy("vec_id").head.getLong(0)
+    val copyId = 900000001L
+    val shim = HttpShim.startDynamic(
+      HttpShim.retrievalRoutes(spark, "graft_verdb.bm25") ++
+        HttpShim.annRoutes(spark, "graft_verdb.ivf", "vec_id", "embedding") ++
+        HttpShim.qualityRoutes(spark, "graft_verdb.qm"))
+    def json(df: org.apache.spark.sql.DataFrame): String =
+      df.toJSON.collect().mkString("[", ",", "]")
+    try {
+      // every route serves (and so loads) its artifact once first
+      val q0 = get(shim.port, "/quality?text=cat%20dog")._2
+      assert(q0.startsWith("[{"), q0)
+      assert(get(shim.port, "/search?q=zebra%20cat&k=3")._2.startsWith("[{"))
+      assert(get(shim.port, s"/similar?id=$probeId&k=3")._2.startsWith("[{"))
+      assert(get(shim.port, s"/similar?id=$copyId&k=3")._2
+        .startsWith("""{"error":"""))
+
+      QualityModel.refreshQualityModel(spark, "graft_verdb.qm",
+        Seq((9L, "cat dog cat dog", false), (8L, "fish", true))
+          .toDF("doc_id", "text", "label"),
+        "doc_id", "text", "label", steps = 3, lrPpm = 400000L)
+      val q1 = get(shim.port, "/quality?text=cat%20dog")._2
+      assert(q1 != q0, q1)
+      assert(q1 == json(QualityModel.qualityClassifierScoreIndexed(spark,
+        "graft_verdb.qm", Seq("cat dog").toDF("text"), "text")), q1)
+
+      Retrieval.appendToBm25Index(
+        Seq((7L, "zebra zebra cat")).toDF("doc_id", "text"),
+        "doc_id", "text", "graft_verdb.bm25")
+      val s1 = get(shim.port, "/search?q=zebra%20cat&k=3")._2
+      assert(s1.contains(""""doc_id":7"""), s1)
+      assert(s1 == json(Retrieval.bm25ProbeTopK(spark, "graft_verdb.bm25",
+        Seq("zebra", "cat"), 3)), s1)
+
+      // an exact copy of the probe's vector under a new id: the copy is
+      // now servable, and it is the probe's nearest neighbor
+      Ivf.appendToIndex(emb.filter(col("vec_id") === probeId)
+          .select(org.apache.spark.sql.functions.lit(copyId).as("vec_id"),
+            col("embedding")),
+        "vec_id", "embedding", "graft_verdb.ivf")
+      val v1 = get(shim.port, s"/similar?id=$probeId&k=3")._2
+      assert(v1.contains(s""""neighbor_id":$copyId"""), v1)
+      assert(v1 == json(Ivf.ivfTopKIndexed(spark, "graft_verdb.ivf",
+          spark.table("graft_verdb.ivf").filter(col("vec_id") === probeId)
+            .select(col("vec_id"), col("embedding")),
+          "vec_id", "embedding", k = 3)), v1)
+      assert(get(shim.port, s"/similar?id=$copyId&k=3")._2.startsWith("[{"))
+    } finally {
+      shim.stop()
+      spark.sql("DROP DATABASE IF EXISTS graft_verdb CASCADE")
+    }
+  }
+
+  test("a CSV rewritten in place is served with its new columns on the " +
+    "next request, as a fresh schema inference reads it") {
+    import graft.io.CsvIngest
+    val dir = Files.createTempDirectory("graft_httpcsv").toString
+    val pay = java.nio.file.Paths.get(s"$dir/payments.csv")
+    Files.write(pay,
+      "order_id,payment_value\n1,10.5\n".getBytes(StandardCharsets.UTF_8))
+    // the parent read: inferSchema on every call, no memo
+    def fresh: String = CsvIngest.withHeuristicTimestamps(
+        CsvIngest.sweepNullTokens(spark.read.option("header", "true")
+          .option("nullValue", "nan")
+          .option("timestampFormat", CsvIngest.TimestampFormat)
+          .option("inferSchema", "true").csv(pay.toString)))
+      .toJSON.collect().mkString("[", ",", "]")
+    val shim = HttpShim.start(Map(
+      "payments" -> (() => CsvIngest.readCsv(spark, pay.toString))))
+    try {
+      val b0 = get(shim.port, "/payments")._2
+      assert(b0 == fresh && b0 == """[{"order_id":1,"payment_value":10.5}]""",
+        b0)
+      Files.write(pay, ("order_id,payment_value,payment_type\n" +
+        "1,10.5,credit_card\n2,n/a,boleto\n").getBytes(StandardCharsets.UTF_8))
+      val b1 = get(shim.port, "/payments")._2
+      assert(b1 == fresh && b1.contains(""""payment_type":"credit_card"""") &&
+        b1.contains(""""payment_value":"n/a""""), b1)
+    } finally shim.stop()
+  }
+
+  test("a warm request to /search, /similar, /quality or /customers " +
+    "starts no job before its route returns") {
+    import com.sun.net.httpserver.HttpExchange
+    import graft.ext.{Ivf, QualityModel, Retrieval}
+    import graft.io.CsvIngest
+    graft.plans.GraftFunctions.register(spark)
+    val sc = spark.sparkContext
+    val loc = Files.createTempDirectory("graft_httpwarm").toString
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_warmdb LOCATION '$loc'")
+    val docs = Seq(
+      (0L, "cat dog cat mouse", true), (1L, "cat fish", false),
+      (2L, "dog dog dog", true), (3L, "bird mouse cat dog fish", true))
+      .toDF("doc_id", "text", "label")
+    Retrieval.writeBm25Index(docs, "doc_id", "text", "graft_warmdb.bm25",
+      nBuckets = 4)
+    val emb = embeddings
+    Ivf.writeIndex(emb, "vec_id", "embedding",
+      Ivf.trainCentroids(emb, "embedding", nList = 8, dim = 64,
+        sampleSize = 500, iters = 2),
+      64, "graft_warmdb.ivf", nBuckets = 4)
+    QualityModel.writeQualityModel(spark, "graft_warmdb.qm",
+      QualityModel.trainQualityClassifier(docs, "doc_id", "text", "label",
+        nBuckets = 32, steps = 3).toSeq)
+    val csv = s"$loc/customers.csv"
+    Files.write(java.nio.file.Paths.get(csv),
+      "c_custkey,c_name\n1,alice\n2,bob\n".getBytes(StandardCharsets.UTF_8))
+    val probeId = emb.select("vec_id").orderBy("vec_id").head.getLong(0)
+    val raw: Map[String, HttpExchange => org.apache.spark.sql.DataFrame] =
+      HttpShim.retrievalRoutes(spark, "graft_warmdb.bm25") ++
+        HttpShim.annRoutes(spark, "graft_warmdb.ivf", "vec_id", "embedding") ++
+        HttpShim.qualityRoutes(spark, "graft_warmdb.qm") +
+        ("customers" -> ((_: HttpExchange) => CsvIngest.readCsv(spark, csv)))
+    // each request's route runs under build:<route>:<n>, its result
+    // under run:<route>:<n>
+    val seq = new java.util.concurrent.atomic.AtomicInteger(0)
+    val routes = raw.map { case (p, mk) => p -> { (ex: HttpExchange) =>
+      val n = seq.incrementAndGet()
+      sc.setJobGroup(s"build:$p:$n", "")
+      val df = mk(ex)
+      sc.setJobGroup(s"run:$p:$n", "")
+      df
+    }}
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.jobGroup.id")))
+          .filter(g => g.startsWith("build:") || g.startsWith("run:"))
+          .foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    val shim = HttpShim.startDynamic(routes)
+    val paths = Seq("/search?q=cat%20mouse&k=3", s"/similar?id=$probeId&k=3",
+      "/quality?text=cat%20dog", "/customers")
+    try {
+      // cold, then warm: request n of path i is n = 1 + i (cold) and
+      // 5 + i (warm)
+      val bodies = (paths ++ paths).map(p => get(shim.port, p)._2)
+      bodies.foreach(b => assert(b.startsWith("[{"), b))
+      assert(bodies.take(4) == bodies.drop(4))
+      org.apache.spark.GraftListenerBus.drain(sc)
+      val seen = groups.toArray.toSeq.map(String.valueOf)
+      def jobs(prefix: String) = seen.count(_.startsWith(prefix))
+      val routeOf = paths.map(_.stripPrefix("/").takeWhile(_ != '?'))
+      routeOf.zipWithIndex.foreach { case (r, i) =>
+        assert(jobs(s"build:$r:${5 + i}") == 0, s"warm $r: $seen")
+        assert(jobs(s"run:$r:${5 + i}") > 0, s"warm $r: $seen")
+      }
+      // the meter does see build jobs: the cold loads ran some
+      assert(jobs("build:quality:3") > 0 && jobs("build:customers:4") > 0,
+        seen)
+    } finally {
+      shim.stop()
+      sc.removeSparkListener(listener)
+      spark.sql("DROP DATABASE IF EXISTS graft_warmdb CASCADE")
     }
   }
 }
