@@ -16,9 +16,11 @@ import org.apache.spark.sql.types._
   */
 private[graft] object EntryTables {
 
-  /** One input table (`<dir>/<name>.parquet`), read with the schema
-    * inferred once per version of its files ([[graft.io.VersionMemo]]), so building a query starts no
-    * parquet schema-inference job after the first read. The session's
+  /** One input table (`<dir>/<name>.parquet`), read with a declared
+    * schema: the one inference would return, read from a parquet footer
+    * on the driver ([[graft.io.ParquetSchema]]) once per version of the
+    * files ([[graft.io.VersionMemo]]). Building a query therefore starts
+    * no schema-inference job, not even on a cold read. The session's
     * settings that change what inference returns (the `events` reader's
     * `nanosAsLong` among them) are part of the key. */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
@@ -26,7 +28,7 @@ private[graft] object EntryTables {
     val schema = graft.io.VersionMemo(s,
         ("parquet-schema", path, ParquetInferenceConfs.map(s.conf.getOption)),
         Seq(path)) {
-      s.read.parquet(path).schema
+      graft.io.ParquetSchema.of(s, path)
     }
     s.read.schema(schema).parquet(path)
   }

@@ -20,14 +20,74 @@ object Warehouse {
     * them sequentially, so an artifact pair (rules + fetch log, state
     * + meta) should not pay its write latencies back to back. Results
     * are unchanged — only submission order is. Callers must not point
-    * both actions at the same table. */
+    * both actions at the same table. See the [[Seq]] form for how the
+    * legs run and fail. */
   def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fa = Future(a)
-    val fb = Future(b)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+    val Seq(ra, rb) = inParallel(Seq[() => Any](() => a, () => b))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B])
+  }
+
+  /** Run independent eager actions concurrently and return their
+    * results in order.
+    *
+    * The legs run on a bounded pool of `graft-parallel-N` daemon
+    * threads. A leg that finds no idle thread runs on the calling
+    * thread instead, so nested calls never wait on a full pool. Each
+    * leg runs under the caller's job group, description and scheduler
+    * pool, with no inherited SQL execution id, so its jobs count
+    * toward whatever span the caller set; it also carries a job tag of
+    * its own. The first leg to fail cancels its siblings' jobs by tag;
+    * a sibling not yet started does not start. The call returns only
+    * after every leg has ended, and then rethrows that first failure.
+    */
+  def inParallel[T](legs: Seq[() => T]): Seq[T] = {
+    import java.util.concurrent.atomic.AtomicReference
+    val sc = SparkSession.active.sparkContext
+    val inherited = CopiedProperties.map(k => k -> sc.getLocalProperty(k)) ++
+      ClearedProperties.map(_ -> (null: String))
+    val call = Calls.incrementAndGet()
+    val tags = legs.indices.map(i => s"graft-parallel-$call-$i")
+    val failure = new AtomicReference[Throwable]()
+    val running = legs.zip(tags).map { case (leg, tag) =>
+      LegPool.submit(new java.util.concurrent.Callable[T] { def call(): T = {
+        if (failure.get != null)
+          throw new java.util.concurrent.CancellationException(
+            s"$tag not started: a sibling leg failed")
+        val saved = inherited.map { case (k, _) => k -> sc.getLocalProperty(k) }
+        inherited.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+        sc.addJobTag(tag)
+        try leg()
+        catch {
+          case e: Throwable =>
+            if (failure.compareAndSet(null, e))
+              tags.filterNot(_ == tag).foreach(sc.cancelJobsWithTag)
+            throw e
+        } finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      }})
+    }
+    val ended = running.map(f => scala.util.Try(f.get()))
+    Option(failure.get).foreach(e => throw e)
+    ended.map(_.get)
+  }
+
+  private val JobTags = "spark.job.tags"
+  private val CopiedProperties = Seq("spark.jobGroup.id",
+    "spark.job.description", "spark.job.interruptOnCancel",
+    "spark.scheduler.pool", JobTags, "spark.sql.execution.root.id")
+  private val ClearedProperties = Seq("spark.sql.execution.id")
+  private val Calls = new java.util.concurrent.atomic.AtomicLong()
+
+  private lazy val LegPool = {
+    import java.util.concurrent._
+    val threads = new atomic.AtomicInteger()
+    new ThreadPoolExecutor(0, math.max(4, Runtime.getRuntime.availableProcessors),
+      60L, TimeUnit.SECONDS, new SynchronousQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-parallel-${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      },
+      new ThreadPoolExecutor.CallerRunsPolicy())
   }
 
   /** Drop `table` from the catalog if present AND delete its

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.ext.Warehouse
 import graft.io.CsvIngest
 import graft.model.TableConfig
 import graft.ops.{Merge, Normalize}
@@ -14,9 +15,9 @@ import org.apache.spark.sql.functions._
   *
   * Differences from the reference, by design (SURVEY.md §7.4):
   * - violations are ONE queryable DataFrame, not CSV side-files + logs;
-  * - rules run once per table: the fold is one annotated
-  *   relation, pinned in [[applyRules]], that the cleaned rows and the
-  *   report both read (the reference re-validates and re-loads twice;
+  * - rules run once per table: the fold, null census included, is one
+  *   annotated relation, pinned in [[applyRules]], that the cleaned rows
+  *   and the report both read (the reference re-validates and re-loads twice;
   *   idempotence is a tested property here, not a runtime behavior);
   * - load order derives from the declared FK graph, not a hard-coded list.
   */
@@ -52,27 +53,24 @@ object Pipeline {
     * skip-with-warning (:357-359).
     *
     * Each configured table's annotated relation ([[Rules.annotate]]) is
-    * pinned once with `localCheckpoint`: the cleaned rows and the
-    * violations both read the pinned blocks, so however many sinks
-    * consume them, the source is scanned and the fold (PK window, FK
-    * joins) runs once per table.
+    * pinned once with `localCheckpoint` ([[graft.rules.Annotated.pinned]]):
+    * the cleaned rows and the violations both read the pinned blocks,
+    * so however many sinks consume them, the source is scanned and the
+    * fold (PK window, FK existence joins, null census) runs once per
+    * table. The census is observed in the pin's own job, so writing
+    * the violations is one job. The tables' pins do not depend on each
+    * other and run concurrently ([[graft.ext.Warehouse.inParallel]]).
     */
   def applyRules(registry: Map[String, DataFrame],
                  configs: Seq[TableConfig]): (Map[String, DataFrame], DataFrame) = {
     val byName = configs.map(c => c.name -> c).toMap
-    var violations: Seq[DataFrame] = Nil
-    val cleaned = registry.map { case (name, df) =>
-      byName.get(name) match {
-        case Some(cfg) =>
-          val a = Rules.annotate(df, cfg, registry)
-          val res = a.over(a.frame.localCheckpoint())
-          violations :+= res.violations
-          name -> res.cleaned
-        case None => name -> df
-      }
-    }
-    (cleaned, violations.reduceOption(_ unionByName _)
-      .getOrElse(Violations.empty(SparkSession.active)))
+    val checked = Warehouse.inParallel(registry.toSeq.flatMap { case (name, df) =>
+      byName.get(name).map(cfg =>
+        () => name -> Rules.annotate(df, cfg, registry).pinned)
+    })
+    (registry ++ checked.map { case (name, res) => name -> res.cleaned },
+      checked.map(_._2.violations).reduceOption(_ unionByName _)
+        .getOrElse(Violations.empty(SparkSession.active)))
   }
 
   /** Stage 8: FK-ordered incremental merge of every cleaned table into its

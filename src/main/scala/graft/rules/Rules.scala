@@ -39,6 +39,16 @@ object Violations {
       StructType(columns.map(StructField(_, StringType))))
 }
 
+/** A table-level report read off one row of aggregates over the
+  * annotated relation (the null census). `lazyRow` derives that row as
+  * a lazy relation; `aggs` compute the same values, named alike, as
+  * aggregate columns over the annotated relation for `Dataset.observe`;
+  * `report` turns a one-row frame of either into violations.
+  */
+final case class AggregateReport(lazyRow: DataFrame => DataFrame,
+                                 aggs: Seq[Column],
+                                 report: DataFrame => DataFrame)
+
 /** The standard fold over one table as ONE annotated relation: the input
   * columns (`columns`) plus whatever helper columns the rules add (a PK
   * rank, FK presence markers). Each rule contributes a keep predicate
@@ -47,16 +57,17 @@ object Violations {
   * re-deriving a cleaned frame per rule. Table-level reports (column
   * types, the null census) are functions of the finished relation.
   *
-  * [[over]] derives both outputs from any frame with the annotated
-  * relation's columns: the lazy `frame` itself, or a pinned copy of it,
-  * so the cleaned rows and the report share one evaluation of the fold.
+  * [[result]] derives both outputs lazily from `frame`; [[pinned]]
+  * derives them from one `localCheckpoint` of it, so the cleaned rows
+  * and the report share one evaluation of the fold.
   */
 final case class Annotated(
     frame: DataFrame,
     columns: Seq[String],
     keeps: Seq[Column] = Nil,
     rowViolations: Seq[Column] = Nil,
-    tableViolations: Seq[DataFrame => DataFrame] = Nil) {
+    tableViolations: Seq[DataFrame => DataFrame] = Nil,
+    aggregateReports: Seq[AggregateReport] = Nil) {
 
   /** True on the rows every rule so far keeps. */
   def keep: Column = keeps.reduceOption(_ && _).getOrElse(lit(true))
@@ -71,9 +82,28 @@ final case class Annotated(
     Iterator.from(frame.columns.length).map(i => s"__rule$i")
       .find(n => !frame.columns.contains(n)).get
 
-  def result: RuleResult = over(frame)
+  def result: RuleResult =
+    over(frame, aggregateReports.map(r => r.report(r.lazyRow(frame))))
 
-  def over(annotated: DataFrame): RuleResult = {
+  /** Eager: pins `frame` with `localCheckpoint` (one job, plus one per
+    * exchange in the fold) and observes the aggregate reports in that
+    * same job, so their violations are local relations that start no
+    * job of their own. */
+  def pinned: RuleResult = {
+    val observed = aggregateReports.map(_ -> org.apache.spark.sql.Observation())
+    val pin = observed.foldLeft(frame) { case (f, (r, o)) =>
+      f.observe(o, r.aggs.head, r.aggs.tail: _*)
+    }.localCheckpoint()
+    over(pin, observed.map { case (r, o) =>
+      // what Observation.get waits for, with the row's schema kept
+      val row = scala.concurrent.Await.result(o.future,
+        scala.concurrent.duration.Duration.Inf)
+      r.report(pin.sparkSession.createDataFrame(
+        java.util.List.of(row), row.schema))
+    })
+  }
+
+  private def over(annotated: DataFrame, reports: Seq[DataFrame]): RuleResult = {
     val cleaned = annotated.filter(keep).select(columns.map(col): _*)
     // the filter is codegen'd; array_compact is not, so it only sees
     // the rows that carry a violation
@@ -83,7 +113,7 @@ final case class Annotated(
         .filter(rowViolations.map(_.isNotNull).reduce(_ || _))
         .select(explode(array_compact(array(rowViolations: _*))).as("v"))
         .select("v.*"))
-    val all = rows ++ tableViolations.map(_(annotated))
+    val all = rows ++ tableViolations.map(_(annotated)) ++ reports
     RuleResult(cleaned, all.reduceOption(_ unionByName _)
       .getOrElse(Violations.empty(annotated.sparkSession)))
   }
@@ -146,9 +176,11 @@ object Rules {
 
   /** FK referential integrity (data_quality_checker.py:131-164): null FKs
     * are reported but kept; non-null FKs with no parent are reported and
-    * dropped. One left join per FK against the parent's distinct keys,
-    * whose joined key doubles as the presence marker; small parents
-    * broadcast under AQE. Each FK sees the survivors of the FKs before it.
+    * dropped. One presence column per FK, `k IN (parent keys)`, which
+    * Spark plans as an existence join (broadcast for small parents) with
+    * no aggregate over the parent: only a presence bit per row is
+    * needed, and a duplicated or null parent key changes no bit. Each FK
+    * sees the survivors of the FKs before it.
     */
   object ForeignKeyRule extends Rule {
     val name = "foreign_key"
@@ -157,16 +189,16 @@ object Rules {
       cfg.foreignKeys.foldLeft(a) { (acc, fk) =>
         registry.get(fk.refTable).fold(acc) { parent =>
           val hit = acc.fresh
-          val parentKeys = parent.select(col(fk.refColumn).as(hit)).distinct()
           val k = col(fk.column)
+          val present = coalesce(k.isin(parent.select(col(fk.refColumn))), lit(false))
           acc.copy(
-            frame = acc.frame.join(parentKeys, k === col(hit), "left"),
-            keeps = acc.keeps :+ (k.isNull || col(hit).isNotNull),
+            frame = acc.frame.withColumn(hit, present),
+            keeps = acc.keeps :+ (k.isNull || col(hit)),
             rowViolations = acc.rowViolations ++ Seq(
               acc.violation(k.isNull, cfg.name, name, fk.column,
                 keyExpr(cfg.primaryKey),
                 lit(s"null foreign key → ${fk.refTable}.${fk.refColumn}")),
-              acc.violation(k.isNotNull && col(hit).isNull, cfg.name, name,
+              acc.violation(k.isNotNull && !col(hit), cfg.name, name,
                 fk.column, keyExpr(cfg.primaryKey),
                 concat(lit("dangling foreign key value="), k))))
         }
@@ -226,8 +258,7 @@ object Rules {
                  registry: Map[String, DataFrame]): Annotated = {
       val kept = a.keep
       val cols = a.columns
-      def viols(annotated: DataFrame): DataFrame = {
-        val census = nullCensus(annotated.filter(kept).select(cols.map(col): _*))
+      def report(census: DataFrame): DataFrame = {
         val stacked = census.select(
           explode(map(cols.flatMap(c =>
             Seq(lit(c), col(c).cast(StringType))): _*)).as(Seq("column", "nulls")))
@@ -236,7 +267,10 @@ object Rules {
           col("column"), lit(null).cast(StringType).as("record_key"),
           concat(lit("null count="), col("nulls")).as("detail"))
       }
-      a.copy(tableViolations = a.tableViolations :+ (viols _))
+      a.copy(aggregateReports = a.aggregateReports :+ AggregateReport(
+        annotated => nullCensus(annotated.filter(kept).select(cols.map(col): _*)),
+        cols.map(c => sum(when(kept && col(c).isNull, 1L).otherwise(0L)).as(c)),
+        report))
     }
   }
 

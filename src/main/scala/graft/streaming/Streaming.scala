@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.ParquetSchema
 import graft.ops.Merge
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1506,27 +1507,35 @@ object MicroBatchMerge {
     * the state write read one evaluation of its join, and `now` is one
     * instant read at the start of the batch ([[Merge.clock]]), so a
     * superseded version's `valid_to` equals its successor's `updated_at`.
+    * The history append and the `.tmp` state write are independent, so
+    * they run concurrently ([[graft.ext.Warehouse.inParallel]]); the swap
+    * runs only after both have succeeded, and a failure of either
+    * cancels the other and leaves the state as it was. The state and
+    * history schemas are read from parquet footers
+    * ([[graft.io.ParquetSchema]]), which starts no job.
     */
   def applyBatch(spark: SparkSession, batch: DataFrame, pk: Seq[String],
                  stateDir: String, historyDir: String): Unit = {
     import org.apache.hadoop.fs.Path
-    val statePath = new Path(stateDir)
-    val historyPath = new Path(historyDir)
-    val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(stateDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def read(dir: String): Option[DataFrame] =
+      if (fs.exists(new Path(dir)))
+        Some(spark.read.schema(ParquetSchema.of(spark, dir)).parquet(dir))
+      else None
 
     resolveState(spark, stateDir)
-    val existing: Option[DataFrame] =
-      if (fs.exists(statePath)) Some(spark.read.parquet(stateDir)) else None
-    val recordedHistory: Option[DataFrame] =
-      if (fs.exists(historyPath)) Some(spark.read.parquet(historyDir)) else None
+    val existing = read(stateDir)
+    val recordedHistory = read(historyDir)
 
     val now = Merge.clock()
     existing match {
       case Some(ex) =>
         val m = Merge.mergeFrame(batch, ex, pk, now)
         val merged = m.copy(frame = m.frame.localCheckpoint())
-        merged.history(recordedHistory).write.mode("append").parquet(historyDir)
-        swapState(spark, stateDir, merged.postState)
+        graft.ext.Warehouse.inParallel(
+          merged.history(recordedHistory).write.mode("append").parquet(historyDir),
+          writeTmp(stateDir, merged.postState))
+        swapIn(spark, stateDir)
       case None =>
         swapState(spark, stateDir, batch.withColumn("updated_at", now)
           .withColumn("is_deleted", lit(false)))
@@ -1538,15 +1547,23 @@ object MicroBatchMerge {
     * state to `.old`, move `.tmp` in, drop `.old`. */
   private[streaming] def swapState(spark: SparkSession, stateDir: String,
                                    newState: DataFrame): Unit = {
+    writeTmp(stateDir, newState)
+    swapIn(spark, stateDir)
+  }
+
+  private def writeTmp(stateDir: String, newState: DataFrame): Unit =
+    newState.write.mode("overwrite").parquet(stateDir + ".tmp")
+
+  /** Move the fully-written `.tmp` in place of the state, current state
+    * aside to `.old` first. */
+  private def swapIn(spark: SparkSession, stateDir: String): Unit = {
     import org.apache.hadoop.fs.Path
     val statePath = new Path(stateDir)
     val oldPath = new Path(stateDir + ".old")
     val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = stateDir + ".tmp"
-    newState.write.mode("overwrite").parquet(tmp)
     if (fs.exists(oldPath)) fs.delete(oldPath, true)
     if (fs.exists(statePath)) fs.rename(statePath, oldPath)
-    fs.rename(new Path(tmp), statePath)
+    fs.rename(new Path(stateDir + ".tmp"), statePath)
     fs.delete(oldPath, true)
   }
 
@@ -1572,7 +1589,7 @@ object MicroBatchMerge {
             pk: Seq[String], stateDir: String, historyDir: String,
             checkpointDir: String,
             trigger: Trigger = Trigger.ProcessingTime("8 minutes")): StreamingQuery = {
-    val schema = spark.read.parquet(schemaSource).schema
+    val schema = ParquetSchema.of(spark, schemaSource)
     spark.readStream
       .schema(schema)
       .parquet(sourceDir)

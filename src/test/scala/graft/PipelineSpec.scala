@@ -141,6 +141,60 @@ class PipelineSpec extends SparkSpec {
     assert(violations.count() == 4) // duplicate, dangling, null FK, census
   }
 
+  test("applyRules then writeViolations: the report is one job") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = Files.createTempDirectory("graft_report_jobs").toString
+    Seq((1L, "a", Some(10L)), (1L, "b", Some(11L)), (2L, "c", Some(99L)),
+      (3L, "d", None)).toDF("id", "name", "ref").write.parquet(s"$dir/t")
+    Seq(10L, 11L).toDF("pid").write.parquet(s"$dir/parent")
+    val registry = Map("t" -> spark.read.parquet(s"$dir/t"),
+      "parent" -> spark.read.parquet(s"$dir/parent"))
+    val cfg = TableConfig("t",
+      Seq(ColumnSpec("id", LongType, primaryKey = true),
+        ColumnSpec("name", StringType), ColumnSpec("ref", LongType)),
+      Seq(FkRef("ref", "parent", "pid")))
+    val (_, violations) = Pipeline.applyRules(registry, Seq(cfg))
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      graft.io.ReportSink.writeViolations(violations, s"$dir/report")
+      org.apache.spark.GraftListenerBus.drain(sc)
+      assert(jobs.get == 1)
+    } finally sc.removeSparkListener(listener)
+    val byRule = graft.io.ReportSink.readViolations(spark, s"$dir/report")
+      .groupBy("rule").count().as[(String, Long)].collect().toMap
+    assert(byRule == Map("primary_key" -> 1L, "foreign_key" -> 2L,
+      "null_census" -> 1L))
+  }
+
+  test("an arrival with a non-numeric o_totalprice is reported under " +
+    "column_types through ingest and applyRules") {
+    // the arrival CSV's types are inferred, not declared: reading it with
+    // the TableConfig schema would turn the bad price into a silent null
+    val dir = Files.createTempDirectory("graft_arrival_types").toFile
+    Files.writeString(new java.io.File(dir, "orders.csv").toPath,
+      """o_orderkey,o_custkey,o_totalprice
+        |1,10,100.5
+        |2,10,n/a
+        |""".stripMargin)
+    val cfg = TableConfig("orders", Seq(
+      ColumnSpec("o_orderkey", LongType, primaryKey = true),
+      ColumnSpec("o_custkey", LongType),
+      ColumnSpec("o_totalprice", DoubleType)))
+    val (cleaned, violations) = Pipeline.applyRules(
+      Pipeline.ingest(spark, dir.getAbsolutePath), Seq(cfg))
+    assertSameRows(violations.filter(col("rule") === "column_types")
+      .select("column", "detail"),
+      Seq(Seq("o_totalprice", "type mismatch: declared DOUBLE, actual STRING")))
+    assert(cleaned("orders").count() == 2)
+  }
+
   test("jdbc SQL generation: update, tombstone, merge") {
     assert(JdbcUpsert.updateSql("t", Seq("a", "b"), Seq("id")) ==
       "UPDATE t SET a = ?, b = ? WHERE id = ?")

@@ -197,4 +197,86 @@ class RulesSpec extends SparkSpec {
       Seq("t", "null_census", "ref", null, "null count=1"),
       Seq("t", "emoji", "name", "4", "emoji / symbol characters present")))
   }
+
+  test("pinned census equals the lazy census row for row: all-null column, " +
+    "rows dropped by earlier rules, empty table") {
+    val t = TableConfig("t",
+      Seq(ColumnSpec("id", LongType, primaryKey = true),
+        ColumnSpec("name", StringType), ColumnSpec("ref", LongType),
+        ColumnSpec("note", StringType)),
+      Seq(FkRef("ref", "parent", "pid")))
+    val child = Seq(
+      (Some(1L), Some("a"), Some(10L), None: Option[String]),
+      (Some(1L), Some("z"), Some(10L), None),  // duplicate: dropped by PK
+      (None, None, None, None),                // null PK: dropped
+      (Some(2L), Some("b"), None, None),       // null FK: kept
+      (Some(3L), None, Some(99L), None),       // dangling FK: dropped
+      (Some(4L), None, Some(10L), None)
+    ).toDF("id", "name", "ref", "note")        // note: null on every row
+    val registry = Map("parent" -> Seq(10L).toDF("pid"))
+    def census(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("rule") === "null_census")
+    for (input <- Seq(child, child.limit(0))) {
+      val a = Rules.annotate(input, t, registry)
+      val (lazyRes, pinned) = (a.result, a.pinned)
+      assertSameRows(pinned.violations, rowsOf(lazyRes.violations))
+      assertSameRows(pinned.cleaned, rowsOf(lazyRes.cleaned))
+      if (input eq child)
+        assertSameRows(census(pinned.violations), Seq(
+          Seq("t", "null_census", "name", null, "null count=1"),
+          Seq("t", "null_census", "ref", null, "null count=1"),
+          Seq("t", "null_census", "note", null, "null count=3")))
+      else assert(census(pinned.violations).isEmpty)
+    }
+  }
+
+  /** The FK check as it was first written: a left join against the
+    * parent's distinct keys, whose joined key marks presence. */
+  private def fkByLeftJoin(child: org.apache.spark.sql.DataFrame,
+                           parent: org.apache.spark.sql.DataFrame) = {
+    val j = child.join(parent.select(col("pid").as("hit")).distinct(),
+      col("ref") === col("hit"), "left")
+    val cleaned = j.filter(col("ref").isNull || col("hit").isNotNull)
+      .select(child.columns.map(col): _*)
+    val viols = j.filter(col("ref").isNull || col("hit").isNull)
+      .select(col("id").cast(StringType), when(col("ref").isNull,
+        lit("null foreign key → parent.pid"))
+        .otherwise(concat(lit("dangling foreign key value="), col("ref"))))
+    (cleaned, viols)
+  }
+
+  test("ForeignKeyRule's existence join equals the left join over distinct " +
+    "parent keys, with duplicated and null parent keys") {
+    import org.apache.spark.sql.catalyst.plans.ExistenceJoin
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val child = Seq((1L, "a", Some(10L)), (2L, "b", Some(99L)),
+      (3L, "c", None), (4L, "d", Some(11L)), (5L, "e", Some(10L)))
+      .toDF("id", "name", "ref")
+    val parents = Seq(
+      Seq(Some(10L), Some(10L), Some(11L), Some(11L)),  // duplicated keys
+      Seq(Some(10L), None, None),                      // null keys
+      Seq[Option[Long]](None),                         // only a null key
+      Seq[Option[Long]]())                             // no parent rows
+    for (keys <- parents) {
+      val parent = keys.toDF("pid")
+      val r = Rules.ForeignKeyRule(child, cfg, Map("parent" -> parent))
+      val (cleaned, viols) = fkByLeftJoin(child, parent)
+      assertSameRows(r.cleaned, rowsOf(cleaned))
+      assertSameRows(r.violations.select("record_key", "detail"), rowsOf(viols))
+      val plan = r.cleaned.queryExecution.optimizedPlan
+      assert(plan.collect { case j: Join if j.joinType.isInstanceOf[ExistenceJoin] => j }
+        .size == 1, plan.toString)
+      assert(plan.collect { case g: Aggregate => g }.isEmpty, plan.toString)
+    }
+    // a table that references itself reads one relation on both sides
+    val self = TableConfig("t", cfg.columns, Seq(FkRef("ref", "t", "id")))
+    val tree = Seq((1L, "a", None), (2L, "b", Some(1L)), (3L, "c", Some(9L)),
+      (4L, "d", Some(2L))).toDF("id", "name", "ref")
+    val r = Rules.ForeignKeyRule(tree, self, Map("t" -> tree))
+    val (cleaned, viols) = fkByLeftJoin(tree, tree.select(col("id").as("pid")))
+    assertSameRows(r.cleaned, rowsOf(cleaned))
+    assertSameRows(r.violations.select("record_key", "detail")
+      .withColumn("detail", regexp_replace(col("detail"), "t\\.id", "parent.pid")),
+      rowsOf(viols))
+  }
 }

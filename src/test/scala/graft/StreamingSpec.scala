@@ -302,6 +302,45 @@ class StreamingSpec extends SparkSpec {
       .filter(col("id") === 1L).select("name").as[String].head() == "a2")
   }
 
+  test("a failed state write swaps nothing, and the retry appends no " +
+    "duplicate history") {
+    val dir = Files.createTempDirectory("graft_legfail").toString
+    val state = s"$dir/state"
+    val hist = s"$dir/history"
+    MicroBatchMerge.applyBatch(spark, Seq((1L, "a", 10.0), (2L, "b", 20.0))
+      .toDF("id", "name", "price"), Seq("id"), state, hist)
+    MicroBatchMerge.applyBatch(spark, Seq((1L, "a2", 10.0), (2L, "b", 20.0))
+      .toDF("id", "name", "price"), Seq("id"), state, hist)
+    val stateBefore = rowsOf(spark.read.parquet(state).orderBy("id"))
+    val histBefore = spark.read.parquet(hist).count()
+    assert(histBefore == 1)
+
+    val b3 = Seq((1L, "a3", 10.0), (2L, "b", 20.0)).toDF("id", "name", "price")
+    val key = "spark.sql.sources.commitProtocolClass"
+    val protocol = spark.conf.get(key)
+    spark.conf.set(key, classOf[FailingStateWriteProtocol].getName)
+    val err =
+      try intercept[Exception](
+        MicroBatchMerge.applyBatch(spark, b3, Seq("id"), state, hist))
+      finally spark.conf.set(key, protocol)
+    assert(Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected")), err)
+    // the history append landed before the state write failed
+    assert(spark.read.parquet(hist).count() == histBefore + 1)
+
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(state).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new Path(s"$state.old")))
+    assert(rowsOf(spark.read.parquet(state).orderBy("id")) == stateBefore)
+
+    MicroBatchMerge.applyBatch(spark, b3, Seq("id"), state, hist) // the retry
+    val h = spark.read.parquet(hist)
+    assert(h.count() == histBefore + 1, "the retry duplicated history rows")
+    assert(h.select("id", "valid_from").distinct().count() == h.count())
+    assert(spark.read.parquet(state).filter(col("id") === 1L)
+      .select("name").as[String].head() == "a3")
+  }
+
   test("session start absorbs a late cross-batch event within the gap") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[SessionEvent]
@@ -649,5 +688,25 @@ class StreamingSpec extends SparkSpec {
       case (v, i) => MetricEvent("k", base + i * 1000000L, v) }
     assert(AnomalyDetect.anomaliesBatch(evs, threshold = 1.0,
       minPrior = 5).isEmpty)
+  }
+}
+
+/** Fails the commit of any write into a `.tmp` directory (the merge's
+  * state write), after giving a concurrent history append time to
+  * land, as a crash after the append would. */
+class FailingStateWriteProtocol(jobId: String, path: String, dynamic: Boolean)
+    extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
+      jobId, path, dynamic) {
+  override def commitJob(job: org.apache.hadoop.mapreduce.JobContext,
+      commits: Seq[org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage]): Unit = {
+    if (path.endsWith(".tmp")) {
+      val history = new java.io.File(path.stripSuffix("state.tmp") + "history")
+      def files = Option(history.list()).map(_.length).getOrElse(0)
+      val before = files
+      val deadline = System.nanoTime() + 10000000000L
+      while (files == before && System.nanoTime() < deadline) Thread.sleep(20)
+      throw new java.io.IOException("injected state write failure")
+    }
+    super.commitJob(job, commits)
   }
 }
