@@ -39,15 +39,12 @@ object Violations {
       StructType(columns.map(StructField(_, StringType))))
 }
 
-/** A table-level report read off one row of aggregates over the
-  * annotated relation (the null census). `lazyRow` derives that row as
-  * a lazy relation; `aggs` compute the same values, named alike, as
-  * aggregate columns over the annotated relation for `Dataset.observe`;
-  * `report` turns a one-row frame of either into violations.
+/** The null census as one row of aggregates over the annotated
+  * relation: `aggs` are the aggregate columns, `report` turns the
+  * one-row frame they yield into violations. The lazy fold runs them as
+  * `frame.agg`, the pinned fold observes them in the pin's own job.
   */
-final case class AggregateReport(lazyRow: DataFrame => DataFrame,
-                                 aggs: Seq[Column],
-                                 report: DataFrame => DataFrame)
+final case class Census(aggs: Seq[Column], report: DataFrame => DataFrame)
 
 /** The standard fold over one table as ONE annotated relation: the input
   * columns (`columns`) plus whatever helper columns the rules add (a PK
@@ -67,7 +64,7 @@ final case class Annotated(
     keeps: Seq[Column] = Nil,
     rowViolations: Seq[Column] = Nil,
     tableViolations: Seq[DataFrame => DataFrame] = Nil,
-    aggregateReports: Seq[AggregateReport] = Nil) {
+    census: Option[Census] = None) {
 
   /** True on the rows every rule so far keeps. */
   def keep: Column = keeps.reduceOption(_ && _).getOrElse(lit(true))
@@ -83,22 +80,22 @@ final case class Annotated(
       .find(n => !frame.columns.contains(n)).get
 
   def result: RuleResult =
-    over(frame, aggregateReports.map(r => r.report(r.lazyRow(frame))))
+    over(frame, census.toSeq.map(c =>
+      c.report(frame.agg(c.aggs.head, c.aggs.tail: _*))))
 
   /** Eager: pins `frame` with `localCheckpoint` (one job, plus one per
-    * exchange in the fold) and observes the aggregate reports in that
-    * same job, so their violations are local relations that start no
-    * job of their own. */
+    * exchange in the fold) and observes the census in that same job, so
+    * its violations are a local relation that starts no job of its own. */
   def pinned: RuleResult = {
-    val observed = aggregateReports.map(_ -> org.apache.spark.sql.Observation())
-    val pin = observed.foldLeft(frame) { case (f, (r, o)) =>
-      f.observe(o, r.aggs.head, r.aggs.tail: _*)
+    val observed = census.map(_ -> org.apache.spark.sql.Observation())
+    val pin = observed.fold(frame) { case (c, o) =>
+      frame.observe(o, c.aggs.head, c.aggs.tail: _*)
     }.localCheckpoint()
-    over(pin, observed.map { case (r, o) =>
+    over(pin, observed.toSeq.map { case (c, o) =>
       // what Observation.get waits for, with the row's schema kept
       val row = scala.concurrent.Await.result(o.future,
         scala.concurrent.duration.Duration.Inf)
-      r.report(pin.sparkSession.createDataFrame(
+      c.report(pin.sparkSession.createDataFrame(
         java.util.List.of(row), row.schema))
     })
   }
@@ -251,7 +248,9 @@ object Rules {
     df.agg(aggs.head, aggs.tail.toSeq: _*)
   }
 
-  /** Counts the nulls of the rows every earlier rule kept. */
+  /** Counts the nulls of the rows every earlier rule kept: one sum per
+    * column gated by the keep predicate, one aggregation pass as in
+    * [[nullCensus]]. */
   object NullCensusRule extends Rule {
     val name = "null_census"
     def annotate(a: Annotated, cfg: TableConfig,
@@ -267,10 +266,9 @@ object Rules {
           col("column"), lit(null).cast(StringType).as("record_key"),
           concat(lit("null count="), col("nulls")).as("detail"))
       }
-      a.copy(aggregateReports = a.aggregateReports :+ AggregateReport(
-        annotated => nullCensus(annotated.filter(kept).select(cols.map(col): _*)),
+      a.copy(census = Some(Census(
         cols.map(c => sum(when(kept && col(c).isNull, 1L).otherwise(0L)).as(c)),
-        report))
+        report)))
     }
   }
 

@@ -199,7 +199,7 @@ class RulesSpec extends SparkSpec {
   }
 
   test("pinned census equals the lazy census row for row: all-null column, " +
-    "rows dropped by earlier rules, empty table") {
+    "rows dropped by earlier rules, every row dropped, empty table") {
     val t = TableConfig("t",
       Seq(ColumnSpec("id", LongType, primaryKey = true),
         ColumnSpec("name", StringType), ColumnSpec("ref", LongType),
@@ -216,7 +216,8 @@ class RulesSpec extends SparkSpec {
     val registry = Map("parent" -> Seq(10L).toDF("pid"))
     def census(df: org.apache.spark.sql.DataFrame) =
       df.filter(col("rule") === "null_census")
-    for (input <- Seq(child, child.limit(0))) {
+    // the null-PK row alone: every row dropped, so every count is 0
+    for (input <- Seq(child, child.filter(col("id").isNull), child.limit(0))) {
       val a = Rules.annotate(input, t, registry)
       val (lazyRes, pinned) = (a.result, a.pinned)
       assertSameRows(pinned.violations, rowsOf(lazyRes.violations))

@@ -316,6 +316,9 @@ class StreamingSpec extends SparkSpec {
     assert(histBefore == 1)
 
     val b3 = Seq((1L, "a3", 10.0), (2L, "b", 20.0)).toDF("id", "name", "price")
+    // the failing protocol waits for the history append's job commit,
+    // which writes this marker last
+    assert(new java.io.File(s"$hist/_SUCCESS").delete())
     val key = "spark.sql.sources.commitProtocolClass"
     val protocol = spark.conf.get(key)
     spark.conf.set(key, classOf[FailingStateWriteProtocol].getName)
@@ -692,19 +695,23 @@ class StreamingSpec extends SparkSpec {
 }
 
 /** Fails the commit of any write into a `.tmp` directory (the merge's
-  * state write), after giving a concurrent history append time to
-  * land, as a crash after the append would. */
+  * state write) once the concurrent history append has committed (its
+  * `_SUCCESS` marker, removed by the spec beforehand, is back), as a
+  * crash after the append would. */
 class FailingStateWriteProtocol(jobId: String, path: String, dynamic: Boolean)
     extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
       jobId, path, dynamic) {
   override def commitJob(job: org.apache.hadoop.mapreduce.JobContext,
       commits: Seq[org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage]): Unit = {
     if (path.endsWith(".tmp")) {
-      val history = new java.io.File(path.stripSuffix("state.tmp") + "history")
-      def files = Option(history.list()).map(_.length).getOrElse(0)
-      val before = files
-      val deadline = System.nanoTime() + 10000000000L
-      while (files == before && System.nanoTime() < deadline) Thread.sleep(20)
+      val dir = new org.apache.hadoop.fs.Path(path).getParent.toUri.getPath
+      val marker = new java.io.File(dir, "history/_SUCCESS")
+      val deadline = System.nanoTime() + 60000000000L
+      while (!marker.exists()) {
+        if (System.nanoTime() > deadline)
+          throw new IllegalStateException(s"no history commit ($marker) within 60 s")
+        Thread.sleep(20)
+      }
       throw new java.io.IOException("injected state write failure")
     }
     super.commitJob(job, commits)

@@ -60,7 +60,14 @@ class WarehouseSpec extends SparkSpec {
       assert(err.getMessage == "first failure")
       assert((System.nanoTime() - t0) / 1e9 < 60,
         "the sibling ran on instead of being cancelled")
-      org.apache.spark.GraftListenerBus.drain(sc)
+      // the scheduler fails the job's waiter before it posts the job's
+      // end, so the event may still be on its way
+      val deadline = System.nanoTime() + 30000000000L
+      while (!ended.asScala.exists(_.contains("JobFailed")) &&
+        System.nanoTime() < deadline) {
+        org.apache.spark.GraftListenerBus.drain(sc)
+        Thread.sleep(10)
+      }
       assert(ended.asScala.exists(_.contains("JobFailed")), ended.asScala.toList)
     } finally sc.removeSparkListener(listener)
   }
