@@ -769,12 +769,10 @@ object Ivf {
 
   /** Approximate top-k against a PERSISTED index — no training, no
     * corpus-side shuffle: queries assign to their `nProbe` nearest
-    * stored centroids, the candidate join consumes the bucketed scan's
-    * existing distribution (the corpus side of the plan is
-    * Exchange-free — spec-pinned), and the exact rerank joins vectors
-    * back by id from the same bucketed table. The dimensionality comes
-    * from the index itself, never from the caller — a mismatched dim
-    * would silently mis-decode the centroid matrix.
+    * stored centroids and are scored against the index rows of those
+    * lists (see [[ivfProbe]] for the plan's shape). The dimensionality
+    * comes from the index itself, never from the caller — a mismatched
+    * dim would silently mis-decode the centroid matrix.
     */
   def ivfTopKIndexed(spark: SparkSession, table: String, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int,
@@ -782,22 +780,80 @@ object Ivf {
     ivfProbe(spark, table, queries, idCol, vecCol, k, nProbe,
       queriesFitBroadcast = false)
 
-  /** [[ivfTopKIndexed]]; `queriesFitBroadcast` tells the rerank the
-    * query side is known to be below its broadcast limit, so it builds
-    * the plan without counting the queries first. */
+  /** The probe list no index row is assigned to (lists are 0-based). */
+  private val NoList: Int = -1
+
+  /** [[ivfTopKIndexed]], in one of two shapes chosen by the size of the
+    * query side.
+    *
+    * One pass, when the queries are broadcast (`queriesFitBroadcast`,
+    * else at most [[Similarity.BroadcastQueryRowLimit]] rows by
+    * [[Similarity.fitsBroadcast]]'s count): the broadcast side carries
+    * one row per (query, probed list) with the query's id, its vector
+    * cast to double and its norm. The index is scanned once, each row
+    * hash-joins on its `list` to the queries that probe it, a query is
+    * never its own neighbor, and each pair is scored with
+    * [[Similarity.pairSim]] and ranked by [[Similarity.topKPerQuery]].
+    * Every index row is its own candidate, vector included, so nothing
+    * joins back to the index by id.
+    *
+    * Otherwise [[Similarity.rerankPairs]]' shuffle shape: thin
+    * (query, neighbor) pairs from the list join first, vectors joined
+    * back by id. Both shapes score and rank the same pairs with the
+    * same expressions, so their answers are equal.
+    *
+    * `missingQuery`, only with a broadcast query side: when the query
+    * side is empty, the probe fails with this message instead of
+    * answering no rows. The index side then carries one sentinel row in
+    * list [[NoList]], every query probes that list too, and the list
+    * join is a left join: the sentinel finds no query exactly when
+    * there is none, and the filter raises the message on it. Index rows
+    * that no query probes, now kept by the left join, fail the
+    * self-exclusion and drop in the same pass. So the check costs no
+    * job of its own.
+    */
   private[graft] def ivfProbe(spark: SparkSession, table: String,
                               queries: DataFrame, idCol: String,
                               vecCol: String, k: Int, nProbe: Int,
-                              queriesFitBroadcast: Boolean): DataFrame = {
+                              queriesFitBroadcast: Boolean,
+                              missingQuery: Option[String] = None)
+      : DataFrame = {
     val (dim, centroids) = loadModel(spark, table)
     val indexed = spark.table(table)
-    val c = indexed.select(col(idCol).as("neighbor_id"), col("list"))
-    val q = queries.select(col(idCol).as("query_id"),
-      explode(assignLists(col(vecCol), centroids, dim, nProbe)).as("list"))
-    val cands = c.join(q, "list")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select("query_id", "neighbor_id")
-    Similarity.rerankTopK(cands, indexed, queries, idCol, vecCol, k, dim,
-      queriesFitBroadcast = queriesFitBroadcast)
+    val lists = assignLists(col(vecCol), centroids, dim, nProbe)
+    val notSelf = col("neighbor_id") =!= col("query_id")
+    if (queriesFitBroadcast || Similarity.fitsBroadcast(queries)) {
+      val probed =
+        missingQuery.fold(lists)(_ => concat(lists, array(lit(NoList))))
+      val q = Similarity.scoringSide(queries, idCol, vecCol, "query_id",
+        "qvec", "qn", explode(probed).as("list"))
+      val rows = Similarity.scoringSide(indexed, idCol, vecCol, "neighbor_id",
+        "cvec", "cn", col("list"))
+      val pairs = missingQuery match {
+        case None =>
+          rows.join(broadcast(q), Seq("list")).filter(notSelf)
+        case Some(msg) =>
+          import spark.implicits._
+          val sentinel = Seq(NoList).toDF("list").select(
+            lit(null).cast(indexed.schema(idCol).dataType).as("neighbor_id"),
+            lit(null).cast("array<double>").as("cvec"),
+            lit(null).cast("double").as("cn"), col("list"))
+          rows.unionByName(sentinel)
+            .join(broadcast(q), Seq("list"), "left")
+            .filter(coalesce(notSelf,
+              col("list") === NoList && col("query_id").isNull &&
+                raise_error(lit(msg)).cast("boolean")))
+      }
+      Similarity.topKPerQuery(pairs.select(col("query_id"), col("neighbor_id"),
+        Similarity.pairSim(dim).as("sim")), k)
+    } else {
+      val cands = indexed.select(col(idCol).as("neighbor_id"), col("list"))
+        .join(queries.select(col(idCol).as("query_id"),
+          explode(lists).as("list")), "list")
+        .filter(notSelf)
+        .select("query_id", "neighbor_id")
+      Similarity.rerankPairs(cands, indexed, queries, idCol, vecCol, k, dim,
+        broadcastQueries = false)
+    }
   }
 }

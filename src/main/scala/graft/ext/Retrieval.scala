@@ -65,6 +65,24 @@ object Retrieval {
     bm25FromTf(tf, dl, idCol)
   }
 
+  /** A term's micro-unit IDF from the `n` and `df` columns: the single
+    * `ln` site of every BM25 scorer, rounded to micro before it meets
+    * any document. */
+  private def idfMicro: Column =
+    round(log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
+      * 1000000L).cast("long")
+
+  /** Each row's BM25 contribution `__contrib`, in micro-units, from its
+    * `tf`, `dl`, the corpus scalars `n` and `t`, and `idf_micro`: every
+    * BM25 scorer's one formula. dl/avgdl in micro is (1e6·dl·N) div T;
+    * the tf-norm numerator and denominator are micro integers too. */
+  private def withBm25Contrib(rows: DataFrame): DataFrame = rows
+    .withColumn("__dlnorm", expr("(1000000 * dl * n) div t"))
+    .withColumn("__denom",
+      expr("1000000 * tf + 300000 + (9 * __dlnorm) div 10"))
+    .withColumn("__tfnorm", expr("(1000000 * (2200000 * tf)) div __denom"))
+    .withColumn("__contrib", expr("(idf_micro * __tfnorm) div 1000000"))
+
   /** The shared micro-integer BM25 tail over a prepared (id, term,
     * tf) relation and an (id, dl) length relation — [[bm25Score]]'s
     * single-field form and [[bm25FieldedScore]]'s weighted-field form
@@ -78,21 +96,12 @@ object Retrieval {
     val idf = tf.groupBy(col("term"))
       .agg(countDistinct(col(idCol)).as("df"))
       .crossJoin(broadcast(corpus))
-      .withColumn("idf_micro",
-        round(log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-          * 1000000L).cast("long"))
+      .withColumn("idf_micro", idfMicro)
       .select(col("term"), col("idf_micro"))
-    val contribs = tf
+    val contribs = withBm25Contrib(tf
       .join(dl, Seq(idCol))
       .join(broadcast(idf), Seq("term"))
-      .crossJoin(broadcast(corpus))
-      // dl/avgdl in micro = (1e6·dl·N) div T; then the BM25 tf-norm
-      // numerator/denominator entirely in micro integers
-      .withColumn("__dlnorm", expr("(1000000 * dl * n) div t"))
-      .withColumn("__denom",
-        expr("1000000 * tf + 300000 + (9 * __dlnorm) div 10"))
-      .withColumn("__tfnorm", expr("(1000000 * (2200000 * tf)) div __denom"))
-      .withColumn("__contrib", expr("(idf_micro * __tfnorm) div 1000000"))
+      .crossJoin(broadcast(corpus)))
     contribs.groupBy(col(idCol))
       .agg(sum(col("__contrib")).as("bm25_micro"))
       .withColumn("bm25", col("bm25_micro") / 1e6)
@@ -230,19 +239,12 @@ object Retrieval {
     val idf = tf.groupBy(col("term"))
       .agg(countDistinct(col(idCol)).as("df"))
       .crossJoin(broadcast(corpus))
-      .withColumn("idf_micro",
-        round(log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-          * 1000000L).cast("long"))
+      .withColumn("idf_micro", idfMicro)
       .select(col("term"), col("idf_micro"))
-    tf.join(broadcast(qt), Seq("term"))
-      .join(dl, Seq(idCol))
-      .join(broadcast(idf), Seq("term"))
-      .crossJoin(broadcast(corpus))
-      .withColumn("__dlnorm", expr("(1000000 * dl * n) div t"))
-      .withColumn("__denom",
-        expr("1000000 * tf + 300000 + (9 * __dlnorm) div 10"))
-      .withColumn("__tfnorm", expr("(1000000 * (2200000 * tf)) div __denom"))
-      .withColumn("__contrib", expr("(idf_micro * __tfnorm) div 1000000"))
+    withBm25Contrib(tf.join(broadcast(qt), Seq("term"))
+        .join(dl, Seq(idCol))
+        .join(broadcast(idf), Seq("term"))
+        .crossJoin(broadcast(corpus)))
       .groupBy(col(queryCol), col(idCol))
       .agg(sum(col("__contrib")).as("bm25_micro"))
       .withColumn("bm25", col("bm25_micro") / 1e6)
@@ -274,10 +276,10 @@ object Retrieval {
     * the rows: df is a CORPUS-level statistic that every append would
     * shift on rows already written (un-rewritable in a bucketed
     * table), and the probe gets it exactly and for free by counting
-    * rows per term over the very scan it already makes — one
-    * map-side-combining aggregate on the bucket key, no extra
-    * Exchange. That is what makes [[appendToBm25Index]] a pure
-    * postings-insert + meta bump, with nothing stale left behind.
+    * rows per term over the very scan it already makes — a window
+    * partitioned by the bucket key, no extra Exchange. That is what
+    * makes [[appendToBm25Index]] a pure postings-insert + meta bump,
+    * with nothing stale left behind.
     *
     * dl/meta are derived from the SAVED postings so the artifacts can
     * never disagree with each other.
@@ -351,7 +353,7 @@ object Retrieval {
   def appendToBm25Index(df: DataFrame, idCol: String, textCol: String,
                         table: String): Unit = {
     val spark = df.sparkSession
-    val metaIdCol = bm25IdCol(spark, table)
+    val metaIdCol = bm25Meta(spark, table).idCol
     require(metaIdCol == idCol,
       s"append to $table with id column '$idCol', but the index was " +
         s"built over '$metaIdCol' — postings would key two id spaces")
@@ -374,64 +376,69 @@ object Retrieval {
     spark.catalog.refreshTable(s"${table}_meta")
   }
 
-  /** The indexed corpus' id column, as recorded by [[writeBm25Index]]
-    * in `<table>_meta`; falls back to the postings' second column for
-    * indexes persisted before the name was recorded. Read once per
-    * version of the postings and meta ([[graft.io.VersionMemo]]), which
-    * also refreshes both tables in this session whenever their files
-    * have moved: appends may land from another session (a streaming
-    * ingest clone), and a probe that calls this first serves the grown
-    * corpus. A warm call with unmoved files runs no job and no refresh.
+  /** What a probe reads from `<table>_meta`: the indexed corpus' id
+    * column and its two scalars, `n` documents and `t` tokens. */
+  private final case class Bm25Meta(idCol: String, n: Long, t: Long)
+
+  /** The [[Bm25Meta]] recorded by [[writeBm25Index]]; the id column falls
+    * back to the postings' second column for indexes persisted before
+    * the name was recorded, and an empty index's null `t` reads 0. Read
+    * once per version of the postings and meta
+    * ([[graft.io.VersionMemo]]), which also refreshes both tables in
+    * this session whenever their files have moved: appends may land
+    * from another session (a streaming ingest clone), and a probe that
+    * calls this first serves the grown corpus. A warm call with unmoved
+    * files runs no job and no refresh.
     */
-  private def bm25IdCol(spark: org.apache.spark.sql.SparkSession,
-                        table: String): String =
-    graft.io.VersionMemo.table(spark, "bm25-id-col",
+  private def bm25Meta(spark: org.apache.spark.sql.SparkSession,
+                       table: String): Bm25Meta =
+    graft.io.VersionMemo.table(spark, "bm25-meta",
         Seq(table, s"${table}_meta")) {
       val meta = spark.table(s"${table}_meta")
-      if (meta.columns.contains("id_col"))
-        meta.select(col("id_col")).head.getString(0)
-      else spark.table(table).columns(1)
+      val named = meta.columns.contains("id_col")
+      val r = meta.select(col("n"), coalesce(col("t"), lit(0L)),
+        if (named) col("id_col") else lit(null).cast("string")).head
+      Bm25Meta(if (named) r.getString(2) else spark.table(table).columns(1),
+        r.getLong(0), r.getLong(1))
     }
+
+  /** The postings of `terms` in the index at `table`, each row carrying
+    * its term's document frequency `df` and the corpus scalars `n` and
+    * `t` as literals, ready for [[withBm25Contrib]]. `df` is
+    * `count(1) over (partition by term)` on the term-bucketed scan: one
+    * posting row per (term, doc) makes the row count the document
+    * frequency, exact across appends, and the window needs no exchange
+    * while the scan keeps its buckets. A legacy denormalized `df` column
+    * is dropped in its favor. */
+  private def bm25Matched(spark: org.apache.spark.sql.SparkSession,
+                          table: String, meta: Bm25Meta,
+                          terms: Seq[String]): DataFrame =
+    spark.table(table).drop("df")
+      .filter(if (terms.isEmpty) lit(false) else col("term").isin(terms: _*))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
+      .withColumn("n", lit(meta.n))
+      .withColumn("t", lit(meta.t))
+      .withColumn("idf_micro", idfMicro)
 
   /** Probe a PERSISTED BM25 index ([[writeBm25Index]]) with a query
     * term set — bit-identical scores to the one-shot [[bm25TopK]] over
     * the indexed corpus (spec-pinned). The probe plan touches only the
     * query terms' buckets: an `isin` filter on the bucketed term column
-    * (bucket-pruned scan), the per-term df counted over that
-    * same pruned scan (exact across appends), a broadcast of the
-    * 1-row meta, one per-doc sum.
-    * Nothing corpus-sized shuffles at query time.
+    * (bucket-pruned scan). `n` and `t` come from `<table>_meta` through
+    * the version memo and enter the plan as literals; each term's `df`
+    * is a window count over that same pruned scan ([[bm25Matched]]).
+    * Nothing corpus-sized shuffles at query time: one exchange, of the
+    * matched postings' contributions by document, for the per-doc sum.
     */
   def bm25ProbeTopK(spark: org.apache.spark.sql.SparkSession,
                     table: String, queryTerms: Seq[String],
                     k: Int): DataFrame = {
     require(queryTerms.nonEmpty && k > 0, "need query terms and k > 0")
     // first: re-lists both relations if another session appended
-    val idCol = bm25IdCol(spark, table)
-    val meta = spark.table(s"${table}_meta").select(col("n"), col("t"))
-    // drop("df"): tolerate the legacy denormalized-df layout — df now
-    // comes from the scan itself (exact across appends; see
-    // writeBm25Index)
-    val matched = spark.table(table).drop("df")
-      .filter(col("term").isin(queryTerms: _*))
-    // per-term df counted over the SAME pruned scan the scoring reads:
-    // one row per (term, doc) makes count(*) the document frequency;
-    // the aggregate map-side-combines on the bucket key and its
-    // |q|-row result broadcasts back
-    val termDf = matched.groupBy(col("term"))
-      .agg(count(lit(1)).as("df"))
-    val contribs = matched
-      .join(broadcast(termDf), Seq("term"))
-      .crossJoin(broadcast(meta))
-      .withColumn("idf_micro",
-        round(log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-          * 1000000L).cast("long"))
-      .withColumn("__dlnorm", expr("(1000000 * dl * n) div t"))
-      .withColumn("__denom",
-        expr("1000000 * tf + 300000 + (9 * __dlnorm) div 10"))
-      .withColumn("__tfnorm", expr("(1000000 * (2200000 * tf)) div __denom"))
-      .withColumn("__contrib", expr("(idf_micro * __tfnorm) div 1000000"))
-    val top = contribs.groupBy(col(idCol))
+    val meta = bm25Meta(spark, table)
+    val idCol = meta.idCol
+    val top = withBm25Contrib(bm25Matched(spark, table, meta, queryTerms))
+      .groupBy(col(idCol))
       .agg(sum(col("__contrib")).as("bm25_micro"))
       .withColumn("bm25", col("bm25_micro") / 1e6)
       .orderBy(col("bm25_micro").desc, col(idCol))
@@ -445,11 +452,12 @@ object Retrieval {
     * text — the serving loop's inner operator (and the body of
     * `EventStreams.bm25QueryStream`): each query's distinct tokens form
     * its term set, scores come from the postings exactly as
-    * [[bm25ProbeTopK]] (per-term df counted over the pruned scan), ranked per query. The union of the distinct
-    * terms is collected to drive an `isin` filter on the bucketed term
-    * column — a BOUNDED collect (one micro-batch of queries, each
-    * contributing its distinct tokens), which is what buys the
-    * bucket-pruned scan; the per-(query, doc) scoring itself stays
+    * [[bm25ProbeTopK]] (`n` and `t` from the memoized meta, per-term df
+    * a window count over the pruned scan), ranked per query. The union
+    * of the distinct terms is collected to drive an `isin` filter on the
+    * bucketed term column — a BOUNDED collect (one micro-batch of
+    * queries, each contributing its distinct tokens), which is what buys
+    * the bucket-pruned scan; the per-(query, doc) scoring itself stays
     * fully distributed.
     *
     * Against a static index, probing queries in batches is pure: the
@@ -462,36 +470,19 @@ object Retrieval {
                         queryIdCol: String, textCol: String,
                         k: Int, excludeSelf: Boolean = false): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    // first: cross-session append visibility (see bm25IdCol)
-    val idCol = bm25IdCol(spark, table)
+    // first: cross-session append visibility (see bm25Meta)
+    val meta = bm25Meta(spark, table)
+    val idCol = meta.idCol
     val qt = queries.select(col(queryIdCol),
         explode(array_distinct(TextOps.tokens(lower(col(textCol)))))
           .as("term"))
       .filter(length(col("term")) > 0)
     val terms = qt.select(col("term")).distinct()
       .collect().map(_.getString(0)).toSeq
-    val matched =
-      if (terms.isEmpty) spark.table(table).filter(lit(false))
-      else spark.table(table).filter(col("term").isin(terms: _*))
-    val matchedNoDf = matched.drop("df")
-    // per-term df from the pruned scan itself (exact across appends;
-    // see writeBm25Index) — counted BEFORE the query join so a term
-    // shared by many queries counts its postings once
-    val termDf = matchedNoDf.groupBy(col("term"))
-      .agg(count(lit(1)).as("df"))
-    val meta = spark.table(s"${table}_meta").select(col("n"), col("t"))
-    val scored = matchedNoDf
-      .join(broadcast(termDf), Seq("term"))
-      .join(broadcast(qt), Seq("term"))
-      .crossJoin(broadcast(meta))
-      .withColumn("idf_micro",
-        round(log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-          * 1000000L).cast("long"))
-      .withColumn("__dlnorm", expr("(1000000 * dl * n) div t"))
-      .withColumn("__denom",
-        expr("1000000 * tf + 300000 + (9 * __dlnorm) div 10"))
-      .withColumn("__tfnorm", expr("(1000000 * (2200000 * tf)) div __denom"))
-      .withColumn("__contrib", expr("(idf_micro * __tfnorm) div 1000000"))
+    // df is counted over the pruned scan BEFORE the query join, so a
+    // term shared by many queries counts its postings once
+    val scored = withBm25Contrib(bm25Matched(spark, table, meta, terms)
+        .join(broadcast(qt), Seq("term")))
       .groupBy(col(queryIdCol), col(idCol))
       .agg(sum(col("__contrib")).as("bm25_micro"))
     // self-exclusion BEFORE ranking (more-like-this serving, where
@@ -647,9 +638,7 @@ object Retrieval {
       .agg(countDistinct(col(idCol)).as("df"))
     val weighted = rTf.join(dfreq, Seq("term"))
       .crossJoin(broadcast(corpus))
-      .withColumn("idf_micro",
-        round(log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-          * 1000000L).cast("long"))
+      .withColumn("idf_micro", idfMicro)
       .withColumn("weight_micro", col("tf_r") * col("idf_micro"))
     weighted.orderBy(col("weight_micro").desc, col("term"))
       .limit(nTerms)

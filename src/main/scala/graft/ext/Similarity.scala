@@ -87,12 +87,8 @@ object Similarity {
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int,
                      dim: Option[Int] = None): DataFrame = {
-    def prep(df: DataFrame, id: String, v: String, n: String) =
-      df.select(col(idCol).as(id),
-          transform(col(vecCol), x => x.cast("double")).as(v))
-        .withColumn(n, norm(col(v)))
-    val q = prep(queries, "query_id", "qvec", "qn")
-    val c = prep(corpus, "neighbor_id", "cvec", "cn")
+    val q = scoringSide(queries, idCol, vecCol, "query_id", "qvec", "qn")
+    val c = scoringSide(corpus, idCol, vecCol, "neighbor_id", "cvec", "cn")
     val dotCol = dim match {
       case Some(d) => dotNative(col("qvec"), col("cvec"), d)
       case None => dot(col("qvec"), col("cvec"))
@@ -101,12 +97,42 @@ object Similarity {
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(dotCol / (col("qn") * col("cn")), 6).as("sim"))
+    topKPerQuery(scored, k)
+  }
+
+  /** One side of a cosine scoring: the id renamed to `id`, the vector
+    * cast to double under `v`, its norm under `n`, computed once per
+    * row, and any `extra` columns of `df`. */
+  private[ext] def scoringSide(df: DataFrame, idCol: String, vecCol: String,
+                               id: String, v: String, n: String,
+                               extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).as(id),
+        transform(col(vecCol), x => x.cast("double")).as(v)) ++ extra: _*)
+      .withColumn(n, norm(col(v)))
+
+  /** The cosine of a `(qvec, qn)` × `(cvec, cn)` pair as every exact
+    * scorer rounds it: the fixed-dim native dot over the two norms, to 6
+    * decimals. */
+  private[ext] def pairSim(dim: Int): Column =
+    round(dotNative(col("qvec"), col("cvec"), dim) /
+      (col("qn") * col("cn")), 6)
+
+  /** The per-query top-k every cosine scorer ends with: a row_number
+    * windowed by `query_id` over the `(sim desc, neighbor_id)` total
+    * order, keeping ranks 1..k as (query_id, rank, neighbor_id, sim). */
+  private[ext] def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("query_id", "rank", "neighbor_id", "sim")
   }
+
+  /** Whether `queries` has at most `limit` rows — one `limit(n+1).count()`
+    * job; what [[rerankTopK]] checks before it forces a broadcast. */
+  private[ext] def fitsBroadcast(queries: DataFrame,
+                                 limit: Int = BroadcastQueryRowLimit): Boolean =
+    queries.limit(limit + 1).count() <= limit
 
   /** Exact cosine rerank of a candidate `(query_id, neighbor_id)` set:
     * vectors + norms join back by id (norms computed once per row), the
@@ -128,11 +154,15 @@ object Similarity {
   def rerankTopK(cands: DataFrame, corpus: DataFrame, queries: DataFrame,
                  idCol: String, vecCol: String, k: Int, dim: Int,
                  broadcastLimit: Int = BroadcastQueryRowLimit,
-                 queriesFitBroadcast: Boolean = false): DataFrame = {
-    def prep(df: DataFrame, id: String, v: String, n: String) =
-      df.select(col(idCol).as(id),
-          transform(col(vecCol), x => x.cast("double")).as(v))
-        .withColumn(n, norm(col(v)))
+                 queriesFitBroadcast: Boolean = false): DataFrame =
+    rerankPairs(cands, corpus, queries, idCol, vecCol, k, dim,
+      queriesFitBroadcast || fitsBroadcast(queries, broadcastLimit))
+
+  /** [[rerankTopK]] with the broadcast decision already made. */
+  private[ext] def rerankPairs(cands: DataFrame, corpus: DataFrame,
+                               queries: DataFrame, idCol: String,
+                               vecCol: String, k: Int, dim: Int,
+                               broadcastQueries: Boolean): DataFrame = {
     // Join order is load-bearing at scale: the corpus join (sort-merge
     // on neighbor_id) runs FIRST, while the candidate rows are still
     // thin (query_id, neighbor_id) pairs — its sort never carries
@@ -143,23 +173,15 @@ object Similarity {
     // order — query vectors attached first — sent 512-byte rows into
     // the corpus join's sort: ~70 GB of spill at the 10⁶-corpus soak,
     // vs ~2 GB for the thin form. Same rows either way (inner joins).
-    val preppedQ = prep(queries, "query_id", "qvec", "qn")
-    val qSide =
-      if (queriesFitBroadcast ||
-          queries.limit(broadcastLimit + 1).count() <= broadcastLimit)
-        broadcast(preppedQ)
-      else preppedQ
+    val preppedQ =
+      scoringSide(queries, idCol, vecCol, "query_id", "qvec", "qn")
+    val qSide = if (broadcastQueries) broadcast(preppedQ) else preppedQ
     val scored = cands
-      .join(prep(corpus, "neighbor_id", "cvec", "cn"), "neighbor_id")
+      .join(scoringSide(corpus, idCol, vecCol, "neighbor_id", "cvec", "cn"),
+        "neighbor_id")
       .join(qSide, "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(dotNative(col("qvec"), col("cvec"), dim) /
-          (col("qn") * col("cn")), 6).as("sim"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "sim")
+      .select(col("query_id"), col("neighbor_id"), pairSim(dim).as("sim"))
+    topKPerQuery(scored, k)
   }
 
   /** Per-vector symmetric int8 scalar quantization: `scale = max|v_i|`,

@@ -1,6 +1,7 @@
 package graft.io
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
@@ -25,7 +26,10 @@ import scala.util.control.NonFatal
   * a retrained model is served from the very next request. Serving
   * collects to the driver by design — this is a small-result API shim,
   * not a data plane — but `maxRows` caps the collect so a mis-pointed
-  * route cannot OOM the driver.
+  * route cannot OOM the driver: the answer is the route's first
+  * `maxRows` rows in its own order, collected in the same single job
+  * whatever the result's partition count, and the driver never holds
+  * more than `maxRows` of them ([[firstRowsJson]]).
   *
   * Requests are served concurrently on a fixed pool of daemon threads
   * (`graft-http-N`), one per available processor, so one request's
@@ -128,35 +132,29 @@ object HttpShim {
     * quality model, ANN). The query vector comes from the index itself,
     * then the stock indexed probe runs, so a served neighbor list is
     * bit-identical to the batch probe (spec-pinned). The id lookup is
-    * part of the probe plan: the requested id is left-joined to its
-    * stored row, and an id absent from the index fails the probe with
-    * an error naming it (the standard `{"error": ...}` object), so
-    * building the route's DataFrame runs no job.
+    * part of the probe plan: the requested id's stored row is the
+    * probe's broadcast query side, and an id absent from the index
+    * fails the probe with an error naming it (the standard
+    * `{"error": ...}` object; [[graft.ext.Ivf.ivfProbe]]'s
+    * `missingQuery`). Building the route's DataFrame runs no job, and
+    * serving it runs three: the broadcast, the scan that scores and
+    * exchanges for the per-query rank, and the collect.
     */
   def annRoutes(spark: org.apache.spark.sql.SparkSession,
                 table: String, idCol: String, vecCol: String,
                 defaultK: Int = 10, nProbe: Int = 4)
       : Map[String, HttpExchange => DataFrame] = Map(
     "similar" -> { ex =>
-      import org.apache.spark.sql.functions.{broadcast, col, lit,
-        raise_error, when}
-      import spark.implicits._
+      import org.apache.spark.sql.functions.col
       val params = queryParams(ex.getRequestURI.getRawQuery)
       val id = params.getOrElse("id",
         throw new IllegalArgumentException("missing ?id= parameter")).toLong
       val k = params.get("k").map(_.toInt).getOrElse(defaultK)
-      val index = spark.table(table)
-      val stored = index.filter(col(idCol) === id)
-        .select(col(idCol), col(vecCol), lit(true).as("__found"))
-      val q = Seq(id).toDF(idCol)
-        .select(col(idCol).cast(index.schema(idCol).dataType).as(idCol))
-        .join(broadcast(stored), Seq(idCol), "left")
-        .select(col(idCol),
-          when(col("__found").isNull,
-              raise_error(lit(s"id $id not in index $table")))
-            .otherwise(col(vecCol)).as(vecCol))
-      graft.ext.Ivf.ivfProbe(spark, table, q, idCol, vecCol, k, nProbe,
-        queriesFitBroadcast = true)
+      val stored = spark.table(table).filter(col(idCol) === id)
+        .select(col(idCol), col(vecCol))
+      graft.ext.Ivf.ivfProbe(spark, table, stored, idCol, vecCol, k, nProbe,
+        queriesFitBroadcast = true,
+        missingQuery = Some(s"id $id not in index $table"))
     })
 
   /** `/quality?text=<document>` answered from a PERSISTED trained
@@ -450,6 +448,32 @@ object HttpShim {
           t.getMessageParameters.get("errorMessage")
       }.getOrElse(String.valueOf(e.getMessage))
 
+  /** The first `maxRows` rows of `df`, in its own order, as JSON
+    * objects, collected by one job: the result's partitions are read in
+    * index order by a single task that stops after `maxRows` rows. A
+    * `limit` would add an `Exchange SinglePartition` stage (one more
+    * job) over a multi-partition result, and a per-partition `take`
+    * would hold partitions × `maxRows` rows on the driver; this holds at
+    * most `maxRows`, and reads no partition past the one that fills
+    * the cap. */
+  private def firstRowsJson(df: DataFrame, maxRows: Int): Array[String] =
+    df.toJSON.rdd
+      .coalesce(1, shuffle = false, Some(InPartitionOrder))
+      .mapPartitions(_.take(maxRows))
+      .collect()
+
+  /** One group holding every parent partition in index order: what
+    * [[firstRowsJson]] reads. The stock coalescer may put a partition
+    * with a preferred location ahead of one without. */
+  private object InPartitionOrder extends PartitionCoalescer with Serializable {
+    override def coalesce(maxPartitions: Int,
+                          parent: RDD[_]): Array[PartitionGroup] = {
+      val group = new PartitionGroup()
+      group.partitions ++= parent.partitions
+      Array(group)
+    }
+  }
+
   private def handler(route: String, mk: HttpExchange => DataFrame,
                       maxRows: Int): HttpHandler =
     new HttpHandler {
@@ -461,7 +485,7 @@ object HttpShim {
             // a route may set its own group; the one it sets wins
             sc.foreach(_.setJobGroup(s"http:$route",
               Option(ex.getRequestURI.getRawQuery).getOrElse("")))
-            mk(ex).limit(maxRows).toJSON.collect().mkString("[", ",", "]")
+            firstRowsJson(mk(ex), maxRows).mkString("[", ",", "]")
           } catch {
             // parity with read_csv's catch-all error object
             // (main.py:21-22); NonFatal also answers an operator's

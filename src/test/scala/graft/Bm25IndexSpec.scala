@@ -45,6 +45,11 @@ class Bm25IndexSpec extends SparkSpec {
     assert("SelectedBucketsCount: [123] out of 4".r
         .findFirstIn(plan).isDefined,
       s"no bucket pruning on the term filter:\n$plan")
+    // n and t are literals and df a window over the bucketed scan: no
+    // broadcast, and the only exchange is the per-document sum's
+    assert(!plan.contains("BroadcastExchange") &&
+      "Exchange hashpartitioning\\(term".r.findFirstIn(plan).isEmpty,
+      s"the probe broadcasts or exchanges by term:\n$plan")
   }
 
   test("out-of-vocabulary terms contribute nothing; all-OOV probe is empty") {
