@@ -599,7 +599,11 @@ object IndexAudit {
     *    nearest-centroid assignment recomputed under the stored model
     *    (observed = violating rows, expected 0) — the invariant
     *    [[Ivf.appendToIndex]] preserves and a stale-model overwrite
-    *    breaks.
+    *    breaks;
+    *  - `ids_unique`: one stored row per id (observed = duplicated ids,
+    *    expected 0) — the contract under which every probe shape
+    *    ([[Ivf.ivfProbe]]) ranks each neighbor once, and which an
+    *    append of already-indexed ids breaks.
     */
   def auditIvf(spark: SparkSession, table: String, idCol: String,
                vecCol: String): DataFrame = {
@@ -610,8 +614,12 @@ object IndexAudit {
         Ivf.assignLists(col(vecCol), centroids, dim, 1), 1)
         =!= col("list"))
       .count()
+    val dup = spark.table(table).groupBy(col(idCol))
+      .agg(count(lit(1)).as("n"))
+      .filter(col("n") > 1).count()
     report(spark, Seq(
       ("centroid_matrix_shape", shapeRem, 0L),
-      ("assignments_match_model", bad, 0L)))
+      ("assignments_match_model", bad, 0L),
+      ("ids_unique", dup, 0L)))
   }
 }

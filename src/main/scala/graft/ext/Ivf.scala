@@ -703,7 +703,10 @@ object Ivf {
     * stored centroids (the standard IVF ingestion discipline — the
     * quantizer retrains on its own cadence, not per batch, or probe
     * results would shift under readers) and land via `insertInto`,
-    * which honors the table's bucketing metadata.
+    * which honors the table's bucketing metadata. Arrivals must carry
+    * ids the index does not hold yet: nothing here dedupes, and a probe
+    * over an id stored twice ranks that id twice
+    * ([[IndexAudit.auditIvf]]'s `ids_unique` finds it).
     */
   def appendToIndex(corpus: DataFrame, idCol: String, vecCol: String,
                     table: String): Unit = {
@@ -786,21 +789,29 @@ object Ivf {
   /** [[ivfTopKIndexed]], in one of two shapes chosen by the size of the
     * query side.
     *
-    * One pass, when the queries are broadcast (`queriesFitBroadcast`,
-    * else at most [[Similarity.BroadcastQueryRowLimit]] rows by
-    * [[Similarity.fitsBroadcast]]'s count): the broadcast side carries
-    * one row per (query, probed list) with the query's id, its vector
-    * cast to double and its norm. The index is scanned once, each row
-    * hash-joins on its `list` to the queries that probe it, a query is
-    * never its own neighbor, and each pair is scored with
+    * One pass, when the broadcast side fits: it carries one row per
+    * (query, probed list), `nProbe` rows per query, with the query's id,
+    * its vector cast to double and its norm. It is broadcast when the
+    * caller vouches for it (`queriesFitBroadcast`, a served single-id
+    * probe) or when the query count times the rows per query is at most
+    * `broadcastLimit` ([[Similarity.BroadcastQueryRowLimit]], the same
+    * row budget [[Similarity.rerankTopK]] gives its unexploded query
+    * side; one `limit(n+1).count()` job). The index is scanned once,
+    * each row hash-joins on its `list` to the queries that probe it, a
+    * query is never its own neighbor, and each pair is scored with
     * [[Similarity.pairSim]] and ranked by [[Similarity.topKPerQuery]].
     * Every index row is its own candidate, vector included, so nothing
     * joins back to the index by id.
     *
-    * Otherwise [[Similarity.rerankPairs]]' shuffle shape: thin
-    * (query, neighbor) pairs from the list join first, vectors joined
-    * back by id. Both shapes score and rank the same pairs with the
-    * same expressions, so their answers are equal.
+    * Otherwise [[Similarity.rerankPairs]]' shape: thin (query, neighbor)
+    * pairs from the list join first, vectors joined back by id, the
+    * unexploded query side broadcast while it is within
+    * `broadcastLimit` rows and joined by the planner beyond it. Both
+    * shapes score and rank the same pairs with the same expressions, so
+    * their answers are equal on an index whose ids are unique (the
+    * contract [[IndexAudit.auditIvf]]'s `ids_unique` checks): an id
+    * stored twice is scored once per stored row here, while the rerank
+    * joins each of its candidate pairs back to both stored rows.
     *
     * `missingQuery`, only with a broadcast query side: when the query
     * side is empty, the probe fails with this message instead of
@@ -816,13 +827,18 @@ object Ivf {
                               queries: DataFrame, idCol: String,
                               vecCol: String, k: Int, nProbe: Int,
                               queriesFitBroadcast: Boolean,
-                              missingQuery: Option[String] = None)
+                              missingQuery: Option[String] = None,
+                              broadcastLimit: Int =
+                                Similarity.BroadcastQueryRowLimit)
       : DataFrame = {
     val (dim, centroids) = loadModel(spark, table)
     val indexed = spark.table(table)
     val lists = assignLists(col(vecCol), centroids, dim, nProbe)
     val notSelf = col("neighbor_id") =!= col("query_id")
-    if (queriesFitBroadcast || Similarity.fitsBroadcast(queries)) {
+    // broadcast rows per query: its probed lists, and the sentinel list
+    val rowsPerQuery = nProbe + missingQuery.size
+    lazy val nQueries = queries.limit(broadcastLimit + 1).count()
+    if (queriesFitBroadcast || nQueries * rowsPerQuery <= broadcastLimit) {
       val probed =
         missingQuery.fold(lists)(_ => concat(lists, array(lit(NoList))))
       val q = Similarity.scoringSide(queries, idCol, vecCol, "query_id",
@@ -853,7 +869,7 @@ object Ivf {
         .filter(notSelf)
         .select("query_id", "neighbor_id")
       Similarity.rerankPairs(cands, indexed, queries, idCol, vecCol, k, dim,
-        broadcastQueries = false)
+        broadcastQueries = nQueries <= broadcastLimit)
     }
   }
 }

@@ -147,16 +147,13 @@ object Similarity {
     * an oversized one must degrade to a planner-chosen shuffle join, not
     * die on a driver OOM / broadcast size limit. Within the gate the
     * broadcast shape is the soak-pinned one (thin pairs first, query
-    * vectors never sorted). A caller that knows its query side is
-    * within the gate (a served single-id probe) passes
-    * `queriesFitBroadcast` and skips the count job.
+    * vectors never sorted).
     */
   def rerankTopK(cands: DataFrame, corpus: DataFrame, queries: DataFrame,
                  idCol: String, vecCol: String, k: Int, dim: Int,
-                 broadcastLimit: Int = BroadcastQueryRowLimit,
-                 queriesFitBroadcast: Boolean = false): DataFrame =
+                 broadcastLimit: Int = BroadcastQueryRowLimit): DataFrame =
     rerankPairs(cands, corpus, queries, idCol, vecCol, k, dim,
-      queriesFitBroadcast || fitsBroadcast(queries, broadcastLimit))
+      fitsBroadcast(queries, broadcastLimit))
 
   /** [[rerankTopK]] with the broadcast decision already made. */
   private[ext] def rerankPairs(cands: DataFrame, corpus: DataFrame,

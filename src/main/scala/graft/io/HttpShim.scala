@@ -29,7 +29,7 @@ import scala.util.control.NonFatal
   * route cannot OOM the driver: the answer is the route's first
   * `maxRows` rows in its own order, collected in the same single job
   * whatever the result's partition count, and the driver never holds
-  * more than `maxRows` of them ([[firstRowsJson]]).
+  * more than `defaultParallelism` × `maxRows` rows ([[firstRowsJson]]).
   *
   * Requests are served concurrently on a fixed pool of daemon threads
   * (`graft-http-N`), one per available processor, so one request's
@@ -449,28 +449,40 @@ object HttpShim {
       }.getOrElse(String.valueOf(e.getMessage))
 
   /** The first `maxRows` rows of `df`, in its own order, as JSON
-    * objects, collected by one job: the result's partitions are read in
-    * index order by a single task that stops after `maxRows` rows. A
-    * `limit` would add an `Exchange SinglePartition` stage (one more
-    * job) over a multi-partition result, and a per-partition `take`
-    * would hold partitions × `maxRows` rows on the driver; this holds at
-    * most `maxRows`, and reads no partition past the one that fills
-    * the cap. */
-  private def firstRowsJson(df: DataFrame, maxRows: Int): Array[String] =
-    df.toJSON.rdd
-      .coalesce(1, shuffle = false, Some(InPartitionOrder))
+    * objects, collected by one job. The result's partitions are cut into
+    * at most `defaultParallelism` contiguous runs, in index order; one
+    * task per run reads its partitions in order and stops after
+    * `maxRows` rows, and the driver keeps the first `maxRows` of the
+    * runs' rows in run order. A `limit` would add an
+    * `Exchange SinglePartition` stage (one more job) over a
+    * multi-partition result, and a per-partition `take` would hold
+    * partitions × `maxRows` rows on the driver; this holds at most
+    * `defaultParallelism` × `maxRows`, however many partitions there
+    * are, and still scans with every core. */
+  private def firstRowsJson(df: DataFrame, maxRows: Int): Array[String] = {
+    val json = df.toJSON.rdd
+    val runs = math.max(1,
+      math.min(json.getNumPartitions, json.sparkContext.defaultParallelism))
+    json.coalesce(runs, shuffle = false, Some(ContiguousRuns))
       .mapPartitions(_.take(maxRows))
       .collect()
+      .take(maxRows)
+  }
 
-  /** One group holding every parent partition in index order: what
-    * [[firstRowsJson]] reads. The stock coalescer may put a partition
-    * with a preferred location ahead of one without. */
-  private object InPartitionOrder extends PartitionCoalescer with Serializable {
+  /** `maxPartitions` groups of consecutive parent partitions, in index
+    * order, none empty while there are at least as many parents: what
+    * [[firstRowsJson]] reads. The stock coalescer groups by preferred
+    * location, not by index. */
+  private object ContiguousRuns extends PartitionCoalescer with Serializable {
     override def coalesce(maxPartitions: Int,
                           parent: RDD[_]): Array[PartitionGroup] = {
-      val group = new PartitionGroup()
-      group.partitions ++= parent.partitions
-      Array(group)
+      val ps = parent.partitions
+      Array.tabulate(maxPartitions) { g =>
+        val group = new PartitionGroup()
+        group.partitions ++= ps.slice(g * ps.length / maxPartitions,
+          (g + 1) * ps.length / maxPartitions)
+        group
+      }
     }
   }
 

@@ -729,17 +729,21 @@ class HttpShimSpec extends SparkSpec {
 
   test("maxRows caps a multi-partition answer to its first rows in the " +
     "answer's own order, collected in one job") {
-    // 4 partitions of 10 rows, the first one empty after the filter
-    val rows = spark.range(0, 40, 1, 4).toDF("i").filter(col("i") >= 10)
-    assert(rows.rdd.getNumPartitions == 4)
+    // 10 partitions of 10 rows, more than the session's 4 cores, the
+    // first one empty after the filter
+    val rows = spark.range(0, 100, 1, 10).toDF("i").filter(col("i") >= 10)
+    assert(rows.rdd.getNumPartitions == 10)
     val all = rows.toJSON.collect().toSeq
-    val shim = HttpShim.start(Map("rows" -> (() => rows)), maxRows = 15)
-    try {
-      var body = ""
-      val groups = jobGroupsOf { body = get(shim.port, "/rows")._2 }
-      assert(body == all.take(15).mkString("[", ",", "]"), body)
-      assert(groups.count(_ == "http:rows") == 1, groups)
-    } finally shim.stop()
+    // caps inside the first partition with rows, and across several
+    Seq(15, 35, 75).foreach { cap =>
+      val shim = HttpShim.start(Map("rows" -> (() => rows)), maxRows = cap)
+      try {
+        var body = ""
+        val groups = jobGroupsOf { body = get(shim.port, "/rows")._2 }
+        assert(body == all.take(cap).mkString("[", ",", "]"), s"$cap: $body")
+        assert(groups.count(_ == "http:rows") == 1, groups)
+      } finally shim.stop()
+    }
     // a cap above the row count answers every row
     val wide = HttpShim.start(Map("rows" -> (() => rows)), maxRows = 100)
     try assert(get(wide.port, "/rows")._2 == all.mkString("[", ",", "]"))

@@ -160,4 +160,24 @@ class IndexAuditSpec extends SparkSpec {
       "vec_id", "embedding"))
     assert(bad.get("assignments_match_model").exists(_ >= 4L), bad)
   }
+  test("IVF audit: an append of an already-indexed id trips ids_unique") {
+    GraftFunctions.register(spark)
+    val emb = CrossoverBench.syntheticEmbeddings(spark, 200, 64, seed = 5L)
+    val loc = java.nio.file.Files.createTempDirectory("graft_audit7").toString
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_auditdb7 LOCATION '$loc'")
+    val c = Ivf.trainCentroids(emb, "embedding", nList = 4, dim = 64,
+      sampleSize = 200, iters = 2)
+    Ivf.writeIndex(emb, "vec_id", "embedding", c, dim = 64,
+      "graft_auditdb7.ivf", nBuckets = 2)
+    assert(failures(IndexAudit.auditIvf(spark, "graft_auditdb7.ivf",
+      "vec_id", "embedding")).isEmpty)
+    // the same two rows again, under the same model: every assignment
+    // still matches, but ids 3 and 4 are now stored twice
+    Ivf.appendToIndex(emb.filter(col("vec_id").isin(3L, 4L)), "vec_id",
+      "embedding", "graft_auditdb7.ivf")
+    val bad = failures(IndexAudit.auditIvf(spark, "graft_auditdb7.ivf",
+      "vec_id", "embedding"))
+    assert(bad == Map("ids_unique" -> 2L), bad)
+  }
 }
+

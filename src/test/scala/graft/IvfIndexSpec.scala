@@ -147,4 +147,41 @@ class IvfIndexSpec extends SparkSpec {
         s"corpus scan not using buckets:\n$plan")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
+  test("a query side whose probed-list rows exceed the broadcast limit " +
+    "takes the rerank shape instead of the one-pass broadcast, same " +
+    "answers") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    centroids // force index write
+    object Plans extends AdaptiveSparkPlanHelper
+    // 10 queries, 4 probed lists each: 40 one-pass broadcast rows
+    assert(queries.count() == 10)
+    def run(limit: Int) = Ivf.ivfProbe(spark, table, queries, "vec_id",
+      "embedding", k = 5, nProbe = 4, queriesFitBroadcast = false,
+      broadcastLimit = limit)
+    // with the planner's own broadcasts off, every broadcast left is a
+    // forced one
+    def broadcastSides(limit: Int): Seq[Set[String]] = {
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try Plans.collect(run(limit).queryExecution.executedPlan) {
+          case b: BroadcastExchangeExec => b.child.output.map(_.name).toSet
+        }.filter(_.contains("qvec"))
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
+    // within the limit: one broadcast of (query, probed list) rows
+    assert(broadcastSides(40) == Seq(Set("query_id", "qvec", "list", "qn")))
+    // 40 rows over the limit, 10 queries within it: the rerank shape,
+    // the unexploded query side broadcast
+    assert(broadcastSides(39) == Seq(Set("query_id", "qvec", "qn")))
+    // the queries themselves over the limit: nothing force-broadcast
+    assert(broadcastSides(9).isEmpty)
+    def answer(limit: Int) =
+      run(limit).as[(Long, Int, Long, Double)].collect().toSet
+    val onePass = answer(40)
+    assert(onePass.size == 50)
+    assert(answer(39) == onePass)
+    assert(answer(9) == onePass)
+  }
 }
+
