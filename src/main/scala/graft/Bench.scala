@@ -1,6 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Benchmark entrypoint: times every catalog query at SPARK_GRAFT_SF_DIR.
   * Each query runs SPARK_GRAFT_RUNS times (default 3) and the per-query
@@ -9,7 +10,8 @@ import java.nio.charset.StandardCharsets
   *
   * Output contract: ONE JSON line on stdout
   * `{"metric":"total","value":N,"unit":"sec","runs":3,"spread_pct":N,
-  * "queries":{...},"sf":...}`
+  * "queries":{...},"compiles":{...},"sf":...}`: `compiles` is the number
+  * of classes Spark's code generator compiled during the median rep.
   * ALSO written to `$SPARK_GRAFT_OUT/bench.json` (default ./bench.json) so a
   * harness that can't strip sbt's `[info]` prefix still gets the metric.
   *
@@ -95,36 +97,41 @@ object Bench {
       // so one query's heap debris is never collected inside a neighbor's
       // timing window (round-2's recorded numbers were 3-50× inflated by
       // exactly that kind of cross-query contamination).
-      var times = List.empty[Double]
+      // (seconds, classes compiled) per rep
+      var times = List.empty[(Double, Long)]
       var broken = false
       var i = 0
       while (i < runs && !broken) {
         val session = spark.newSession()
         System.gc()
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
         val t0 = System.nanoTime()
         try {
           fn(session, sfDir).write.format("noop").mode("overwrite").save()
-          times ::= (System.nanoTime() - t0) / 1e9
+          times ::= ((System.nanoTime() - t0) / 1e9, compiles)
         } catch {
           case e: Throwable =>
             failed ::= name
             System.err.println(s"BENCH FAILURE in $name: $e")
             e.printStackTrace()
             // negative = failed, unmissable; remaining reps are pointless
-            times = List(-(System.nanoTime() - t0) / 1e9)
+            times = List((-(System.nanoTime() - t0) / 1e9, compiles))
             broken = true
         }
         i += 1
       }
-      val sorted = times.sorted
-      val median = sorted(sorted.size / 2)
+      val sorted = times.sortBy(_._1)
+      val (median, medianCompiles) = sorted(sorted.size / 2)
       // per-query relative spread: how far apart the reps landed
       val spread =
         if (median <= 0 || times.size < 2) 0.0
-        else (sorted.last - sorted.head) / median
-      (name, median, spread)
+        else (sorted.last._1 - sorted.head._1) / median
+      (name, median, spread, medianCompiles)
     }
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
+    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val compiles = results.map { case (k, _, _, c) => s"\"" + k + "\":" + c }
       .mkString("{", ",", "}")
     // a failed run must never report a smaller (= faster-looking) total:
     // value is null unless every query succeeded
@@ -151,7 +158,7 @@ object Bench {
       try loadBefore.stripPrefix("[").split(",")(0).toDouble
       catch { case _: Exception => Double.NaN }
     val regressions = BenchCompare.regressionsField(priorPath,
-      results.collect { case (k, v, _) if v > 0 => k -> v }.toMap,
+      results.collect { case (k, v, _, _) if v > 0 => k -> v }.toMap,
       load1m, cpus)
     // contention telemetry: a loaded host shows load_before ≫ CPUs or a
     // load_after far above the suite's own parallelism — readers judge
@@ -169,7 +176,7 @@ object Bench {
     val telem =
       s""""load_before":$loadBefore,"load_after":$loadAfter,"contended":$contended,"mem_avail_gb_before":$memBefore,"mem_avail_gb_after":$memAfter,$regressions"""
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"spread_pct":$spreadPct,$telem,"queries":$qs,"failed":${
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"spread_pct":$spreadPct,$telem,"queries":$qs,"compiles":$compiles,"failed":${
         failed.reverse.distinct.map("\"" + _ + "\"").mkString("[", ",", "]")
       },"sf":"$sfDir"}"""
     println(json)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.SQLConf
 
 /** The one place a `SparkSession` is configured. Every main, dev tool and
   * the test suite gets its session here, so the configuration the specs
@@ -12,8 +13,10 @@ object Sessions {
   def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** A `local[cpus]` session (or the JVM's existing one) with the graft
-    * functions and optimizer rule registered on it. */
+  private val ArtifactIsolation = SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key
+
+  /** A `local[cpus]` session (or the JVM's existing one), adopted. Its
+    * `newSession()`s inherit the artifact setting from the context. */
   def local(cpus: Int = defaultCpus): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -31,9 +34,28 @@ object Sessions {
         "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      .config(ArtifactIsolation, "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.register(spark)
-    spark
+    adopt(spark)
+  }
+
+  /** Make `s` a graft session: its tasks run under the application's
+    * class loader, and the graft functions and optimizer rule are
+    * registered on it.
+    *
+    * With artifact isolation on (Spark's default) every session's jobs
+    * carry the session's own artifact state, and the executor gives each
+    * new session a class loader of its own. Generated code is cached by
+    * (class loader, source), so a fresh session recompiles every class
+    * its plans generate. Graft adds no session artifact (jar, file or
+    * REPL class), so the isolation buys nothing here. The session reads
+    * the setting once, at its first action: adopt a session before it
+    * runs anything. Returns `s`.
+    */
+  def adopt(s: SparkSession): SparkSession = {
+    s.conf.set(ArtifactIsolation, "false")
+    graft.plans.GraftFunctions.register(s)
+    s
   }
 }

@@ -46,9 +46,10 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q03_join_revenue_nation")(spark, "/root/testdata/sf0.001")
 
-  /** Every thunk registers the graft functions on the session it is
-    * given: callers pass fresh `newSession()`s, which do not inherit
-    * runtime registration, and some build their own session. */
+  /** Every thunk adopts the session it is given ([[Sessions.adopt]]):
+    * callers pass fresh `newSession()`s, which do not inherit runtime
+    * registration, and some build their own session, whose tasks would
+    * otherwise run under a class loader of their own. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] = {
     val slices = families.map { case (name, qs, os) =>
       require((os.keySet -- qs.keySet).isEmpty,
@@ -61,8 +62,7 @@ object SparkEntry {
     require(dups.isEmpty, s"query keys in multiple families: $dups")
     slices.map(_._2).reduce(_ ++ _).map { case (name, fn) =>
       name -> ((s: SparkSession, dir: String) => {
-        graft.plans.GraftFunctions.register(s)
-        fn(s, dir)
+        fn(Sessions.adopt(s), dir)
       })
     }
   }

@@ -740,21 +740,11 @@ object Ivf {
   }
 
   /** Reload the model persisted by [[writeIndex]]: the vector
-    * dimensionality and the row-major centroid matrix. One job per
-    * version of `<table>_centroids` ([[graft.io.VersionMemo]]; a warm
-    * call runs none): the `(pos, value, dim)` rows (≤ nList·dim of
-    * them) are collected unsorted and put in `pos` order on the
-    * driver. The matrix is a fresh copy on every call.
+    * dimensionality and the row-major centroid matrix. The matrix is a
+    * fresh copy on every call.
     */
   def loadModel(spark: SparkSession, table: String): (Int, Array[Double]) = {
-    val (dim, centroids) = graft.io.VersionMemo.table(spark, "ivf-model",
-        Seq(s"${table}_centroids")) {
-      val rows = spark.table(s"${table}_centroids")
-        .select(col("pos"), col("value"), col("dim")).collect()
-      require(rows.nonEmpty, s"empty IVF model in $table")
-      (rows(0).getInt(2),
-        rows.sortBy(_.getInt(0)).map(_.getDouble(1)))
-    }
+    val (dim, centroids, _) = model(spark, table)
     (dim, centroids.clone())
   }
 
@@ -763,12 +753,28 @@ object Ivf {
     * the model carried it — callers fall back to positional inference
     * for those, with its documented mis-bind hazard.
     */
-  def loadVecCol(spark: SparkSession, table: String): Option[String] = {
-    val m = spark.table(s"${table}_centroids")
-    if (m.columns.contains("vec_col"))
-      Some(m.select("vec_col").limit(1).collect()(0).getString(0))
-    else None
-  }
+  def loadVecCol(spark: SparkSession, table: String): Option[String] =
+    model(spark, table)._3
+
+  /** The persisted model: dimensionality, centroid matrix and vector
+    * column name. One job per version of `<table>_centroids`
+    * ([[graft.io.VersionMemo]]; a warm call runs none): the
+    * `(pos, value, dim[, vec_col])` rows (≤ nList·dim of them) are
+    * collected unsorted and put in `pos` order on the driver.
+    */
+  private def model(spark: SparkSession, table: String)
+      : (Int, Array[Double], Option[String]) =
+    graft.io.VersionMemo.table(spark, "ivf-model",
+        Seq(s"${table}_centroids")) {
+      val m = spark.table(s"${table}_centroids")
+      val hasVecCol = m.columns.contains("vec_col")
+      val rows = m.select(Seq(col("pos"), col("value"), col("dim")) ++
+          (if (hasVecCol) Seq(col("vec_col")) else Nil): _*).collect()
+      require(rows.nonEmpty, s"empty IVF model in $table")
+      (rows(0).getInt(2),
+        rows.sortBy(_.getInt(0)).map(_.getDouble(1)),
+        if (hasVecCol) Some(rows(0).getString(3)) else None)
+    }
 
   /** Approximate top-k against a PERSISTED index — no training, no
     * corpus-side shuffle: queries assign to their `nProbe` nearest

@@ -66,6 +66,15 @@ class IvfIndexSpec extends SparkSpec {
       .select("id_col", "vec_col").distinct().collect()
     assert(meta.length == 1 && meta(0).getString(0) == "vec_id" &&
       meta(0).getString(1) == "embedding")
+    // a model written before it carried the names: no vector column,
+    // the same geometry
+    val old = "graft_ivfdb.old_idx"
+    spark.table(s"${table}_centroids").drop("id_col", "vec_col")
+      .write.mode("overwrite").saveAsTable(s"${old}_centroids")
+    assert(Ivf.loadVecCol(spark, old).isEmpty)
+    assert(Ivf.loadModel(spark, old) match {
+      case (dim, c) => dim == 64 && c.toSeq == centroids.toSeq
+    })
   }
 
   test("indexed probe equals the train-in-place path on the same centroids") {

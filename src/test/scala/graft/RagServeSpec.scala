@@ -166,6 +166,60 @@ class RagServeSpec extends SparkSpec {
     } finally shim.stop()
   }
 
+  test("a warm /rag request reads the IVF model from the memo: its " +
+    "route starts no model read and at most 19 jobs before it returns") {
+    import com.sun.net.httpserver.HttpExchange
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val (bm25T, ivfT) = tables
+    val sc = spark.sparkContext
+    val raw = HttpShim.ragRoutes(spark, bm25T, ivfT, docs, "doc_id", "text",
+      defaultK = 5, legK = 20, nProbe = NList)("rag")
+    // request n's route runs under build:n, its result under run
+    val seq = new java.util.concurrent.atomic.AtomicInteger(0)
+    val route = { (ex: HttpExchange) =>
+      sc.setJobGroup(s"build:${seq.incrementAndGet()}", "")
+      val df = raw(ex)
+      sc.setJobGroup("run", "")
+      df
+    }
+    // (job group, SQL execution id) per job, and each execution's plan
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach(p => jobs.add(
+          (String.valueOf(p.getProperty("spark.jobGroup.id")),
+            String.valueOf(p.getProperty("spark.sql.execution.id")))))
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.put(s.executionId.toString, s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    val shim = HttpShim.startDynamic(Map("rag" -> route))
+    try {
+      val bodies = (1 to 2).map(_ => get(shim.port, "/rag?id=0&k=5")._2)
+      bodies.foreach(b => assert(b.startsWith("[{"), b))
+      assert(bodies(0) == bodies(1))
+      org.apache.spark.GraftListenerBus.drain(sc)
+      import scala.jdk.CollectionConverters._
+      val warm = jobs.asScala.toSeq.filter(_._1 == "build:2").map(_._2)
+      val modelReads = warm.distinct
+        .filter(id => Option(plans.get(id)).exists(_.contains(s"${ivfT}_centroids")))
+      assert(modelReads.isEmpty, modelReads.map(plans.get))
+      // the id checks (`qtext.take(1)`, `qvec.take(1)`), the probe's
+      // query-side size check and the fused shortlist's localCheckpoint
+      assert(warm.nonEmpty && warm.size <= 19,
+        s"warm /rag ran ${warm.size} jobs before its route returned")
+    } finally {
+      shim.stop()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   private def get(port: Int, path: String): (Int, String) = {
     val conn = new URI(s"http://127.0.0.1:$port$path").toURL
       .openConnection().asInstanceOf[HttpURLConnection]

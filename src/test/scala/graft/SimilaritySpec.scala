@@ -49,17 +49,32 @@ class SimilaritySpec extends SparkSpec {
     val cands = corpus.select(col("vec_id").as("query_id"))
       .crossJoin(corpus.select(col("vec_id").as("neighbor_id")))
       .filter(col("query_id") =!= col("neighbor_id"))
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
     def run(limit: Int) = Similarity.rerankTopK(cands, corpus, corpus,
       "vec_id", "embedding", k = 2, dim = 2, broadcastLimit = limit)
+    // the broadcasts of qvec in the executed plan; with the planner's
+    // own broadcasts off, every one left is a forced one
+    def qvecBroadcasts(limit: Int): Int = {
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val df = run(limit)
+        df.collect()
+        Plans.collect(df.queryExecution.executedPlan) {
+          case b: BroadcastExchangeExec
+              if b.child.output.exists(_.name == "qvec") => b
+        }.size
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
+    // gate open: the query side is force-broadcast
+    assert(qvecBroadcasts(1000) == 1)
     // gate closed (limit 1 < 5 queries): qvec must NOT enter a forced
     // BroadcastExchange — the degrade path the public API promises for
     // caller-supplied query relations beyond the broadcast budget
-    val degraded = run(1)
-    val forced = degraded.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-          if b.child.output.exists(_.name == "qvec") => b
-    }
-    assert(forced.isEmpty, "oversized query side was still force-broadcast")
+    assert(qvecBroadcasts(1) == 0,
+      "oversized query side was still force-broadcast")
     // and the two paths return identical rankings
     val a = run(1).orderBy("query_id", "rank").collect().toSeq
     val b = run(1000).orderBy("query_id", "rank").collect().toSeq
